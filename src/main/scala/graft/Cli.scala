@@ -413,10 +413,10 @@ object Cli {
     p.models.foreach(m => graft.functions.AiFunctions.registerModel(spark, m.name, m.options))
 
     val registry = new SchemaRegistry(SchemaChangeBehavior.of(p.schemaChangeBehavior))
-    // `buckets: auto` derives the count from the first batch and pins it in
-    // the table's layout meta (scale-adaptive file sizing); an explicit
-    // integer stays supported for pinned layouts
-    val buckets = p.sink.options.getOrElse("buckets", "32") match {
+    // no `buckets` (or `buckets: auto`) derives the count from the session's
+    // parallelism and the first batch, and pins it in the table's layout meta
+    // (scale-adaptive file sizing); an explicit integer pins a layout
+    val buckets = p.sink.options.getOrElse("buckets", "auto") match {
       case "auto" => ParquetUpsertSink.AutoBuckets
       case n => n.toInt
     }

@@ -89,12 +89,13 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   * is persisted in a `<table>.layout` meta file at state creation and every
   * later write/merge resolves it from there — a writer configured with a
   * different constant can no longer silently prune against the wrong modulus
-  * (r20). Pass [[ParquetUpsertSink.AutoBuckets]] to derive the count from the
-  * first batch's size (one bucket per [[ParquetUpsertSink.RowsPerBucketConf]]
-  * rows, guide §6 scale-adaptive file sizing): a 100 k-row local fixture gets
-  * 1 bucket — one output file per merge, no 32-way small-file fan-out — while
-  * a 10^9-row production snapshot gets ~2000, keeping per-bucket files in the
-  * 10^5-10^6-row (~64-128 MB) range either way.
+  * (r20). Pass [[ParquetUpsertSink.AutoBuckets]] (the CLI's default) to
+  * derive the count from the session and the first batch's size: one bucket
+  * per core at least, one per [[ParquetUpsertSink.RowsPerBucketConf]] rows
+  * above that (guide §6 scale-adaptive file sizing). A 100 k-row fixture on
+  * 4 cores gets 4 buckets — one write task per core, no 32-way small-file
+  * fan-out per merge — while a 10^9-row production snapshot gets ~2000,
+  * keeping per-bucket files in the 10^5-10^6-row (~64-128 MB) range.
   */
 class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
   import ParquetUpsertSink.{AutoBuckets, MaxDerivedBuckets, RowsPerBucketConf, SwapReady}
@@ -117,6 +118,11 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     * lose rows), else the constructor's value, deriving it from the first
     * batch when that is [[AutoBuckets]]. Cached per table; the meta read is
     * one small-file open on the table's first write in this JVM.
+    *
+    * The derivation is `max(defaultParallelism, ceil(rows / rowsPerBucket))`:
+    * the floor keeps one write task per core however small the first batch
+    * is (a first batch does not bound the table), the ratio keeps files in
+    * the target size band once the table outgrows the floor.
     */
   private def effectiveBuckets(spark: org.apache.spark.sql.SparkSession,
                                fs: org.apache.hadoop.fs.FileSystem, path: String,
@@ -128,23 +134,33 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
         finally in.close()
       } else if (buckets == AutoBuckets) {
-        require(!stateExists, s"state at $path predates its layout meta; " +
-          "recreate it or construct the sink with its explicit bucket count")
+        // never guess the modulus of existing state: name the setting that reads it
+        require(!stateExists,
+          if (bucketSet(fs, path).nonEmpty)
+            s"bucketed state at $path has no layout meta: it predates the persisted " +
+              "layout and was written with the old default of 32 buckets; set " +
+              "`buckets: 32` (or the count it was written with) to keep using it"
+          else s"state at $path is unbucketed; set `buckets: 0` to keep using it")
         val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
         val rows = incoming.count() // first write only; fills the batch cache
-        math.max(1L, math.min(MaxDerivedBuckets.toLong, (rows + target - 1) / target)).toInt
+        val derived = (rows + target - 1) / target
+        math.min(MaxDerivedBuckets.toLong,
+          math.max(spark.sparkContext.defaultParallelism.toLong, derived)).toInt
       } else buckets
     }: Integer)
 
   /** Persist the resolved bucket count next to the state dir (sibling file:
     * it must survive the per-bucket swaps and the DDL rewrite of the dir).
+    * Written aside and renamed in, so a crash mid-write leaves no torn meta.
     */
   private def writeLayoutIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
                                   path: String, m: Int): Unit = {
     val lp = layoutPath(path)
     if (!fs.exists(lp)) {
-      val out = fs.create(lp, true)
+      val aside = new org.apache.hadoop.fs.Path(path + ".layout.tmp")
+      val out = fs.create(aside, true)
       try out.write(m.toString.getBytes("UTF-8")) finally out.close()
+      renameOrThrow(fs, aside, lp)
     }
   }
 
@@ -247,7 +263,7 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
       val fs = hfs(spark, tablePath(id))
-      Seq("", ".tmp", ".old", ".layout").foreach(sfx =>
+      Seq("", ".tmp", ".old", ".layout", ".layout.tmp").foreach(sfx =>
         fs.delete(new org.apache.hadoop.fs.Path(tablePath(id) + sfx), true))
       // a recreated table derives a fresh layout from its new first batch
       layoutCache.remove(tablePath(id))
@@ -277,16 +293,17 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     * before cleanup) is NOT restored; it is deleted by the commit sequence.
     *
     * Bucketed states recover in one of two modes (r20):
-    *  - `.tmp/.swap_ready` present — the batch's parquet write completed and
-    *    its swap phase began (the marker is created between the two, and
-    *    deleted if a swap rename fails and is rolled back): roll the batch
-    *    FORWARD by finishing the remaining per-bucket moves. The tmp contents
-    *    are complete by construction, every swap decision is final, and a
-    *    displaced bucket with no replacement dir was emptied by deletes on
-    *    purpose — nothing is ever resurrected, no per-bucket marker needed.
-    *  - no marker — a half-written tmp, or a state left by the pre-r20
-    *    protocol: restore displaced buckets whose dst is absent (rollback),
-    *    honoring that protocol's `.done_N` emptied-bucket markers.
+    *  - `.tmp/.swap_ready` present — the batch's parquet write completed, the
+    *    buckets it empties are already displaced, and its swap-ins began (the
+    *    marker is created between the two, and deleted if a swap rename fails
+    *    and is rolled back): roll the batch FORWARD by finishing the remaining
+    *    per-bucket moves. The tmp contents are complete by construction,
+    *    every swap decision is final, and a displaced bucket with no
+    *    replacement dir was emptied by deletes on purpose — nothing is ever
+    *    resurrected, no per-bucket marker needed.
+    *  - no marker — a half-written tmp or displacement, or a state left by
+    *    the pre-r20 protocol: restore displaced buckets whose dst is absent
+    *    (rollback), honoring that protocol's `.done_N` emptied-bucket markers.
     */
   private def recoverCrashedSwap(fs: org.apache.hadoop.fs.FileSystem, path: String,
                                  dst: org.apache.hadoop.fs.Path): Unit = {
@@ -296,7 +313,10 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     if (fs.exists(tmp)) {
       val entries = fs.listStatus(tmp)
       if (entries.exists(_.getPath.getName == SwapReady)) {
-        entries.filter(_.getPath.getName.startsWith(s"$BucketCol=")).foreach { s =>
+        val moves = entries.filter(_.getPath.getName.startsWith(s"$BucketCol="))
+        // a table's first write creates its state dir after the marker
+        if (moves.nonEmpty && !fs.exists(dst)) fs.mkdirs(dst)
+        moves.foreach { s =>
           val b = s.getPath.getName.stripPrefix(s"$BucketCol=")
           val bucketDst = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
           if (fs.exists(bucketDst))
@@ -328,11 +348,14 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     val incoming = changelog.select(cols :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*)
 
     val exists = fs.exists(dst)
-    val m =
-      if (buckets == 0 && !layoutCache.containsKey(path) && !fs.exists(layoutPath(path))) 0
-      else effectiveBuckets(spark, fs, path, exists, incoming)
-    if (m > 0) writeBucketed(spark, path, exists, incoming, schema, m)
-    else {
+    if (buckets != 0 || layoutCache.containsKey(path) || fs.exists(layoutPath(path))) {
+      // cached ahead of the layout resolution: the Auto-derive count() on a
+      // table's first write fills the cache, so the batch is parsed once
+      val inc = incoming.cache()
+      try writeBucketed(spark, fs, path, exists, inc, schema,
+        effectiveBuckets(spark, fs, path, exists, inc))
+      finally { inc.unpersist(); () }
+    } else {
       val merged =
         if (exists)
           Changelog.materialize(
@@ -371,78 +394,74 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     * Swap-phase FS traffic is batch-constant + one rename per moved dir
     * (r20): one listing of each side replaces the per-bucket exists probes,
     * and the single `.swap_ready` marker (created between the completed
-    * parquet write and the first rename, deleted with tmp) replaces the
-    * per-bucket `.done_N` markers — recovery rolls a marker-bearing tmp
-    * FORWARD instead of restoring, see [[recoverCrashedSwap]].
+    * parquet write and the first swap-in rename, deleted with tmp) replaces
+    * per-bucket markers — recovery rolls a marker-bearing tmp FORWARD
+    * instead of restoring, see [[recoverCrashedSwap]]. Buckets the batch
+    * empties are displaced BEFORE the marker: roll-forward only sees the
+    * buckets tmp holds, so an emptied bucket still live at a crash after the
+    * marker would keep its deleted rows.
+    *
+    * `inc` is the cached PRE-bucket projection: both consumers (touched
+    * probe, merged write) re-derive the bucket hash from it.
     */
-  private def writeBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
-                            exists: Boolean, incoming: DataFrame, schema: CdcSchema,
+  private def writeBucketed(spark: org.apache.spark.sql.SparkSession,
+                            fs: org.apache.hadoop.fs.FileSystem, path: String,
+                            exists: Boolean, inc: DataFrame, schema: CdcSchema,
                             m: Int): Unit = {
-    // cache the PRE-bucket projection: both consumers (touched probe, merged
-    // write) re-derive the bucket hash from it, and the Auto-derive count on
-    // a table's first write fills the same cache instead of a second parse
-    val inc = incoming.cache()
-    try {
-      val bucketed = withBucket(inc, schema.primaryKeys, m)
-      val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-      val merged = if (exists) {
-        // partition pruning: only the touched __bucket=N dirs are read
-        val state = spark.read.parquet(path).where(col(BucketCol).isin(touched: _*))
-        Changelog.materialize(
-          withBucket(stateAsInserts(state, schema), schema.primaryKeys, m).unionByName(bucketed),
-          schema.primaryKeys :+ BucketCol) // bucket is pk-functional: same groups
-      } else Changelog.materialize(bucketed, schema.primaryKeys :+ BucketCol)
+    val tmp = path + ".tmp"
+    val bucketed = withBucket(inc, schema.primaryKeys, m)
+    val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
+    // ONE listing of each side replaces 2×touched exists round-trips
+    val existing = if (exists) bucketSet(fs, path) else Set.empty[Int]
+    val stateBuckets = touched.filter(existing)
+    val merged = if (stateBuckets.nonEmpty) {
+      // partition pruning: only the touched __bucket=N dirs are read
+      val state = spark.read.parquet(path).where(col(BucketCol).isin(stateBuckets: _*))
+      Changelog.materialize(
+        withBucket(stateAsInserts(state, schema), schema.primaryKeys, m).unionByName(bucketed),
+        schema.primaryKeys :+ BucketCol) // bucket is pk-functional: same groups
+    } else Changelog.materialize(bucketed, schema.primaryKeys :+ BucketCol)
 
-      val fs = hfs(spark, path)
-      val tmp = path + ".tmp"
-      // one write task per touched bucket: buckets are sized to the target
-      // file size at layout derivation, so task == output file == bucket
-      // (the previous keyless-width repartition left most tasks empty when
-      // touched ≪ spark.sql.shuffle.partitions)
-      merged.repartition(math.max(touched.size, 1), col(BucketCol))
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
+    // one write task per touched bucket: buckets are sized to the target
+    // file size at layout derivation, so task == output file == bucket
+    // (the previous keyless-width repartition left most tasks empty when
+    // touched ≪ spark.sql.shuffle.partitions)
+    merged.repartition(math.max(touched.size, 1), col(BucketCol))
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
+    val produced = bucketSet(fs, tmp)
 
-      fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-      writeLayoutIfAbsent(fs, path, m)
-      val swapReady = new org.apache.hadoop.fs.Path(s"$tmp/$SwapReady")
-      val _ = fs.mkdirs(swapReady)
-      // ONE listing of each side replaces 2×touched exists round-trips
-      val existing = bucketSet(fs, path)
-      val produced = bucketSet(fs, tmp)
-      touched.foreach { b =>
-        val dst = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-        val src = new org.apache.hadoop.fs.Path(s"$tmp/$BucketCol=$b")
-        // displace-then-swap: the old bucket moves into the (dot-prefixed,
-        // reader-invisible) tmp area first, so a failed swap can restore it —
-        // never delete state before its replacement is in place
-        val displaced = new org.apache.hadoop.fs.Path(s"$tmp/.old_$b")
-        val hadState = existing(b)
-        if (hadState) renameOrThrow(fs, dst, displaced)
-        if (produced(b)) {
-          try renameOrThrow(fs, src, dst)
-          catch {
-            case e: java.io.IOException =>
-              if (hadState && !fs.rename(displaced, dst)) {
-                e.addSuppressed(new java.io.IOException(s"restore of bucket $b also failed"))
-              }
-              // the batch did NOT commit: drop the roll-forward marker so
-              // recovery does not silently apply it later (recovery then runs
-              // in rollback mode, where the .done_N markers below protect
-              // this batch's already-final emptied buckets)
-              try { fs.delete(swapReady, true); () }
-              catch { case _: java.io.IOException => () }
-              throw e
+    // the meta goes first: it is a sibling file, so no crash point leaves a
+    // state dir without it
+    writeLayoutIfAbsent(fs, path, m)
+    // displace-then-swap: an old bucket moves into the (dot-prefixed,
+    // reader-invisible) tmp area first, so a failed swap can restore it —
+    // never delete state before its replacement is in place
+    def displaced(b: Int) = new org.apache.hadoop.fs.Path(s"$tmp/.old_$b")
+    def live(b: Int) = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
+    stateBuckets.filterNot(produced).foreach(b => renameOrThrow(fs, live(b), displaced(b)))
+    val swapReady = new org.apache.hadoop.fs.Path(s"$tmp/$SwapReady")
+    fs.mkdirs(swapReady)
+    // after the marker, so a crash never leaves an empty state dir behind
+    if (!exists && produced.nonEmpty) fs.mkdirs(new org.apache.hadoop.fs.Path(path))
+    touched.filter(produced).foreach { b =>
+      val hadState = existing(b)
+      if (hadState) renameOrThrow(fs, live(b), displaced(b))
+      try renameOrThrow(fs, new org.apache.hadoop.fs.Path(s"$tmp/$BucketCol=$b"), live(b))
+      catch {
+        case e: java.io.IOException =>
+          if (hadState && !fs.rename(displaced(b), live(b))) {
+            e.addSuppressed(new java.io.IOException(s"restore of bucket $b also failed"))
           }
-        } else if (hadState) {
-          // bucket emptied by deletes: dst stays absent BY DESIGN; the marker
-          // only matters to rollback-mode recovery (see the failure path
-          // above) — roll-forward never resurrects a displaced bucket
-          val _ = fs.mkdirs(new org.apache.hadoop.fs.Path(s"$tmp/.done_$b"))
-        }
+          // the batch did NOT commit: drop the roll-forward marker so
+          // recovery does not silently apply it later (it rolls back the
+          // displaced buckets instead; the batch's replay re-applies them)
+          try { fs.delete(swapReady, true); () }
+          catch { case _: java.io.IOException => () }
+          throw e
       }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      ()
-    } finally { inc.unpersist(); () }
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    ()
   }
 
   /** Bucket ids present as `__bucket=N` child dirs (one listing). */
@@ -465,9 +484,10 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
 }
 
 object ParquetUpsertSink {
-  /** `buckets` sentinel: derive the bucket count from the first batch's row
-    * count — one bucket per [[RowsPerBucketConf]] rows, clamped to
-    * [1, [[MaxDerivedBuckets]]] — and persist it in the table's layout meta.
+  /** `buckets` sentinel: derive the bucket count from the session and the
+    * first batch's row count — `max(defaultParallelism, ceil(rows /`
+    * [[RowsPerBucketConf]]`))`, capped at [[MaxDerivedBuckets]] — and persist
+    * it in the table's layout meta.
     */
   val AutoBuckets: Int = -1
   /** Target rows per PK-hash bucket for [[AutoBuckets]] derivation (Spark

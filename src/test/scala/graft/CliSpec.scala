@@ -1037,6 +1037,53 @@ class CliSpec extends SparkSpec {
     assert(err.getMessage.contains("available-now"))
   }
 
+  test("a YAML without `buckets` pins the layout to the session's parallelism; a restart keeps it") {
+    import graft.pipeline.PipelineDef
+    import graft.sinks.ParquetUpsertSink
+    import org.apache.spark.sql.streaming.Trigger
+    val in = java.nio.file.Files.createTempDirectory("graft-layout-in").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-layout-out").toString
+    val p = PipelineDef.fromYaml(
+      s"""source:
+         |  type: debezium-json
+         |  path: $in
+         |  schema.db.users: "id BIGINT, name STRING"
+         |transform:
+         |  - source-table: db.users
+         |    primary-keys: id
+         |sink:
+         |  type: parquet-upsert
+         |  path: $out
+         |""".stripMargin)
+    def feed(file: String, ids: Seq[Int]): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/$file"), ids.map(i =>
+        s"""{"before":null,"after":{"id":$i,"name":"u$i"},"op":"c","ts_ms":$i,"source":{"db":"db","table":"users"}}"""
+      ).mkString("", "\n", "\n"))
+    val users = TableId.of("db", "users")
+    val cores = spark.sparkContext.defaultParallelism
+    feed("b1.json", 1 to 2)
+    val (_, s1, q1) = Cli.buildStreaming(spark, p, Trigger.AvailableNow())
+    q1.awaitTermination(60000)
+    val sink = s1.asInstanceOf[ParquetUpsertSink]
+    def layout = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(sink.tablePath(users) + ".layout")), "UTF-8").trim.toInt
+    def bucketIds = new java.io.File(sink.tablePath(users)).list().toSeq
+      .filter(_.startsWith("__bucket=")).map(_.stripPrefix("__bucket=").toInt)
+    assert(layout === cores, "a 2-row first batch derives one bucket per core")
+
+    // restart with a batch that would derive more buckets on its own: the
+    // pinned layout wins over a re-derivation
+    spark.conf.set(ParquetUpsertSink.RowsPerBucketConf, "1")
+    try {
+      feed("b2.json", 3 to cores + 10)
+      val (_, _, q2) = Cli.buildStreaming(spark, p, Trigger.AvailableNow())
+      q2.awaitTermination(60000)
+    } finally spark.conf.unset(ParquetUpsertSink.RowsPerBucketConf)
+    assert(layout === cores)
+    assert(bucketIds.nonEmpty && bucketIds.forall(_ < cores))
+    assert(sink.read(spark, users).count() === cores + 10)
+  }
+
   test("routed multi-monitor pipeline folds both assets concurrently; monitor-show renders each") {
     // TWO monitor: blocks on a routed 2-table pipeline with
     // table-parallelism — the per-table slices process on separate

@@ -23,6 +23,32 @@ class ParquetSinkCommitSpec extends SparkSpec {
   private def batch(rows: (Long, String, String, Long)*) =
     rows.toDF("id", "v", Changelog.OpCol, Changelog.SeqCol)
 
+  private def localFs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+
+  private def layoutOf(tablePath: String): Int = {
+    val in = localFs.open(new Path(tablePath + ".layout"))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt finally in.close()
+  }
+
+  private def bucketDirs(tablePath: String): Set[Int] =
+    localFs.listStatus(new Path(tablePath)).map(_.getPath.getName)
+      .filter(_.startsWith("__bucket=")).map(_.stripPrefix("__bucket=").toInt).toSet
+
+  /** The buckets `keys` hash to under modulus `m`, by the sink's own rule. */
+  private def bucketsOf(keys: Seq[Long], m: Int): Set[Int] = {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    keys.toDF("id").select(pmod(xxhash64(col("id")), lit(m.toLong)).cast("int"))
+      .as[Int].collect().toSet
+  }
+
+  /** Table state as (id, v) pairs, empty when the table has no state dir. */
+  private def stateOf(sink: ParquetUpsertSink): Set[(Long, String)] =
+    try sink.read(spark, id).as[(Long, String)].collect().toSet
+    catch {
+      case _: org.apache.spark.sql.AnalysisException if !localFs.exists(new Path(sink.tablePath(id))) =>
+        Set.empty
+    }
+
   /** Refuses renames whose SOURCE path name matches `deny` (returns false,
     * the contract under test). Everything else passes through to local FS.
     */
@@ -31,6 +57,67 @@ class ParquetSinkCommitSpec extends SparkSpec {
     override def rename(src: Path, dst: Path): Boolean =
       if (deny(src.toString)) { denied.incrementAndGet(); false }
       else super.rename(src, dst)
+  }
+
+  /** Simulated process death: nothing after it runs, nothing cleans up. */
+  private final class Crash extends RuntimeException("simulated crash")
+
+  /** Counts the sink's mutating calls (create, mkdirs, rename, delete) and
+    * dies right after call `crashAt` completes. A crash after a create
+    * leaves the file empty, as a death before its bytes were written would.
+    */
+  private class CrashingFs(underlying: FileSystem, crashAt: Int) extends FilterFileSystem(underlying) {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    private def step[T](done: T): T =
+      if (calls.incrementAndGet() == crashAt) throw new Crash else done
+    override def create(f: Path, perm: org.apache.hadoop.fs.permission.FsPermission,
+                        overwrite: Boolean, bufferSize: Int, replication: Short,
+                        blockSize: Long, progress: org.apache.hadoop.util.Progressable) = {
+      val out = super.create(f, perm, overwrite, bufferSize, replication, blockSize, progress)
+      try step(out) catch { case c: Crash => out.close(); throw c }
+    }
+    override def mkdirs(f: Path): Boolean = step(fs.mkdirs(f))
+    override def mkdirs(f: Path, perm: org.apache.hadoop.fs.permission.FsPermission): Boolean =
+      step(fs.mkdirs(f, perm))
+    override def rename(src: Path, dst: Path): Boolean = step(fs.rename(src, dst))
+    override def delete(f: Path, recursive: Boolean): Boolean = step(fs.delete(f, recursive))
+  }
+
+  private class CrashingSink(root: String, buckets: Int, crashAt: Int)
+      extends ParquetUpsertSink(root, buckets) {
+    val crashFs = new CrashingFs(localFs, crashAt)
+    override protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): FileSystem = crashFs
+  }
+
+  /** Crash `write` after each of its mutating FS calls in turn; after every
+    * crash a restarted sink must read the state either before or after the
+    * batch — never a mix — and a replay of the batch must converge to after.
+    */
+  private def crashAtEveryCall(buckets: Int, setup: ParquetUpsertSink => Unit,
+                               write: ParquetUpsertSink => Unit): Unit = {
+    val clean = java.nio.file.Files.createTempDirectory("graft-crash-clean").toString
+    val probe = new CrashingSink(clean, buckets, crashAt = -1)
+    setup(probe)
+    val before = stateOf(probe)
+    val setupCalls = probe.crashFs.calls.get()
+    write(probe)
+    val after = stateOf(probe)
+    val calls = probe.crashFs.calls.get() - setupCalls
+    assert(calls > 0 && before != after)
+    (1 to calls).foreach { k =>
+      val root = java.nio.file.Files.createTempDirectory(s"graft-crash-$k").toString
+      val sink = new CrashingSink(root, buckets, crashAt = setupCalls + k)
+      setup(sink)
+      intercept[Crash](write(sink))
+      val restarted = new ParquetUpsertSink(root, buckets)
+      val recovered = stateOf(restarted)
+      assert(recovered == before || recovered == after,
+        s"crash after call $k of $calls: recovered $recovered, want $before or $after")
+      write(restarted)
+      assert(stateOf(restarted) === after, s"replay after a crash at call $k of $calls")
+      localFs.delete(new Path(root), true)
+    }
+    val _ = localFs.delete(new Path(clean), true)
   }
 
   test("failed swap rename throws and preserves the previous table state") {
@@ -204,15 +291,12 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val sink = new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
 
-    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     val tablePath = sink.tablePath(id)
-    val meta = new Path(tablePath + ".layout")
-    assert(fs.exists(meta), "layout meta must be written at state creation")
-    val in = fs.open(meta)
-    val m = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt finally in.close()
-    assert(m === 1, "a 2-row first batch derives a single bucket")
-    assert(fs.listStatus(new Path(tablePath))
-      .count(_.getPath.getName.startsWith("__bucket=")) === 1)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(localFs.exists(new Path(tablePath + ".layout")), "layout meta must be written at state creation")
+    assert(layoutOf(tablePath) === cores,
+      "a 2-row first batch derives one bucket per core, the parallelism floor")
+    assert(bucketDirs(tablePath) === bucketsOf(Seq(1L, 2L), cores))
 
     // a second writer with a DIFFERENT constructor constant must follow the
     // on-disk layout (meta wins), not prune state with the wrong modulus
@@ -220,10 +304,9 @@ class ParquetSinkCommitSpec extends SparkSpec {
     sink2.write(id, batch((3L, "c", "INSERT", 3L)), schema)
     assert(sink2.read(spark, id).as[(Long, String)].collect().toSet ===
       Set((1L, "a"), (2L, "b"), (3L, "c")))
-    assert(fs.listStatus(new Path(tablePath))
-      .count(_.getPath.getName.startsWith("__bucket=")) === 1,
-      "the merge must keep the meta's 1-bucket layout, not fan out to 32")
-    val _ = fs.delete(new Path(root), true)
+    assert(bucketDirs(tablePath) === bucketsOf(Seq(1L, 2L, 3L), cores),
+      "the merge must keep the meta's layout, not fan out to 32")
+    val _ = localFs.delete(new Path(root), true)
   }
 
   test("displaced bucket WITH a done marker (emptied by deletes) is not resurrected") {
@@ -250,5 +333,67 @@ class ParquetSinkCommitSpec extends SparkSpec {
     sink.write(id, batch((5L, "e", "INSERT", 10L)), schema)
     assert(sink.read(spark, id).as[(Long, String)].collect().toSet === after + ((5L, "e")))
     val _ = fs.delete(new Path(root), true)
+  }
+
+  test("a crash after the roll-forward marker never resurrects a bucket the batch emptied") {
+    // the batch deletes every key of one bucket and updates a key of
+    // another: roll-forward only sees the buckets tmp holds, so the emptied
+    // one must be displaced before the marker exists
+    val keys = (1L to 8L).map(k => (k, s"v$k", "INSERT", k))
+    val emptied = bucketsOf(Seq(1L), 4).head
+    val inEmptied = keys.map(_._1).filter(k => bucketsOf(Seq(k), 4).head == emptied)
+    val other = keys.map(_._1).find(k => !inEmptied.contains(k)).get
+    val change = inEmptied.map(k => (k, s"v$k", "DELETE", 100L + k)) :+ ((other, "u", "UPDATE", 200L))
+    crashAtEveryCall(4, _.write(id, batch(keys: _*), schema), _.write(id, batch(change: _*), schema))
+  }
+
+  test("a crash anywhere in an AutoBuckets first write leaves state a restart can write") {
+    // the layout meta goes down before the state dir: no crash point leaves
+    // a meta-less state dir for the restarted writer to refuse
+    crashAtEveryCall(ParquetUpsertSink.AutoBuckets, _ => (),
+      _.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema))
+  }
+
+  test("AutoBuckets derives above the parallelism floor once the first batch outgrows it") {
+    val root = java.nio.file.Files.createTempDirectory("graft-auto-big").toString
+    val want = spark.sparkContext.defaultParallelism + 3
+    val rows = (1L to 2L * want).map(k => (k, s"v$k", "INSERT", k))
+    spark.conf.set(ParquetUpsertSink.RowsPerBucketConf, "2")
+    try {
+      val sink = new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)
+      sink.write(id, batch(rows: _*), schema)
+      assert(layoutOf(sink.tablePath(id)) === want, "ceil(rows / rowsPerBucket) above the floor")
+      assert(bucketDirs(sink.tablePath(id)) === bucketsOf(rows.map(_._1), want))
+      assert(stateOf(sink) === rows.map(r => (r._1, r._2)).toSet)
+    } finally spark.conf.unset(ParquetUpsertSink.RowsPerBucketConf)
+    val _ = localFs.delete(new Path(root), true)
+  }
+
+  test("state without a layout meta fails loudly under AutoBuckets, naming the setting that reads it") {
+    val root = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+    // bucketed state written before the layout meta existed: the old default 32
+    val legacy = new ParquetUpsertSink(root, buckets = 32)
+    legacy.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
+    assert(localFs.delete(new Path(legacy.tablePath(id) + ".layout"), false))
+    val e = intercept[IllegalArgumentException] {
+      new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)
+        .write(id, batch((3L, "c", "INSERT", 3L)), schema)
+    }
+    assert(e.getMessage.contains("`buckets: 32`"), e.getMessage)
+    assert(stateOf(legacy) === Set((1L, "a"), (2L, "b")), "a refused write leaves state untouched")
+    // the named setting does read and extend it
+    val pinned = new ParquetUpsertSink(root, buckets = 32)
+    pinned.write(id, batch((3L, "c", "INSERT", 3L)), schema)
+    assert(stateOf(pinned) === Set((1L, "a"), (2L, "b"), (3L, "c")))
+
+    val root0 = java.nio.file.Files.createTempDirectory("graft-legacy0").toString
+    new ParquetUpsertSink(root0).write(id, batch((1L, "a", "INSERT", 1L)), schema)
+    val e0 = intercept[IllegalArgumentException] {
+      new ParquetUpsertSink(root0, buckets = ParquetUpsertSink.AutoBuckets)
+        .write(id, batch((3L, "c", "INSERT", 3L)), schema)
+    }
+    assert(e0.getMessage.contains("unbucketed") && e0.getMessage.contains("`buckets: 0`"), e0.getMessage)
+    localFs.delete(new Path(root), true)
+    val _ = localFs.delete(new Path(root0), true)
   }
 }
