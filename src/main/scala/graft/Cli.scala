@@ -415,7 +415,8 @@ object Cli {
     val registry = new SchemaRegistry(SchemaChangeBehavior.of(p.schemaChangeBehavior))
     // no `buckets` (or `buckets: auto`) derives the count from the session's
     // parallelism and the first batch, and pins it in the table's layout meta
-    // (scale-adaptive file sizing); an explicit integer pins a layout
+    // (scale-adaptive file sizing); an explicit integer >= 1 pins a layout
+    // (the sink refuses `buckets: 0`, the removed unbucketed layout)
     val buckets = p.sink.options.getOrElse("buckets", "auto") match {
       case "auto" => ParquetUpsertSink.AutoBuckets
       case n => n.toInt

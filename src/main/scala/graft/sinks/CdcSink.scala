@@ -2,7 +2,8 @@ package graft.sinks
 
 import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
 import graft.operators.Changelog
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sink SPI — the Spark shape of the reference's `DataSink =
@@ -78,27 +79,38 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   * the merge path ALSO coerces (cast + null-pad) on read as a belt-and-
   * braces for state that lags after a crash between DDL and rewrite.
   *
-  * Bucketed mode partitions state by `pmod(xxhash64(pk), buckets)`: a batch
-  * then reads and rewrites ONLY the PK-hash partitions it touches (partition
-  * pruning on read, dynamic partition overwrite on write) — merge cost scales
-  * with batch footprint, not table size. At 100 TB this is the difference
-  * between O(state) and O(touched-buckets) per micro-batch; a production
-  * deployment swaps in Delta/Iceberg MERGE behind the same interface.
+  * State is partitioned by `pmod(xxhash64(pk), buckets)` into `__bucket=N`
+  * dirs: a batch reads and rewrites ONLY the PK-hash partitions it touches
+  * (partition pruning on read) — merge cost scales with batch footprint, not
+  * table size. At 100 TB this is the difference between O(state) and
+  * O(touched-buckets) per micro-batch; a production deployment swaps in
+  * Delta/Iceberg MERGE behind the same interface. Every change to state, a
+  * batch merge or a DDL rewrite, lands through one per-bucket swap
+  * ([[commit]]), which [[recoverCrashedSwap]] completes or undoes after a
+  * crash.
   *
   * The bucket count is a LAYOUT property of the table, not of the writer: it
   * is persisted in a `<table>.layout` meta file at state creation and every
   * later write/merge resolves it from there — a writer configured with a
   * different constant can no longer silently prune against the wrong modulus
-  * (r20). Pass [[ParquetUpsertSink.AutoBuckets]] (the CLI's default) to
-  * derive the count from the session and the first batch's size: one bucket
-  * per core at least, one per [[ParquetUpsertSink.RowsPerBucketConf]] rows
-  * above that (guide §6 scale-adaptive file sizing). A 100 k-row fixture on
-  * 4 cores gets 4 buckets — one write task per core, no 32-way small-file
-  * fan-out per merge — while a 10^9-row production snapshot gets ~2000,
-  * keeping per-bucket files in the 10^5-10^6-row (~64-128 MB) range.
+  * (r20). [[ParquetUpsertSink.AutoBuckets]] (the default, here and in the
+  * CLI) derives the count from the session and the first batch's size: one
+  * bucket per core at least, one per [[ParquetUpsertSink.RowsPerBucketConf]]
+  * rows above that (guide §6 scale-adaptive file sizing). A 100 k-row
+  * fixture on 4 cores gets 4 buckets — one write task per core, no 32-way
+  * small-file fan-out per merge — while a 10^9-row production snapshot gets
+  * ~2000, keeping per-bucket files in the 10^5-10^6-row (~64-128 MB) range.
+  *
+  * State in the flat layout of earlier versions (parquet files at the state
+  * root, no bucket dirs) is refused by writes and DDL; [[read]] still
+  * returns its rows, so they can be replayed into a new state dir.
   */
-class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
+class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBuckets)
+    extends CdcSink {
   import ParquetUpsertSink.{AutoBuckets, MaxDerivedBuckets, RowsPerBucketConf, SwapReady}
+  require(buckets == AutoBuckets || buckets >= 1,
+    s"upsert-sink buckets must be auto or >= 1, got $buckets: the unbucketed layout " +
+      "(`buckets: 0`) was removed, every upsert state is PK-bucketed")
 
   private val BucketCol = "__bucket"
   // concurrent per-table writes are fine; same-table writes must serialize
@@ -110,7 +122,9 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
   def tablePath(id: TableId): String =
     s"$rootDir/${Seq(id.namespace, id.schemaName, id.tableName).filter(_.nonEmpty).mkString("__")}"
 
-  private def layoutPath(path: String) = new org.apache.hadoop.fs.Path(path + ".layout")
+  private def lockOf(path: String): Object = tableLocks.computeIfAbsent(path, _ => new Object)
+
+  private def layoutPath(path: String) = new Path(path + ".layout")
 
   /** Bucket count this table's state is laid out with: the `.layout` meta
     * file when present (the on-disk layout is ground truth — a writer whose
@@ -124,9 +138,8 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     * is (a first batch does not bound the table), the ratio keeps files in
     * the target size band once the table outgrows the floor.
     */
-  private def effectiveBuckets(spark: org.apache.spark.sql.SparkSession,
-                               fs: org.apache.hadoop.fs.FileSystem, path: String,
-                               stateExists: Boolean, incoming: DataFrame): Int =
+  private def effectiveBuckets(spark: SparkSession, fs: FileSystem, path: String,
+                               existing: Set[Int], incoming: DataFrame): Int =
     layoutCache.computeIfAbsent(path, _ => {
       val lp = layoutPath(path)
       if (fs.exists(lp)) {
@@ -134,13 +147,11 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
         finally in.close()
       } else if (buckets == AutoBuckets) {
-        // never guess the modulus of existing state: name the setting that reads it
-        require(!stateExists,
-          if (bucketSet(fs, path).nonEmpty)
-            s"bucketed state at $path has no layout meta: it predates the persisted " +
-              "layout and was written with the old default of 32 buckets; set " +
-              "`buckets: 32` (or the count it was written with) to keep using it"
-          else s"state at $path is unbucketed; set `buckets: 0` to keep using it")
+        // never guess the modulus of existing buckets: name the setting that reads them
+        require(existing.isEmpty,
+          s"bucketed state at $path has no layout meta: it predates the persisted " +
+            "layout and was written with the old default of 32 buckets; set " +
+            "`buckets: 32` (or the count it was written with) to keep using it")
         val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
         val rows = incoming.count() // first write only; fills the batch cache
         val derived = (rows + target - 1) / target
@@ -153,11 +164,10 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     * it must survive the per-bucket swaps and the DDL rewrite of the dir).
     * Written aside and renamed in, so a crash mid-write leaves no torn meta.
     */
-  private def writeLayoutIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
-                                  path: String, m: Int): Unit = {
+  private def writeLayoutIfAbsent(fs: FileSystem, path: String, m: Int): Unit = {
     val lp = layoutPath(path)
     if (!fs.exists(lp)) {
-      val aside = new org.apache.hadoop.fs.Path(path + ".layout.tmp")
+      val aside = new Path(path + ".layout.tmp")
       val out = fs.create(aside, true)
       try out.write(m.toString.getBytes("UTF-8")) finally out.close()
       renameOrThrow(fs, aside, lp)
@@ -181,7 +191,7 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
   }
 
   override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit =
-    tableLocks.computeIfAbsent(tablePath(id), _ => new Object).synchronized {
+    lockOf(tablePath(id)).synchronized {
       doWrite(id, changelog, schema)
     }
 
@@ -215,58 +225,42 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     }
   }
 
-  /** Rewrite the whole state dir through `fn` with the same write-new-then-
-    * swap commit as [[doWrite]]; no-op when the table has no state yet.
+  private def session(): SparkSession = SparkSession.getActiveSession
+    .orElse(SparkSession.getDefaultSession)
+    .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
+
+  /** Rewrite every live bucket through `fn` and land it with the write
+    * path's [[commit]]. A table with no bucket dirs holds no rows, so there
+    * is nothing to rewrite: its next write materializes the evolved schema.
     */
   private def rewriteState(id: TableId)(fn: DataFrame => DataFrame): Unit =
-    tableLocks.computeIfAbsent(tablePath(id), _ => new Object).synchronized {
-      val spark = org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
+    lockOf(tablePath(id)).synchronized {
+      val spark = session()
       val path = tablePath(id)
       val fs = hfs(spark, path)
-      val dst = new org.apache.hadoop.fs.Path(path)
-      recoverCrashedSwap(fs, path, dst)
-      if (fs.exists(dst)) {
+      val existing = recoveredBuckets(fs, path)
+      if (existing.nonEmpty) {
         val state = spark.read.parquet(path)
         val next = fn(state)
         // cheap no-op detection: same shape → skip the rewrite (idempotent
         // replay of a batch's DDL, or a drop of a never-present column)
         if (next.schema != state.schema) {
-          val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-          val old = new org.apache.hadoop.fs.Path(path + ".old")
-          fs.delete(tmp, true)
-          val writer = next.write.mode("overwrite")
-          // layout-faithful: the on-disk bucket column, not the constructor
-          // constant, decides whether the rewrite keeps the partitioning
-          (if (next.columns.contains(BucketCol)) writer.partitionBy(BucketCol)
-           else writer).parquet(tmp.toString)
-          fs.delete(old, true)
-          renameOrThrow(fs, dst, old)
-          try renameOrThrow(fs, tmp, dst)
-          catch {
-            case ex: java.io.IOException =>
-              if (!fs.rename(old, dst)) {
-                ex.addSuppressed(new java.io.IOException(s"restore of $old also failed"))
-              }
-              throw ex
-          }
-          fs.delete(old, true)
-          ()
+          next.write.mode("overwrite").partitionBy(BucketCol).parquet(path + ".tmp")
+          commit(fs, path, existing, existing.toSeq)
         }
       }
     }
 
   private def deleteState(id: TableId): Unit =
-    tableLocks.computeIfAbsent(tablePath(id), _ => new Object).synchronized {
-      val spark = org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
-      val fs = hfs(spark, tablePath(id))
-      Seq("", ".tmp", ".old", ".layout", ".layout.tmp").foreach(sfx =>
-        fs.delete(new org.apache.hadoop.fs.Path(tablePath(id) + sfx), true))
+    lockOf(tablePath(id)).synchronized {
+      val path = tablePath(id)
+      val fs = hfs(session(), path)
+      // commit leftovers go before the live dir: once it is gone, recovery
+      // must find nothing to bring rows back from
+      Seq(".tmp", ".old", "", ".layout", ".layout.tmp").foreach(sfx =>
+        fs.delete(new Path(path + sfx), true))
       // a recreated table derives a fresh layout from its new first batch
-      layoutCache.remove(tablePath(id))
+      layoutCache.remove(path)
       ()
     }
 
@@ -275,41 +269,37 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     * stores with a committer), and every rename is CHECKED — a false return
     * is a loud failure, never a silently lost table state.
     */
-  protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  protected def hfs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path,
-                            dst: org.apache.hadoop.fs.Path): Unit =
+  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"upsert-sink commit failed: rename $src -> $dst " +
         "(state preserved; check permissions / cross-filesystem paths)")
 
-  /** Crash recovery for the swap commit: a process that died between
-    * rename(dst→old) and rename(tmp→dst) left the ONLY copy of table state
-    * under `.old` (or, bucketed, under `.tmp/.old_N`) — restore it before
-    * reading, or the next write would treat the table as empty and destroy
-    * the sole copy. A stale `.old` next to a live `dst` (died after commit,
-    * before cleanup) is NOT restored; it is deleted by the commit sequence.
-    *
-    * Bucketed states recover in one of two modes (r20):
-    *  - `.tmp/.swap_ready` present — the batch's parquet write completed, the
-    *    buckets it empties are already displaced, and its swap-ins began (the
-    *    marker is created between the two, and deleted if a swap rename fails
-    *    and is rolled back): roll the batch FORWARD by finishing the remaining
-    *    per-bucket moves. The tmp contents are complete by construction,
-    *    every swap decision is final, and a displaced bucket with no
-    *    replacement dir was emptied by deletes on purpose — nothing is ever
-    *    resurrected, no per-bucket marker needed.
-    *  - no marker — a half-written tmp or displacement, or a state left by
-    *    the pre-r20 protocol: restore displaced buckets whose dst is absent
-    *    (rollback), honoring that protocol's `.done_N` emptied-bucket markers.
+  /** Crash recovery for [[commit]], run before every read, write and DDL of
+    * a table: a commit that died part-way must not leave the next writer a
+    * table that looks smaller than it is.
+    *  - `.tmp/.swap_ready` present — the commit's parquet write completed,
+    *    the buckets it empties are already displaced, and its swap-ins began
+    *    (the marker is created between the two, and deleted if a swap rename
+    *    fails and is rolled back): roll the commit FORWARD by finishing the
+    *    remaining per-bucket moves. The tmp contents are complete by
+    *    construction, every swap decision is final, and a displaced bucket
+    *    with no replacement dir was emptied on purpose — nothing is ever
+    *    resurrected.
+    *  - no marker — a half-written tmp or displacement: restore displaced
+    *    buckets whose live dir is absent (rollback).
+    * Two leftovers of older versions are still honoured, though neither is
+    * written any more: a whole-dir `<table>.old` with no live dir (a crash
+    * inside the removed whole-directory swap) is restored, and a `.done_N`
+    * marker keeps its emptied bucket from being restored on rollback.
     */
-  private def recoverCrashedSwap(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                                 dst: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
+  private def recoverCrashedSwap(fs: FileSystem, path: String): Unit = {
+    val dst = new Path(path)
+    val old = new Path(path + ".old")
     if (!fs.exists(dst) && fs.exists(old)) renameOrThrow(fs, old, dst)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
+    val tmp = new Path(path + ".tmp")
     if (fs.exists(tmp)) {
       val entries = fs.listStatus(tmp)
       if (entries.exists(_.getPath.getName == SwapReady)) {
@@ -318,9 +308,8 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
         if (moves.nonEmpty && !fs.exists(dst)) fs.mkdirs(dst)
         moves.foreach { s =>
           val b = s.getPath.getName.stripPrefix(s"$BucketCol=")
-          val bucketDst = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-          if (fs.exists(bucketDst))
-            renameOrThrow(fs, bucketDst, new org.apache.hadoop.fs.Path(s"${tmp.toString}/.old_$b"))
+          val bucketDst = new Path(s"$path/$BucketCol=$b")
+          if (fs.exists(bucketDst)) renameOrThrow(fs, bucketDst, new Path(s"$tmp/.old_$b"))
           renameOrThrow(fs, s.getPath, bucketDst)
         }
         fs.delete(tmp, true)
@@ -328,131 +317,103 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
       } else {
         entries.filter(_.getPath.getName.startsWith(".old_")).foreach { s =>
           val b = s.getPath.getName.stripPrefix(".old_")
-          val bucketDst = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-          val done = new org.apache.hadoop.fs.Path(s"${tmp.toString}/.done_$b")
+          val bucketDst = new Path(s"$path/$BucketCol=$b")
+          val done = new Path(s"$tmp/.done_$b")
           if (!fs.exists(bucketDst) && !fs.exists(done)) renameOrThrow(fs, s.getPath, bucketDst)
         }
       }
     }
   }
 
+  /** Recover a crashed commit, then list the live buckets (none without a
+    * state dir).
+    */
+  private def recoveredBuckets(fs: FileSystem, path: String): Set[Int] = {
+    recoverCrashedSwap(fs, path)
+    if (fs.exists(new Path(path))) bucketSet(fs, path) else Set.empty
+  }
+
+  /** The write path: merge + rewrite only the PK-hash partitions the batch
+    * touches, then [[commit]] them.
+    */
   private def doWrite(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
     require(schema.primaryKeys.nonEmpty, s"upsert sink requires primary keys on $id")
     val spark = changelog.sparkSession
     val path = tablePath(id)
     val fs = hfs(spark, path)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    recoverCrashedSwap(fs, path, dst)
+    val existing = recoveredBuckets(fs, path)
 
+    // cached ahead of the layout resolution: the Auto-derive count() on a
+    // table's first write fills the cache, so the batch is parsed once; the
+    // touched probe and the merged write re-derive the bucket hash from it
     val cols = schema.columnNames.map(col)
-    val incoming = changelog.select(cols :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*)
+    val inc = changelog.select(cols :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*).cache()
+    try {
+      val m = effectiveBuckets(spark, fs, path, existing, inc)
+      val bucketed = withBucket(inc, schema.primaryKeys, m)
+      val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
+      val stateBuckets = touched.filter(existing)
+      val merged = if (stateBuckets.nonEmpty) {
+        // partition pruning: only the touched __bucket=N dirs are read
+        val state = spark.read.parquet(path).where(col(BucketCol).isin(stateBuckets: _*))
+        Changelog.materialize(
+          withBucket(stateAsInserts(state, schema), schema.primaryKeys, m).unionByName(bucketed),
+          schema.primaryKeys :+ BucketCol) // bucket is pk-functional: same groups
+      } else Changelog.materialize(bucketed, schema.primaryKeys :+ BucketCol)
 
-    val exists = fs.exists(dst)
-    if (buckets != 0 || layoutCache.containsKey(path) || fs.exists(layoutPath(path))) {
-      // cached ahead of the layout resolution: the Auto-derive count() on a
-      // table's first write fills the cache, so the batch is parsed once
-      val inc = incoming.cache()
-      try writeBucketed(spark, fs, path, exists, inc, schema,
-        effectiveBuckets(spark, fs, path, exists, inc))
-      finally { inc.unpersist(); () }
-    } else {
-      val merged =
-        if (exists)
-          Changelog.materialize(
-            stateAsInserts(spark.read.parquet(path), schema).unionByName(incoming),
-            schema.primaryKeys)
-        else Changelog.materialize(incoming, schema.primaryKeys)
-
-      // write-new-then-swap: readers of `path` never see a half-written state
-      val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-      val old = new org.apache.hadoop.fs.Path(path + ".old")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(old, true)
-      val hadState = fs.exists(dst)
-      if (hadState) renameOrThrow(fs, dst, old)
-      try renameOrThrow(fs, tmp, dst)
-      catch { // restore the previous state before surfacing the failure
-        case e: java.io.IOException =>
-          if (hadState && !fs.rename(old, dst)) {
-            e.addSuppressed(new java.io.IOException(s"restore of $old also failed"))
-          }
-          throw e
-      }
-      fs.delete(old, true)
-      ()
-    }
+      // one write task per touched bucket: buckets are sized to the target
+      // file size at layout derivation, so task == output file == bucket
+      // (the previous keyless-width repartition left most tasks empty when
+      // touched ≪ spark.sql.shuffle.partitions)
+      merged.repartition(math.max(touched.size, 1), col(BucketCol))
+        .write.mode("overwrite").partitionBy(BucketCol).parquet(path + ".tmp")
+      // the meta goes first: it is a sibling file, so no crash point leaves a
+      // state dir without it
+      writeLayoutIfAbsent(fs, path, m)
+      commit(fs, path, existing, touched)
+    } finally { inc.unpersist(); () }
   }
 
-  /** Bucketed path: merge + rewrite only the PK-hash partitions the batch
-    * touches. Writes the merged touched buckets to a side directory, then
-    * swaps each touched `__bucket=N` dir in (a bucket whose rows were all
-    * deleted is swapped to absent). NOT dynamic partition overwrite: that
-    * only rewrites partitions present in the OUTPUT, so a fully-deleted
-    * bucket would keep its stale files — and it would read and overwrite the
-    * same path in one job.
+  /** The one commit of a state change, shared by writes and DDL: `<table>.tmp`
+    * holds the complete new content of the `touched` buckets as `__bucket=N`
+    * dirs, and a touched bucket it lacks was emptied. Each touched bucket is
+    * swapped in (or, emptied, out) by renames. NOT dynamic partition
+    * overwrite: that only rewrites partitions present in the OUTPUT, so an
+    * emptied bucket would keep its stale files — and it would read and
+    * overwrite the same path in one job.
     *
-    * Swap-phase FS traffic is batch-constant + one rename per moved dir
-    * (r20): one listing of each side replaces the per-bucket exists probes,
-    * and the single `.swap_ready` marker (created between the completed
-    * parquet write and the first swap-in rename, deleted with tmp) replaces
-    * per-bucket markers — recovery rolls a marker-bearing tmp FORWARD
-    * instead of restoring, see [[recoverCrashedSwap]]. Buckets the batch
-    * empties are displaced BEFORE the marker: roll-forward only sees the
-    * buckets tmp holds, so an emptied bucket still live at a crash after the
-    * marker would keep its deleted rows.
-    *
-    * `inc` is the cached PRE-bucket projection: both consumers (touched
-    * probe, merged write) re-derive the bucket hash from it.
+    * Displace-then-swap: an old bucket moves into the (dot-prefixed,
+    * reader-invisible) tmp area first, so a failed swap can restore it —
+    * state is never deleted before its replacement is in place. FS traffic is
+    * one listing of tmp, one rename per moved dir and the single `.swap_ready`
+    * marker, created between the completed parquet write and the first
+    * swap-in rename and deleted with tmp; recovery rolls a marker-bearing tmp
+    * FORWARD ([[recoverCrashedSwap]]). Emptied buckets are displaced BEFORE
+    * the marker: roll-forward only sees the buckets tmp holds, so an emptied
+    * bucket still live at a crash after the marker would keep its deleted
+    * rows.
     */
-  private def writeBucketed(spark: org.apache.spark.sql.SparkSession,
-                            fs: org.apache.hadoop.fs.FileSystem, path: String,
-                            exists: Boolean, inc: DataFrame, schema: CdcSchema,
-                            m: Int): Unit = {
+  private def commit(fs: FileSystem, path: String, existing: Set[Int], touched: Seq[Int]): Unit = {
     val tmp = path + ".tmp"
-    val bucketed = withBucket(inc, schema.primaryKeys, m)
-    val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-    // ONE listing of each side replaces 2×touched exists round-trips
-    val existing = if (exists) bucketSet(fs, path) else Set.empty[Int]
-    val stateBuckets = touched.filter(existing)
-    val merged = if (stateBuckets.nonEmpty) {
-      // partition pruning: only the touched __bucket=N dirs are read
-      val state = spark.read.parquet(path).where(col(BucketCol).isin(stateBuckets: _*))
-      Changelog.materialize(
-        withBucket(stateAsInserts(state, schema), schema.primaryKeys, m).unionByName(bucketed),
-        schema.primaryKeys :+ BucketCol) // bucket is pk-functional: same groups
-    } else Changelog.materialize(bucketed, schema.primaryKeys :+ BucketCol)
-
-    // one write task per touched bucket: buckets are sized to the target
-    // file size at layout derivation, so task == output file == bucket
-    // (the previous keyless-width repartition left most tasks empty when
-    // touched ≪ spark.sql.shuffle.partitions)
-    merged.repartition(math.max(touched.size, 1), col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
     val produced = bucketSet(fs, tmp)
-
-    // the meta goes first: it is a sibling file, so no crash point leaves a
-    // state dir without it
-    writeLayoutIfAbsent(fs, path, m)
-    // displace-then-swap: an old bucket moves into the (dot-prefixed,
-    // reader-invisible) tmp area first, so a failed swap can restore it —
-    // never delete state before its replacement is in place
-    def displaced(b: Int) = new org.apache.hadoop.fs.Path(s"$tmp/.old_$b")
-    def live(b: Int) = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-    stateBuckets.filterNot(produced).foreach(b => renameOrThrow(fs, live(b), displaced(b)))
-    val swapReady = new org.apache.hadoop.fs.Path(s"$tmp/$SwapReady")
+    def displaced(b: Int) = new Path(s"$tmp/.old_$b")
+    def live(b: Int) = new Path(s"$path/$BucketCol=$b")
+    touched.filter(b => existing(b) && !produced(b))
+      .foreach(b => renameOrThrow(fs, live(b), displaced(b)))
+    val swapReady = new Path(s"$tmp/$SwapReady")
     fs.mkdirs(swapReady)
     // after the marker, so a crash never leaves an empty state dir behind
-    if (!exists && produced.nonEmpty) fs.mkdirs(new org.apache.hadoop.fs.Path(path))
+    if (existing.isEmpty && produced.nonEmpty) fs.mkdirs(new Path(path))
     touched.filter(produced).foreach { b =>
       val hadState = existing(b)
       if (hadState) renameOrThrow(fs, live(b), displaced(b))
-      try renameOrThrow(fs, new org.apache.hadoop.fs.Path(s"$tmp/$BucketCol=$b"), live(b))
+      try renameOrThrow(fs, new Path(s"$tmp/$BucketCol=$b"), live(b))
       catch {
         case e: java.io.IOException =>
           if (hadState && !fs.rename(displaced(b), live(b))) {
             e.addSuppressed(new java.io.IOException(s"restore of bucket $b also failed"))
           }
-          // the batch did NOT commit: drop the roll-forward marker so
+          // the commit did NOT happen: drop the roll-forward marker so
           // recovery does not silently apply it later (it rolls back the
           // displaced buckets instead; the batch's replay re-applies them)
           try { fs.delete(swapReady, true); () }
@@ -460,26 +421,31 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
           throw e
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    fs.delete(new Path(tmp), true)
     ()
   }
 
-  /** Bucket ids present as `__bucket=N` child dirs (one listing). */
-  private def bucketSet(fs: org.apache.hadoop.fs.FileSystem, dir: String): Set[Int] =
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$BucketCol="))
+  /** Bucket ids present as `__bucket=N` child dirs of `dir` (one listing).
+    * Parquet files at the root are the flat layout of earlier versions:
+    * refused, because bucket dirs committed next to them would hide them
+    * from every reader (partition discovery drops root files).
+    */
+  private def bucketSet(fs: FileSystem, dir: String): Set[Int] = {
+    val names = fs.listStatus(new Path(dir)).map(_.getPath.getName)
+    require(!names.exists(_.endsWith(".parquet")),
+      s"upsert state at $dir has parquet files at its root, the removed unbucketed " +
+        "layout, which this sink can no longer write or alter: read its rows with " +
+        "ParquetUpsertSink.read and write them to a new state dir")
+    names.iterator.filter(_.startsWith(s"$BucketCol="))
       .map(_.stripPrefix(s"$BucketCol=").toInt).toSet
+  }
 
-  def read(spark: org.apache.spark.sql.SparkSession, id: TableId): DataFrame = {
+  def read(spark: SparkSession, id: TableId): DataFrame = {
     val path = tablePath(id)
-    // a crashed swap may have left the only state copy displaced; readers
+    // a crashed commit may have left the only state copy displaced; readers
     // recover it too, not just the next write
-    tableLocks.computeIfAbsent(path, _ => new Object).synchronized {
-      recoverCrashedSwap(hfs(spark, path), path, new org.apache.hadoop.fs.Path(path))
-    }
-    val df = spark.read.parquet(path)
-    if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
+    lockOf(path).synchronized { recoverCrashedSwap(hfs(spark, path), path) }
+    spark.read.parquet(path).drop(BucketCol) // flat state has no bucket column
   }
 }
 
@@ -496,7 +462,7 @@ object ParquetUpsertSink {
     */
   val RowsPerBucketConf = "spark.graft.upsert.rowsPerBucket"
   val MaxDerivedBuckets = 4096
-  /** Swap-phase-begun marker inside a batch's tmp dir (see recoverCrashedSwap). */
+  /** Swap-phase-begun marker inside a commit's tmp dir (see recoverCrashedSwap). */
   private[sinks] val SwapReady = ".swap_ready"
 }
 

@@ -1084,6 +1084,25 @@ class CliSpec extends SparkSpec {
     assert(sink.read(spark, users).count() === cores + 10)
   }
 
+  test("`buckets: 0` is refused at parse: the unbucketed layout was removed") {
+    import graft.pipeline.PipelineDef
+    import org.apache.spark.sql.streaming.Trigger
+    val in = java.nio.file.Files.createTempDirectory("graft-b0-in").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-b0-out").toString
+    val p = PipelineDef.fromYaml(
+      s"""source:
+         |  type: debezium-json
+         |  path: $in
+         |  schema.db.users: "id BIGINT, name STRING"
+         |sink:
+         |  type: parquet-upsert
+         |  path: $out
+         |  buckets: 0
+         |""".stripMargin)
+    val e = intercept[IllegalArgumentException](Cli.buildStreaming(spark, p, Trigger.AvailableNow()))
+    assert(e.getMessage.contains("`buckets: 0`") && e.getMessage.contains("removed"), e.getMessage)
+  }
+
   test("routed multi-monitor pipeline folds both assets concurrently; monitor-show renders each") {
     // TWO monitor: blocks on a routed 2-table pipeline with
     // table-parallelism — the per-table slices process on separate

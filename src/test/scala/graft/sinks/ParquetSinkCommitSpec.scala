@@ -41,13 +41,25 @@ class ParquetSinkCommitSpec extends SparkSpec {
       .as[Int].collect().toSet
   }
 
-  /** Table state as (id, v) pairs, empty when the table has no state dir. */
-  private def stateOf(sink: ParquetUpsertSink): Set[(Long, String)] =
-    try sink.read(spark, id).as[(Long, String)].collect().toSet
-    catch {
+  /** Table state as (bucket schema, row) pairs, read bucket by bucket after
+    * the sink's own recovery: a state whose buckets disagree on their columns
+    * cannot pass for either side of a schema change. Empty when the table has
+    * no state dir.
+    */
+  private def stateOf(sink: ParquetUpsertSink): Set[(String, Seq[Any])] =
+    try {
+      sink.read(spark, id)
+      bucketDirs(sink.tablePath(id)).flatMap { b =>
+        val df = spark.read.parquet(s"${sink.tablePath(id)}/__bucket=$b")
+        df.collect().map(r => (df.schema.toDDL, r.toSeq)).toSet
+      }
+    } catch {
       case _: org.apache.spark.sql.AnalysisException if !localFs.exists(new Path(sink.tablePath(id))) =>
         Set.empty
     }
+
+  private def pairsOf(sink: ParquetUpsertSink): Set[(Long, String)] =
+    sink.read(spark, id).as[(Long, String)].collect().toSet
 
   /** Refuses renames whose SOURCE path name matches `deny` (returns false,
     * the contract under test). Everything else passes through to local FS.
@@ -120,36 +132,6 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val _ = localFs.delete(new Path(clean), true)
   }
 
-  test("failed swap rename throws and preserves the previous table state") {
-    val root = java.nio.file.Files.createTempDirectory("graft-commit").toString
-    @volatile var deny = false
-    var fsRef: DenyingFs = null
-    val sink = new ParquetUpsertSink(root) {
-      override protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): FileSystem = {
-        if (fsRef == null) fsRef = new DenyingFs(super.hfs(spark, path), p => deny && p.endsWith(".tmp"))
-        fsRef
-      }
-    }
-    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
-    assert(sink.read(spark, id).count() === 2)
-
-    deny = true // the tmp -> live swap will fail; old state must be restored
-    val e = intercept[java.io.IOException] {
-      sink.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    }
-    assert(e.getMessage.contains("commit failed"))
-    assert(fsRef.denied.get() > 0, "injected rename failure never hit")
-    assert(sink.read(spark, id).as[(Long, String)].collect().toSet ===
-      Set((1L, "a"), (2L, "b")), "previous state must survive a failed commit")
-
-    deny = false // obstruction clears: the replayed batch commits (idempotent)
-    sink.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    assert(sink.read(spark, id).as[(Long, String)].collect().toSet ===
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-    val _ = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-      .delete(new Path(root), true)
-  }
-
   test("bucketed swap failure restores the displaced bucket") {
     val root = java.nio.file.Files.createTempDirectory("graft-commit-b").toString
     @volatile var deny = false
@@ -169,9 +151,10 @@ class ParquetSinkCommitSpec extends SparkSpec {
     assert(before === Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
 
     deny = true
-    intercept[java.io.IOException] {
+    val e = intercept[java.io.IOException] {
       sink.write(id, batch((1L, "a2", "UPDATE", 9L)), schema)
     }
+    assert(e.getMessage.contains("commit failed"))
     assert(fsRef.denied.get() > 0, "injected rename failure never hit")
     deny = false
     assert(sink.read(spark, id).as[(Long, String)].collect().toSet === before,
@@ -364,7 +347,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
       sink.write(id, batch(rows: _*), schema)
       assert(layoutOf(sink.tablePath(id)) === want, "ceil(rows / rowsPerBucket) above the floor")
       assert(bucketDirs(sink.tablePath(id)) === bucketsOf(rows.map(_._1), want))
-      assert(stateOf(sink) === rows.map(r => (r._1, r._2)).toSet)
+      assert(pairsOf(sink) === rows.map(r => (r._1, r._2)).toSet)
     } finally spark.conf.unset(ParquetUpsertSink.RowsPerBucketConf)
     val _ = localFs.delete(new Path(root), true)
   }
@@ -380,20 +363,79 @@ class ParquetSinkCommitSpec extends SparkSpec {
         .write(id, batch((3L, "c", "INSERT", 3L)), schema)
     }
     assert(e.getMessage.contains("`buckets: 32`"), e.getMessage)
-    assert(stateOf(legacy) === Set((1L, "a"), (2L, "b")), "a refused write leaves state untouched")
+    assert(pairsOf(legacy) === Set((1L, "a"), (2L, "b")), "a refused write leaves state untouched")
     // the named setting does read and extend it
     val pinned = new ParquetUpsertSink(root, buckets = 32)
     pinned.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    assert(stateOf(pinned) === Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(pairsOf(pinned) === Set((1L, "a"), (2L, "b"), (3L, "c")))
 
+    // state in the removed unbucketed layout: parquet files at the table root
     val root0 = java.nio.file.Files.createTempDirectory("graft-legacy0").toString
-    new ParquetUpsertSink(root0).write(id, batch((1L, "a", "INSERT", 1L)), schema)
+    val flat = new ParquetUpsertSink(root0, buckets = ParquetUpsertSink.AutoBuckets)
+    Seq((1L, "a")).toDF("id", "v").write.parquet(flat.tablePath(id))
     val e0 = intercept[IllegalArgumentException] {
-      new ParquetUpsertSink(root0, buckets = ParquetUpsertSink.AutoBuckets)
-        .write(id, batch((3L, "c", "INSERT", 3L)), schema)
+      flat.write(id, batch((3L, "c", "INSERT", 3L)), schema)
     }
-    assert(e0.getMessage.contains("unbucketed") && e0.getMessage.contains("`buckets: 0`"), e0.getMessage)
+    assert(e0.getMessage.contains("removed unbucketed layout"), e0.getMessage)
     localFs.delete(new Path(root), true)
     val _ = localFs.delete(new Path(root0), true)
+  }
+
+  test("flat state is refused by every writer and by DDL, and stays readable") {
+    // a bucketed commit next to root parquet files hides them from readers:
+    // partition discovery drops the root files once `__bucket=` dirs exist
+    val root = java.nio.file.Files.createTempDirectory("graft-flat").toString
+    val pinned = new ParquetUpsertSink(root, buckets = 4)
+    val tablePath = pinned.tablePath(id)
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(tablePath)
+    val planted = Set((1L, "a"), (2L, "b"))
+    Seq(pinned, new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)).foreach { sink =>
+      val e = intercept[IllegalArgumentException] {
+        sink.write(id, batch((3L, "c", "INSERT", 3L)), schema)
+      }
+      assert(e.getMessage.contains("removed unbucketed layout"), e.getMessage)
+      assert(pairsOf(sink) === planted)
+    }
+    val e = intercept[IllegalArgumentException] {
+      pinned.applySchemaChange(graft.model.AddColumnEvent(id, "n",
+        org.apache.spark.sql.types.IntegerType))
+    }
+    assert(e.getMessage.contains("removed unbucketed layout"), e.getMessage)
+    assert(bucketDirs(tablePath).isEmpty && !localFs.exists(new Path(tablePath + ".layout")),
+      "a refused write leaves flat state untouched")
+    assert(pairsOf(pinned) === planted)
+    val _ = localFs.delete(new Path(root), true)
+  }
+
+  test("DDL on a table whose rows were all deleted is a no-op; the next write takes the new shape") {
+    val root = java.nio.file.Files.createTempDirectory("graft-emptied-ddl").toString
+    val sink = new ParquetUpsertSink(root, buckets = 4)
+    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
+    sink.write(id, batch((1L, "a", "DELETE", 3L), (2L, "b", "DELETE", 4L)), schema)
+    sink.applySchemaChange(graft.model.AddColumnEvent(id, "n", org.apache.spark.sql.types.IntegerType))
+    val wide = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "INT").copy(primaryKeys = Seq("id"))
+    sink.write(id, Seq((3L, "c", 7, "INSERT", 5L))
+      .toDF("id", "v", "n", Changelog.OpCol, Changelog.SeqCol), wide)
+    assert(sink.read(spark, id).select("id", "v", "n").as[(Long, String, Int)].collect().toSeq ===
+      Seq((3L, "c", 7)))
+    val _ = localFs.delete(new Path(root), true)
+  }
+
+  test("a crash anywhere in a DDL rewrite recovers to the old or the new shape") {
+    import graft.model.{AddColumnEvent, AlterColumnTypeEvent, DropColumnEvent}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val wide = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "INT").copy(primaryKeys = Seq("id"))
+    val rows = (1L to 8L).map(k => (k, s"v$k", k.toInt, "INSERT", k))
+      .toDF("id", "v", "n", Changelog.OpCol, Changelog.SeqCol)
+    Seq(AddColumnEvent(id, "w", StringType), AlterColumnTypeEvent(id, "n", LongType),
+      DropColumnEvent(id, "v")).foreach { e =>
+      crashAtEveryCall(4, _.write(id, rows, wide), _.applySchemaChange(e))
+    }
+  }
+
+  test("a crash anywhere in a truncate recovers to the full or the empty table") {
+    val keys = (1L to 8L).map(k => (k, s"v$k", "INSERT", k))
+    crashAtEveryCall(4, _.write(id, batch(keys: _*), schema),
+      _.applySchemaChange(graft.model.TruncateTableEvent(id)))
   }
 }
