@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** In-JVM alternating A/B of the [[graft.ops.Spread]] exchange (the r18
   * measurement discipline: ambient host load moves BETWEEN JVMs, so the
   * only trustworthy compare interleaves both arms in one session).
@@ -19,13 +17,7 @@ object AbProfile {
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
         .filterNot(SparkEntry.launchBoundE2e)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-ab-profile")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 

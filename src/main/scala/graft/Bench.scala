@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
   * Reports per-query wall seconds plus the three BASELINE.md §"Bench target"
@@ -332,14 +330,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench")
 
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -440,7 +431,7 @@ object Bench {
       val srcId = TableId.of("db", "events")
       val schema = CdcSchema.of("user_id" -> "BIGINT", "event_type" -> "STRING", "value" -> "DOUBLE")
         .copy(primaryKeys = Seq("user_id"))
-      val out = java.nio.file.Files.createTempDirectory("graft-bench-mb").toString
+      val out = SparkEntry.tempDir("graft-bench-mb")
       val sink = new graft.sinks.ParquetUpsertSink(out, buckets = 32)
       val pipe = new graft.streaming.StreamingPipeline(new graft.operators.SchemaRegistry(), sink = sink)
       pipe.applySchemaChange(CreateTableEvent(srcId, schema))

@@ -26,20 +26,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object Cli {
 
-  /** One read-surface session shape, resolved in one place — the
-    * monitor-show and pca-show arms must not drift apart on master/CPU
-    * resolution (runPipeline keeps its own builder: it layers
-    * pipeline-specific parallelism/timezone configs).
+  /** One read-surface session shape for the monitor-show and pca-show
+    * arms: Spark's own shuffle width, time zone and UI, not the base's.
     */
-  private def session(appName: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName(appName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def session(appName: String): SparkSession = Sessions.local(appName, conf = Map(
+    "spark.sql.shuffle.partitions" -> null,
+    "spark.sql.session.timeZone" -> null,
+    "spark.ui.enabled" -> null))
 
   def main(args: Array[String]): Unit = args.toSeq match {
     case Seq("monitor-show", path, qs @ _*) =>
@@ -256,14 +249,11 @@ object Cli {
     val p = PipelineDef.fromYaml(
       new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(yamlPath))))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(p.name)
-      .config("spark.sql.shuffle.partitions", math.max(p.parallelism, cpus.toInt))
-      .config("spark.sql.session.timeZone", p.localTimeZone)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // a long-running pipeline keeps its Spark UI
+    val spark = Sessions.local(p.name, conf = Map(
+      "spark.sql.shuffle.partitions" -> math.max(p.parallelism, Sessions.cpus).toString,
+      "spark.sql.session.timeZone" -> p.localTimeZone,
+      "spark.ui.enabled" -> null))
 
     p.source.kind match {
       case "parquet" => runBatch(spark, p)

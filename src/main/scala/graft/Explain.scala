@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: dumps `explain("formatted")` for every SparkEntry query so
   * scan pruning (`ReadSchema`/`PushedFilters`), broadcast joins, partial
   * aggregation, and WholeStageCodegen spans can be reviewed per round.
@@ -12,12 +10,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // four cores whatever the host, so plan dumps compare across hosts
+    val spark = Sessions.local("graft-explain", cpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       // scalastyle:off println

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (optimization rounds): split a query's wall time into
   * driver-side phases so tuning targets the real cost, not a guess
   * (spark_optimization_guide §1 "measure first").
@@ -26,13 +24,7 @@ object PhaseProfile {
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
         .filterNot(SparkEntry.launchBoundE2e)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-phase-profile")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 

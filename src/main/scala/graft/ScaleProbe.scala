@@ -80,14 +80,7 @@ object ScaleProbe {
         case Some(f) => (f, args.drop(1))
         case None => (10, args)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scale-probe")
 
     val prevPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "bench-prev.json"))
@@ -250,8 +243,7 @@ object ScaleProbe {
           // deleted once the skew shapes finish
           val skewEntries = if (skewShapes.isEmpty) Nil else {
             try {
-              val skewDir = java.nio.file.Files
-                .createTempDirectory("graft-skew-events").toString
+              val skewDir = SparkEntry.tempDir("graft-skew-events")
               try {
                 import org.apache.spark.sql.functions.{col, when, lit}
                 val ev = spark.read.parquet(s"$sfDir/events.parquet")

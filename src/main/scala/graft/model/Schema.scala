@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Table schema = Spark StructType + primary/partition keys + options.
   *
@@ -48,24 +48,12 @@ final case class CdcSchema(
 
   def alterColumnType(name: String, dt: DataType): CdcSchema =
     copy(struct = StructType(struct.fields.map(f => if (f.name == name) f.copy(dataType = dt) else f)))
-
-  /** StructType with pk flags embedded in field metadata (survives DataFrame hops). */
-  def structWithKeyMetadata: StructType = StructType(struct.fields.map { f =>
-    if (primaryKeys.contains(f.name))
-      f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata).putBoolean("graft.pk", true).build())
-    else f
-  })
 }
 
 object CdcSchema {
   /** Build from `name -> reference-type-string` pairs, e.g. ("id","INT"),("name","STRING"). */
   def of(cols: (String, String)*): CdcSchema =
     CdcSchema(StructType(cols.map { case (n, t) => StructField(n, CdcTypes.parse(t)) }))
-
-  def fromStruct(struct: StructType): CdcSchema = {
-    val pks = struct.fields.filter(f => f.metadata.contains("graft.pk") && f.metadata.getBoolean("graft.pk"))
-    CdcSchema(struct, pks.map(_.name).toSeq)
-  }
 }
 
 /** AddColumn placement (common/event/AddColumnEvent.java:48-75). */

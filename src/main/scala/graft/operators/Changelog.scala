@@ -81,16 +81,6 @@ object Changelog {
       .withColumn("__deleted", col(OpCol) === "DELETE")
       .withColumn(OpCol, when(col(OpCol) === "DELETE", lit("UPDATE")).otherwise(col(OpCol)))
 
-  /** Within-batch last-write-wins ordering guarantee for the upsert sink:
-    * equivalent to the reference's hash-partition by (table, PK)
-    * (runtime/partitioning/RegularPrePartitionOperator.java:49-80) — in Spark
-    * the `materialize` groupBy already co-locates keys, so explicit
-    * repartitioning is only needed when preserving the changelog (not
-    * materializing) while writing in parallel.
-    */
-  def partitionByKey(changelog: DataFrame, pkCols: Seq[String]): DataFrame =
-    changelog.repartition(pkCols.map(col): _*)
-
   /** SCD2-style history materialization: every non-DELETE change event
     * becomes a validity interval — `valid_from` is its own `__seq`,
     * `valid_to` the next event's `__seq` for the same key (NULL = still

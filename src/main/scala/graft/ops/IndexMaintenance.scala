@@ -117,42 +117,30 @@ object IndexMaintenance {
   // recall. The count is therefore persisted at build time in `_layout`
   // under the index root and every probe/append/compaction resolves it from
   // there; the caller's parameter is only the fallback for pre-meta indexes.
-  // The meta is immutable for the index's lifetime (compaction restores the
-  // bucket cap, never the layout — a racing probe would otherwise prune with
-  // a stale modulus), so it is cached per (fs-independent) path.
+  // Compaction restores the bucket cap, never the layout, but a full
+  // rebuild overwrites `_layout` — possibly from another JVM — so the meta
+  // is read on every call, never cached: a cached count would keep probing
+  // with the pre-rebuild modulus. The price is one small-file open per probe.
 
   private[graft] val LayoutFile = "_layout"
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   /** Persist the index's partition-count layout (build-time; overwrites —
-    * a full index rebuild may re-derive). Also primes the JVM cache.
+    * a full index rebuild may re-derive).
     */
   def writeLayout(fs: FileSystem, path: String, numPartitions: Int): Unit = {
     val out = fs.create(new Path(s"$path/$LayoutFile"), true)
     try out.write(numPartitions.toString.getBytes("UTF-8")) finally out.close()
-    layoutCache.put(path, numPartitions)
-    ()
   }
 
   /** The index's persisted partition count, else `fallback` (a pre-meta
-    * index laid out by the caller's own constant). Only META-READ values are
-    * cached — a meta-less index stays governed by each caller's parameter
-    * (caching the fallback would pin the FIRST caller's constant on every
-    * later one). The meta itself is immutable, and probes run per
-    * micro-batch, so the cache saves one small-file open per probe.
+    * index laid out by the caller's own constant).
     */
   def resolveLayout(fs: FileSystem, path: String, fallback: => Int): Int = {
-    val cached = layoutCache.get(path)
-    if (cached != null) cached.intValue()
+    val lp = new Path(s"$path/$LayoutFile")
+    if (!fs.exists(lp)) fallback
     else {
-      val lp = new Path(s"$path/$LayoutFile")
-      if (fs.exists(lp)) {
-        val in = fs.open(lp)
-        val p = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-                finally in.close()
-        layoutCache.put(path, p)
-        p
-      } else fallback
+      val in = fs.open(lp)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt finally in.close()
     }
   }
 

@@ -114,14 +114,6 @@ object Multimodal {
       }(enc)
   }
 
-  /** Resize plumbing: records target dims in metadata; payload transform is
-    * the stub (identity) — a real codec rewrites bytes here.
-    */
-  def resizeImages(assets: DataFrame, targetW: Int, targetH: Int): DataFrame =
-    assets.withColumn("meta",
-      map_concat(coalesce(col("meta"), map()),
-        map(lit("resized_w"), lit(targetW.toString), lit("resized_h"), lit(targetH.toString))))
-
   /** Frame sampling for video assets: emits (asset_id, frame_idx) every
     * `everyNth` frame of `frame_count` from metadata — the explode side of a
     * video pipeline; the frame decode itself is the stub decoder above.

@@ -25,17 +25,6 @@ object Similarity {
     if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
   }
 
-  /** Pure-Catalyst dot product of two array columns — codegen-friendly
-    * (`zip_with` + `aggregate`), no UDF.
-    */
-  def dotCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Squared L2 norm of an array column, same codegen-friendly shape. */
-  def norm2Col(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"))
-
   /** Cosine of an array column against a literal query vector — the native
     * codegen'd [[graft.functions.CosineSim]] expression (one generated call
     * per row instead of per-element Catalyst lambda dispatch).

@@ -38,14 +38,17 @@ object Spread {
     */
   val ConfKey = "spark.graft.spread"
 
-  /** Probe result per logical plan (r20, advisor note): `optimizedPlan` is
+  /** Probe result per analyzed plan (r20, advisor note): `optimizedPlan` is
     * an analyze+optimize pass and the scan-shaped `.rdd` a physical compile —
     * recurring driver overhead when a hot caller (per-micro-batch wire
     * encodes, the bench's repeated query builds) re-probes an identical
     * plan. Weak structural keys: equal plans share one probe, and entries
-    * die with their plans instead of growing per batch. The conf toggle and
-    * the session parallelism are deliberately NOT cached — the A/B
-    * kill-switch must keep working mid-session.
+    * die with their plans instead of growing per batch. The key is the
+    * ANALYZED plan: an unresolved `spark.table("v")` is the same before and
+    * after `v` is re-registered over other data, and would serve the old
+    * view's probe. The conf toggle and the session parallelism are
+    * deliberately NOT cached — the A/B kill-switch must keep working
+    * mid-session.
     */
   private final case class Probe(scanShaped: Boolean, scanParts: Int)
   private val probeCache = java.util.Collections.synchronizedMap(
@@ -58,7 +61,7 @@ object Spread {
     if (df.isStreaming) return df
     if (!df.sparkSession.conf.get(ConfKey, "true").toBoolean) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val key = df.queryExecution.logical
+    val key = df.queryExecution.analyzed
     var probe = probeCache.get(key)
     if (probe == null) {
       val scanShaped = !df.queryExecution.optimizedPlan.exists {

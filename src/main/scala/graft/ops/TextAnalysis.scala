@@ -41,22 +41,6 @@ object TextAnalysis {
         size(array_distinct(split(lower(trim(text)), "\\s+"))).cast("double") /
         size(split(trim(text), "\\s+")), 4))
 
-  /** Simple composite quality features (length/word/punct ratios) — the usual
-    * pre-filters of a web-scale corpus cleaning stage.
-    */
-  def qualityFeatures(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_chars_measured", length(t))
-      .withColumn("n_words", tokenCount(t))
-      .withColumn("n_punct", punctCount(t))
-      .withColumn("mean_word_len",
-        when(tokenCount(t) > 0, (length(regexp_replace(t, "\\s+", "")).cast("double") / tokenCount(t)))
-          .otherwise(lit(0.0)))
-      .withColumn("alpha_ratio",
-        when(length(t) > 0, length(regexp_replace(t, "[^\\p{L}]", "")).cast("double") / length(t))
-          .otherwise(lit(0.0)))
-  }
-
   /** The Gopher word/line-level quality rules (Rae et al. 2021 §A1.1) that
     * the repetition family does not cover: mean word length, symbol-to-word
     * ratio (# and … noise), bullet-start / ellipsis-end line fractions,
@@ -188,12 +172,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
 
-  /** 64-bit rolling fingerprint (xxhash64 over normalized text) — cheaper than
-    * md5 for shuffle keys; not hex, fits a LongType join key.
-    */
-  def fingerprint64(text: Column): Column =
-    xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
-
   /** One row per (doc, DISTINCT token): the corpus-statistics base relation.
     * `array_distinct` runs per doc inside the scan, so the explode emits the
     * doc's vocabulary, not its token stream — no (doc, token) dedup shuffle.
@@ -202,10 +180,6 @@ object TextAnalysis {
     df.select(col(idCol),
       explode(array_distinct(
         expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)"))).as("tok"))
-
-  /** Token document frequencies over the corpus: (tok, df). */
-  def docFrequencies(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    docTokens(df, idCol, textCol).groupBy("tok").agg(count(lit(1)).as("df"))
 
   /** Per-doc term frequencies (one row per DISTINCT (doc, token), with the
     * token's in-doc count): the shared base relation of [[tfidfTopTerms]]

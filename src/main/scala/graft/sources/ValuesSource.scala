@@ -42,20 +42,6 @@ object ValuesSource {
       DataChangeEvent.update(t2, Seq("1", "1"), Seq("1", "x")))
   }
 
-  /** `TRANSFORM_TABLE` shape (computed-column scenarios): id INT PK, name
-    * STRING, age INT — the FIXTURES.md §2 transform/evolution fixture.
-    */
-  def transformTable: Seq[Event] = {
-    val t = TableId.of("default_namespace", "default_schema", "mytable1")
-    val schema = CdcSchema.of("id" -> "INT", "name" -> "STRING", "age" -> "INT")
-      .copy(primaryKeys = Seq("id"))
-    Seq(
-      CreateTableEvent(t, schema),
-      DataChangeEvent.insert(t, Seq(1, "Alice", 18)),
-      DataChangeEvent.insert(t, Seq(2, "Bob", 20)),
-      DataChangeEvent.update(t, Seq(2, "Bob", 20), Seq(2, "Bob", 30)))
-  }
-
   /** Convert scripted data-change events for ONE table into a changelog
     * DataFrame (envelope = payload + __op + __seq by script order).
     */

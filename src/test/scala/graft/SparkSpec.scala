@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM-wide session, small shuffle
-  * width for test speed).
+/** Shared local session for all specs: one JVM-wide session at four cores
+  * whatever the host, so test parallelism does not depend on it.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("graft-test", cpus = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -191,4 +191,15 @@ class IndexMaintenanceSpec extends SparkSpec {
       assert(!IndexMaintenance.repairCrashedSwap(fs, live, old))
     }
   }
+
+  test("resolveLayout sees a _layout rewritten by a rebuild in another JVM") {
+    withDir { (dir, fs) =>
+      IndexMaintenance.writeLayout(fs, dir, 4)
+      assert(IndexMaintenance.resolveLayout(fs, dir, 1) === 4)
+      // the other JVM's rebuild rewrites the meta; nothing in this one hears of it
+      val out = fs.create(new Path(s"$dir/${IndexMaintenance.LayoutFile}"), true)
+      try out.write("8".getBytes("UTF-8")) finally out.close()
+      assert(IndexMaintenance.resolveLayout(fs, dir, 1) === 8)
+    }
+  }
 }
