@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
   * Reports per-query wall seconds plus the three BASELINE.md §"Bench target"
@@ -8,6 +10,10 @@ package graft
   * logs), end-to-end transform throughput (`transform_rps`), and micro-batch
   * latency for a 1k-event batch (`microbatch_sec` vs the reference's 30 s
   * batch-timeout operating point).
+  *
+  * Usage: runMain graft.Bench                              — the record
+  *        runMain graft.Bench phases [sfDir] [query...]    — see [[phases]]
+  *        runMain graft.Bench ab-spread [sfDir] [query...] — see [[abSpread]]
   */
 object Bench {
 
@@ -132,9 +138,10 @@ object Bench {
     * `load_ratio` alone.
     */
   def cpuBoundFamily(name: String): Boolean =
-    name.startsWith("q_dedup") || Set("q_knn_join", "q_hard_negatives",
-      "q_fuzzy_join", "q_fuzzy_join_probe", "q_paragraph_dedup",
-      "q_semdedup", "q_span_dedup")(name)
+    name.startsWith("q_dedup") || cpuBoundNames(name)
+  val cpuBoundNames: Set[String] = Set("q_knn_join", "q_hard_negatives",
+    "q_fuzzy_join", "q_fuzzy_join_probe", "q_paragraph_dedup",
+    "q_semdedup", "q_span_dedup")
 
   /** The envelope normalizer for one query: uniform host load
     * (`loadRatio`) for every query; the CPU-bound families additionally
@@ -252,22 +259,34 @@ object Bench {
     * paths and it runs once per record line.
     */
   def jsonStr(s: String, maxBytes: Int): String = {
-    def esc(t: String): String = t.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     def bytes(t: String): Int =
-      esc(t).getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+      jsonEsc(t).getBytes(java.nio.charset.StandardCharsets.UTF_8).length
     var t = s
     while (bytes(t) > maxBytes) t = t.substring(0, t.length - 1)
     // char-wise truncation can strand a high surrogate — drop it rather
     // than emit invalid UTF-8
     if (t.nonEmpty && Character.isHighSurrogate(t.last))
       t = t.substring(0, t.length - 1)
-    "\"" + esc(t) + "\""
+    "\"" + jsonEsc(t) + "\""
   }
+
+  /** The harness's one JSON string escape: backslash, quote, and ALL control
+    * chars (< 0x20; `\n`, `\r` and `\t` short) — a tab or CR in an
+    * oracle's SQL would otherwise make `json.load` of `oracle_sql.json`
+    * fail and silently zero the whole correctness check.
+    */
+  def jsonEsc(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  /** A JSON string literal, unbounded: [[jsonEsc]] in quotes. */
+  def jstr(s: String): String = "\"" + jsonEsc(s) + "\""
 
   /** Stamp the rolled baseline with the run it came from: `bench-prev.json`
     * gets a `rolled_from` field naming the source record's `run_seq`, so a
@@ -328,15 +347,17 @@ object Bench {
   def shouldRollPrev(env: Map[String, String], loadRatio: Double): Boolean =
     rollRequested(env) && loadRatio <= RollLoadBar
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq() => record()
+    case "phases" +: rest => perQuery("graft-bench-phases", rest)(phases)
+    case "ab-spread" +: rest => perQuery("graft-bench-ab-spread", rest)(abSpread)
+    case mode +: _ => throw new IllegalArgumentException(
+      s"unknown Bench mode '$mode': run with no arguments, or phases | ab-spread")
+  }
+
+  private def record(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-bench")
-
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // JVM/codegen warmup so per-query numbers measure the engine, not JIT
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -373,10 +394,10 @@ object Bench {
     val prevKernel = loadPrevField(prevPath, "cpu_kernel_sec")
     val cpuRatioStart = prevKernel.fold(1.0)(p => kernelStart / p)
     val reran = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => SparkEntry.launchBoundE2e(q._1))
-      .flatMap { case (name, fn) =>
-        def once(): Option[Double] = timedOrError(name) { fn(spark, sfDir).count(); () }
+    val results = SparkEntry.timed
+      .flatMap { q =>
+        val name = q.name
+        def once(): Option[Double] = timedOrError(name) { q.build(spark, sfDir).count(); () }
         once() // warmup
         def triple(): Option[Seq[Double]] =
           if (errors.contains(name)) None
@@ -403,24 +424,22 @@ object Bench {
 
     // composed e2e control-path rows: launch-overhead-bound (sf-invariant),
     // run once each and reported OUTSIDE the throughput total — see
-    // SparkEntry.launchBoundE2e
-    val e2e = SparkEntry.launchBoundE2e.toSeq.sorted.flatMap { name =>
-      timedOrError(name) { SparkEntry.queries(name)(spark, sfDir).count(); () }
-        .map(sec => (name, sec))
+    // SparkEntry.Q's `launchBound`
+    val e2e = SparkEntry.catalog.filter(_.launchBound).sortBy(_.name).flatMap { q =>
+      timedOrError(q.name) { q.build(spark, sfDir).count(); () }
+        .map(sec => (q.name, sec))
     }
-
-    def median3(f: => Double): Double = (1 to 3).map(_ => f).sorted.apply(1)
 
     // throughput anchors (queries already warmed by the loop above)
     val lineitemRows = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     val tTransform = median3 {
-      time { SparkEntry.queries("q_transform_computed")(spark, sfDir).count() }._2
+      time { SparkEntry.query("q_transform_computed").build(spark, sfDir).count() }._2
     }
     val transformRps = lineitemRows / math.max(tTransform, 1e-9)
 
     val eventRows = spark.read.parquet(s"$sfDir/events.parquet").count()
     val tUpsert = median3 {
-      time { SparkEntry.queries("q_stream_pipeline")(spark, sfDir).count() }._2
+      time { SparkEntry.query("q_stream_pipeline").build(spark, sfDir).count() }._2
     }
     val upsertRps = eventRows / math.max(tUpsert, 1e-9)
 
@@ -446,14 +465,6 @@ object Bench {
       val t1 = median3 { time { pipe.processBatch(batch, 1L) }._2 }
       math.min(t0, t1)
     }
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
 
     val ratio = loadRatio(results.map { case (k, v) => (k, v(1)) }, prevMedians)
     // run-end kernel: the pair (start, end) records within-run host drift —
@@ -494,7 +505,7 @@ object Bench {
       s""""query_bands":$bands,"e2e_untimed_sec":$e2eJson,""" +
       s""""errors":$errJson,"reran":$reranJson,"window_flags":$burstJson,""" +
       s""""transform_rps":${transformRps.round},"upsert_rps":${upsertRps.round},""" +
-      s""""microbatch_sec":$microbatchSec,"sf":"$sfDir"}"""
+      s""""microbatch_sec":$microbatchSec,"sf":${jstr(sfDir)}}"""
     // scalastyle:off println
     println(line)
     // scalastyle:on
@@ -543,5 +554,93 @@ object Bench {
     println(summary)
     // scalastyle:on
     spark.stop()
+  }
+
+  /** The profiling modes' shared loop: the named queries (default: every
+    * timed one) over `sfDir` (default `SPARK_GRAFT_SF_DIR`, else sf0.1) on
+    * an ERROR-level session warmed by one lineitem scan; one JSON line per
+    * query on stdout, `{"q":…,"error":…}` when it throws. `measure` returns
+    * the line's fields after `q`.
+    */
+  private def perQuery(app: String, args: Seq[String])(
+      measure: (SparkSession, String, SparkEntry.Q) => String): Unit = {
+    val sfDir = args.headOption.getOrElse(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val names = if (args.length > 1) args.drop(1) else SparkEntry.timed.map(_.name)
+    val spark = Sessions.local(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    for (name <- names) {
+      val fields =
+        try {
+          spark.sparkContext.setJobDescription(name)
+          measure(spark, sfDir, SparkEntry.query(name))
+        } catch {
+          case e: Throwable => s""""error":${jsonStr(
+            e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage), 200)}"""
+        }
+      // scalastyle:off println
+      println(s"""{"q":${jstr(name)},$fields}""")
+      // scalastyle:on
+    }
+    spark.stop()
+  }
+
+  private def time[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+  }
+  private def median3(f: => Double): Double = (1 to 3).map(_ => f).sorted.apply(1)
+
+  /** `phases`: split a query's wall time into driver-side phases so tuning
+    * targets the real cost, not a guess.
+    *
+    *   build = q.build(spark, dir)                   — DataFrame construction
+    *           (includes any driver actions the query runs while composing,
+    *           e.g. split-point lookups or index builds)
+    *   plan  = df.queryExecution.executedPlan          — analyze + optimize +
+    *           physical planning (AQE re-planning still lands in exec)
+    *   exec  = df.count()                              — the bench's action
+    *
+    * Methodology mirrors the record: one untimed warmup, then median of
+    * three per phase.
+    */
+  private def phases(spark: SparkSession, sfDir: String, q: SparkEntry.Q): String = {
+    def df = q.build(spark, sfDir)
+    df.count() // warmup (JIT, codegen, page cache)
+    val build = median3(time(df)._2)
+    // the bench's action is .count(), which plans its own aggregate on
+    // top of the query — phase-split THAT plan, not the bare frame's
+    val plan = median3 {
+      val c = df.groupBy().count()
+      time(c.queryExecution.executedPlan)._2
+    }
+    val exec = median3 {
+      val c = df.groupBy().count()
+      c.queryExecution.executedPlan // planned outside the timed region
+      time(c.head().getLong(0))._2
+    }
+    val total = median3(time(df.count())._2)
+    s""""build":${jnum(build)},"plan":${jnum(plan)},""" +
+      s""""exec":${jnum(exec)},"total":${jnum(total)}"""
+  }
+
+  /** `ab-spread`: in-JVM alternating A/B of the [[graft.ops.Spread]] exchange
+    * (ambient host load moves BETWEEN JVMs,
+    * so the only trustworthy compare interleaves both arms in one session).
+    * Warm up both arms once, then 3 interleaved (on, off) timed pairs of the
+    * bench action; report per-arm medians.
+    */
+  private def abSpread(spark: SparkSession, sfDir: String, q: SparkEntry.Q): String = {
+    def arm(on: Boolean): Double = {
+      spark.conf.set(graft.ops.Spread.ConfKey, on.toString)
+      time(q.build(spark, sfDir).count())._2
+    }
+    arm(true); arm(false) // warmups
+    val pairs = (1 to 3).map(_ => (arm(true), arm(false)))
+    def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    val on = med(pairs.map(_._1))
+    val off = med(pairs.map(_._2))
+    s""""spread_on":${jnum(on)},"spread_off":${jnum(off)},""" +
+      s""""ratio":${jnum(on / math.max(off, 1e-9))}"""
   }
 }

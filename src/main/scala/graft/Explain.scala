@@ -9,14 +9,14 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.catalog.map(_.name).sorted
     // four cores whatever the host, so plan dumps compare across hosts
     val spark = Sessions.local("graft-explain", cpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       // scalastyle:off println
       println(s"\n========== $n ==========")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      try SparkEntry.query(n).build(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"(failed: ${e.getMessage})") }
       // scalastyle:on
     }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Bench.{jnum, jstr}
 import org.apache.spark.sql.SparkSession
 
 /** Super-linearity probe: run the timed query set ONCE at a larger scale
@@ -95,11 +96,9 @@ object ScaleProbe {
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val only = queryArgs.toSet
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => SparkEntry.launchBoundE2e(q._1))
-      .filter(q => only.isEmpty || only(q._1))
+    val selected = SparkEntry.timed.filter(q => only.isEmpty || only(q.name))
     // heavy tail runs LAST in its own isolated phase — see [[heavyTail]]
-    val (heavy, light) = selected.partition(q => heavyTail(q._1))
+    val (heavy, light) = selected.partition(q => heavyTail(q.name))
     // JIT floor: the first THREE non-heavy queries' (cold warmup, warm
     // timed) pairs — the fresh-JVM floor the r15 end-of-round check had
     // to infer from cpu_ratio (an isolated 2-query probe read 2.7x/1.8x
@@ -109,14 +108,15 @@ object ScaleProbe {
     // envelope is mechanical, not prose in SCALE.md
     val jitFloors = scala.collection.mutable.ArrayBuffer
       .empty[(String, Double, Double)]
-    val results = (light ++ heavy).flatMap { case (name, fn) =>
+    val results = (light ++ heavy).flatMap { q =>
+      val name = q.name
       try {
         if (heavyTail(name)) isolate(spark)
         val w0 = System.nanoTime()
-        fn(spark, sfDir).count() // untimed warmup (JIT + shared caches)
+        q.build(spark, sfDir).count() // untimed warmup (JIT + shared caches)
         val coldSec = (System.nanoTime() - w0) / 1e9
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        q.build(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
         if (jitFloors.size < 3 && !heavyTail(name))
           jitFloors += ((name, coldSec, sec))
@@ -161,15 +161,6 @@ object ScaleProbe {
       }
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    def jnum(d: Double): String = Bench.jnum(d)
-
     // ---- streaming state probe (SPARK_GRAFT_STREAM_PROBE=1) ----
     //
     // The timed-query probe above cannot see the stateful STREAMING shapes
@@ -199,7 +190,7 @@ object ScaleProbe {
             val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
             graft.streaming.StreamingNative.probeMaxFilesPerTrigger = Some(8)
             graft.streaming.StreamingNative.probeStateRows = Some(buf)
-            try { SparkEntry.queries(name)(spark, dir).count(); () }
+            try { SparkEntry.query(name).build(spark, dir).count(); () }
             finally {
               graft.streaming.StreamingNative.probeMaxFilesPerTrigger = None
               graft.streaming.StreamingNative.probeStateRows = None
@@ -328,11 +319,11 @@ object ScaleProbe {
       s""""cpu_kernel_sec_end":${Bench.jnum(kernelEnd, 4)},""" +
       s""""cpu_ratio":${jnum(cpuRatio)},""" +
       s""""run_seq":${System.currentTimeMillis()},""" +
-      s""""heavy_tail_isolated":${heavy.map(h => jstr(h._1)).mkString("[", ",", "]")},""" +
+      s""""heavy_tail_isolated":${heavy.map(h => jstr(h.name)).mkString("[", ",", "]")},""" +
       s""""queries":$qs,"flags":$fl,"errors":$errJson,""" +
       s""""window_flags":$burstJson,"n_burst_windows":${bursts.size},""" +
       streamSection.fold("")(s => s""""streaming":$s,""") +
-      s""""sf":"$sfDir"}"""
+      s""""sf":${jstr(sfDir)}}"""
     // scalastyle:off println
     println(line)
     // scalastyle:on

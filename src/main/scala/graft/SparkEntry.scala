@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7.
   *
-  * Every entry in [[queries]] is one operator from SURVEY.md §2 (or one of the
+  * Every entry in [[catalog]] is one operator from SURVEY.md §2 (or one of the
   * training-data-pipeline extensions), run over the driver-provided parquet
-  * tables at the given sf dir. [[oracleSql]] carries a DuckDB-equivalent ANSI
-  * SQL statement per query; the driver hash-compares after sorting columns by
-  * name, so every computed column is aliased identically on both sides.
+  * tables at the given sf dir. Its [[Oracle]] carries a DuckDB-equivalent ANSI
+  * SQL statement; `tools/check_oracle.py` hash-compares the two after sorting
+  * columns by name, so every computed column is aliased identically on both
+  * sides.
   */
 object SparkEntry {
 
@@ -71,7 +72,7 @@ object SparkEntry {
     * on sf0.001; driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame =
-    queries("q_pipeline_yaml")(spark, "/root/testdata/sf0.001")
+    query("q_pipeline_yaml").build(spark, "/root/testdata/sf0.001")
 
   // ---- changelog fixture: events table replayed as a CDC stream ----
   // pk = user_id, seq = event_id (monotone), op: 'error' events are DELETEs,
@@ -458,34 +459,73 @@ object SparkEntry {
       col("event_id").as(Changelog.SeqCol))
   }
 
-  /** Composed end-to-end CONTROL-PATH rows whose wall time is dominated by
-    * streaming-query launch + checkpoint setup (1-3 `writeStream.start()`s
-    * each), measured sf-INVARIANT: q_stream_dedup runs 11.3 s cold at
-    * sf0.001 vs 4.9 s warm at sf0.1 — 100× the data costs nothing more.
-    * They stay under the correctness gate (Verify) but are reported
-    * separately by [[Bench]]: timing them alongside the operator queries
-    * would add a fixed ~30 s of launch overhead that says nothing about
-    * data-scale throughput.
-    */
-  val launchBoundE2e: Set[String] = Set(
-    "q_stream_session_window", "q_stream_dedup", "q_stream_sessions_state",
-    "q_stream_interval_join", "q_stream_outer_join", "q_stream_full_outer",
-    "q_stream_window_agg", "q_stream_enrich", "q_stream_temporal_join",
-    "q_schema_evolution", "q_schema_evolution_multi", "q_schema_evolution_lenient",
-    "q_kafka_pipeline", "q_multi_table_pipeline")
+  /** How Verify's DuckDB compare checks a catalog query. */
+  sealed trait Check
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** DuckDB-runnable oracle, hash-compared with the query's rows.
+    * Dialect notes: DuckDB regexp_replace needs the 'g' flag to match Spark's
+    * replace-all; len()/length() return BIGINT so Spark INT outputs are cast.
+    */
+  final case class Oracle(sql: String) extends Check
+
+  /** No oracle of its own: the query must return rows, and `audit`, an
+    * [[Oracle]]-checked query over the same operator, carries its contract.
+    */
+  final case class RowsOnly(audit: String) extends Check
+
+  /** One catalog query: its name, its check and its build over a session and
+    * an sf dir.
+    *
+    * `launchBound` marks the composed end-to-end CONTROL-PATH rows whose
+    * wall time is dominated by streaming-query launch + checkpoint setup
+    * (1-3 `writeStream.start()`s each), measured sf-INVARIANT:
+    * q_stream_dedup runs 11.3 s cold at sf0.001 vs 4.9 s warm at sf0.1 —
+    * 100× the data costs nothing more. They stay under the correctness gate
+    * (Verify) but are reported separately by [[Bench]]: timing them
+    * alongside the operator queries would add a fixed ~30 s of launch
+    * overhead that says nothing about data-scale throughput.
+    */
+  final case class Q(name: String, check: Check, launchBound: Boolean = false)(
+      val build: (SparkSession, String) => DataFrame)
+
+  /** The catalog's invariants, checked as it is built: names are unique,
+    * and every rows-only query names an oracle-checked audit.
+    */
+  private[graft] def checked(qs: Seq[Q]): Seq[Q] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate catalog names: ${dups.toSeq.sorted.mkString(", ")}")
+    val oracled = qs.collect { case Q(n, Oracle(_), _) => n }.toSet
+    val unaudited = qs.collect { case Q(n, RowsOnly(a), _) if !oracled(a) => s"$n -> $a" }
+    require(unaudited.isEmpty, s"rows-only audits without an oracle: ${unaudited.mkString(", ")}")
+    qs
+  }
+
+  private lazy val byName: Map[String, Q] = catalog.map(q => q.name -> q).toMap
+
+  /** The one lookup of a catalog query by name. */
+  def query(name: String): Q =
+    byName.getOrElse(name, throw new NoSuchElementException(s"no catalog query named '$name'"))
+
+  /** The timed queries, sorted by name: every entry but the launch-bound ones. */
+  def timed: Seq[Q] = catalog.filterNot(_.launchBound).sortBy(_.name)
+
+  lazy val catalog: Seq[Q] = checked(Seq(
 
     // ---------- transform engine (SURVEY.md §2.3) ----------
 
-    "q_transform_project" -> { (spark, dir) =>
+    Q("q_transform_project", Oracle(
+      "SELECT c_custkey, UPPER(c_name) AS c_name_upper, c_acctbal FROM customer",
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       Transform.applyRules(t(dir, "customer"), TableId.of("tpch", "customer"), Seq(
         TransformRule("tpch.customer",
           projection = Some("c_custkey, UPPER(c_name) AS c_name_upper, c_acctbal"))))
     },
 
-    "q_transform_filter" -> { (spark, dir) =>
+    Q("q_transform_filter", Oracle(
+      """SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
+        |WHERE c_acctbal > 1000 AND c_mktsegment IN ('BUILDING', 'MACHINERY')""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       Transform.applyRules(t(dir, "customer"), TableId.of("tpch", "customer"), Seq(
         TransformRule("tpch.customer",
@@ -493,7 +533,12 @@ object SparkEntry {
           filter = Some("c_acctbal > 1000 AND c_mktsegment IN ('BUILDING', 'MACHINERY')"))))
     },
 
-    "q_transform_computed" -> { (spark, dir) =>
+    Q("q_transform_computed", Oracle(
+      """SELECT l_orderkey, l_linenumber,
+        |  l_extendedprice * (1 - l_discount) AS net_price,
+        |  CASE WHEN l_quantity > 25 THEN 'bulk' ELSE 'small' END AS qty_class
+        |FROM lineitem WHERE l_returnflag <> 'A'""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       Transform.applyRules(t(dir, "lineitem"), TableId.of("tpch", "lineitem"), Seq(
         TransformRule("tpch.lineitem",
@@ -505,14 +550,19 @@ object SparkEntry {
           filter = Some("l_returnflag <> 'A'"))))
     },
 
-    "q_transform_metadata" -> { (spark, dir) =>
+    Q("q_transform_metadata", Oracle(
+      "SELECT c_custkey, 'tpch' AS src_schema, 'customer' AS src_table FROM customer",
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       Transform.applyRules(t(dir, "customer"), TableId.of("tpch", "customer"), Seq(
         TransformRule("tpch.customer",
           projection = Some("c_custkey, __schema_name__ AS src_schema, __table_name__ AS src_table"))))
     },
 
-    "q_transform_wildcard" -> { (spark, dir) =>
+    Q("q_transform_wildcard", Oracle(
+      """SELECT n_nationkey, n_name, n_regionkey, LOWER(n_name) AS n_name_lower
+        |FROM nation WHERE n_regionkey BETWEEN 1 AND 3""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       Transform.applyRules(t(dir, "nation"), TableId.of("tpch", "nation"), Seq(
         TransformRule("tpch.nation",
@@ -522,7 +572,12 @@ object SparkEntry {
 
     // ---------- routing + N→1 widest-schema merge (SURVEY.md §2.6) ----------
 
-    "q_route_merge" -> { (spark, dir) =>
+    Q("q_route_merge", Oracle(
+      """SELECT CAST(c_custkey AS BIGINT) AS id, c_name AS name, c_acctbal AS acctbal,
+        |       c_mktsegment AS mktsegment FROM customer
+        |UNION ALL
+        |SELECT s_suppkey, s_name, s_acctbal, NULL FROM supplier""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val customer = Transform.applyRules(t(dir, "customer"), TableId.of("tpch", "customer"), Seq(
         TransformRule("tpch.customer", projection = Some(
@@ -542,7 +597,9 @@ object SparkEntry {
 
     // ---------- full YAML pipeline lifecycle (SURVEY.md §3.1, §7.3) ----------
 
-    "q_pipeline_yaml" -> { (spark, dir) =>
+    Q("q_pipeline_yaml", Oracle(
+      "SELECT c_custkey, UPPER(c_name) AS c_name, c_acctbal FROM customer WHERE c_acctbal > 100",
+    )) { (spark, dir) =>
       val yaml =
         s"""source:
            |  type: parquet
@@ -565,7 +622,7 @@ object SparkEntry {
       results(TableId.of("out", "customer_filtered"))
     },
 
-    "q_yaml_corpus" -> { (spark, dir) =>
+    Q("q_yaml_corpus", Oracle(yamlCorpusOracleSql)) { (spark, dir) =>
       // corpus cleaning AS a YAML pipeline: the training-data functions are
       // SQL-registered, so transform projections/filters compose them like
       // the reference's built-in function library
@@ -588,7 +645,25 @@ object SparkEntry {
       Composer.composeBatch(spark, PipelineDef.fromYaml(yaml))(TableId.of("out", "clean_docs"))
     },
 
-    "q_yaml_budget" -> { (spark, dir) =>
+    Q("q_yaml_budget", Oracle(
+      // the YAML curate route: same selection semantics as q_token_budget
+      // (TOKEN_COUNT replays as the trim/split SQL), same naive-window oracle
+      """WITH scored AS (
+        |  SELECT doc_id,
+        |         CAST(n_chars AS DOUBLE) / tok AS score,
+        |         CAST(tok AS BIGINT) AS n_tokens
+        |  FROM (SELECT doc_id, n_chars,
+        |          CASE WHEN length(trim(text)) = 0 THEN 0
+        |               ELSE len(string_split_regex(trim(text), '\s+')) END AS tok
+        |        FROM documents)
+        |  WHERE tok >= 1),
+        |ord AS (
+        |  SELECT doc_id, score, n_tokens,
+        |         sum(n_tokens) OVER (ORDER BY score DESC, doc_id
+        |                             ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM scored)
+        |SELECT doc_id, score, n_tokens FROM ord WHERE cum <= 20000""".stripMargin,
+    )) { (spark, dir) =>
       // the curation tier through the reference's primary entry point
       // (YAML pipeline + `curate:` block + the budget-select read
       // surface): selection off the asset the pipeline maintained, over
@@ -600,7 +675,20 @@ object SparkEntry {
       Cli.budgetSelect(spark, yamlBudgetFor(dir)(spark), "out.docs", 20000L)
     },
 
-    "q_yaml_split" -> { (spark, dir) =>
+    Q("q_yaml_split", Oracle(
+      // the YAML split over the pipeline's filtered projection: the same
+      // md5 band arithmetic as q_split_grouped (cum weights 0.8/0.9 →
+      // bounds cccd/e666), valid = [cccd, e666)
+      """SELECT doc_id, n_chars, source, tok FROM (
+        |  SELECT doc_id, n_chars, source,
+        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+        |              ELSE len(string_split_regex(trim(text), '\s+')) END
+        |              AS BIGINT) AS tok
+        |  FROM documents)
+        |WHERE tok >= 1
+        |  AND substring(md5(source), 1, 4) >= 'cccd'
+        |  AND substring(md5(source), 1, 4) < 'e666'""".stripMargin,
+    )) { (spark, dir) =>
       // the split tier through the same YAML entry point: a `split:`
       // block keyed on `source` — every doc of one source lands in ONE
       // split (leakage-free by group) — read via the split-select
@@ -613,7 +701,20 @@ object SparkEntry {
           col("tok").cast("long").as("tok"))
     },
 
-    "q_yaml_sample" -> { (spark, dir) =>
+    Q("q_yaml_sample", Oracle(
+      // the YAML stratified sample over the pipeline's filtered projection:
+      // per-source md5 thresholds (0.25→4000, 0.5→8000, default 0.75→c000)
+      """SELECT doc_id, source, tok FROM (
+        |  SELECT doc_id, source,
+        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+        |              ELSE len(string_split_regex(trim(text), '\s+')) END
+        |              AS BIGINT) AS tok
+        |  FROM documents)
+        |WHERE tok >= 1
+        |  AND substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
+        |      CASE source WHEN 'src1' THEN '4000'
+        |                  WHEN 'src2' THEN '8000' ELSE 'c000' END""".stripMargin,
+    )) { (spark, dir) =>
       // the sample tier through the same YAML entry point: a `sample:`
       // block stratified on `source` (downsample two named sources, keep
       // the rest at the default rate) read via the sample-select surface
@@ -625,7 +726,34 @@ object SparkEntry {
         .select(col("doc_id"), col("source"), col("tok").cast("long").as("tok"))
     },
 
-    "q_yaml_mix" -> { (spark, dir) =>
+    Q("q_yaml_mix", Oracle(
+      // the YAML temperature mix over the pipeline's filtered projection:
+      // the q_mix_temperature decision-table arithmetic re-derived off the
+      // same base (alpha = 1/T = 0.5; z summed in stratum order — the
+      // engine's pinned fold order)
+      """WITH flt AS (
+        |  SELECT doc_id, source, tok FROM (
+        |    SELECT doc_id, source,
+        |           CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+        |                ELSE len(string_split_regex(trim(text), '\s+')) END
+        |                AS BIGINT) AS tok
+        |    FROM documents)
+        |  WHERE tok >= 1),
+        |cnt AS (SELECT source AS s, CAST(count(*) AS DOUBLE) AS n
+        |        FROM flt WHERE source IS NOT NULL GROUP BY 1),
+        |z AS (SELECT list_reduce(list_prepend(0.0, list(pow(n, 0.5) ORDER BY s)),
+        |             (a, x) -> a + x) AS z FROM cnt),
+        |w AS (SELECT s, n, pow(n, 0.5) / z.z AS wt FROM cnt, z),
+        |budget AS (SELECT min(n / wt) AS t FROM w),
+        |rates AS (
+        |  SELECT w.s, round(least(1.0, w.wt * b.t / w.n) * 65536) AS thr
+        |  FROM w CROSS JOIN budget b)
+        |SELECT f.doc_id, f.source, f.tok
+        |FROM flt f JOIN rates r ON r.s = f.source
+        |WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
+        |  ELSE substr(md5(CAST(f.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
+        |  END""".stripMargin,
+    )) { (spark, dir) =>
       // the mixing tier through the same YAML entry point: a `mix:` block
       // at temperature 2 (q_d ∝ n_d^0.5) over `source` strata, read via
       // mix-select. Rates derive from the materialized table's CURRENT
@@ -637,7 +765,24 @@ object SparkEntry {
         .select(col("doc_id"), col("source"), col("tok").cast("long").as("tok"))
     },
 
-    "q_curate_audit" -> { (spark, dir) =>
+    Q("q_curate_audit", Oracle(
+      // the curate drift audit over the YAML pipeline's rebuilt asset: the
+      // asset leg must equal the table leg's token mass under the fold's
+      // exact row filter (tok >= 1 from the pipeline filter; score/tokens
+      // non-null and tokens >= 0 from the fold) — both legs re-derive as
+      // ONE sum in DuckDB, and `consistent` is asserted TRUE
+      """WITH flt AS (
+        |  SELECT CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+        |         ELSE len(string_split_regex(trim(text), '\s+')) END
+        |         AS BIGINT) AS tok,
+        |         n_chars
+        |  FROM documents)
+        |SELECT CAST(sum(tok) AS BIGINT) AS asset_tokens,
+        |       CAST(sum(tok) AS BIGINT) AS table_tokens,
+        |       TRUE AS consistent
+        |FROM flt
+        |WHERE tok >= 1 AND (CAST(n_chars AS DOUBLE) / tok) IS NOT NULL""".stripMargin,
+    )) { (spark, dir) =>
       // the drift audit that guards every other audit's input asset: the
       // maintained budget-histogram's total token mass vs the surviving
       // materialized table's under the fold's exact row filter — equal
@@ -652,17 +797,32 @@ object SparkEntry {
 
     // ---------- changelog materialization / upsert semantics (§2.2, §7.4) ----------
 
-    "q_materialize" -> { (spark, dir) =>
+    Q("q_materialize", Oracle(
+      """SELECT user_id, event_type, value FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    )) { (spark, dir) =>
       Changelog.materialize(eventsChangelog(spark, dir), Seq("user_id"))
     },
 
-    "q_softdelete" -> { (spark, dir) =>
+    Q("q_softdelete", Oracle(
+      """SELECT user_id, event_type, value, event_type = 'error' AS __deleted FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1""".stripMargin,
+    )) { (spark, dir) =>
       Changelog.materialize(Changelog.softDelete(eventsChangelog(spark, dir)), Seq("user_id"))
     },
 
     // ---------- debezium wire format + streaming pipeline (§2.1/§2.2, §7.2 step 7) ----------
 
-    "q_debezium_roundtrip" -> { (spark, dir) =>
+    Q("q_debezium_roundtrip", Oracle(
+      """SELECT user_id, event_type, value FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    )) { (spark, dir) =>
       // serialize → parse → materialize ≡ materialize (proves the Kafka wire
       // path is lossless); same oracle as q_materialize
       val id = TableId.of("db", "events")
@@ -672,7 +832,11 @@ object SparkEntry {
       Changelog.materialize(back, Seq("user_id"))
     },
 
-    "q_cube" -> { (spark, dir) =>
+    Q("q_cube", Oracle(
+      """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
+        |       ROUND(SUM(l_quantity), 2) AS sum_qty
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // full CUBE lattice (q_rollup covers the hierarchy): partial-aggregated
       // like any groupBy, one exchange
@@ -681,7 +845,15 @@ object SparkEntry {
         .agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("sum_qty"))
     },
 
-    "q_pivot" -> { (spark, dir) =>
+    Q("q_pivot", Oracle(
+      """SELECT user_id,
+        |  ROUND(SUM(value) FILTER (event_type = 'click'), 2) AS click,
+        |  ROUND(SUM(value) FILTER (event_type = 'view'), 2) AS view,
+        |  ROUND(SUM(value) FILTER (event_type = 'purchase'), 2) AS purchase,
+        |  ROUND(SUM(value) FILTER (event_type = 'signup'), 2) AS signup,
+        |  ROUND(SUM(value) FILTER (event_type = 'error'), 2) AS error
+        |FROM events GROUP BY user_id""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // pivot with an EXPLICIT value list: one pass, no distinct-values job,
       // stable schema at any scale
@@ -691,7 +863,14 @@ object SparkEntry {
         .agg(round(sum("value"), 2))
     },
 
-    "q_unpivot" -> { (spark, dir) =>
+    Q("q_unpivot", Oracle(
+      """WITH u AS (
+        |  SELECT c_custkey, 'acctbal' AS measure, c_acctbal AS value FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey, 'nationkey', CAST(c_nationkey AS DOUBLE) FROM customer)
+        |SELECT measure, count(*) AS n, round(sum(value), 2) AS total
+        |FROM u GROUP BY measure""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // UNPIVOT (wide → long): stack() is a generator, not a join — one
       // narrow pass, row count = rows × measures, no shuffle before the
@@ -704,7 +883,12 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
     },
 
-    "q_route_replace" -> { (spark, dir) =>
+    Q("q_route_replace", Oracle(
+      """SELECT event_id,
+        |  CASE WHEN user_id % 2 = 0 THEN 'ods.events_even'
+        |       ELSE 'ods.events_odd' END AS routed_to
+        |FROM events""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // replace-symbol routing over real data: two logical source tables
       // route through `db.\.* -> ods.<>` and rows carry their ROUTED target
@@ -719,7 +903,12 @@ object SparkEntry {
         }.reduce(_ unionByName _)
     },
 
-    "q_startup_timestamp" -> { (spark, dir) =>
+    Q("q_startup_timestamp", Oracle(
+      """SELECT user_id, event_type, value FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events WHERE event_id >= 500) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    )) { (spark, dir) =>
       // startup-mode pruning on the RAW feed: serialize the events changelog
       // to debezium lines, resume at ts_ms >= 500, parse + materialize —
       // the filter must run before payload parsing and skip the backlog
@@ -732,7 +921,19 @@ object SparkEntry {
       Changelog.materialize(back, Seq("user_id"))
     },
 
-    "q_scd2_history" -> { (spark, dir) =>
+    Q("q_scd2_history", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |iv AS (
+        |  SELECT user_id, event_type, value, op, seq AS valid_from,
+        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
+        |  FROM ch)
+        |SELECT user_id, event_type, value, valid_from, valid_to
+        |FROM iv WHERE op <> 'DELETE'""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // temporal-table materialization: the changelog as validity
       // intervals (state WITH history) — deletes close intervals without
@@ -740,7 +941,21 @@ object SparkEntry {
       Changelog.history(eventsChangelog(spark, dir), Seq("user_id"))
     },
 
-    "q_scd2_asof" -> { (spark, dir) =>
+    Q("q_scd2_asof", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |iv AS (
+        |  SELECT user_id, event_type, value, op, seq AS valid_from,
+        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
+        |  FROM ch),
+        |sp AS (SELECT max(event_id) // 2 AS s FROM events)
+        |SELECT user_id, event_type, value FROM iv, sp
+        |WHERE op <> 'DELETE' AND valid_from <= s
+        |  AND (valid_to IS NULL OR valid_to > s)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // time travel: state as of the changelog's midpoint offset
       val split = t(dir, "events").agg(max("event_id")).head().getLong(0) / 2
@@ -748,7 +963,19 @@ object SparkEntry {
         Changelog.history(eventsChangelog(spark, dir), Seq("user_id")), split)
     },
 
-    "q_scd2_merge" -> { (spark, dir) =>
+    Q("q_scd2_merge", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |iv AS (
+        |  SELECT user_id, event_type, value, op, seq AS valid_from,
+        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
+        |  FROM ch)
+        |SELECT user_id, event_type, value, valid_from, valid_to
+        |FROM iv WHERE op <> 'DELETE'""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // incremental SCD2 maintenance: bootstrap the history table from the
       // first half of the changelog, then fold the second half in as a
@@ -761,7 +988,27 @@ object SparkEntry {
         ch.where(col(Changelog.SeqCol) > split), Seq("user_id"))
     },
 
-    "q_temporal_join" -> { (spark, dir) =>
+    Q("q_temporal_join", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |iv AS (
+        |  SELECT user_id, event_type, value, op, seq AS valid_from,
+        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
+        |  FROM ch),
+        |hist AS (
+        |  SELECT user_id, event_type, value, valid_from, valid_to
+        |  FROM iv WHERE op <> 'DELETE'),
+        |probes AS (
+        |  SELECT user_id, seq AS probe_seq FROM ch WHERE event_type = 'purchase')
+        |SELECT p.user_id, p.probe_seq,
+        |       h.event_type AS prev_type, h.value AS prev_value
+        |FROM probes p LEFT JOIN hist h
+        |  ON p.user_id = h.user_id AND h.valid_from <= p.probe_seq - 1
+        | AND (h.valid_to IS NULL OR h.valid_to > p.probe_seq - 1)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // temporal table join (Flink FOR SYSTEM_TIME AS OF): every purchase
       // probe enriched with its user's state JUST BEFORE the purchase
@@ -778,7 +1025,21 @@ object SparkEntry {
           col("event_type").as("prev_type"), col("value").as("prev_value"))
     },
 
-    "q_stream_agg_view" -> { (spark, dir) =>
+    Q("q_stream_agg_view", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |state AS (
+        |  SELECT user_id, event_type, value FROM (
+        |    SELECT user_id, event_type, value, op,
+        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
+        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
+        |SELECT event_type, count(*) AS cnt,
+        |       CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+        |FROM state GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the steady-state LOOP of incremental view maintenance: the view
       // folds forward through THREE successive micro-batches (view and
@@ -817,7 +1078,19 @@ object SparkEntry {
         col("sum_value").cast("double").as("sum_value"))
     },
 
-    "q_secondary_index" -> { (spark, dir) =>
+    Q("q_secondary_index", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |state AS (
+        |  SELECT user_id, event_type FROM (
+        |    SELECT user_id, event_type, op,
+        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
+        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
+        |SELECT event_type, user_id FROM state""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // secondary-index maintenance: the (event_type → user_id) lookup
       // table bootstrapped from the 90% state and folded forward under
@@ -836,7 +1109,31 @@ object SparkEntry {
         Seq("user_id"), Seq("event_type"))
     },
 
-    "q_pmi_collocations" -> { (spark, dir) =>
+    Q("q_pmi_collocations", Oracle(
+      """WITH toks AS (
+        |  SELECT doc_id,
+        |         list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS tk
+        |  FROM documents),
+        |uni AS (
+        |  SELECT unnest(tk) AS tok FROM toks),
+        |ucnt AS (SELECT tok, count(*) AS c FROM uni GROUP BY 1),
+        |n_uni AS (SELECT count(*) AS n FROM uni),
+        |bigrams AS (
+        |  SELECT unnest(list_transform(generate_series(1, len(tk) - 1),
+        |           i -> struct_pack(a := tk[i], b := tk[i+1]))) AS bg
+        |  FROM toks WHERE len(tk) >= 2),
+        |bcnt AS (
+        |  SELECT bg.a AS a, bg.b AS b, count(*) AS c_ab
+        |  FROM bigrams GROUP BY 1, 2 HAVING count(*) >= 20),
+        |n_bi AS (SELECT count(*) AS n FROM bigrams)
+        |SELECT x.a, x.b, CAST(x.c_ab AS BIGINT) AS c_ab,
+        |       ln(CAST(x.c_ab AS DOUBLE) * u.n * u.n / v.n / ca.c / cb.c) AS pmi
+        |FROM bcnt x
+        |JOIN ucnt ca ON ca.tok = x.a
+        |JOIN ucnt cb ON cb.tok = x.b
+        |CROSS JOIN n_uni u CROSS JOIN n_bi v
+        |ORDER BY pmi DESC, x.a, x.b LIMIT 50""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // corpus collocation mining: pointwise mutual information over
       // adjacent token pairs (Church & Hanks 1990) — counts are exact
@@ -898,7 +1195,21 @@ object SparkEntry {
         .limit(50)
     },
 
-    "q_agg_view_steady" -> { (spark, dir) =>
+    Q("q_agg_view_steady", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |state AS (
+        |  SELECT user_id, event_type, value FROM (
+        |    SELECT user_id, event_type, value, op,
+        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
+        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
+        |SELECT event_type, count(*) AS cnt,
+        |       CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+        |FROM state GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the steady-state cost of keeping an aggregate view fresh: ONE
       // mergeAggregate over the pre-bootstrapped (view, state, batch) —
@@ -910,7 +1221,21 @@ object SparkEntry {
           col("sum_value").cast("double").as("sum_value"))
     },
 
-    "q_incremental_agg" -> { (spark, dir) =>
+    Q("q_incremental_agg", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |state AS (
+        |  SELECT user_id, event_type, value FROM (
+        |    SELECT user_id, event_type, value, op,
+        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
+        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
+        |SELECT event_type, count(*) AS cnt,
+        |       CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+        |FROM state GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // incremental materialized-view maintenance: bootstrap the per-type
       // (count, decimal-sum) view from the first half of the changelog,
@@ -931,7 +1256,34 @@ object SparkEntry {
           col("sum_value").cast("double").as("sum_value"))
     },
 
-    "q_snapshot_diff" -> { (spark, dir) =>
+    Q("q_snapshot_diff", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |sp AS (SELECT max(event_id) // 2 AS s FROM events),
+        |old_state AS (
+        |  SELECT user_id, event_type, value FROM (
+        |    SELECT user_id, event_type, value, op,
+        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
+        |    FROM ch, sp WHERE seq <= s) WHERE rn = 1 AND op <> 'DELETE'),
+        |new_state AS (
+        |  SELECT user_id, event_type, value FROM (
+        |    SELECT user_id, event_type, value, op,
+        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
+        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
+        |SELECT coalesce(o.user_id, n.user_id) AS user_id,
+        |       CASE WHEN n.user_id IS NULL THEN o.event_type ELSE n.event_type END AS event_type,
+        |       CASE WHEN n.user_id IS NULL THEN o.value ELSE n.value END AS value,
+        |       CASE WHEN o.user_id IS NULL THEN 'INSERT'
+        |            WHEN n.user_id IS NULL THEN 'DELETE'
+        |            ELSE 'UPDATE' END AS __op
+        |FROM old_state o FULL OUTER JOIN new_state n ON o.user_id = n.user_id
+        |WHERE o.user_id IS NULL OR n.user_id IS NULL
+        |   OR o.event_type IS DISTINCT FROM n.event_type
+        |   OR o.value IS DISTINCT FROM n.value""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // snapshot-comparison CDC (no binlog available): the state at the
       // changelog midpoint vs the final state, diffed back into the MINIMAL
@@ -945,7 +1297,14 @@ object SparkEntry {
       Changelog.diff(oldState, newState, Seq("user_id"))
     },
 
-    "q_functions_time" -> { (spark, dir) =>
+    Q("q_functions_time", Oracle(
+      """SELECT user_id,
+        |  CAST((epoch_us(ts) % 86400000000) // 1000 AS INTEGER) AS t_time,
+        |  epoch_us(ts) AS t_tz_us
+        |FROM (SELECT user_id, ts,
+        |        row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |      FROM events) WHERE rn = 1""".stripMargin,
+    )) { (spark, dir) =>
       // TIME(p) → INT millis-of-day and TIMESTAMP_TZ → instant conventions
       // (model/CdcTypes.scala:11-14) proven end-to-end: build a changelog
       // whose payload uses both conventions, serialize it over the debezium
@@ -970,7 +1329,18 @@ object SparkEntry {
         .select(col("user_id"), col("t_time"), unix_micros(col("t_tz")).as("t_tz_us"))
     },
 
-    "q_functions_tz" -> { (spark, dir) =>
+    Q("q_functions_tz", Oracle(
+      """SELECT user_id, epoch_us(ts) AS t_us, zone AS t_zone,
+        |  strftime(make_timestamp(epoch_us(ts) + off), '%Y-%m-%dT%H:%M:%S.%f') || zone AS t_iso
+        |FROM (
+        |  SELECT user_id, ts,
+        |    CASE user_id % 4 WHEN 0 THEN 'Z' WHEN 1 THEN '+05:30'
+        |                     WHEN 2 THEN '-08:00' ELSE '+01:00' END AS zone,
+        |    CASE user_id % 4 WHEN 0 THEN 0 WHEN 1 THEN 19800000000
+        |                     WHEN 2 THEN -28800000000 ELSE 3600000000 END AS off,
+        |    row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1""".stripMargin,
+    )) { (spark, dir) =>
       // ZONED timestamp convention (SURVEY §1.3, reference
       // ZonedTimestampType): the wire carries ONE ISO string with the
       // original zone; the engine stores instant + `__zone` sidecar and can
@@ -1004,7 +1374,12 @@ object SparkEntry {
             col("t_tz" + ZonedTime.ZoneSuffix)).as("t_iso")) // wire form re-renderable
     },
 
-    "q_canal_roundtrip" -> { (spark, dir) =>
+    Q("q_canal_roundtrip", Oracle(
+      """SELECT user_id, event_type, value FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    )) { (spark, dir) =>
       // canal-json wire path is lossless too; same oracle as q_materialize
       val id = TableId.of("db", "events")
       val json = graft.sinks.ChangelogJson.canal(eventsChangelog(spark, dir), id)
@@ -1013,7 +1388,12 @@ object SparkEntry {
       Changelog.materialize(back, Seq("user_id"))
     },
 
-    "q_stream_pipeline" -> { (spark, dir) =>
+    Q("q_stream_pipeline", Oracle(
+      """SELECT user_id, event_type, value FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    )) { (spark, dir) =>
       // the full streaming topology run in batch mode (reference BATCH
       // runtime-mode): debezium feed → pipeline → parquet upsert sink state
       import graft.streaming.StreamingPipeline
@@ -1032,7 +1412,14 @@ object SparkEntry {
       sink.read(spark, srcId)
     },
 
-    "q_stream_steady" -> { (spark, dir) =>
+    Q("q_stream_steady", Oracle(
+      // replaying already-held rows is state-neutral under seq LWW, so the
+      // steady-state merge converges to the same materialization
+      """SELECT user_id, event_type, value FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    )) { (spark, dir) =>
       // the per-micro-batch steady state of the topology above: merge a
       // pinned 10k-row batch into ALREADY-LOADED sink state (bring-up is
       // cached outside the timed body — the widest bench band in r7/r8
@@ -1042,7 +1429,15 @@ object SparkEntry {
       sink.read(spark, srcId)
     },
 
-    "q_multi_table_pipeline" -> { (spark, dir) =>
+    Q("q_multi_table_pipeline", Oracle(
+      """SELECT id, name, acctbal, mktsegment FROM (
+        |  SELECT c_custkey * 10 + 1 AS id, c_name AS name, c_acctbal AS acctbal,
+        |         c_mktsegment AS mktsegment FROM customer WHERE c_acctbal >= 0
+        |  UNION ALL
+        |  SELECT s_suppkey * 10 + 2, s_name, s_acctbal, NULL FROM supplier
+        |  UNION ALL
+        |  SELECT n_nationkey * 10 + 3, n_name, NULL, NULL FROM nation)""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       // parallelized multi-table pipeline (reference
       // FlinkParallelizedPipelineITCase): ONE streaming CLI run carries
       // three interleaved source tables with `table-parallelism: 4`
@@ -1109,7 +1504,12 @@ object SparkEntry {
       sink.asInstanceOf[graft.sinks.ParquetUpsertSink].read(spark, TableId.of("out", "parties"))
     },
 
-    "q_kafka_pipeline" -> { (spark, dir) =>
+    Q("q_kafka_pipeline", Oracle(
+      """SELECT user_id, event_type, value FROM (
+        |  SELECT user_id, event_type, value,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       // the kafka-source seam end-to-end: events changelog serialized to
       // debezium lines = the topic backlog; the injected reader stands in
       // for the broker (same classpath-guard design as the sink); YAML CLI
@@ -1144,7 +1544,15 @@ object SparkEntry {
       sink.asInstanceOf[graft.sinks.ParquetUpsertSink].read(spark, id)
     },
 
-    "q_schema_evolution" -> { (spark, dir) =>
+    Q("q_schema_evolution", Oracle(
+      """SELECT user_id, event_type,
+        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
+        |       THEN NULL ELSE value END AS value
+        |FROM (
+        |  SELECT user_id, event_type, value, event_id,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       // composed schema-evolution e2e (reference SchemaEvolveE2eITCase):
       // half the changelog streams under schema v1 (no `value` column) and
       // materializes; an IN-BAND AddColumn control record plus the second
@@ -1193,7 +1601,18 @@ object SparkEntry {
       sink2.asInstanceOf[graft.sinks.ParquetUpsertSink].read(spark, id)
     },
 
-    "q_schema_evolution_multi" -> { (spark, dir) =>
+    Q("q_schema_evolution_multi", Oracle(
+      """SELECT user_id,
+        |  CASE WHEN event_id > (SELECT MAX(event_id) // 2 FROM events)
+        |       THEN event_type END AS kind,
+        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
+        |       THEN CAST(event_id % 1000 AS BIGINT)
+        |       ELSE event_id * 1000000 END AS score
+        |FROM (
+        |  SELECT user_id, event_type, event_id,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       // composed schema-evolution e2e over the REMAINING evolution types
       // (reference SchemaEvolveE2eITCase): phase 1 materializes under
       // (user_id, event_type, value, score INT); an in-band DropColumn +
@@ -1248,7 +1667,19 @@ object SparkEntry {
       sink2.asInstanceOf[graft.sinks.ParquetUpsertSink].read(spark, id)
     },
 
-    "q_schema_evolution_lenient" -> { (spark, dir) =>
+    Q("q_schema_evolution_lenient", Oracle(
+      """SELECT user_id,
+        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
+        |       THEN event_type END AS event_type,
+        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
+        |       THEN value END AS value,
+        |  CASE WHEN event_id > (SELECT MAX(event_id) // 2 FROM events)
+        |       THEN event_type END AS kind
+        |FROM (
+        |  SELECT user_id, event_type, value, event_id,
+        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       // LENIENT behavior through the same CLI restart path: the rename
       // becomes AddColumn(kind) with the OLD column kept (nulled for new
       // rows), and the drop is deferred (column kept, new rows null it) —
@@ -1298,7 +1729,10 @@ object SparkEntry {
 
     // ---------- chunked snapshot source (§2.1) ----------
 
-    "q_chunked_read" -> { (spark, dir) =>
+    Q("q_chunked_read", Oracle(
+      """SELECT l_returnflag, count(*) AS cnt, ROUND(SUM(l_quantity), 2) AS sum_qty
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+    )) { (spark, dir) =>
       val df = ChunkSplitter.chunkedRead(spark, s"$dir/lineitem.parquet", "l_orderkey")
       df.groupBy("l_returnflag")
         .agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("sum_qty"))
@@ -1306,7 +1740,17 @@ object SparkEntry {
 
     // ---------- scalar function library parity (§2.4) ----------
 
-    "q_functions_string" -> { (spark, dir) =>
+    Q("q_functions_string", Oracle(
+      """SELECT p_partkey,
+        |  CONCAT(p_brand, '#', p_type) AS brand_type,
+        |  UPPER(p_name) AS name_upper,
+        |  LOWER(p_brand) AS brand_lower,
+        |  TRIM(p_name) AS name_trim,
+        |  SUBSTRING(p_name, 1, 5) AS name_pfx,
+        |  CAST(LENGTH(p_name) AS BIGINT) AS name_len,
+        |  REGEXP_REPLACE(p_type, ' ', '_', 'g') AS type_u
+        |FROM part""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "part").selectExpr(
         "p_partkey",
@@ -1319,7 +1763,15 @@ object SparkEntry {
         "REGEXP_REPLACE(p_type, ' ', '_') AS type_u")
     },
 
-    "q_functions_math" -> { (spark, dir) =>
+    Q("q_functions_math", Oracle(
+      """SELECT l_orderkey, l_linenumber,
+        |  l_extendedprice * l_discount AS disc_amt,
+        |  ABS(l_quantity - 25) AS qty_dev,
+        |  CAST(CEIL(l_extendedprice) AS BIGINT) AS price_ceil,
+        |  CAST(FLOOR(l_extendedprice) AS BIGINT) AS price_floor,
+        |  CAST(l_orderkey % 7 AS BIGINT) AS mod7
+        |FROM lineitem""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "lineitem").selectExpr(
         "l_orderkey", "l_linenumber",
@@ -1330,7 +1782,14 @@ object SparkEntry {
         "CAST(l_orderkey % 7 AS BIGINT) AS mod7")
     },
 
-    "q_functions_conditional" -> { (spark, dir) =>
+    Q("q_functions_conditional", Oracle(
+      """SELECT o_orderkey,
+        |  CASE o_orderstatus WHEN 'F' THEN 'done' WHEN 'O' THEN 'open' ELSE 'other' END AS status_word,
+        |  CASE WHEN o_totalprice > 200000 THEN 'big' WHEN o_totalprice > 100000 THEN 'mid' ELSE 'small' END AS size_class,
+        |  COALESCE(NULLIF(o_orderpriority, '1-URGENT'), 'URGENT!') AS prio,
+        |  CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END AS is_large
+        |FROM orders""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "orders").selectExpr(
         "o_orderkey",
@@ -1340,7 +1799,14 @@ object SparkEntry {
         "IF(o_totalprice > 150000, 1, 0) AS is_large")
     },
 
-    "q_functions_cast" -> { (spark, dir) =>
+    Q("q_functions_cast", Oracle(
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(l_quantity AS INTEGER) AS qty_int,
+        |  CAST(l_orderkey AS VARCHAR) AS ok_str,
+        |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price_dec,
+        |  (l_returnflag = 'R') AS is_return
+        |FROM lineitem""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "lineitem").selectExpr(
         "l_orderkey",
@@ -1351,7 +1817,14 @@ object SparkEntry {
         "CAST(l_returnflag = 'R' AS BOOLEAN) AS is_return")
     },
 
-    "q_functions_temporal" -> { (spark, dir) =>
+    Q("q_functions_temporal", Oracle(
+      """SELECT o_orderkey,
+        |  strftime(o_orderdate, '%Y-%m-%d') AS od_fmt,
+        |  CAST(YEAR(o_orderdate) AS BIGINT) AS od_year,
+        |  CAST(MONTH(o_orderdate) AS BIGINT) AS od_month,
+        |  CAST(FLOOR(date_diff('second', TIMESTAMP '1995-01-01 00:00:00', o_orderdate) / 86400.0) AS BIGINT) AS days_since
+        |FROM orders""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       graft.functions.CdcFunctions.register(spark)
       // parquet NTZ timestamps cast to LTZ under the UTC session zone = same wall time
@@ -1365,12 +1838,26 @@ object SparkEntry {
 
     // ---------- dedup suite (training-data ops) ----------
 
-    "q_dedup_exact" -> { (spark, dir) =>
+    Q("q_dedup_exact", Oracle(
+      """SELECT min(doc_id) AS doc_id, count(*) AS dup_cnt FROM documents
+        |GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       Dedup.exact(t(dir, "documents"), "doc_id", TextAnalysis.fingerprint(col("text")))
     },
 
-    "q_dedup_pairs" -> { (spark, dir) =>
+    Q("q_dedup_pairs", Oracle(
+      """WITH all_docs AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT -doc_id - 1, text FROM documents WHERE doc_id % 50 = 0),
+        |fp AS (SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS f
+        |       FROM all_docs),
+        |sized AS (SELECT *, count(*) OVER (PARTITION BY f) AS csz FROM fp)
+        |SELECT x.doc_id AS a, y.doc_id AS b
+        |FROM sized x JOIN sized y ON x.f = y.f AND x.doc_id < y.doc_id
+        |WHERE x.csz BETWEEN 2 AND 64""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // audit view: which doc duplicates which (exact fingerprint pairs).
       // The corpus has no natural exact duplicates, so plant some: every
@@ -1385,12 +1872,24 @@ object SparkEntry {
         TextAnalysis.fingerprint(col("text")))
     },
 
-    "q_fingerprint" -> { (spark, dir) =>
+    Q("q_fingerprint", Oracle(
+      """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+        |FROM documents""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "documents").select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
     },
 
-    "q_text_normalize" -> { (spark, dir) =>
+    Q("q_text_normalize", Oracle(
+      // decomposed accent (chr 769 = U+0301), vertical tab, BEL and ragged
+      // whitespace appended — NFC must compose, controls strip, runs collapse
+      """SELECT doc_id, trim(regexp_replace(regexp_replace(
+        |  nfc_normalize(text || ' caf' || chr(101) || chr(769) || '  ' ||
+        |                chr(11) || chr(9) || 'z' || chr(7) || ' '),
+        |  '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
+        |  '[ \t\n\r]+', ' ', 'g')) AS clean
+        |FROM documents""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // canonical cleaning: NFC + control strip + whitespace collapse. The
       // appended suffix plants a DECOMPOSED accent (e + U+0301), a vertical
@@ -1402,21 +1901,43 @@ object SparkEntry {
         TextAnalysis.cleanText(messy).as("clean"))
     },
 
-    "q_dedup_minhash" -> { (spark, dir) =>
+    Q("q_dedup_minhash", Oracle(OracleHashSql.dedupMinhash)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // survivors after MinHash-LSH near-dup removal (keep-min-id greedy)
       Dedup.minhashDedup(t(dir, "documents"), "doc_id", "text", threshold = 0.8)
         .select("doc_id", "lang", "source")
     },
 
-    "q_dedup_clusters" -> { (spark, dir) =>
+    Q("q_dedup_clusters", Oracle(OracleHashSql.dedupClusters)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // transitive closure of near-duplication: a~b, b~c puts a,b,c in ONE
       // cluster (keep-first pair greedy under-approximates this)
       Dedup.minhashClusters(t(dir, "documents"), "doc_id", "text", threshold = 0.8)
     },
 
-    "q_span_dedup" -> { (spark, dir) =>
+    Q("q_span_dedup", Oracle(
+      """WITH toks AS (
+        |  SELECT doc_id,
+        |         list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS tk
+        |  FROM documents),
+        |base AS (SELECT doc_id, len(tk) AS n_tokens, tk FROM toks),
+        |w AS (
+        |  SELECT doc_id, i - 1 AS start, array_to_string(tk[i:i+9], ' ') AS win
+        |  FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 9)) AS i
+        |        FROM base WHERE n_tokens >= 10)),
+        |d AS (SELECT win FROM w GROUP BY win HAVING count(DISTINCT doc_id) > 1),
+        |dup AS (SELECT w.doc_id, w.start FROM w JOIN d USING (win)),
+        |cov AS (
+        |  SELECT doc_id, count(*) AS dup_tokens FROM (
+        |    SELECT DISTINCT doc_id, j FROM (
+        |      SELECT doc_id, unnest(generate_series(start, start + 9)) AS j FROM dup))
+        |  GROUP BY doc_id)
+        |SELECT b.doc_id, b.n_tokens,
+        |       coalesce(c.dup_tokens, 0) AS dup_tokens,
+        |       CASE WHEN b.n_tokens = 0 THEN 0.0
+        |            ELSE coalesce(c.dup_tokens, 0) / b.n_tokens END AS dup_frac
+        |FROM base b LEFT JOIN cov c USING (doc_id)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // span-granular exact-substring dedup (Lee '21): per-doc fraction of
       // tokens covered by a 10-token window occurring verbatim in ANOTHER
@@ -1425,7 +1946,7 @@ object SparkEntry {
       Dedup.spanProfile(t(dir, "documents"), "doc_id", "text", k = 10)
     },
 
-    "q_text_topk" -> { (spark, dir) =>
+    Q("q_text_topk", Oracle(OracleHashSql.textTopk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // text similarity SEARCH (retrieval twin of dedup): top-10 docs most
       // similar to doc 0's text by MinHash-estimated Jaccard — one narrow
@@ -1436,7 +1957,7 @@ object SparkEntry {
       Dedup.textTopK(docs.where(col("doc_id") =!= 0), "doc_id", "text", queryText, k = 10)
     },
 
-    "q_dedup_incremental_probe" -> { (spark, dir) =>
+    Q("q_dedup_incremental_probe", Oracle(OracleHashSql.dedupIncremental)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the STEADY-STATE half of the ingest loop: the persisted index
       // already exists (built once per session, shared across runs), so a
@@ -1451,7 +1972,7 @@ object SparkEntry {
       Dedup.incrementalCandidates(batch, "doc_id", "text", idxDir, threshold = 0.8)
     },
 
-    "q_dedup_incremental" -> { (spark, dir) =>
+    Q("q_dedup_incremental", Oracle(OracleHashSql.dedupIncremental)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // streaming-ingest dedup shape: the corpus is a PERSISTED MinHash-LSH
       // index on disk; a new batch (every 25th doc re-appearing under a
@@ -1466,13 +1987,13 @@ object SparkEntry {
       Dedup.incrementalCandidates(batch, "doc_id", "text", idxDir, threshold = 0.8)
     },
 
-    "q_dedup_simhash" -> { (spark, dir) =>
+    Q("q_dedup_simhash", Oracle(OracleHashSql.dedupSimhash)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       Dedup.simhashCandidates(t(dir, "documents"), "doc_id", "text", maxHamming = 3)
         .select("a", "b", "hamming")
     },
 
-    "q_dedup_ngram" -> { (spark, dir) =>
+    Q("q_dedup_ngram", Oracle(OracleHashSql.dedupNgram)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val docs = t(dir, "documents")
       val cands = Dedup.minhashCandidates(docs, "doc_id", "text", threshold = 0.5)
@@ -1480,7 +2001,26 @@ object SparkEntry {
         .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
     },
 
-    "q_paragraph_dedup" -> { (spark, dir) =>
+    Q("q_paragraph_dedup", Oracle(
+      """WITH pages AS (
+        |  SELECT doc_id // 4 AS page_id,
+        |         'begin boilerplate header end' || chr(10) || chr(10) ||
+        |           string_agg(text, chr(10) || chr(10) ORDER BY doc_id) AS text
+        |  FROM documents GROUP BY 1),
+        |parts AS (
+        |  SELECT page_id, u.pos - 1 AS pos, u.para
+        |  FROM (SELECT page_id, string_split(text, chr(10) || chr(10)) AS arr FROM pages),
+        |       LATERAL (SELECT unnest(arr) AS para,
+        |                       unnest(generate_series(1, len(arr))) AS pos) u
+        |  WHERE trim(u.para) <> ''),
+        |kept AS (
+        |  SELECT page_id, pos, para, row_number() OVER (
+        |    PARTITION BY md5(regexp_replace(lower(trim(para)), '\s+', ' ', 'g'))
+        |    ORDER BY page_id, pos) AS rn
+        |  FROM parts)
+        |SELECT page_id, string_agg(para, chr(10) || chr(10) ORDER BY pos) AS text
+        |FROM kept WHERE rn = 1 GROUP BY page_id""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // C4-style span dedup: the corpus has no paragraph structure, so
       // synthesize multi-paragraph "pages" (4 docs joined by \n\n behind a
@@ -1494,7 +2034,7 @@ object SparkEntry {
       Dedup.paragraphDedup(pages, "page_id", "text")
     },
 
-    "q_dedup_embedding" -> { (spark, dir) =>
+    Q("q_dedup_embedding", Oracle(OracleHashSql.dedupEmbedding)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // documents contain genuine near-dup texts; embed them (stub embedding
       // UDF) and find cosine near-dup pairs — the composed LLM-pipeline shape
@@ -1505,7 +2045,7 @@ object SparkEntry {
         .select("a", "b")
     },
 
-    "q_semdedup" -> { (spark, dir) =>
+    Q("q_semdedup", Oracle(OracleHashSql.semdedupSurvivors)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // SemDeDup survivor selection: the curation-pipeline output shape —
       // one representative (min id) per semantic-duplicate chain, wide
@@ -1518,7 +2058,12 @@ object SparkEntry {
 
     // ---------- similarity search ----------
 
-    "q_embed_topk" -> { (spark, dir) =>
+    Q("q_embed_topk", Oracle(
+      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
+        |SELECT e.vec_id FROM embeddings e, q
+        |ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) DESC, e.vec_id
+        |LIMIT 10""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val emb = t(dir, "embeddings")
       val query = emb.where(col("vec_id") === 0).select("embedding")
@@ -1526,7 +2071,7 @@ object SparkEntry {
       Similarity.bruteForceTopK(emb, "vec_id", "embedding", query, 10).select("vec_id")
     },
 
-    "q_embed_ivf_topk" -> { (spark, dir) =>
+    Q("q_embed_ivf_topk", Oracle(OracleHashSql.embedIvfTopk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val emb = t(dir, "embeddings")
       val query = emb.where(col("vec_id") === 0).select("embedding")
@@ -1537,7 +2082,7 @@ object SparkEntry {
         .select("vec_id")
     },
 
-    "q_knn_join" -> { (spark, dir) =>
+    Q("q_knn_join", Oracle(OracleHashSql.knnJoin)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // bulk k-NN self-join: every vector → its 5 nearest neighbors,
       // IVF-pruned on BOTH sides (left probes 4 lists inside one codegen
@@ -1550,7 +2095,7 @@ object SparkEntry {
       graft.ops.Ivf.knnJoin(emb, emb, "vec_id", "embedding", model, k = 5, nprobe = 4)
     },
 
-    "q_knn_join_indexed" -> { (spark, dir) =>
+    Q("q_knn_join_indexed", Oracle(OracleHashSql.knnJoin)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the same bulk k-NN join in its DEPLOYMENT shape: the list side is
       // the persisted float IVF index (train + corpus assignment paid once
@@ -1564,7 +2109,7 @@ object SparkEntry {
         k = 5, nprobe = 4)
     },
 
-    "q_retrieval_eval" -> { (spark, dir) =>
+    Q("q_retrieval_eval", Oracle(OracleHashSql.retrievalEval)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // index-quality evaluation: the IVF index's top-10 per query vs the
       // brute-force ground truth — per-query recall@10 / MRR@10 / nDCG@10,
@@ -1593,7 +2138,7 @@ object SparkEntry {
       graft.ops.Retrieval.evalMetrics(cand, truth, "q_id", "nn_id", "rank", 10)
     },
 
-    "q_recall_curve" -> { (spark, dir) =>
+    Q("q_recall_curve", Oracle(OracleHashSql.recallCurve)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the recall/latency tuning curve: per-query recall@10 at nprobe
       // 1/2/4/8 against ONE brute-force truth — the sweep an operator
@@ -1622,7 +2167,7 @@ object SparkEntry {
       }.reduce(_ unionByName _)
     },
 
-    "q_hard_negatives" -> { (spark, dir) =>
+    Q("q_hard_negatives", Oracle(OracleHashSql.hardNegatives)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // hard-negative mining for embedding-model training: each vector's
       // top-5 nearest DIFFERENT-label neighbors — the knnJoin plan with
@@ -1635,7 +2180,7 @@ object SparkEntry {
         k = 5, nprobe = 4)
     },
 
-    "q_embed_ivfsq_topk" -> { (spark, dir) =>
+    Q("q_embed_ivfsq_topk", Oracle(OracleHashSql.embedIvfSq8Topk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the Faiss IVF,SQ8 layout: nprobe file-listing pruning × 4x less
       // scan bandwidth (uint8 codes); exact cosine re-ranks the top 40 via
@@ -1648,7 +2193,7 @@ object SparkEntry {
         k = 10, nprobe = 4, rerank = 40)
     },
 
-    "q_embed_ivfsq_incremental" -> { (spark, dir) =>
+    Q("q_embed_ivfsq_incremental", Oracle(OracleHashSql.embedIvfSq8Incremental)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // index LIFECYCLE, not just layout: base build (vec_id >= 100) →
       // append the first 100 vectors with the EXISTING centroids →
@@ -1663,7 +2208,7 @@ object SparkEntry {
         k = 10, nprobe = 4, rerank = 40)
     },
 
-    "q_chunk_embed_topk" -> { (spark, dir) =>
+    Q("q_chunk_embed_topk", Oracle(OracleHashSql.chunkEmbedTopk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // composed RAG assembly: chunk → stub-embed → IVF-SQ8 probe → top-k
       // chunks WITH (doc_id, chunk_ix) provenance — the downstream consumer
@@ -1678,7 +2223,7 @@ object SparkEntry {
           expr("chunk_id % 1048576").as("chunk_ix"))
     },
 
-    "q_cluster_balance" -> { (spark, dir) =>
+    Q("q_cluster_balance", Oracle(OracleHashSql.clusterBalance)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // SemDeDup/DataComp-style curation: k-means-cluster the embedding
       // space, then rebalance the corpus to a UNIFORM cluster mix so no
@@ -1693,7 +2238,7 @@ object SparkEntry {
         .select(col("vec_id"), col("centroid_id").cast("long").as("cid"))
     },
 
-    "q_embed_sq8_topk" -> { (spark, dir) =>
+    Q("q_embed_sq8_topk", Oracle(OracleHashSql.embedSq8Topk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // SQ8 quantized ANN: uint8 codes (4x less scan bandwidth than floats)
       // rank candidates by the dequantized approximate dot; exact cosine
@@ -1704,7 +2249,7 @@ object SparkEntry {
       Similarity.sq8TopK(emb, "vec_id", "embedding", query, k = 10, rerank = 40)
     },
 
-    "q_embed_pq_topk" -> { (spark, dir) =>
+    Q("q_embed_pq_topk", Oracle(OracleHashSql.embedPqTopk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // product-quantization ADC: 8 subspace codebooks, codes packed into
       // one int64 (32x less candidate-scan bandwidth than floats), m-lookup
@@ -1716,7 +2261,7 @@ object SparkEntry {
       graft.ops.Pq.topK(emb, "vec_id", "embedding", model, query, k = 10, rerank = 40)
     },
 
-    "q_embed_project_topk" -> { (spark, dir) =>
+    Q("q_embed_project_topk", Oracle(OracleHashSql.embedProjectTopk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // JL sign-projection ANN: rank in 16-dim projected space (4x fewer
       // bytes than the 64-dim floats when the projection is persisted),
@@ -1728,7 +2273,7 @@ object SparkEntry {
         k = 10, outDim = 16, rerank = 40)
     },
 
-    "q_embed_lsh_topk" -> { (spark, dir) =>
+    Q("q_embed_lsh_topk", Oracle(OracleHashSql.embedLshTopk)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val emb = t(dir, "embeddings")
       val query = emb.where(col("vec_id") === 0).select("embedding")
@@ -1741,7 +2286,19 @@ object SparkEntry {
 
     // ---------- text analysis ----------
 
-    "q_text_quality" -> { (spark, dir) =>
+    Q("q_text_quality", Oracle(
+      """SELECT doc_id,
+        |  CASE WHEN length(trim(text)) = 0 THEN 0
+        |       ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) END AS n_words,
+        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS INTEGER) AS n_punct,
+        |  ROUND(CASE WHEN length(text) > 0
+        |    THEN CAST(length(regexp_replace(text, '[^\p{L}]', '', 'g')) AS DOUBLE) / length(text)
+        |    ELSE 0.0 END, 4) AS alpha_ratio,
+        |  ROUND(CASE WHEN length(trim(text)) = 0 THEN 0.0
+        |    ELSE 1.0 - CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS DOUBLE)
+        |               / len(string_split_regex(trim(text), '\s+')) END, 4) AS rep_ratio
+        |FROM documents""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val d = t(dir, "documents")
       d.select(
@@ -1754,7 +2311,7 @@ object SparkEntry {
         TextAnalysis.repetitionRatio(col("text")).as("rep_ratio"))
     },
 
-    "q_repetition_stats" -> { (spark, dir) =>
+    Q("q_repetition_stats", Oracle(repetitionStatsOracleSql)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // within-document repetition profile (Gopher §A1.1 rule family): six
       // doc-local metrics from ONE codegen'd text pass — no explode, no
@@ -1762,7 +2319,12 @@ object SparkEntry {
       graft.ops.Repetition.profile(t(dir, "documents"), "doc_id", "text")
     },
 
-    "q_repetition_filter" -> { (spark, dir) =>
+    Q("q_repetition_filter", Oracle(
+      (s"""SELECT doc_id FROM ($repetitionStatsOracleSql)
+         |WHERE dup_line_frac <= 0.3 AND dup_line_char_frac <= 0.2
+         |  AND dup_para_frac <= 0.3 AND dup_para_char_frac <= 0.2
+         |  AND top_bigram_frac <= 0.05 AND dup_5gram_frac <= 0.15""".stripMargin),
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the curation filter: fused single-expression keep/drop over the
       // scan. The synthetic corpus has no line/paragraph boilerplate (those
@@ -1773,14 +2335,65 @@ object SparkEntry {
         maxTopBigram = 0.05).select("doc_id")
     },
 
-    "q_gopher_stats" -> { (spark, dir) =>
+    Q("q_gopher_stats", Oracle(
+      """WITH base AS (
+        |  SELECT doc_id, text,
+        |    list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '') AS words,
+        |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
+        |                l -> l <> '') AS lines,
+        |    length(text) - length(replace(text, '#', '')) AS hashes,
+        |    (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CASE WHEN len(words) = 0 THEN 0.0
+        |       ELSE list_sum(list_transform(words, w -> length(w))) / len(words) END
+        |    AS mean_word_len,
+        |  CASE WHEN len(words) = 0 THEN 0.0
+        |       ELSE (hashes + ellipses) / len(words) END AS symbol_word_ratio,
+        |  CASE WHEN len(lines) = 0 THEN 0.0
+        |       ELSE len(list_filter(lines, l -> starts_with(l, '-') OR starts_with(l, '*')
+        |                                     OR starts_with(l, '•'))) / len(lines) END
+        |    AS bullet_line_frac,
+        |  CASE WHEN len(lines) = 0 THEN 0.0
+        |       ELSE len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…')))
+        |            / len(lines) END AS ellipsis_line_frac,
+        |  CASE WHEN len(words) = 0 THEN 0.0
+        |       ELSE len(list_filter(words, w -> regexp_matches(w, '[\p{L}]'))) / len(words) END
+        |    AS alpha_word_frac,
+        |  len(list_filter(['the','be','to','of','and','that','have','with'],
+        |      sw -> list_contains(list_transform(words, w -> lower(w)), sw))) AS stopword_hits
+        |FROM base""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the Gopher word/line-level rules the repetition family doesn't
       // cover (Rae '21 §A1.1): all integer-ratio doubles, one codegen scan
       TextAnalysis.gopherProfile(t(dir, "documents"), "doc_id", "text")
     },
 
-    "q_gopher_filter" -> { (spark, dir) =>
+    Q("q_gopher_filter", Oracle(
+      """WITH base AS (
+        |  SELECT doc_id,
+        |    list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '') AS words,
+        |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
+        |                l -> l <> '') AS lines,
+        |    length(text) - length(replace(text, '#', '')) AS hashes,
+        |    (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses
+        |  FROM documents)
+        |SELECT doc_id FROM base
+        |WHERE len(words) > 0
+        |  AND list_sum(list_transform(words, w -> length(w))) / len(words) >= 4.2
+        |  AND list_sum(list_transform(words, w -> length(w))) / len(words) <= 10.0
+        |  AND (hashes + ellipses) / len(words) <= 0.1
+        |  AND (len(lines) = 0 OR
+        |       len(list_filter(lines, l -> starts_with(l, '-') OR starts_with(l, '*')
+        |                                OR starts_with(l, '•'))) / len(lines) <= 0.9)
+        |  AND (len(lines) = 0 OR
+        |       len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…')))
+        |       / len(lines) <= 0.3)
+        |  AND len(list_filter(words, w -> regexp_matches(w, '[\p{L}]'))) / len(words) >= 0.8
+        |  AND len(list_filter(['the','be','to','of','and','that','have','with'],
+        |          sw -> list_contains(list_transform(words, w -> lower(w)), sw))) >= 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the composable keep gate; thresholds tuned so the gate splits this
       // fixture (synthetic docs have no bullets/ellipses — those caps ride
@@ -1791,12 +2404,18 @@ object SparkEntry {
         .select("doc_id")
     },
 
-    "q_lang_id" -> { (spark, dir) =>
+    Q("q_lang_id", Oracle(langIdOracleSql)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "documents").select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
     },
 
-    "q_token_count" -> { (spark, dir) =>
+    Q("q_token_count", Oracle(
+      """SELECT doc_id,
+        |  CASE WHEN length(trim(text)) = 0 THEN 0
+        |       ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) END AS ws_tokens,
+        |  CAST(len(regexp_extract_all(text, '[\p{L}]+|[\p{N}]+|[^\p{L}\p{N}\s]')) AS INTEGER) AS subword_tokens
+        |FROM documents""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "documents").select(
         col("doc_id"),
@@ -1804,7 +2423,14 @@ object SparkEntry {
         TextAnalysis.subwordCount(col("text")).as("subword_tokens"))
     },
 
-    "q_functions_null" -> { (spark, dir) =>
+    Q("q_functions_null", Oracle(
+      """SELECT c_custkey,
+        |  coalesce(nullif(c_mktsegment, 'BUILDING') = 'MACHINERY', false) AS eq_null_lit,
+        |  coalesce(nullif(c_mktsegment, c_mktsegment)
+        |           = nullif(c_mktsegment, c_mktsegment), false) AS eq_both_null,
+        |  coalesce(c_mktsegment = 'BUILDING', false) AS eq_plain
+        |FROM customer""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the reference's `=` returns FALSE (not NULL) on null operands
       // (CdcFunctions.cdcEquals parity, model/CdcTypes NULL semantics)
@@ -1817,7 +2443,13 @@ object SparkEntry {
         cdcEquals(col("c_mktsegment"), lit("BUILDING")).as("eq_plain"))
     },
 
-    "q_split" -> { (spark, dir) =>
+    Q("q_split", Oracle(
+      """SELECT doc_id,
+        |  CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd' THEN 'train'
+        |       WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM documents""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // disjoint deterministic train/val/test split by key-hash bands
       t(dir, "documents").select(col("doc_id"),
@@ -1825,7 +2457,9 @@ object SparkEntry {
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)).as("split"))
     },
 
-    "q_jsonl_read" -> { (spark, dir) =>
+    Q("q_jsonl_read", Oracle(
+      "SELECT doc_id, lang, n_chars FROM documents WHERE n_chars >= 200",
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // JSONL corpus ingestion with an EXPLICIT schema — inference costs a
       // full extra scan of the data (a non-starter at 100 TB) and types
@@ -1841,7 +2475,9 @@ object SparkEntry {
         .select("doc_id", "lang", "n_chars")
     },
 
-    "q_orc_read" -> { (spark, dir) =>
+    Q("q_orc_read", Oracle(
+      "SELECT doc_id, lang, n_chars FROM documents WHERE n_chars >= 200",
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // ORC corpus ingestion — the other columnar warehouse format; the
       // same filter must reach the ORC reader as a pushed predicate
@@ -1852,7 +2488,10 @@ object SparkEntry {
         .select("doc_id", "lang", "n_chars")
     },
 
-    "q_csv_read" -> { (spark, dir) =>
+    Q("q_csv_read", Oracle(
+      """SELECT event_id, user_id, value FROM events
+        |WHERE event_type = 'purchase' AND value > 100.0""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // CSV bulk-load with an EXPLICIT schema + header (inference = an
       // extra full scan at 100 TB, and types drift with the sample); CSV
@@ -1871,7 +2510,13 @@ object SparkEntry {
         .select("event_id", "user_id", "value")
     },
 
-    "q_split_grouped" -> { (spark, dir) =>
+    Q("q_split_grouped", Oracle(
+      """SELECT doc_id, source,
+        |  CASE WHEN substring(md5(source), 1, 4) < 'cccd' THEN 'train'
+        |       WHEN substring(md5(source), 1, 4) < 'e666' THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM documents""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // group-coherent split: keyed by SOURCE, so a domain lands whole in
       // one split — the cheap leakage guard (templated pages from one
@@ -1881,7 +2526,7 @@ object SparkEntry {
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)).as("split"))
     },
 
-    "q_split_leakfree" -> { (spark, dir) =>
+    Q("q_split_leakfree", Oracle(OracleHashSql.splitLeakfree)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // leakage-FREE split: keyed by the near-dup CLUSTER id, so a cluster
       // lands whole in one split and no eval doc has a train near-dup —
@@ -1894,7 +2539,11 @@ object SparkEntry {
             Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)).as("split"))
     },
 
-    "q_decontaminate" -> { (spark, dir) =>
+    Q("q_decontaminate", Oracle(
+      // hash-math oracles (full SQL re-implementations of the 64-bit hash
+      // pipelines — FNV-1a/splitmix64/xxhash64 in UBIGINT+HUGEINT arithmetic)
+      OracleHashSql.decontaminate,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // eval-set contamination check: benchmark = 12-token snippets of every
       // 20th doc; flag training docs sharing >= 2 distinct shingles
@@ -1908,7 +2557,7 @@ object SparkEntry {
       graft.ops.Decontaminate.flag(docs, bench, "doc_id", "text", minShingles = 2)
     },
 
-    "q_decontaminate_bloom" -> { (spark, dir) =>
+    Q("q_decontaminate_bloom", Oracle(OracleHashSql.decontaminateBloom)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the big-bench regime: bloom-prefiltered exact contamination check —
       // same answer as the broadcast path, but the train shuffle carries
@@ -1922,7 +2571,7 @@ object SparkEntry {
       graft.ops.Decontaminate.flagBloom(docs, bench, "doc_id", "text", minShingles = 2)
     },
 
-    "q_shuffle_deterministic" -> { (spark, dir) =>
+    Q("q_shuffle_deterministic", Oracle(OracleHashSql.shuffleDeterministic)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // epoch shuffle: exact rank in xxhash64-of-key order, computed with
       // the distributed prefix sum (reproducible across runs/partitionings)
@@ -1930,7 +2579,22 @@ object SparkEntry {
         .select(col("doc_id"), col("shuffle_pos"))
     },
 
-    "q_pack_windows" -> { (spark, dir) =>
+    Q("q_pack_windows", Oracle(
+      """WITH toks AS (
+        |  SELECT doc_id,
+        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n
+        |  FROM documents),
+        |offs AS (
+        |  SELECT doc_id, n,
+        |    sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n AS start
+        |  FROM toks)
+        |SELECT doc_id, n AS n_tokens, CAST(start AS BIGINT) AS start,
+        |  CAST(start // 512 AS BIGINT) AS first_window,
+        |  CAST((start + n - 1) // 512 AS BIGINT) AS last_window,
+        |  CAST(start % 512 AS BIGINT) AS offset_in_window
+        |FROM offs WHERE n > 0""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // pretraining sequence packing: concatenate docs in doc_id order, cut
       // into 512-token context windows (two-phase distributed prefix sum —
@@ -1939,7 +2603,13 @@ object SparkEntry {
         TextAnalysis.tokenCount(col("text")), windowTokens = 512)
     },
 
-    "q_heavy_hitters" -> { (spark, dir) =>
+    Q("q_heavy_hitters", Oracle(
+      """SELECT w AS word, count(*) AS cnt FROM (
+        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
+        |                            x -> x <> '')) AS w
+        |  FROM documents)
+        |GROUP BY w HAVING count(*) >= 300""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // sketch-prefilter + exact-verify two-phase: CMS never undercounts,
       // so the candidate set is a superset and the output is IDENTICAL to
@@ -1950,7 +2620,7 @@ object SparkEntry {
       graft.ops.Sketch.heavyHitters(tokens, "word", threshold = 300)
     },
 
-    "q_vocab_sketch" -> { (spark, dir) =>
+    Q("q_vocab_sketch", Oracle(OracleHashSql.vocabSketch)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // frequency estimation at bounded memory: a 4×8192 count-min sketch
       // is the whole artifact at ANY corpus size (the exact vocab agg is
@@ -1964,7 +2634,20 @@ object SparkEntry {
       graft.ops.Sketch.estimate(sketch, top, "word")
     },
 
-    "q_bpe_pairs" -> { (spark, dir) =>
+    Q("q_bpe_pairs", Oracle(
+      """WITH words AS (
+        |  SELECT w AS word, count(*) AS freq FROM (
+        |    SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
+        |                              x -> x <> '')) AS w
+        |    FROM documents) GROUP BY w),
+        |pairs AS (
+        |  SELECT word[i:i] AS a, word[i+1:i+1] AS b, freq FROM (
+        |    SELECT word, freq, unnest(generate_series(1, length(word) - 1)) AS i
+        |    FROM words WHERE length(word) >= 2))
+        |SELECT a, b, CAST(sum(freq) AS BIGINT) AS cnt
+        |FROM pairs GROUP BY a, b
+        |ORDER BY cnt DESC, a, b LIMIT 30""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // tokenizer induction, the per-iteration statistic: frequency-weighted
       // adjacent-pair counts over the word-frequency table (corpus scanned
@@ -1975,7 +2658,7 @@ object SparkEntry {
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(30)
     },
 
-    "q_bpe_merges" -> { (spark, dir) =>
+    Q("q_bpe_merges", RowsOnly("q_bpe_audit")) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       // the full BPE training loop (10 merges over the bounded vocab table;
@@ -1990,7 +2673,16 @@ object SparkEntry {
         .toDF("rank", "a", "b", "merged")
     },
 
-    "q_bpe_audit" -> { (spark, dir) =>
+    Q("q_bpe_audit", Oracle(
+      // the vocab's bookkeeping replayed independently: same tokenization as
+      // q_bpe_pairs, freq per word, rejoins pinned to literal TRUE
+      """SELECT w AS word, CAST(count(*) AS BIGINT) AS freq, TRUE AS rejoins
+        |FROM (
+        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
+        |                x -> x <> '')) AS w
+        |  FROM documents)
+        |GROUP BY w""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // ORACLE-gated audit of the trained vocab's bookkeeping (the
       // q_pack_bins_audit pattern): one row per corpus word with its
@@ -2005,7 +2697,7 @@ object SparkEntry {
         (concat_ws("", col("syms")) === col("word")).as("rejoins"))
     },
 
-    "q_bpe_encode" -> { (spark, dir) =>
+    Q("q_bpe_encode", RowsOnly("q_bpe_encode_audit")) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the trained tokenizer APPLIED: corpus re-tokenized through the
       // broadcast word→subwords table (never re-segmented symbol by
@@ -2021,7 +2713,17 @@ object SparkEntry {
           count(lit(1)).as("words"))
     },
 
-    "q_bpe_encode_audit" -> { (spark, dir) =>
+    Q("q_bpe_encode_audit", Oracle(
+      // the encode path's bookkeeping: per-doc word-occurrence counts from an
+      // independent tokenize, rejoins pinned to literal TRUE
+      """SELECT doc_id,
+        |       CAST(len(list_filter(string_split_regex(lower(text), '\W+'),
+        |                            x -> x <> '')) AS BIGINT) AS n_words,
+        |       TRUE AS rejoins
+        |FROM documents
+        |WHERE len(list_filter(string_split_regex(lower(text), '\W+'),
+        |                      x -> x <> '')) > 0""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // ORACLE-gated audit of the encode path (broadcast vocab join + OOV
       // char fallback): per doc, the encoded word-occurrence count must
@@ -2036,7 +2738,18 @@ object SparkEntry {
           expr("bool_and(concat_ws('', tokens) = word)").as("rejoins"))
     },
 
-    "q_pack_stats" -> { (spark, dir) =>
+    Q("q_pack_stats", Oracle(
+      """WITH tok AS (
+        |  SELECT CASE WHEN length(trim(text)) = 0 THEN 0
+        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS n
+        |  FROM documents)
+        |SELECT (n // 16) * 16 AS len_bucket,
+        |       count(*) AS docs,
+        |       CAST(sum(n) AS BIGINT) AS tokens,
+        |       CAST(sum((n + 127) // 128) AS BIGINT) AS padded_windows,
+        |       CAST(sum((n + 127) // 128) * 128 - sum(n) AS BIGINT) AS waste_tokens
+        |FROM tok WHERE n > 0 GROUP BY len_bucket""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // packing-efficiency report: per length bucket, padded windows vs
       // actual tokens — the numbers that justify concat-packing and pick
@@ -2046,7 +2759,7 @@ object SparkEntry {
         TextAnalysis.tokenCount(col("text")), windowTokens = 128, bucketSize = 16)
     },
 
-    "q_pack_bins" -> { (spark, dir) =>
+    Q("q_pack_bins", RowsOnly("q_pack_bins_audit")) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // NO-SPLIT packing (SFT mode): best-fit-decreasing into
       // PackCapacity-token bins, hash-banded so each band packs
@@ -2059,7 +2772,7 @@ object SparkEntry {
         TextAnalysis.tokenCount(col("text")), capacity = PackCapacity, bands = 32)
     },
 
-    "q_pack_bins_audit" -> { (spark, dir) =>
+    Q("q_pack_bins_audit", Oracle(OracleHashSql.packBinsAudit(bands = 32))) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // ORACLE-gated aggregate invariants of the packing above (the argmin
       // chain itself stays rows-only): per band, the packed doc count /
@@ -2086,13 +2799,17 @@ object SparkEntry {
 
     // ---------- multimodal plumbing ----------
 
-    "q_multimodal_decode" -> { (spark, dir) =>
+    Q("q_multimodal_decode", Oracle(OracleHashSql.multimodalDecode)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val assets = Multimodal.syntheticAssets(t(dir, "part"), "p_partkey", "image")
       Multimodal.decodeImages(assets).select("asset_id", "width", "height", "channels")
     },
 
-    "q_frame_sample" -> { (spark, dir) =>
+    Q("q_frame_sample", Oracle(
+      """SELECT CAST(p_partkey AS BIGINT) AS asset_id,
+        |       CAST(unnest(range(0, (p_partkey % 32) + 1, 4)) AS BIGINT) AS frame_idx
+        |FROM part""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       val assets = Multimodal.syntheticAssets(t(dir, "part"), "p_partkey", "video")
       Multimodal.sampleFrames(assets, everyNth = 4)
@@ -2101,7 +2818,15 @@ object SparkEntry {
 
     // ---------- beyond-parity relational ops at scale ----------
 
-    "q1_agg" -> { (spark, dir) =>
+    Q("q1_agg", Oracle(
+      """SELECT l_returnflag, l_linestatus,
+        |  ROUND(SUM(l_quantity), 2) AS sum_qty,
+        |  ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
+        |  ROUND(AVG(l_discount), 4) AS avg_disc,
+        |  count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       t(dir, "lineitem")
         .where(col("l_shipdate") <= lit("1998-09-02")) // string coerces to the column's timestamp type
@@ -2113,7 +2838,12 @@ object SparkEntry {
           count(lit(1)).as("count_order"))
     },
 
-    "q_join_broadcast" -> { (spark, dir) =>
+    Q("q_join_broadcast", Oracle(
+      """SELECT r_name, n_name, count(*) AS n_cust, ROUND(SUM(c_acctbal), 2) AS sum_bal
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // dim tables broadcast: no shuffle of the fact side
       t(dir, "customer")
@@ -2123,7 +2853,11 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_cust"), round(sum("c_acctbal"), 2).as("sum_bal"))
     },
 
-    "q_ai_chat" -> { (spark, dir) =>
+    Q("q_ai_chat", Oracle(
+      """SELECT doc_id, '[stub-model] ' || substring(text, 1, 64) AS reply,
+        |       64 AS embed_dim
+        |FROM documents""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // AI transform functions as projection expressions (§2.4): stubbed
       // deterministically, so even the chat output is oracle-checkable
@@ -2134,7 +2868,16 @@ object SparkEntry {
         "SIZE(GET_EMBEDDING(text)) AS embed_dim")
     },
 
-    "q3_shipping" -> { (spark, dir) =>
+    Q("q3_shipping", Oracle(
+      """SELECT l_orderkey, CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q3 shape (no LIMIT: driver compare is set-based): shuffle join
       // on orderkey, broadcast-able customer filter
@@ -2150,7 +2893,15 @@ object SparkEntry {
           .cast("double").as("revenue"))
     },
 
-    "q4_order_priority" -> { (spark, dir) =>
+    Q("q4_order_priority", Oracle(
+      """SELECT o_orderpriority, count(*) AS order_count FROM orders o
+        |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+        |  AND o_orderdate < TIMESTAMP '1995-07-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem l
+        |              WHERE l.l_orderkey = o.o_orderkey
+        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY o_orderpriority""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q4 shape — a correlated EXISTS subquery planned as a LEFT SEMI
       // join: both sides shuffle once on orderkey (no fact-side row ever
@@ -2169,7 +2920,14 @@ object SparkEntry {
         .agg(count(lit(1)).as("order_count"))
     },
 
-    "q13_custdist" -> { (spark, dir) =>
+    Q("q13_custdist", Oracle(
+      """SELECT c_count, count(*) AS custdist FROM (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT OUTER JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+        |  GROUP BY c_custkey) t
+        |GROUP BY c_count""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q13 shape — customer order-count distribution INCLUDING
       // zero-order customers: left outer join with the filter inside the
@@ -2186,7 +2944,19 @@ object SparkEntry {
         .agg(count(lit(1)).as("custdist"))
     },
 
-    "q22_idle_balance" -> { (spark, dir) =>
+    Q("q22_idle_balance", Oracle(
+      """WITH s AS (
+        |  SELECT count(*) AS n, SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS tot
+        |  FROM customer WHERE c_acctbal > 0)
+        |SELECT c_mktsegment, count(*) AS numcust,
+        |       CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS totacctbal
+        |FROM customer c, s
+        |WHERE CAST(c_acctbal AS DECIMAL(18,4)) * s.n > s.tot
+        |  AND NOT EXISTS (SELECT 1 FROM orders o
+        |                  WHERE o.o_custkey = c.c_custkey
+        |                    AND o.o_orderpriority = '1-URGENT')
+        |GROUP BY c_mktsegment""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q22 shape — high-balance customers with no URGENT orders
       // (every customer in this fixture has SOME order, so the classic
@@ -2212,7 +2982,20 @@ object SparkEntry {
             .cast("double").as("totacctbal"))
     },
 
-    "q10_returned_items" -> { (spark, dir) =>
+    Q("q10_returned_items", Oracle(
+      """WITH rev AS (
+        |  SELECT o_custkey,
+        |         CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE l_returnflag = 'R'
+        |    AND o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'
+        |  GROUP BY 1)
+        |SELECT c_custkey, c_name, n_name,
+        |       CAST(ROUND(CAST(c_acctbal AS DECIMAL(18,4)), 2) AS DOUBLE) AS c_acctbal,
+        |       revenue
+        |FROM rev JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q10 shape — returned-item reporting: the returns slice of
       // lineitem (filter pushed to the scan) joins a date-bounded orders
@@ -2234,7 +3017,16 @@ object SparkEntry {
           col("revenue"))
     },
 
-    "q14_promo_share" -> { (spark, dir) =>
+    Q("q14_promo_share", Oracle(
+      """SELECT
+        |  CAST(ROUND(SUM(CASE WHEN p_type = 'PROMO'
+        |    THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
+        |    ELSE CAST(0 AS DECIMAL(18,4)) END), 2) AS DOUBLE) AS promo_revenue,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS total_revenue,
+        |  count(*) AS n_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q14 shape — conditional aggregation over a broadcast part
       // join: promo vs total revenue in one pass (two CASE'd decimal sums,
@@ -2254,7 +3046,18 @@ object SparkEntry {
           count(lit(1)).as("n_lines"))
     },
 
-    "q17_small_qty_revenue" -> { (spark, dir) =>
+    Q("q17_small_qty_revenue", Oracle(
+      """WITH bp AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#23'),
+        |bl AS (SELECT l_partkey, l_quantity, l_extendedprice
+        |       FROM lineitem JOIN bp ON l_partkey = p_partkey),
+        |st AS (SELECT l_partkey AS s_partkey, count(*) AS cnt_qty,
+        |              SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty
+        |       FROM bl GROUP BY 1)
+        |SELECT count(*) AS n_lines,
+        |       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |FROM bl JOIN st ON l_partkey = s_partkey
+        |WHERE CAST(l_quantity AS DECIMAL(18,4)) * 5 * cnt_qty < sum_qty""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q17 shape — correlated per-part scalar subquery
       // (qty < 0.2 * avg(qty) over the part) decorrelated into a per-part
@@ -2279,7 +3082,17 @@ object SparkEntry {
             .cast("double").as("revenue"))
     },
 
-    "q18_large_orders" -> { (spark, dir) =>
+    Q("q18_large_orders", Oracle(
+      """WITH big AS (
+        |  SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty_dec
+        |  FROM lineitem GROUP BY 1
+        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 250)
+        |SELECT c_name, c_custkey, o_orderkey,
+        |       CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,4)), 2) AS DOUBLE) AS o_total,
+        |       CAST(qty_dec AS DOUBLE) AS sum_qty
+        |FROM big JOIN orders ON o_orderkey = l_orderkey
+        |JOIN customer ON o_custkey = c_custkey""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q18 shape — HAVING on a per-order rollup: lineitem aggregates
       // once on its own key (map-side partials), the >250 gate keeps ~1% of
@@ -2296,7 +3109,15 @@ object SparkEntry {
           col("qty_dec").cast("double").as("sum_qty"))
     },
 
-    "q19_disjunctive" -> { (spark, dir) =>
+    Q("q19_disjunctive", Oracle(
+      """SELECT count(*) AS n_lines,
+        |       CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_quantity BETWEEN 1 AND 30
+        |  AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1 AND 11)
+        |    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
+        |    OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q19 shape — OR-of-ANDs join predicate. The partkey equi-key
       // is common to every branch, so this stays a broadcast HASH join with
@@ -2319,7 +3140,23 @@ object SparkEntry {
             .cast("decimal(18,4)")), 2).cast("double").as("revenue"))
     },
 
-    "q21_waiting_supplier" -> { (spark, dir) =>
+    Q("q21_waiting_supplier", Oracle(
+      """WITH lo AS (
+        |  SELECT l_orderkey, l_suppkey,
+        |         (l_shipdate > o_orderdate + INTERVAL 60 DAY) AS is_late
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE o_orderstatus = 'F')
+        |SELECT s_name, count(*) AS numwait
+        |FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM lo WHERE is_late) l1
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE EXISTS (SELECT 1 FROM lo l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lo l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey AND l3.is_late)
+        |GROUP BY s_name""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q21 shape — EXISTS(another supplier on the order) AND
       // NOT EXISTS(another LATE supplier) decorrelated into ONE per-order
@@ -2370,7 +3207,15 @@ object SparkEntry {
         .agg(count(lit(1)).as("numwait"))
     },
 
-    "q5_local_supplier" -> { (spark, dir) =>
+    Q("q5_local_supplier", Oracle(
+      """SELECT n_name, CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |GROUP BY n_name""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q5 shape: star join, dims broadcast, co-located nation check
       t(dir, "customer")
@@ -2384,7 +3229,12 @@ object SparkEntry {
           .cast("double").as("revenue"))
     },
 
-    "q6_forecast" -> { (spark, dir) =>
+    Q("q6_forecast", Oracle(
+      """SELECT CAST(ROUND(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q6 shape: pure scan+filter+scalar agg — pushdown showcase
       t(dir, "lineitem")
@@ -2394,7 +3244,7 @@ object SparkEntry {
           .cast("double").as("revenue"))
     },
 
-    "q_quality_filter" -> { (spark, dir) =>
+    Q("q_quality_filter", Oracle(qualityFilterOracleSql)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // corpus cleaning: quality-gate filter over computed features — the
       // standard pre-training text filter stage
@@ -2405,7 +3255,16 @@ object SparkEntry {
         .where(col("n_words").between(20, 500) && col("lang_pred") =!= "und")
     },
 
-    "q_source_filter" -> { (spark, dir) =>
+    Q("q_source_filter", Oracle(
+      """WITH stats AS (
+        |  SELECT source, count(*) AS total,
+        |         count(*) FILTER (
+        |           CASE WHEN length(trim(text)) = 0 THEN 0
+        |                ELSE len(string_split_regex(trim(text), '\s+')) END < 40) AS bad
+        |  FROM documents GROUP BY source)
+        |SELECT doc_id, source FROM documents
+        |WHERE source IN (SELECT source FROM stats WHERE bad / total <= 0.35)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // domain-reputation gate (C4/Gopher/RefinedWeb curation rule): a
       // source whose short-doc fraction exceeds 35% is dropped WHOLE —
@@ -2416,7 +3275,11 @@ object SparkEntry {
         .select("doc_id", "source")
     },
 
-    "q_window_agg" -> { (spark, dir) =>
+    Q("q_window_agg", Oracle(
+      """SELECT epoch_us(ts) // 3600000000 AS hour_bucket, event_type,
+        |       count(*) AS cnt, ROUND(SUM(value), 2) AS sum_value
+        |FROM events GROUP BY 1, 2""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // tumbling 1h event-time window over canonical µs; integer division
       // keeps full precision — the batch shape of the streaming
@@ -2427,7 +3290,16 @@ object SparkEntry {
         .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"))
     },
 
-    "q_window_topn" -> { (spark, dir) =>
+    Q("q_window_topn", Oracle(
+      """WITH hourly AS (
+        |  SELECT epoch_us(ts) // 3600000000 AS hour_bucket, user_id,
+        |         ROUND(SUM(value), 2) AS sum_value, count(*) AS cnt
+        |  FROM events GROUP BY 1, 2),
+        |r AS (SELECT *, row_number() OVER (
+        |        PARTITION BY hour_bucket
+        |        ORDER BY sum_value DESC, user_id) AS rn FROM hourly)
+        |SELECT hour_bucket, user_id, sum_value, cnt FROM r WHERE rn <= 3""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // hottest 3 users per hour by summed value: the rank-filter plans as
       // WindowGroupLimit per-partition heaps BEFORE the hour exchange, so
@@ -2446,7 +3318,13 @@ object SparkEntry {
         .where(col("rn") <= 3).drop("rn")
     },
 
-    "q_asof_join" -> { (spark, dir) =>
+    Q("q_asof_join", Oracle(
+      """SELECT l.user_id, l.event_id, l.event_type, l.value, r.last_purchase
+        |FROM events l ASOF LEFT JOIN (
+        |  SELECT user_id, event_id, value AS last_purchase FROM events
+        |  WHERE event_type = 'purchase') r
+        |ON l.user_id = r.user_id AND l.event_id >= r.event_id""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // point-in-time feature attach: each event carries the user's most
       // recent purchase value at-or-before it (union-trick as-of join —
@@ -2457,7 +3335,25 @@ object SparkEntry {
       AsOfJoin.backward(ev, purchases, on = "event_id", by = Seq("user_id"))
     },
 
-    "q_profile" -> { (spark, dir) =>
+    Q("q_profile", Oracle(
+      """SELECT 'o_orderkey' AS "column", count(*) AS n,
+        |  CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+        |  count(DISTINCT o_orderkey) AS n_distinct,
+        |  CAST(min(o_orderkey) AS VARCHAR) AS min_v, CAST(max(o_orderkey) AS VARCHAR) AS max_v
+        |FROM orders
+        |UNION ALL
+        |SELECT 'o_orderstatus', count(*),
+        |  CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+        |  count(DISTINCT o_orderstatus),
+        |  CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR)
+        |FROM orders
+        |UNION ALL
+        |SELECT 'o_orderpriority', count(*),
+        |  CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+        |  count(DISTINCT o_orderpriority),
+        |  CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR)
+        |FROM orders""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // data-quality profiling: one pass, long format (exact distinct for
       // the oracle; production uses approx_count_distinct)
@@ -2465,7 +3361,13 @@ object SparkEntry {
         Seq("o_orderkey", "o_orderstatus", "o_orderpriority"), exact = true)
     },
 
-    "q_asof_forward" -> { (spark, dir) =>
+    Q("q_asof_forward", Oracle(
+      """SELECT l.user_id, l.event_id, l.event_type, l.value, r.next_purchase
+        |FROM events l ASOF LEFT JOIN (
+        |  SELECT user_id, event_id, value AS next_purchase FROM events
+        |  WHERE event_type = 'purchase') r
+        |ON l.user_id = r.user_id AND l.event_id <= r.event_id""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // forward direction: each event sees the user's NEXT purchase value
       val ev = t(dir, "events").select("event_id", "user_id", "event_type", "value")
@@ -2474,7 +3376,26 @@ object SparkEntry {
       AsOfJoin.forward(ev, purchases, on = "event_id", by = Seq("user_id"))
     },
 
-    "q_pii_redact" -> { (spark, dir) =>
+    Q("q_pii_redact", Oracle(
+      """WITH blob AS (
+        |  SELECT c_custkey,
+        |    CONCAT(c_name, ' user', c_custkey, '@ex', c_nationkey, '.com ip 10.0.',
+        |      c_custkey % 256, '.', c_custkey * 7 % 256, ' tel ',
+        |      c_custkey % 89 + 10, '-', c_custkey * 3 % 899 + 100, '-',
+        |      c_custkey * 5 % 900 + 100, '-', c_custkey * 11 % 9000 + 1000) AS contact
+        |  FROM customer)
+        |SELECT c_custkey,
+        |  regexp_replace(regexp_replace(regexp_replace(contact,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '\d{2,3}[- .]\d{3}[- .]\d{3,4}[- .]\d{4}', '<PHONE>', 'g'),
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS clean,
+        |  CAST(
+        |    len(regexp_extract_all(contact, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
+        |  + len(regexp_extract_all(contact, '\d{2,3}[- .]\d{3}[- .]\d{3,4}[- .]\d{4}'))
+        |  + len(regexp_extract_all(contact, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
+        |  AS BIGINT) AS n_pii
+        |FROM blob""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // corpus scrub stage: redact PII from a contact blob (synthesized
       // deterministically from keys — the slim testdata has no PII columns);
@@ -2490,7 +3411,12 @@ object SparkEntry {
         graft.ops.Pii.piiCount(col("contact")).as("n_pii"))
     },
 
-    "q_sample_stratified" -> { (spark, dir) =>
+    Q("q_sample_stratified", Oracle(
+      """SELECT doc_id, lang, source FROM documents
+        |WHERE CASE WHEN lang = 'en'
+        |  THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
+        |  ELSE TRUE END""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // deterministic hash sampling: downsample 'en' to 25%, keep the rest —
       // reproducible across engines/partitionings (md5-prefix threshold)
@@ -2500,7 +3426,20 @@ object SparkEntry {
         .select("doc_id", "lang", "source")
     },
 
-    "q_mix_rebalance" -> { (spark, dir) =>
+    Q("q_mix_rebalance", Oracle(
+      """WITH w(s, wt) AS (SELECT s, CAST(wt AS DOUBLE) FROM (VALUES ('en', 0.4), ('zh', 0.15),
+        |                  ('es', 0.15), ('de', 0.15), ('fr', 0.15)) t(s, wt)),
+        |cnt AS (SELECT lang AS s, CAST(count(*) AS DOUBLE) AS n FROM documents GROUP BY 1),
+        |budget AS (SELECT min(c.n / w.wt) AS t FROM cnt c JOIN w USING (s)),
+        |rates AS (
+        |  SELECT c.s, round(least(1.0, w.wt * b.t / c.n) * 65536) AS thr
+        |  FROM cnt c JOIN w USING (s) CROSS JOIN budget b)
+        |SELECT d.doc_id, d.lang
+        |FROM documents d JOIN rates r ON r.s = d.lang
+        |WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
+        |  ELSE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
+        |  END""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // pretraining data mixing: rebalance the language mix to target
       // proportions — the binding language (fr: smallest n/w) is kept whole,
@@ -2512,7 +3451,25 @@ object SparkEntry {
         .select("doc_id", "lang")
     },
 
-    "q_mix_temperature" -> { (spark, dir) =>
+    Q("q_mix_temperature", Oracle(
+      // temperature mixing: q_d ∝ n_d^0.5 derived from observed counts; Z is
+      // folded in stratum-sorted order (the engine's fixed accumulation
+      // order), then the same budget/rate/threshold math as q_mix_rebalance
+      """WITH cnt AS (SELECT lang AS s, CAST(count(*) AS DOUBLE) AS n
+        |            FROM documents WHERE lang IS NOT NULL GROUP BY 1),
+        |z AS (SELECT list_reduce(list_prepend(0.0, list(pow(n, 0.5) ORDER BY s)),
+        |             (a, x) -> a + x) AS z FROM cnt),
+        |w AS (SELECT s, n, pow(n, 0.5) / z.z AS wt FROM cnt, z),
+        |budget AS (SELECT min(n / wt) AS t FROM w),
+        |rates AS (
+        |  SELECT w.s, round(least(1.0, w.wt * b.t / w.n) * 65536) AS thr
+        |  FROM w CROSS JOIN budget b)
+        |SELECT d.doc_id, d.lang
+        |FROM documents d JOIN rates r ON r.s = d.lang
+        |WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
+        |  ELSE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
+        |  END""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // temperature mixing (mC4/mT5): surviving language mix follows
       // n^alpha — alpha=0.5 halves the log-gap between high- and
@@ -2522,7 +3479,7 @@ object SparkEntry {
         .select("doc_id", "lang")
     },
 
-    "q_zorder_layout" -> { (spark, dir) =>
+    Q("q_zorder_layout", Oracle(OracleHashSql.zorderLayout)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // z-order layout key: Morton-interleave (custkey, order-day) so a
       // range-partitioned write prunes on BOTH dimensions; pure codegen
@@ -2532,7 +3489,39 @@ object SparkEntry {
           datediff(col("o_orderdate"), lit("1992-01-01"))).as("zval"))
     },
 
-    "q_corpus_assembly" -> { (spark, dir) =>
+    Q("q_corpus_assembly", Oracle(
+      """WITH surv AS (
+        |  SELECT doc_id, lang, text,
+        |         row_number() OVER (PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
+        |                            ORDER BY doc_id) AS rn
+        |  FROM documents),
+        |gated AS (
+        |  SELECT doc_id, lang,
+        |         CASE WHEN length(trim(text)) = 0 THEN 0
+        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tok
+        |  FROM surv WHERE rn = 1),
+        |gated2 AS (SELECT * FROM gated WHERE n_tok >= 30),
+        |w(s, wt) AS (SELECT s, CAST(wt AS DOUBLE) FROM (VALUES ('en', 0.4), ('zh', 0.15),
+        |             ('es', 0.15), ('de', 0.15), ('fr', 0.15)) t(s, wt)),
+        |cnt AS (SELECT lang AS s, CAST(count(*) AS DOUBLE) AS n FROM gated2 GROUP BY 1),
+        |budget AS (SELECT min(c.n / w.wt) AS t FROM cnt c JOIN w USING (s)),
+        |rates AS (
+        |  SELECT c.s, round(least(1.0, w.wt * b.t / c.n) * 65536) AS thr
+        |  FROM cnt c JOIN w USING (s) CROSS JOIN budget b),
+        |bal AS (
+        |  SELECT g.* FROM gated2 g JOIN rates r ON r.s = g.lang
+        |  WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
+        |    ELSE substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
+        |    END),
+        |spl AS (
+        |  SELECT lang, n_tok,
+        |         CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' THEN 'train'
+        |              WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'f333' THEN 'val'
+        |              ELSE 'test' END AS split
+        |  FROM bal)
+        |SELECT lang, split, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
+        |FROM spl GROUP BY 1, 2""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the full corpus-assembly chain in one query: exact-dedup survivors →
       // quality gate → language-mix rebalance → disjoint train/val/test
@@ -2551,7 +3540,12 @@ object SparkEntry {
           sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("n_tokens"))
     },
 
-    "q_vocab_topk" -> { (spark, dir) =>
+    Q("q_vocab_topk", Oracle(
+      """SELECT tok, count(*) AS cnt
+        |FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS tok
+        |      FROM documents)
+        |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 50""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // corpus vocabulary heavy hitters: exact token counts (map-side
       // partial agg collapses the explode before the one shuffle), top-k
@@ -2564,7 +3558,15 @@ object SparkEntry {
         .limit(50)
     },
 
-    "q_doc_rarity" -> { (spark, dir) =>
+    Q("q_doc_rarity", Oracle(
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '[a-z]+'))) AS tok
+        |  FROM documents),
+        |dfreq AS (SELECT tok, COUNT(*) AS df FROM toks GROUP BY tok)
+        |SELECT t.doc_id, COUNT(*) AS n_tokens,
+        |       CAST(SUM(d.df) AS BIGINT) AS df_sum, MIN(d.df) AS df_min
+        |FROM toks t JOIN dfreq d USING (tok) GROUP BY t.doc_id""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // corpus-statistics quality signal: per doc, the count / df-sum /
       // df-min of its DISTINCT tokens' document frequencies (boilerplate
@@ -2573,7 +3575,20 @@ object SparkEntry {
       TextAnalysis.rarityProfile(t(dir, "documents"), "doc_id", "text")
     },
 
-    "q_sample_weighted" -> { (spark, dir) =>
+    Q("q_sample_weighted", Oracle(
+      """WITH s AS (
+        |  SELECT doc_id, lang,
+        |    CAST(round(least(greatest(
+        |      1.0 - (CASE WHEN length(trim(text)) = 0 THEN 0.0
+        |             ELSE ROUND(1.0 -
+        |               CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS DOUBLE)
+        |               / len(string_split_regex(trim(text), '\s+')), 4) END),
+        |      0.0), 1.0) * 65536) AS INTEGER) AS thr
+        |  FROM documents)
+        |SELECT doc_id, lang FROM s
+        |WHERE CASE WHEN thr >= 65536 THEN TRUE WHEN thr <= 0 THEN FALSE
+        |  ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < printf('%04x', thr) END""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // quality-weighted pruning: keep probability = unique-token ratio
       // (1 - repetition), so boilerplate-heavy docs are down-weighted
@@ -2583,7 +3598,65 @@ object SparkEntry {
         .select("doc_id", "lang")
     },
 
-    "q_corpus_curation" -> { (spark, dir) =>
+    Q("q_corpus_curation", Oracle(
+      """WITH stats AS (
+        |  SELECT source, count(*) AS total,
+        |         count(*) FILTER (
+        |           CASE WHEN length(trim(text)) = 0 THEN 0
+        |                ELSE len(string_split_regex(trim(text), '\s+')) END < 40) AS bad
+        |  FROM documents GROUP BY source),
+        |src_ok AS (
+        |  SELECT doc_id, lang, source, text FROM documents
+        |  WHERE source IN (SELECT source FROM stats WHERE bad / total <= 0.35)),
+        |g_base AS (
+        |  SELECT doc_id, lang, source, text,
+        |    list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '') AS words,
+        |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
+        |                l -> l <> '') AS lines,
+        |    length(text) - length(replace(text, '#', '')) AS hashes,
+        |    (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses
+        |  FROM src_ok),
+        |g_ok AS (
+        |  SELECT doc_id, lang, source, text FROM g_base
+        |  WHERE len(words) > 0
+        |    AND list_sum(list_transform(words, w -> length(w))) / len(words) >= 4.2
+        |    AND list_sum(list_transform(words, w -> length(w))) / len(words) <= 10.0
+        |    AND (hashes + ellipses) / len(words) <= 0.1
+        |    AND (len(lines) = 0 OR
+        |         len(list_filter(lines, l -> starts_with(l, '-') OR starts_with(l, '*')
+        |                                  OR starts_with(l, '•'))) / len(lines) <= 0.9)
+        |    AND (len(lines) = 0 OR
+        |         len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…')))
+        |         / len(lines) <= 0.3)
+        |    AND len(list_filter(words, w -> regexp_matches(w, '[\p{L}]'))) / len(words) >= 0.8
+        |    AND len(list_filter(['the','be','to','of','and','that','have','with'],
+        |            sw -> list_contains(list_transform(words, w -> lower(w)), sw))) >= 1),
+        |toks AS (
+        |  SELECT doc_id,
+        |         list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS tk
+        |  FROM g_ok),
+        |sbase AS (SELECT doc_id, len(tk) AS n_tokens, tk FROM toks),
+        |w AS (
+        |  SELECT doc_id, i - 1 AS start, array_to_string(tk[i:i+9], ' ') AS win
+        |  FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 9)) AS i
+        |        FROM sbase WHERE n_tokens >= 10)),
+        |d AS (SELECT win FROM w GROUP BY win HAVING count(DISTINCT doc_id) > 1),
+        |dup AS (SELECT w.doc_id, w.start FROM w JOIN d USING (win)),
+        |cov AS (
+        |  SELECT doc_id, count(*) AS dup_tokens FROM (
+        |    SELECT DISTINCT doc_id, j FROM (
+        |      SELECT doc_id, unnest(generate_series(start, start + 9)) AS j FROM dup))
+        |  GROUP BY doc_id),
+        |span_ok AS (
+        |  SELECT g.doc_id, g.lang, g.source FROM g_ok g
+        |  JOIN sbase b USING (doc_id) LEFT JOIN cov c USING (doc_id)
+        |  WHERE (CASE WHEN b.n_tokens = 0 THEN 0.0
+        |              ELSE coalesce(c.dup_tokens, 0) / b.n_tokens END) <= 0.3)
+        |SELECT doc_id, lang, source FROM (
+        |  SELECT doc_id, lang, source, row_number() OVER (
+        |    PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+        |  FROM span_ok) t WHERE rn <= 10""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the round-10 gates composed as ONE curation chain: source
       // reputation (domain-level) → Gopher word rules (doc-level) →
@@ -2613,7 +3686,12 @@ object SparkEntry {
         .select("doc_id", "lang", "source")
     },
 
-    "q_sample_fixed_k" -> { (spark, dir) =>
+    Q("q_sample_fixed_k", Oracle(
+      """SELECT doc_id, lang FROM (
+        |  SELECT doc_id, lang, row_number() OVER (
+        |    PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+        |  FROM documents) t WHERE rn <= 25""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // exactly-k-per-language holdout: rank-based (exact size per stratum
       // however skewed), WindowGroupLimit per-partition heaps before the
@@ -2622,7 +3700,25 @@ object SparkEntry {
         col("doc_id"), col("lang"), k = 25).select("doc_id", "lang")
     },
 
-    "q_token_budget" -> { (spark, dir) =>
+    Q("q_token_budget", Oracle(
+      // the naive single-window form of the budget prefix — the engine's
+      // histogram-fold + bin-local-window plan must equal it bit-for-bit
+      """WITH scored AS (
+        |  SELECT doc_id,
+        |         CAST(n_chars AS DOUBLE) / tok AS score,
+        |         CAST(tok AS BIGINT) AS n_tokens
+        |  FROM (SELECT doc_id, n_chars,
+        |          CASE WHEN length(trim(text)) = 0 THEN 0
+        |               ELSE len(string_split_regex(trim(text), '\s+')) END AS tok
+        |        FROM documents)
+        |  WHERE tok >= 1),
+        |ord AS (
+        |  SELECT doc_id, score, n_tokens,
+        |         sum(n_tokens) OVER (ORDER BY score DESC, doc_id
+        |                             ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM scored)
+        |SELECT doc_id, score, n_tokens FROM ord WHERE cum <= 20000""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // token-budget curation: the best-scored docs whose cumulative token
       // count fits the budget — exact (score desc, id) prefix semantics,
@@ -2640,7 +3736,25 @@ object SparkEntry {
         budget = 20000L)
     },
 
-    "q_token_budget_incremental" -> { (spark, dir) =>
+    Q("q_token_budget_incremental", Oracle(
+      // binning affects only the plan, never the result — the incremental
+      // asset's selection replays as the same naive global window
+      """WITH scored AS (
+        |  SELECT doc_id,
+        |         CAST(n_chars AS DOUBLE) / tok AS score,
+        |         CAST(tok AS BIGINT) AS n_tokens
+        |  FROM (SELECT doc_id, n_chars,
+        |          CASE WHEN length(trim(text)) = 0 THEN 0
+        |               ELSE len(string_split_regex(trim(text), '\s+')) END AS tok
+        |        FROM documents)
+        |  WHERE tok >= 1),
+        |ord AS (
+        |  SELECT doc_id, score, n_tokens,
+        |         sum(n_tokens) OVER (ORDER BY score DESC, doc_id
+        |                             ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM scored)
+        |SELECT doc_id, score, n_tokens FROM ord WHERE cum <= 20000""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the incremental tier: two corpus halves folded ONCE per (session, dir)
       // into a persisted budget-histogram asset (per-bin integer sums — a
@@ -2659,7 +3773,24 @@ object SparkEntry {
         score, col("tok"), budgetHistFor(dir), budget = 20000L)
     },
 
-    "q_corpus_holdout" -> { (spark, dir) =>
+    Q("q_corpus_holdout", Oracle(
+      (s"""WITH surv AS (
+         |  SELECT doc_id, lang, text FROM (
+         |    SELECT doc_id, lang, text, row_number() OVER (
+         |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+         |      ORDER BY doc_id) AS rn
+         |    FROM documents) WHERE rn = 1),
+         |reps AS (${repetitionStatsOracleSqlFrom("surv")}),
+         |kept AS (
+         |  SELECT s.doc_id, s.lang FROM surv s JOIN reps r USING (doc_id)
+         |  WHERE r.dup_line_frac <= 0.3 AND r.dup_line_char_frac <= 0.2
+         |    AND r.dup_para_frac <= 0.3 AND r.dup_para_char_frac <= 0.2
+         |    AND r.top_bigram_frac <= 0.05 AND r.dup_5gram_frac <= 0.15)
+         |SELECT doc_id, lang FROM (
+         |  SELECT doc_id, lang, row_number() OVER (
+         |    PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+         |  FROM kept) t WHERE rn <= 10""".stripMargin),
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the composed holdout-assembly chain: exact-dedup survivors →
       // repetition gate → exactly-k-per-language sample. Three stages,
@@ -2673,7 +3804,22 @@ object SparkEntry {
         .select("doc_id", "lang")
     },
 
-    "q_chunk_text" -> { (spark, dir) =>
+    Q("q_chunk_text", Oracle(
+      """WITH base AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS tk
+        |  FROM documents WHERE length(trim(text)) > 0),
+        |nc AS (
+        |  SELECT doc_id, tk,
+        |         CASE WHEN len(tk) <= 8 THEN 1
+        |              ELSE (len(tk) - 8 + 31) // 32 END AS nchunks
+        |  FROM base),
+        |ex AS (
+        |  SELECT doc_id, tk, unnest(generate_series(0, nchunks - 1)) AS chunk_ix
+        |  FROM nc)
+        |SELECT doc_id, chunk_ix,
+        |       array_to_string(tk[chunk_ix*32 + 1 : chunk_ix*32 + 40], ' ') AS chunk
+        |FROM ex""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // RAG/embedding prep: overlapping 40-token windows, stride 32 —
       // stable (doc_id, chunk_ix) identity for incremental re-embedding
@@ -2681,14 +3827,32 @@ object SparkEntry {
         size = 40, overlap = 8)
     },
 
-    "q_tfidf_terms" -> { (spark, dir) =>
+    Q("q_tfidf_terms", Oracle(
+      // raw (log-free) idf: tf·N exact integer, one correctly-rounded division
+      // — bit-identical ranking in every IEEE engine (ln is not)
+      """WITH tfc AS (
+        |  SELECT doc_id, tok, count(*) AS tf FROM (
+        |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+', 0)) AS tok
+        |    FROM documents) GROUP BY doc_id, tok),
+        |dfq AS (
+        |  SELECT tok, count(*) AS df FROM (
+        |    SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '[a-z]+', 0))) AS tok
+        |    FROM documents) GROUP BY tok),
+        |n AS (SELECT count(*) AS n FROM documents),
+        |ranked AS (
+        |  SELECT t.doc_id, t.tok AS term,
+        |         row_number() OVER (PARTITION BY t.doc_id ORDER BY
+        |           CAST(t.tf * n.n AS DOUBLE) / CAST(d.df AS DOUBLE) DESC, t.tok) AS rnk
+        |  FROM tfc t JOIN dfq d USING (tok), n)
+        |SELECT doc_id, term, rnk FROM ranked WHERE rnk <= 3""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // per-doc top-3 characteristic terms: tf·(N/df) raw-idf keyword
       // extraction — WindowGroupLimit per-partition heaps, no global sort
       TextAnalysis.tfidfTopTerms(t(dir, "documents"), "doc_id", "text", k = 3)
     },
 
-    "q_dsir_select" -> { (spark, dir) =>
+    Q("q_dsir_select", Oracle(OracleHashSql.dsirSelect)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // DSIR importance resampling (Xie et al. 2023): select the 100 raw
       // docs whose hashed unigram+bigram profile most over-indexes on the
@@ -2700,7 +3864,7 @@ object SparkEntry {
         .select("doc_id")
     },
 
-    "q_lm_head" -> { (spark, dir) =>
+    Q("q_lm_head", Oracle(OracleHashSql.lmHead)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // CCNet-style fluency selection (Wenzek et al. 2019): the 100 docs
       // with the lowest avg bigram negative log-prob under a hashed bigram
@@ -2712,7 +3876,7 @@ object SparkEntry {
         .select("doc_id", "n_bigrams")
     },
 
-    "q_quality_model" -> { (spark, dir) =>
+    Q("q_quality_model", Oracle(OracleHashSql.qualityModel)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // learned-quality-filter inference (fastText-shaped linear model over
       // hashed n-gram buckets, deterministic stub weights): one narrow
@@ -2721,7 +3885,12 @@ object SparkEntry {
         graft.ops.QualityModel.stubModel())
     },
 
-    "q_salt_join" -> { (spark, dir) =>
+    Q("q_salt_join", Oracle(
+      """SELECT o_orderpriority, count(*) AS cnt, ROUND(SUM(l_quantity), 2) AS sum_qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY o_orderpriority""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // salted skew join must be result-identical to the plain join
       // (operators/Salt: hot-key splitting for planned-ahead skew)
@@ -2737,7 +3906,13 @@ object SparkEntry {
           round(sum(col("l_quantity")), 2).as("sum_qty"))
     },
 
-    "q_interval_join" -> { (spark, dir) =>
+    Q("q_interval_join", Oracle(
+      """SELECT l.event_id, count(r.event_id) AS n_errors
+        |FROM (SELECT event_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'purchase') l
+        |LEFT JOIN (SELECT event_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'error') r
+        |  ON r.ts_us > l.ts_us - 300000000 AND r.ts_us <= l.ts_us
+        |GROUP BY l.event_id""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // key-less range join, binned: per purchase, platform-wide error count
       // in the preceding 5 minutes — hash join on bins, never a nested loop
@@ -2750,7 +3925,21 @@ object SparkEntry {
         .agg(count(col("r_event_id")).as("n_errors"))
     },
 
-    "q_sessionize" -> { (spark, dir) =>
+    Q("q_sessionize", Oracle(
+      """WITH tagged AS (
+        |  SELECT user_id, epoch_us(ts) AS ts,
+        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+        |              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts))
+        |), numbered AS (
+        |  SELECT user_id, ts,
+        |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
+        |  FROM tagged)
+        |SELECT user_id, session_idx, count(*) AS n_events,
+        |       MIN(ts) AS session_start, MAX(ts) AS session_end
+        |FROM numbered GROUP BY user_id, session_idx""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // session windows (1h inactivity gap) over the event stream — batch
       // backfill shape of streaming session_window aggregation, on the
@@ -2768,7 +3957,21 @@ object SparkEntry {
     // watermark, gap) is EXACT integer µs math and cannot diverge from the
     // µs oracle by sub-ms truncation.
 
-    "q_stream_session_window" -> { (spark, dir) =>
+    Q("q_stream_session_window", Oracle(
+      """WITH tagged AS (
+        |  SELECT user_id, epoch_us(ts) AS ts,
+        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+        |              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts))
+        |), numbered AS (
+        |  SELECT user_id, ts,
+        |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
+        |  FROM tagged)
+        |SELECT user_id, count(*) AS n_events,
+        |       MIN(ts) AS session_start, MAX(ts) AS session_end
+        |FROM numbered GROUP BY user_id, session_idx""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       import graft.streaming.StreamingNative
@@ -2796,7 +3999,9 @@ object SparkEntry {
       }.where(col("user_id") >= 0)
     },
 
-    "q_stream_dedup" -> { (spark, dir) =>
+    Q("q_stream_dedup", Oracle(
+      "SELECT DISTINCT user_id FROM events",
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       import graft.streaming.StreamingNative
@@ -2822,7 +4027,21 @@ object SparkEntry {
       }.where(col("user_id") >= 0)
     },
 
-    "q_stream_sessions_state" -> { (spark, dir) =>
+    Q("q_stream_sessions_state", Oracle(
+      """WITH tagged AS (
+        |  SELECT user_id, epoch_us(ts) AS ts,
+        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+        |              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts))
+        |), numbered AS (
+        |  SELECT user_id, ts,
+        |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
+        |  FROM tagged)
+        |SELECT user_id, count(*) AS n_events,
+        |       MIN(ts) AS session_start, MAX(ts) AS session_end
+        |FROM numbered GROUP BY user_id, session_idx""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       import graft.streaming.StreamingNative
@@ -2846,7 +4065,16 @@ object SparkEntry {
       }.where(col("user_id") >= 0)
     },
 
-    "q_stream_interval_join" -> { (spark, dir) =>
+    Q("q_stream_interval_join", Oracle(
+      """SELECT l.event_id AS p_event_id, r.event_id AS e_event_id,
+        |       l.ts_us AS p_ts_us, r.ts_us AS e_ts_us
+        |FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+        |      FROM events WHERE event_type = 'purchase') l
+        |JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+        |      FROM events WHERE event_type = 'error') r
+        |  ON l.user_id = r.user_id
+        | AND r.ts_us > l.ts_us - 86400000000 AND r.ts_us <= l.ts_us""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       import graft.streaming.StreamingNative
@@ -2887,7 +4115,16 @@ object SparkEntry {
       }
     },
 
-    "q_stream_full_outer" -> { (spark, dir) =>
+    Q("q_stream_full_outer", Oracle(
+      """SELECT l.event_id AS p_event_id, r.event_id AS e_event_id,
+        |       l.ts_us AS p_ts_us, r.ts_us AS e_ts_us
+        |FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+        |      FROM events WHERE event_type = 'purchase') l
+        |FULL JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+        |      FROM events WHERE event_type = 'error') r
+        |  ON l.user_id = r.user_id
+        | AND r.ts_us > l.ts_us - 86400000000 AND r.ts_us <= l.ts_us""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       import graft.streaming.StreamingNative
@@ -2935,7 +4172,16 @@ object SparkEntry {
         coalesce(col("e_event_id"), lit(0L)) >= 0)
     },
 
-    "q_stream_outer_join" -> { (spark, dir) =>
+    Q("q_stream_outer_join", Oracle(
+      """SELECT l.event_id AS p_event_id, r.event_id AS e_event_id,
+        |       l.ts_us AS p_ts_us, r.ts_us AS e_ts_us
+        |FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+        |      FROM events WHERE event_type = 'purchase') l
+        |LEFT JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
+        |      FROM events WHERE event_type = 'error') r
+        |  ON l.user_id = r.user_id
+        | AND r.ts_us > l.ts_us - 86400000000 AND r.ts_us <= l.ts_us""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       import graft.streaming.StreamingNative
@@ -2996,7 +4242,15 @@ object SparkEntry {
       }.where(col("p_event_id") >= 0)
     },
 
-    "q_json_extract" -> { (spark, dir) =>
+    Q("q_json_extract", Oracle(
+      """SELECT event_type, CAST(json_extract(props, '$.k') AS BIGINT) // 10 AS k_decade,
+        |       count(*) AS cnt, CAST(SUM(CAST(json_extract(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
+        |       MIN(CAST(json_extract(props, '$.k') AS INTEGER)) AS min_k,
+        |       MAX(CAST(json_extract(props, '$.k') AS INTEGER)) AS max_k
+        |FROM events
+        |WHERE json_extract(props, '$.k') IS NOT NULL
+        |GROUP BY 1, 2""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // semi-structured payload extraction with an EXPLICIT schema:
       // from_json against a declared struct — never schema inference,
@@ -3015,7 +4269,20 @@ object SparkEntry {
           min("k").as("min_k"), max("k").as("max_k"))
     },
 
-    "q7_nation_volume" -> { (spark, dir) =>
+    Q("q7_nation_volume", Oracle(
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |       EXTRACT(year FROM l_shipdate) AS l_year,
+        |       CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+        |GROUP BY 1, 2, 3""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q7 shape — two dimension paths into one fact join: supplier
       // nation and customer nation both resolve via BROADCAST dim joins,
@@ -3040,7 +4307,23 @@ object SparkEntry {
           .cast("decimal(18,4)")), 2).cast("double").as("revenue"))
     },
 
-    "q8_market_share" -> { (spark, dir) =>
+    Q("q8_market_share", Oracle(
+      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |  CAST(SUM(CASE WHEN sn.n_name = 'NATION_5'
+        |        THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
+        |        ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
+        |  / CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)
+        |  AS mkt_share
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation cn ON c_nationkey = cn.n_nationkey
+        |JOIN region ON cn.n_regionkey = r_regionkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation sn ON s_nationkey = sn.n_nationkey
+        |WHERE r_name = 'AMERICA'
+        |GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q8 shape — market share: one fact-scale join chain
       // (lineitem→orders→customer), every dimension path a BROADCAST
@@ -3069,7 +4352,18 @@ object SparkEntry {
               .cast("decimal(18,4)")).cast("double")).as("mkt_share"))
     },
 
-    "q9_profit" -> { (spark, dir) =>
+    Q("q9_profit", Oracle(
+      """SELECT sn.n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    - p_retailprice * l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS profit
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation sn ON s_nationkey = sn.n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_type = 'ECONOMY'
+        |GROUP BY 1, 2""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q9 shape — product-type profit by (nation, year): the
       // lineitem→orders join is the only fact-scale shuffle; part (name
@@ -3092,7 +4386,16 @@ object SparkEntry {
           .cast("double").as("profit"))
     },
 
-    "q11_important_parts" -> { (spark, dir) =>
+    Q("q11_important_parts", Oracle(
+      """WITH per_part AS (
+        |  SELECT l_partkey,
+        |         SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(18,4))) AS part_value
+        |  FROM lineitem GROUP BY 1),
+        |total AS (SELECT SUM(part_value) AS total_value FROM per_part)
+        |SELECT l_partkey, CAST(ROUND(part_value, 2) AS DOUBLE) AS part_value
+        |FROM per_part, total
+        |WHERE part_value * 10000 > total_value""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q11 shape — HAVING against a GLOBAL scalar subquery: parts
       // whose inventory value exceeds a fixed fraction of the corpus
@@ -3111,7 +4414,18 @@ object SparkEntry {
           round(col("part_value"), 2).cast("double").as("part_value"))
     },
 
-    "q15_top_supplier" -> { (spark, dir) =>
+    Q("q15_top_supplier", Oracle(
+      """WITH revenue AS (
+        |  SELECT l_suppkey,
+        |         SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
+        |  GROUP BY 1)
+        |SELECT s_suppkey, s_name,
+        |       CAST(ROUND(total_revenue, 2) AS DOUBLE) AS total_revenue
+        |FROM revenue JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q15 shape — argmax via a scalar subquery over a derived
       // view: quarterly revenue per supplier, keep the supplier(s) whose
@@ -3132,7 +4446,15 @@ object SparkEntry {
           round(col("total_revenue"), 2).cast("double").as("total_revenue"))
     },
 
-    "q16_supplier_cnt" -> { (spark, dir) =>
+    Q("q16_supplier_cnt", Oracle(
+      """SELECT p_brand, p_type, p_size,
+        |       COUNT(DISTINCT l_suppkey) AS supplier_cnt
+        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
+        |JOIN part ON l_partkey = p_partkey
+        |WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 9, 13, 17)
+        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY 1, 2, 3""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q16 shape — DISTINCT-count rollup behind an anti-join
       // exclusion: suppliers per (brand, type, size) bucket, excluding a
@@ -3154,7 +4476,22 @@ object SparkEntry {
         .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
     },
 
-    "q2_min_cost_supplier" -> { (spark, dir) =>
+    Q("q2_min_cost_supplier", Oracle(
+      """WITH priced AS (
+        |  SELECT p_partkey, l_suppkey,
+        |         MIN(CAST(l_extendedprice AS DECIMAL(18,4))) AS supply_cost
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_type = 'SMALL'
+        |  GROUP BY 1, 2),
+        |min_cost AS (
+        |  SELECT p_partkey AS m_partkey, MIN(supply_cost) AS min_cost
+        |  FROM priced GROUP BY 1)
+        |SELECT p.p_partkey, s_suppkey, s_name,
+        |       CAST(ROUND(p.supply_cost, 2) AS DOUBLE) AS supply_cost
+        |FROM priced p
+        |JOIN min_cost m ON p.p_partkey = m.m_partkey AND p.supply_cost = m.min_cost
+        |JOIN supplier ON p.l_suppkey = s_suppkey""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q2 shape — correlated MIN subquery decorrelated: for each
       // SMALL part, the supplier row(s) achieving that part's minimum
@@ -3178,7 +4515,14 @@ object SparkEntry {
           round(col("supply_cost"), 2).cast("double").as("supply_cost"))
     },
 
-    "q12_priority_counts" -> { (spark, dir) =>
+    Q("q12_priority_counts", Oracle(
+      """SELECT l_returnflag,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+        |GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q12 shape — one fact join + per-category conditional counts
       // (shipmode adapts to returnflag — no l_shipmode in this corpus):
@@ -3197,7 +4541,18 @@ object SparkEntry {
             .otherwise(0L)).as("low_line_count"))
     },
 
-    "q20_excess_suppliers" -> { (spark, dir) =>
+    Q("q20_excess_suppliers", Oracle(
+      """SELECT s_suppkey, s_name, n_name
+        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
+        |  AND s_suppkey IN (
+        |    SELECT l_suppkey FROM lineitem JOIN part ON l_partkey = p_partkey
+        |    WHERE p_type = 'SMALL'
+        |      AND l_shipdate >= TIMESTAMP '1997-01-01'
+        |      AND l_shipdate < TIMESTAMP '1998-01-01'
+        |    GROUP BY l_suppkey, p_partkey
+        |    HAVING SUM(l_quantity) > 50)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // TPC-H Q20 shape — a semi-join CHAIN: suppliers qualify through a
       // nested condition (shipped > 50 units of some SMALL part in 1997),
@@ -3220,7 +4575,17 @@ object SparkEntry {
         .select(col("s_suppkey"), col("s_name"), col("n_name"))
     },
 
-    "q_window_analytics" -> { (spark, dir) =>
+    Q("q_window_analytics", Oracle(
+      """SELECT user_id, event_id,
+        |  epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us,
+        |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))) OVER
+        |    (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
+        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE)
+        |    AS running_value,
+        |  percent_rank() OVER w AS pct_rank
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // the analytic-window family over event time per user: lag delta
       // (integer µs), running DECIMAL sum, and percent_rank — one
@@ -3239,7 +4604,7 @@ object SparkEntry {
         .select("user_id", "event_id", "gap_us", "running_value", "pct_rank")
     },
 
-    "q_dedup_best_rep" -> { (spark, dir) =>
+    Q("q_dedup_best_rep", Oracle(OracleHashSql.dedupBestRep)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // policy-pluggable dedup: clustering decides WHO is duplicated
       // (transitive closure), the representative rule decides WHAT
@@ -3256,7 +4621,9 @@ object SparkEntry {
             struct(col("n_chars"), (-col("doc_id")).as("nid"))).as("rep_doc_id"))
     },
 
-    "q_bm25_topk" -> { (spark, dir) =>
+    Q("q_bm25_topk", Oracle(graft.ops.Bm25.oracleSql(
+      "documents", "doc_id", "text", "spark window merge stream", k = 20),
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // BM25 lexical retrieval (the text-search side of RAG, complementing
       // the ANN family): one tokenization pass, slim per-doc conditional
@@ -3266,7 +4633,12 @@ object SparkEntry {
         query = "spark window merge stream", k = 20)
     },
 
-    "q_partition_pruning" -> { (spark, dir) =>
+    Q("q_partition_pruning", Oracle(
+      """SELECT epoch_us(ts) // 86400000000 AS day_bucket,
+        |       count(*) AS cnt, CAST(SUM(user_id) AS BIGINT) AS sum_users
+        |FROM events WHERE event_type = 'purchase'
+        |GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // Hive-partitioned layout: the event_type predicate prunes at FILE
       // LISTING time (PartitionFilters, plan-asserted) — the scan never
@@ -3279,7 +4651,12 @@ object SparkEntry {
           sum(col("user_id")).as("sum_users"))
     },
 
-    "q_bucketed_join" -> { (spark, dir) =>
+    Q("q_bucketed_join", Oracle(
+      """SELECT o_orderpriority, count(*) AS n_lines,
+        |       CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // bucketed co-located join: both sides pre-hashed into 8 buckets on
       // the join key at WRITE time, so the join itself is exchange-free —
@@ -3295,7 +4672,22 @@ object SparkEntry {
             .cast("decimal(18,4)")), 2).cast("double").as("revenue"))
     },
 
-    "q_gap_fill" -> { (spark, dir) =>
+    Q("q_gap_fill", Oracle(
+      """WITH hourly AS (
+        |  SELECT event_type, epoch_us(ts) // 3600000000 AS hour,
+        |         CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
+        |  FROM events GROUP BY 1, 2),
+        |bounds AS (SELECT event_type, min(hour) AS mn, max(hour) AS mx
+        |           FROM hourly GROUP BY 1),
+        |spine AS (SELECT event_type, unnest(generate_series(mn, mx)) AS hour
+        |          FROM bounds)
+        |SELECT s.event_type, s.hour,
+        |       last_value(h.sum_value IGNORE NULLS) OVER (
+        |         PARTITION BY s.event_type ORDER BY s.hour
+        |         ROWS UNBOUNDED PRECEDING) AS filled_value,
+        |       h.sum_value IS NULL AS is_gap
+        |FROM spine s LEFT JOIN hourly h USING (event_type, hour)""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // time-series densification: the sparse hourly series re-grained to
       // a complete per-type hour spine (sequence + explode, bounded by
@@ -3318,7 +4710,16 @@ object SparkEntry {
           col("sum_value").isNull.as("is_gap"))
     },
 
-    "q_retention_cohorts" -> { (spark, dir) =>
+    Q("q_retention_cohorts", Oracle(
+      """WITH act AS (
+        |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
+        |  FROM events),
+        |cohort AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY 1)
+        |SELECT cohort_day, day - cohort_day AS day_offset, count(*) AS n_users
+        |FROM act JOIN cohort USING (user_id)
+        |WHERE day - cohort_day <= 7
+        |GROUP BY 1, 2""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // cohort retention: users cohorted by FIRST-activity day; for each
       // day offset, how many of the cohort were active again. Two bounded
@@ -3335,7 +4736,26 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_users"))
     },
 
-    "q_funnel_stages" -> { (spark, dir) =>
+    Q("q_funnel_stages", Oracle(
+      """WITH slim AS (
+        |  SELECT user_id, epoch_us(ts) AS f_ts,
+        |    CASE event_type WHEN 'signup' THEN 0 WHEN 'view' THEN 1
+        |         WHEN 'purchase' THEN 2 END AS f_step
+        |  FROM events WHERE event_type IN ('signup', 'view', 'purchase')),
+        |t1 AS (SELECT user_id, min(f_ts) AS ts1 FROM slim WHERE f_step = 0 GROUP BY 1),
+        |t2 AS (SELECT s.user_id, min(f_ts) AS ts2 FROM slim s JOIN t1 USING (user_id)
+        |       WHERE f_step = 1 AND f_ts > ts1 AND f_ts <= ts1 + 3600000000 GROUP BY 1),
+        |t3 AS (SELECT s.user_id, min(f_ts) AS ts3 FROM slim s JOIN t2 USING (user_id)
+        |       WHERE f_step = 2 AND f_ts > ts2 AND f_ts <= ts2 + 3600000000 GROUP BY 1),
+        |base AS (SELECT DISTINCT user_id FROM slim)
+        |SELECT CASE WHEN ts3 IS NOT NULL THEN CAST(3 AS BIGINT)
+        |            WHEN ts2 IS NOT NULL THEN 2
+        |            WHEN ts1 IS NOT NULL THEN 1 ELSE 0 END AS stage,
+        |       count(*) AS n_keys
+        |FROM base LEFT JOIN t1 USING (user_id) LEFT JOIN t2 USING (user_id)
+        |LEFT JOIN t3 USING (user_id)
+        |GROUP BY 1""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // ordered-funnel conversion (signup → view → purchase, each step
       // within 1 h of the previous advance): per-user state-machine fold
@@ -3347,7 +4767,17 @@ object SparkEntry {
         "event_type", Seq("signup", "view", "purchase"), gapUs = 3600000000L)
     },
 
-    "q_drift_langmix" -> { (spark, dir) =>
+    Q("q_drift_langmix", Oracle(
+      """WITH c AS (
+        |  SELECT coalesce(lang, 'und') AS feature,
+        |         count(*) FILTER (WHERE source < 'src2') AS cnt_a,
+        |         count(*) FILTER (WHERE NOT (source < 'src2')) AS cnt_b
+        |  FROM documents GROUP BY 1),
+        |t AS (SELECT SUM(cnt_a) AS ta, SUM(cnt_b) AS tb FROM c)
+        |SELECT feature, cnt_a, cnt_b,
+        |       CAST(ABS(CAST(cnt_a AS HUGEINT) * tb - CAST(cnt_b AS HUGEINT) * ta) AS DOUBLE) AS drift_num
+        |FROM c, t""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // distribution drift between two corpus slices (here: the low-id
       // source group vs the rest — a stand-in for two crawl snapshots):
@@ -3362,7 +4792,9 @@ object SparkEntry {
           col("drift_num").cast("double").as("drift_num"))
     },
 
-    "q_bm25_incremental" -> { (spark, dir) =>
+    Q("q_bm25_incremental", Oracle(graft.ops.Bm25.oracleSql(
+      "documents", "doc_id", "text", "spark window merge stream", k = 20),
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // streaming-ingest growth of the postings index: base build on the
       // tail of the corpus, the head arrives as an APPEND (delta stats
@@ -3373,7 +4805,7 @@ object SparkEntry {
         query = "spark window merge stream", k = 20)
     },
 
-    "q_mmr_rerank" -> { (spark, dir) =>
+    Q("q_mmr_rerank", RowsOnly("q_mmr_audit")) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // MMR diversity re-rank of the bounded ANN candidate set (rows-only:
       // sequential argmax is not SQL-expressible — the BPE-merge stance;
@@ -3386,7 +4818,42 @@ object SparkEntry {
       graft.ops.Retrieval.mmr(cands, "vec_id", "score", "embedding", k = 10)
     },
 
-    "q_mmr_audit" -> { (spark, dir) =>
+    Q("q_mmr_audit", Oracle(
+      // MMR's entry point and bookkeeping: the first pick is the brute-force
+      // relevance argmax, the second is argmax of λ·rel − (1−λ)·cos(d, first)
+      // over the rest (the λ arithmetic in the hard gate; the coefficient is
+      // written (1 - 0.7) to mirror the engine's IEEE evaluation exactly),
+      // the size is min(k, |candidates|), membership TRUE
+      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
+        |cand AS (
+        |  SELECT e.vec_id, e.embedding,
+        |         list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS score
+        |  FROM embeddings e, q
+        |  ORDER BY score DESC, e.vec_id LIMIT 40),
+        |first AS (SELECT vec_id, embedding FROM cand ORDER BY score DESC, vec_id LIMIT 1),
+        |second AS (
+        |  SELECT c.vec_id, c.embedding FROM cand c, first f
+        |  WHERE c.vec_id <> f.vec_id
+        |  ORDER BY 0.7 * c.score
+        |           - (1 - 0.7) * list_cosine_similarity(c.embedding::DOUBLE[],
+        |                                                f.embedding::DOUBLE[]) DESC,
+        |           c.vec_id
+        |  LIMIT 1)
+        |SELECT (SELECT vec_id FROM first) AS first_id,
+        |       (SELECT vec_id FROM second) AS second_id,
+        |       (SELECT c.vec_id FROM cand c, first f, second s2
+        |        WHERE c.vec_id <> f.vec_id AND c.vec_id <> s2.vec_id
+        |        ORDER BY 0.7 * c.score
+        |                 - (1 - 0.7) * greatest(
+        |                     list_cosine_similarity(c.embedding::DOUBLE[],
+        |                                            f.embedding::DOUBLE[]),
+        |                     list_cosine_similarity(c.embedding::DOUBLE[],
+        |                                            s2.embedding::DOUBLE[])) DESC,
+        |                 c.vec_id
+        |        LIMIT 1) AS third_id,
+        |       CAST(least(10, (SELECT count(*) FROM cand)) AS BIGINT) AS n_selected,
+        |       TRUE AS all_members""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // ORACLE-gated invariants of the MMR selection above (the audit
       // pattern): the FIRST pick is pure relevance-argmax (λ·rel − 0,
@@ -3415,7 +4882,30 @@ object SparkEntry {
           coalesce(expr("bool_and(__in IS NOT NULL)"), lit(true)).as("all_members"))
     },
 
-    "q_chat_render" -> { (spark, dir) =>
+    Q("q_chat_render", Oracle(
+      """WITH t AS (
+        |  SELECT user_id, event_id,
+        |    CASE WHEN event_type IN ('purchase', 'error') THEN 'assistant'
+        |         ELSE 'user' END AS role,
+        |    event_type || '#' || CAST(event_id AS VARCHAR) AS content
+        |  FROM events),
+        |p AS (
+        |  SELECT user_id, event_id, role, content,
+        |    '<|' || role || '|>' || content || '<|end|>' AS piece
+        |  FROM t),
+        |s AS (
+        |  SELECT *,
+        |    SUM(length(piece)) OVER (PARTITION BY user_id ORDER BY event_id
+        |      ROWS UNBOUNDED PRECEDING) - length(piece) AS start
+        |  FROM p)
+        |SELECT user_id,
+        |  string_agg(piece, '' ORDER BY event_id) AS text,
+        |  string_agg(CASE WHEN role = 'assistant'
+        |    THEN CAST(start + length(role) + 4 AS VARCHAR) || '-'
+        |      || CAST(start + length(role) + 4 + length(content) AS VARCHAR)
+        |    END, ',' ORDER BY event_id) AS spans_str
+        |FROM s GROUP BY user_id""".stripMargin,
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // SFT data prep: turn rows render to one packed ChatML string per
       // conversation plus the completion-content char spans (the loss
@@ -3435,7 +4925,9 @@ object SparkEntry {
               sp("end").cast("string"))), ",")).as("spans_str"))
     },
 
-    "q_bm25_indexed" -> { (spark, dir) =>
+    Q("q_bm25_indexed", Oracle(graft.ops.Bm25.oracleSql(
+      "documents", "doc_id", "text", "spark window merge stream", k = 20),
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // steady-state lexical retrieval: probe the PERSISTED term-bucketed
       // postings index (reads only the query terms' bucket partitions).
@@ -3445,7 +4937,12 @@ object SparkEntry {
         query = "spark window merge stream", k = 20)
     },
 
-    "q_hybrid_retrieval" -> { (spark, dir) =>
+    Q("q_hybrid_retrieval", Oracle(OracleHashSql.hybridRetrieval(
+      graft.ops.Bm25.oracleSql("documents", "doc_id", "text",
+        "spark window merge stream", k = 20),
+      graft.functions.AiFunctions.fakeEmbed("spark window merge stream"),
+      kList = 20, k = 10),
+    )) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // RAG hybrid retrieval: BM25 lexical top-20 and stub-embedding cosine
       // top-20, fused by Reciprocal Rank Fusion — rank-only fusion, so the
@@ -3465,7 +4962,7 @@ object SparkEntry {
       graft.ops.Retrieval.rrfFuse(lex, sem, "doc_id", k = 10)
     },
 
-    "q_source_pagerank" -> { (spark, dir) =>
+    Q("q_source_pagerank", Oracle(sourcePageRankOracleSql)) { (spark, dir) =>
       implicit val s: SparkSession = spark
       // web-curation reputation prior: PageRank over the source
       // mirror-network graph (sources linked by shared content-prefix
@@ -3480,7 +4977,11 @@ object SparkEntry {
         .select(col("node").as("source"), col("rank"))
     },
 
-    "q_stream_window_agg" -> { (spark, dir) =>
+    Q("q_stream_window_agg", Oracle(
+      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS wstart_us,
+        |       event_type, count(*) AS cnt, ROUND(SUM(value), 2) AS sum_value
+        |FROM events GROUP BY 1, 2""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import s.implicits._
       import graft.streaming.StreamingNative
@@ -3513,7 +5014,12 @@ object SparkEntry {
       }.where(!col("event_type").startsWith("zz_sentinel"))
     },
 
-    "q_stream_enrich" -> { (spark, dir) =>
+    Q("q_stream_enrich", Oracle(
+      """SELECT e.event_id, e.user_id, p.user_total
+        |FROM events e
+        |JOIN (SELECT user_id, count(*) AS user_total
+        |      FROM events GROUP BY 1) p USING (user_id)""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
       implicit val s: SparkSession = spark
       import graft.streaming.StreamingNative
       // STREAM-STATIC join: each micro-batch enriches against a static
@@ -3541,2036 +5047,7 @@ object SparkEntry {
       }
     },
 
-    "q_fuzzy_join" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // entity-resolution fuzzy self-join on the documents' 32-char text
-      // prefix: PPJoin-style prefix-filter blocking (each record blocks
-      // on its n·d+1 RAREST grams under one global order — candidate
-      // volume is Σ(prefix-df)², tiny, where all-gram blocking is Σdf²,
-      // quadratic in every template cluster) + exact Levenshtein ≤ 2
-      // verify on distinct survivors only. The boilerplate df-cap SCALES
-      // with the corpus (max(100, n/5)): an absolute cap that blocks 20%
-      // of records at one SF blocks 2% at 10× and silently empties the
-      // candidate set on this template-generated corpus; n/25 is the
-      // tightest fraction with FULL measured recall at both gate SFs
-      // (256/256 at sf0.1, where n/50 loses 70% of true pairs)
-      val keys = t(dir, "documents").select(col("doc_id"),
-        expr("substring(text, 1, 32)").as("k"))
-      val n = keys.where(length(col("k")) >= 3).count()
-      graft.ops.FuzzyJoin.editDistanceJoin(keys, "doc_id", "k",
-        dfCap = math.max(100L, n / 25).toInt)
-    },
-
-    "q_fuzzy_join_probe" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // steady-state incremental fuzzy join: a new batch (doc_id % 4 == 0)
-      // probed against the PERSISTED blocking-key index over the rest of
-      // the corpus — the per-micro-batch cost of a deployment's entity-
-      // resolution ingest, build amortized outside the timed body (the
-      // q_dedup_incremental_probe split). The batch's prefix grams prune
-      // the index read at the file listing; candidate ids push into the
-      // id-sorted string store; prefixes on BOTH sides are selected under
-      // the index's frozen (df, gram) order, the PPJoin guarantee's
-      // shared-total-order requirement.
-      val (idxDir, dfCap) = fuzzyIndexFor(dir)
-      val batch = t(dir, "documents")
-        .select(col("doc_id"), expr("substring(text, 1, 32)").as("k"))
-        .where(length(col("k")) >= 3 && col("doc_id") % 4 === 0)
-      graft.ops.FuzzyJoin.indexProbe(batch, "doc_id", "k", idxDir, dfCap = dfCap)
-    },
-
-    "q_hll_distinct" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // mergeable distinct-count sketch table: per-(type, day) HLL
-      // sketches built once (the persisted KB-sized artifact), rolled up
-      // per type by sketch union — COUNT(DISTINCT) semantics at any
-      // grouping without re-shuffling the corpus. Rows-only check: no
-      // SQL oracle can replay DataSketches register state (and the
-      // coupon-mode promotion makes the state shard-sensitive at the
-      // last digit — see DistinctSketch's caveat); the spec pins error
-      // bands vs exact and shard-union-vs-one-shot tolerance instead.
-      val sketches = graft.ops.DistinctSketch.buildSketches(
-        events(dir).withColumn("day", expr("ts_us DIV 86400000000")),
-        Seq("event_type", "day"), "user_id")
-      graft.ops.DistinctSketch.estimate(sketches, Seq("event_type"))
-    },
-
-    "q_hll_audit" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // ORACLE-gated audit of the sketch table above (the q_pack_bins_audit
-      // pattern): the exact distinct count per rollup cell — independently
-      // recomputed by DuckDB — next to an in-band flag pinned to the
-      // oracle's literal TRUE. The sketch's error CONTRACT (|approx−exact|
-      // ≤ 5% ≈ 3σ at lgK=12) lands in the hard gate; the register state
-      // itself stays rows-only. The build still goes through the per-(type,
-      // day) sketch table + union rollup — auditing the deployed path, not
-      // a shortcut
-      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
-      val sketches = graft.ops.DistinctSketch.buildSketches(
-        ev, Seq("event_type", "day"), "user_id")
-      val est = graft.ops.DistinctSketch.estimate(sketches, Seq("event_type"))
-      val exact = ev.groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_exact"))
-      exact.join(est, Seq("event_type"))
-        .select(col("event_type"), col("n_exact"),
-          (abs(col("approx_distinct") - col("n_exact").cast("double"))
-            <= col("n_exact").cast("double") * lit(0.05)).as("in_band"))
-    },
-
-    "q_tdigest_audit" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // ORACLE-gated audit of the t-digest sketch table (the
-      // q_pack_bins_audit pattern, completing the trilogy with
-      // q_bpe_audit/q_hll_audit): per rollup cell, the EXACT observation
-      // count — digest weights are integer-valued doubles, so Σweights
-      // must equal DuckDB's independent COUNT — and a rank-band flag
-      // pinned to the oracle's literal TRUE: the union-rolled digest's
-      // p50 estimate must lie between the cell's exact p40 and p60
-      // VALUES (a ±10%-rank band, 10× the published ≤1% bound —
-      // QuantileSketchSpec pins the tight band; this pins the contract
-      // in the hard gate through the deployed build+union path)
-      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
-      val sketches = graft.ops.QuantileSketch.buildSketches(
-        ev, Seq("event_type", "day"), "value")
-      // n_obs read OFF THE DIGESTS (not a trivial re-count): per-type sum
-      // of each day-cell digest's weight total — equal to the oracle's
-      // COUNT only if the build conserved every observation's weight
-      val nObs = sketches.groupBy("event_type").agg(
-        expr("CAST(sum(aggregate(sketch.weights, 0D, (a, x) -> a + x)) AS BIGINT)")
-          .as("n_obs"))
-      val est = graft.ops.QuantileSketch.estimate(sketches,
-        Seq("event_type"), Seq(0.5))
-      val bands = ev.groupBy("event_type").agg(
-        expr("percentile(value, 0.4)").as("__p40"),
-        expr("percentile(value, 0.6)").as("__p60"))
-      nObs.join(est.where(col("q") === 0.5), Seq("event_type"))
-        .join(bands, Seq("event_type"))
-        .select(col("event_type"), col("n_obs"),
-          (col("est") >= col("__p40") && col("est") <= col("__p60"))
-            .as("in_band"))
-    },
-
-    "q_quantile_sketch" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // mergeable quantile-sketch table (t-digest): per-(type, day)
-      // digests built once (the persisted KB-sized artifact), rolled up
-      // per type by lossless digest union — p50/p90/p99 at any grouping
-      // without re-shuffling the corpus. Rows-only check, the
-      // q_hll_distinct stance: digest centroids are merge-order-sensitive
-      // within the published rank-error bound, so no SQL oracle can
-      // replay them; QuantileSketchSpec pins rank-error bands vs exact
-      // and shard-union-vs-one-shot agreement instead.
-      val sketches = graft.ops.QuantileSketch.buildSketches(
-        events(dir).withColumn("day", expr("ts_us DIV 86400000000")),
-        Seq("event_type", "day"), "value")
-      graft.ops.QuantileSketch.estimate(sketches, Seq("event_type"),
-        Seq(0.5, 0.9, 0.99))
-    },
-
-    "q_pca_variance" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // distributed PCA spectrum of the embedding corpus: one corpus scan
-      // for the d + d² sufficient statistics (map-side partials collapse
-      // each partition to ≤ d² rows pre-shuffle), O(d³) Jacobi eigen on
-      // the driver — legitimate because d is the embedding WIDTH, never a
-      // data dimension. Rows-only: no SQL engine replays an eigensolve;
-      // PcaSpec pins orthonormality, Cv=λv residuals vs a naive
-      // covariance, spectrum ordering, and projection equivalence.
-      graft.ops.Pca.varianceReport(
-        t(dir, "embeddings"), "embedding", k = 8)
-    },
-
-    "q_pca_incremental" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // the persisted suffstats asset: two half-corpus appends fold into
-      // an EpochStore epoch table (suffstats are a commutative monoid —
-      // element-wise sums), then the spectrum is read off the ONE-ROW
-      // asset with zero corpus scans. At 100 TB this is how the
-      // projection tracks a growing corpus: each batch pays one scan of
-      // ITSELF, fit time never re-reads the corpus. Rows-only for the
-      // q_pca_variance reason (no SQL engine replays an eigensolve);
-      // PcaSpec pins batch-folded == one-shot.
-      val emb = t(dir, "embeddings")
-      val tmp = tempDir("graft-pca-inc")
-      try {
-        val path = s"$tmp/stats"
-        graft.ops.Pca.appendStats(
-          emb.where(col("vec_id") % 2 === 0), "embedding", path)
-        graft.ops.Pca.appendStats(
-          emb.where(col("vec_id") % 2 === 1), "embedding", path)
-        // the report reads the asset eagerly and is rebuilt from driver
-        // arrays, so the epoch dirs can be reclaimed before returning —
-        // repeated gate runs must not accumulate orphaned temp assets
-        graft.ops.Pca.varianceReportFromStats(spark, path, k = 8)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-        ()
-      }
-    },
-
-    "q_quantile_incremental" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // incremental sketch-table maintenance: the distribution monitor is
-      // a persisted asset; a micro-batch folds its own per-cell digests in
-      // by cell-wise union (digests are a commutative monoid — incremental
-      // == one-shot within the rank-error band, spec-pinned). The batch
-      // touches only its cells; the corpus is never re-scanned. Rows-only
-      // for the q_quantile_sketch reason.
-      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
-      val maxSeq = ev.agg(max("event_id")).head.getLong(0)
-      val split = maxSeq * 9 / 10
-      val state = graft.ops.QuantileSketch.buildSketches(
-        ev.where(col("event_id") <= split), Seq("event_type", "day"), "value")
-      val batch = graft.ops.QuantileSketch.buildSketches(
-        ev.where(col("event_id") > split), Seq("event_type", "day"), "value")
-      graft.ops.QuantileSketch.estimate(
-        graft.ops.QuantileSketch.mergeSketchTables(state, batch,
-          Seq("event_type", "day")),
-        Seq("event_type"), Seq(0.5, 0.99))
-    },
-
-    "q_quantile_incremental_audit" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // ORACLE-gated audit of the INCREMENTAL fold path above —
-      // q_tdigest_audit's contract applied to the maintained asset
-      // (completing the audit program: every rows-only family now has a
-      // hard-gate companion): per rollup cell, Σweights read OFF the
-      // state+batch MERGED digests must equal DuckDB's independent COUNT
-      // (mergeSketchTables conserves every observation's weight — a cell
-      // dropped, double-folded, or re-clustered lossily by the merge
-      // breaks the sum), and the merged p50 must lie in the cell's exact
-      // p40–p60 value band, pinned to the oracle's literal TRUE
-      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
-      val maxSeq = ev.agg(max("event_id")).head.getLong(0)
-      val split = maxSeq * 9 / 10
-      val state = graft.ops.QuantileSketch.buildSketches(
-        ev.where(col("event_id") <= split), Seq("event_type", "day"), "value")
-      val batch = graft.ops.QuantileSketch.buildSketches(
-        ev.where(col("event_id") > split), Seq("event_type", "day"), "value")
-      val merged = graft.ops.QuantileSketch.mergeSketchTables(state, batch,
-        Seq("event_type", "day"))
-      val nObs = merged.groupBy("event_type").agg(
-        expr("CAST(sum(aggregate(sketch.weights, 0D, (a, x) -> a + x)) AS BIGINT)")
-          .as("n_obs"))
-      val est = graft.ops.QuantileSketch.estimate(merged,
-        Seq("event_type"), Seq(0.5))
-      val bands = ev.groupBy("event_type").agg(
-        expr("percentile(value, 0.4)").as("__p40"),
-        expr("percentile(value, 0.6)").as("__p60"))
-      nObs.join(est.where(col("q") === 0.5), Seq("event_type"))
-        .join(bands, Seq("event_type"))
-        .select(col("event_type"), col("n_obs"),
-          (col("est") >= col("__p40") && col("est") <= col("__p60"))
-            .as("in_band"))
-    },
-
-    "q_pca_audit" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      import s.implicits._
-      // ORACLE-gated audit of the PCA suffstats asset (the last rows-only
-      // family without a hard-gate companion): n, the per-dim sums, and
-      // the FULL second-moment upper triangle, read OFF the persisted
-      // incremental asset after two half-corpus appends (the deployed
-      // maintenance path — appendStats folded twice, not a fresh scan),
-      // must equal the pure input functions DuckDB recomputes from
-      // `embeddings`. n is integer-exact; sums and moments are raw IEEE
-      // doubles (never rounded — the gate's 1e-6 float tolerance absorbs
-      // summation-order ulps). The eigensolve stays rows-only
-      // (q_pca_variance); its entire INPUT is now in the hard gate.
-      // The asset builds ONCE per (session, dir) — pcaStatsFor — so the timed
-      // body is the deployment's per-run cost: the audit read.
-      val path = pcaStatsFor(dir)
-      val live = graft.ops.EpochStore.currentEpoch(spark, path)
-        .getOrElse(throw new IllegalStateException(s"no asset at $path"))
-      val r = spark.read.parquet(live).head()
-      val n = r.getAs[Long]("n")
-      val sums = r.getAs[scala.collection.Seq[Double]]("sums").toArray
-      val tri = r.getAs[scala.collection.Seq[Double]]("gram").toArray
-      val d = sums.length
-      // upper-triangle layout: (i,i) sits at i*d − i(i−1)/2, then j−i
-      val rows = for { i <- 0 until d; j <- i until d } yield
-        (i.toLong, j.toLong, n, sums(i), tri(i * d - i * (i - 1) / 2 + (j - i)))
-      rows.toDF("i", "j", "n", "sum_i", "moment")
-    },
-
-    "q_monitor_weights" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // the `monitor:` YAML block's core fold, oracle-checked EXACTLY:
-      // quantile ESTIMATES are rows-only by nature, but digest WEIGHTS
-      // are exact — every observation adds 1.0 and both the clustering
-      // pass and the cell-wise union SUM weights (integer-valued doubles,
-      // exact to 2^53) — so the per-cell observation count after an
-      // incremental two-batch fold must equal a plain GROUP BY count.
-      // This pins the monitor's maintenance arithmetic (fold never drops
-      // or double-counts a cell's rows) in the DuckDB gate, leaving only
-      // the estimate interpolation to the property specs.
-      val d = t(dir, "documents")
-      val a = graft.ops.QuantileSketch.buildSketches(
-        d.where(col("doc_id") % 2 === 0), Seq("lang"), "n_chars")
-      val b = graft.ops.QuantileSketch.buildSketches(
-        d.where(col("doc_id") % 2 === 1), Seq("lang"), "n_chars")
-      graft.ops.QuantileSketch.mergeSketchTables(a, b, Seq("lang"))
-        .select(col("lang"),
-          expr("CAST(aggregate(sketch.weights, 0D, (x, y) -> x + y) AS BIGINT)")
-            .as("n_obs"))
-        .orderBy("lang")
-    },
-
-    "q_grouping_sets" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // explicit GROUPING SETS (the general form behind q_cube/q_rollup)
-      // with grouping_id disambiguating the null-as-total rows — one
-      // shuffle, each set an integer-exact rollup
-      events(dir).createOrReplaceTempView("ev_gs")
-      spark.sql(
-        """SELECT event_type, ts_us DIV 86400000000 AS day, count(*) AS cnt,
-          |  CAST(grouping(event_type) * 2
-          |       + grouping(ts_us DIV 86400000000) AS BIGINT) AS gid
-          |FROM ev_gs
-          |GROUP BY GROUPING SETS ((event_type, ts_us DIV 86400000000), (event_type), ())""".stripMargin)
-    },
-
-    "q_histogram" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // equi-width histogram: global [min, max] from one scalar agg
-      // (2 doubles to the driver-free 1-row broadcast), bucket index as a
-      // pinned double expression — floor((v−min)/width) is bit-identical
-      // in both engines given identical parenthesization; the top edge
-      // clamps into the last bucket
-      val ev = events(dir)
-      val mm = ev.agg(min("value").as("vmin"), max("value").as("vmax"))
-      ev.join(broadcast(mm))
-        .selectExpr("event_type",
-          "least(19L, CAST(floor((value - vmin) / ((vmax - vmin) / 20.0)) AS BIGINT)) AS bucket")
-        .groupBy("event_type", "bucket")
-        .agg(count(lit(1)).as("cnt"))
-    },
-
-    "q_first_touch" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // first-touch attribution: each user's purchases attributed to the
-      // user's FIRST-ever event type — one min_by per user (map-side
-      // combined, no sort), joined back onto the purchase rollup. Both
-      // join inputs are per-user aggregates whose cardinality grows with
-      // the corpus, so NO broadcast hint: both sides already carry
-      // hashpartitioning(user_id) from their aggregations, making the
-      // join a zero-exchange sort-merge at scale, and AQE still converts
-      // to broadcast when the stats say one side is small.
-      val ev = events(dir)
-      val firstTouch = ev.groupBy("user_id")
-        .agg(min_by(col("event_type"),
-          struct(col("ts_us"), col("event_id"))).as("first_type"))
-      ev.where(col("event_type") === "purchase")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("purchases"))
-        .join(firstTouch, "user_id")
-        .select(col("user_id"), col("first_type"), col("purchases"))
-    },
-
-    "q_winsorize" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // robust feature clamping (winsorization) for quality/score columns:
-      // per-type exact p05/p95 (one bounded agg, broadcast back — the
-      // Anomaly stats shape), values clamped into the band as a narrow
-      // codegen projection. Interpolated percentiles of the raw doubles
-      // are the same type-7 definition in both engines, and clamp output
-      // is either the original double or the percentile — both bit-exact.
-      val ev = events(dir)
-      val bounds = ev.groupBy("event_type")
-        .agg(expr("percentile(value, 0.05)").as("p05"),
-          expr("percentile(value, 0.95)").as("p95"))
-      ev.join(broadcast(bounds), "event_type")
-        .select(col("event_id"), col("event_type"), col("value"),
-          greatest(col("p05"), least(col("p95"), col("value"))).as("value_w"))
-    },
-
-    "q_corr_features" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // Pearson correlation between value and hour-of-day per event type,
-      // the exact-sums-then-formula discipline: the five sufficient
-      // statistics are DECIMAL/BIGINT sums (order-free, exact), and the
-      // final r is ONE pinned double expression over them — never a
-      // running double aggregation (Spark's corr() and DuckDB's disagree
-      // at the ULP because their update orders differ; sufficient
-      // statistics cannot).
-      events(dir)
-        .select(col("event_type"),
-          col("value").as("x"),
-          expr("CAST((ts_us % 86400000000) DIV 3600000000 AS BIGINT)").as("y"))
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("x").cast("decimal(24,6)")).as("sx"),
-          sum(col("y")).as("sy"),
-          sum((col("x") * col("y")).cast("decimal(24,6)")).as("sxy"),
-          sum((col("x") * col("x")).cast("decimal(24,6)")).as("sx2"),
-          sum(col("y") * col("y")).as("sy2"))
-        .selectExpr("event_type", "n",
-          """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-            | / (sqrt(CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-            |    * sqrt(CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-            | AS r""".stripMargin)
-    },
-
-    "q_anomaly_mad" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // robust ingest-monitoring alarm: hourly event counts per type,
-      // flagged by the median/MAD (Hampel) rule — the series is already
-      // bucket-aggregated (types × hours, NOT corpus-sized) and both
-      // stats passes reduce to one row per type and join back broadcast.
-      // Every decision value is an exact dyadic rational (integer counts →
-      // interpolated medians are averages of integers), so the flag is
-      // bit-identical in both engines.
-      val series = events(dir)
-        .groupBy(col("event_type"), expr("ts_us DIV 3600000000").as("hour_bucket"))
-        .agg(count(lit(1)).as("cnt"))
-      graft.ops.Anomaly.madOutliers(series, Seq("event_type"), "cnt", k = 3.0)
-        .select(col("event_type"), col("hour_bucket"), col("cnt"),
-          col("med"), col("mad"), col("is_outlier"))
-    },
-
-    "q_watermark_lateness" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // event-time disorder profile — the decision table that PICKS a
-      // watermark delay instead of guessing one: arrival order modeled as
-      // event time + a deterministic 0–2 h xxhash64 jitter (the testdata
-      // feed arrives perfectly sorted, so the jitter plants a KNOWN
-      // bounded disorder both engines reproduce bit-exactly); the
-      // event-time frontier is a two-phase distributed prefix max — never
-      // a single-partition global window — and the lateness histogram
-      // reads directly as completeness-vs-delay candidates.
-      val arr = events(dir).withColumn("arr",
-        col("ts_us") + pmod(xxhash64(col("event_id")), lit(7200000000L)))
-      graft.operators.Lateness.profile(arr, "arr", col("ts_us"),
-        boundsUs = Seq(0L, 60000000L, 600000000L, 1800000000L, 3600000000L),
-        tieBreak = Seq("event_id"))
-    },
-
-    "q_stream_temporal_join" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      import graft.streaming.StreamingNative
-      // the STREAMING face of the temporal table join: each micro-batch
-      // of purchase probes enriches against the (static, versioned) SCD2
-      // history at the probe's OWN seq−1 — stateless per batch like
-      // q_stream_enrich, but against interval-versioned state instead of
-      // a flat dimension. Completes the streaming join matrix: interval,
-      // outer, windowed-agg, static-enrich, temporal.
-      val ch = eventsChangelog(spark, dir)
-      val hist = Changelog.history(ch, Seq("user_id")).localCheckpoint()
-      val base = tempDir("graft-stj")
-      val in = s"$base/in"
-      ch.where(col("event_type") === "purchase")
-        .select(col("user_id"), col(Changelog.SeqCol).as("probe_seq"))
-        .write.parquet(in)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("probe_seq", org.apache.spark.sql.types.LongType)))
-      StreamingNative.fileStreamRuns(spark, in, schema, s"$base/out", s"$base/cp",
-        Seq.empty) { stream =>
-        Changelog.temporalJoin(stream, hist, Seq("user_id"), col("probe_seq") - 1)
-          .select(col("user_id"), col("probe_seq"),
-            col("event_type").as("prev_type"), col("value").as("prev_value"))
-      }
-    },
-
-    "q_percentile" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // exact interpolated percentiles (type-7, same definition as DuckDB
-      // quantile_cont). Scale path: approx_percentile (t-digest-style
-      // mergeable sketch) — exact percentile sorts per group
-      t(dir, "events")
-        .groupBy("event_type")
-        .agg(round(expr("percentile(value, 0.5)"), 4).as("p50"),
-          round(expr("percentile(value, 0.95)"), 4).as("p95"),
-          count(lit(1)).as("cnt"))
-    },
-
-    "q_window_sliding" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // sliding event-time windows (2h width, 1h slide): every event lands
-      // in exactly two epoch-aligned windows — Spark's native window()
-      events(dir)
-        .selectExpr("timestamp_micros(ts_us) AS tts", "event_type", "value")
-        .groupBy(window(col("tts"), "2 hours", "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"))
-        .select(unix_micros(col("window.start")).as("wstart"),
-          col("event_type"), col("cnt"), col("sum_value"))
-    },
-
-    "q_corpus_pipeline" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // the composed training-data flow: exact-dedup survivors → quality
-      // gate → per-language corpus stats. Window-based survivor selection:
-      // ONE scan, one shuffle, no self-join back to the corpus.
-      val docs = t(dir, "documents")
-      Dedup.exactSurvivors(docs, "doc_id", TextAnalysis.fingerprint(col("text")))
-        .select(col("doc_id"),
-          TextAnalysis.langId(col("text")).as("lang_pred"),
-          TextAnalysis.tokenCount(col("text")).as("n_words"),
-          TextAnalysis.subwordCount(col("text")).as("n_subwords"))
-        .where(col("n_words") >= 10 && col("lang_pred") =!= "und")
-        .groupBy("lang_pred")
-        .agg(count(lit(1)).as("docs"),
-          sum(col("n_words").cast("long")).as("total_words"),
-          sum(col("n_subwords").cast("long")).as("total_subwords"))
-    },
-
-    "q_rollup" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // grouping-sets family (absent in reference, native in Spark)
-      t(dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("sum_qty"))
-    },
-
-    "q_topn" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // top-k with deterministic tiebreak: plans as TakeOrderedAndProject
-      // (per-partition heaps, no global sort)
-      t(dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(100)
-        .select("o_orderkey", "o_totalprice")
-    },
-
-    "q_setops" -> { (spark, dir) =>
-      implicit val s: SparkSession = spark
-      // set operators (absent in reference): BUILDING customers that never
-      // placed an urgent order
-      val building = t(dir, "customer").where(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey").as("k"))
-      val urgent = t(dir, "orders").where(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey").as("k"))
-      building.except(urgent)
-    }
-  )
-
-  /** DuckDB-runnable oracle per query; omitted keys get a rows-only check.
-    * Dialect notes: DuckDB regexp_replace needs the 'g' flag to match Spark's
-    * replace-all; len()/length() return BIGINT so Spark INT outputs are cast.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "q_transform_project" ->
-      "SELECT c_custkey, UPPER(c_name) AS c_name_upper, c_acctbal FROM customer",
-
-    "q_transform_filter" ->
-      """SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
-        |WHERE c_acctbal > 1000 AND c_mktsegment IN ('BUILDING', 'MACHINERY')""".stripMargin,
-
-    "q_transform_computed" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_extendedprice * (1 - l_discount) AS net_price,
-        |  CASE WHEN l_quantity > 25 THEN 'bulk' ELSE 'small' END AS qty_class
-        |FROM lineitem WHERE l_returnflag <> 'A'""".stripMargin,
-
-    "q_transform_metadata" ->
-      "SELECT c_custkey, 'tpch' AS src_schema, 'customer' AS src_table FROM customer",
-
-    "q_transform_wildcard" ->
-      """SELECT n_nationkey, n_name, n_regionkey, LOWER(n_name) AS n_name_lower
-        |FROM nation WHERE n_regionkey BETWEEN 1 AND 3""".stripMargin,
-
-    "q_route_merge" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS id, c_name AS name, c_acctbal AS acctbal,
-        |       c_mktsegment AS mktsegment FROM customer
-        |UNION ALL
-        |SELECT s_suppkey, s_name, s_acctbal, NULL FROM supplier""".stripMargin,
-
-    "q_pipeline_yaml" ->
-      "SELECT c_custkey, UPPER(c_name) AS c_name, c_acctbal FROM customer WHERE c_acctbal > 100",
-
-    "q_materialize" ->
-      """SELECT user_id, event_type, value FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_softdelete" ->
-      """SELECT user_id, event_type, value, event_type = 'error' AS __deleted FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-
-    "q_debezium_roundtrip" ->
-      """SELECT user_id, event_type, value FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_yaml_corpus" -> yamlCorpusOracleSql,
-
-    "q_scd2_history" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |iv AS (
-        |  SELECT user_id, event_type, value, op, seq AS valid_from,
-        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
-        |  FROM ch)
-        |SELECT user_id, event_type, value, valid_from, valid_to
-        |FROM iv WHERE op <> 'DELETE'""".stripMargin,
-
-    "q_scd2_asof" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |iv AS (
-        |  SELECT user_id, event_type, value, op, seq AS valid_from,
-        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
-        |  FROM ch),
-        |sp AS (SELECT max(event_id) // 2 AS s FROM events)
-        |SELECT user_id, event_type, value FROM iv, sp
-        |WHERE op <> 'DELETE' AND valid_from <= s
-        |  AND (valid_to IS NULL OR valid_to > s)""".stripMargin,
-
-    "q_scd2_merge" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |iv AS (
-        |  SELECT user_id, event_type, value, op, seq AS valid_from,
-        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
-        |  FROM ch)
-        |SELECT user_id, event_type, value, valid_from, valid_to
-        |FROM iv WHERE op <> 'DELETE'""".stripMargin,
-
-    "q_stream_temporal_join" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |iv AS (
-        |  SELECT user_id, event_type, value, op, seq AS valid_from,
-        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
-        |  FROM ch),
-        |hist AS (
-        |  SELECT user_id, event_type, value, valid_from, valid_to
-        |  FROM iv WHERE op <> 'DELETE'),
-        |probes AS (
-        |  SELECT user_id, seq AS probe_seq FROM ch WHERE event_type = 'purchase')
-        |SELECT p.user_id, p.probe_seq,
-        |       h.event_type AS prev_type, h.value AS prev_value
-        |FROM probes p LEFT JOIN hist h
-        |  ON p.user_id = h.user_id AND h.valid_from <= p.probe_seq - 1
-        | AND (h.valid_to IS NULL OR h.valid_to > p.probe_seq - 1)""".stripMargin,
-
-    "q_temporal_join" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |iv AS (
-        |  SELECT user_id, event_type, value, op, seq AS valid_from,
-        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
-        |  FROM ch),
-        |hist AS (
-        |  SELECT user_id, event_type, value, valid_from, valid_to
-        |  FROM iv WHERE op <> 'DELETE'),
-        |probes AS (
-        |  SELECT user_id, seq AS probe_seq FROM ch WHERE event_type = 'purchase')
-        |SELECT p.user_id, p.probe_seq,
-        |       h.event_type AS prev_type, h.value AS prev_value
-        |FROM probes p LEFT JOIN hist h
-        |  ON p.user_id = h.user_id AND h.valid_from <= p.probe_seq - 1
-        | AND (h.valid_to IS NULL OR h.valid_to > p.probe_seq - 1)""".stripMargin,
-
-    "q_stream_agg_view" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |state AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT user_id, event_type, value, op,
-        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
-        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
-        |SELECT event_type, count(*) AS cnt,
-        |       CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM state GROUP BY 1""".stripMargin,
-
-    "q_secondary_index" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |state AS (
-        |  SELECT user_id, event_type FROM (
-        |    SELECT user_id, event_type, op,
-        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
-        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
-        |SELECT event_type, user_id FROM state""".stripMargin,
-
-    "q_pmi_collocations" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |uni AS (
-        |  SELECT unnest(tk) AS tok FROM toks),
-        |ucnt AS (SELECT tok, count(*) AS c FROM uni GROUP BY 1),
-        |n_uni AS (SELECT count(*) AS n FROM uni),
-        |bigrams AS (
-        |  SELECT unnest(list_transform(generate_series(1, len(tk) - 1),
-        |           i -> struct_pack(a := tk[i], b := tk[i+1]))) AS bg
-        |  FROM toks WHERE len(tk) >= 2),
-        |bcnt AS (
-        |  SELECT bg.a AS a, bg.b AS b, count(*) AS c_ab
-        |  FROM bigrams GROUP BY 1, 2 HAVING count(*) >= 20),
-        |n_bi AS (SELECT count(*) AS n FROM bigrams)
-        |SELECT x.a, x.b, CAST(x.c_ab AS BIGINT) AS c_ab,
-        |       ln(CAST(x.c_ab AS DOUBLE) * u.n * u.n / v.n / ca.c / cb.c) AS pmi
-        |FROM bcnt x
-        |JOIN ucnt ca ON ca.tok = x.a
-        |JOIN ucnt cb ON cb.tok = x.b
-        |CROSS JOIN n_uni u CROSS JOIN n_bi v
-        |ORDER BY pmi DESC, x.a, x.b LIMIT 50""".stripMargin,
-
-    "q_agg_view_steady" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |state AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT user_id, event_type, value, op,
-        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
-        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
-        |SELECT event_type, count(*) AS cnt,
-        |       CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM state GROUP BY 1""".stripMargin,
-
-    "q_incremental_agg" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |state AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT user_id, event_type, value, op,
-        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
-        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
-        |SELECT event_type, count(*) AS cnt,
-        |       CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM state GROUP BY 1""".stripMargin,
-
-    "q_snapshot_diff" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type, value,
-        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
-        |    event_id AS seq
-        |  FROM events),
-        |sp AS (SELECT max(event_id) // 2 AS s FROM events),
-        |old_state AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT user_id, event_type, value, op,
-        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
-        |    FROM ch, sp WHERE seq <= s) WHERE rn = 1 AND op <> 'DELETE'),
-        |new_state AS (
-        |  SELECT user_id, event_type, value FROM (
-        |    SELECT user_id, event_type, value, op,
-        |           row_number() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
-        |    FROM ch) WHERE rn = 1 AND op <> 'DELETE')
-        |SELECT coalesce(o.user_id, n.user_id) AS user_id,
-        |       CASE WHEN n.user_id IS NULL THEN o.event_type ELSE n.event_type END AS event_type,
-        |       CASE WHEN n.user_id IS NULL THEN o.value ELSE n.value END AS value,
-        |       CASE WHEN o.user_id IS NULL THEN 'INSERT'
-        |            WHEN n.user_id IS NULL THEN 'DELETE'
-        |            ELSE 'UPDATE' END AS __op
-        |FROM old_state o FULL OUTER JOIN new_state n ON o.user_id = n.user_id
-        |WHERE o.user_id IS NULL OR n.user_id IS NULL
-        |   OR o.event_type IS DISTINCT FROM n.event_type
-        |   OR o.value IS DISTINCT FROM n.value""".stripMargin,
-
-    "q_functions_time" ->
-      """SELECT user_id,
-        |  CAST((epoch_us(ts) % 86400000000) // 1000 AS INTEGER) AS t_time,
-        |  epoch_us(ts) AS t_tz_us
-        |FROM (SELECT user_id, ts,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |      FROM events) WHERE rn = 1""".stripMargin,
-
-    "q_functions_tz" ->
-      """SELECT user_id, epoch_us(ts) AS t_us, zone AS t_zone,
-        |  strftime(make_timestamp(epoch_us(ts) + off), '%Y-%m-%dT%H:%M:%S.%f') || zone AS t_iso
-        |FROM (
-        |  SELECT user_id, ts,
-        |    CASE user_id % 4 WHEN 0 THEN 'Z' WHEN 1 THEN '+05:30'
-        |                     WHEN 2 THEN '-08:00' ELSE '+01:00' END AS zone,
-        |    CASE user_id % 4 WHEN 0 THEN 0 WHEN 1 THEN 19800000000
-        |                     WHEN 2 THEN -28800000000 ELSE 3600000000 END AS off,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-
-    "q_canal_roundtrip" ->
-      """SELECT user_id, event_type, value FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_stream_pipeline" ->
-      """SELECT user_id, event_type, value FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    // replaying already-held rows is state-neutral under seq LWW, so the
-    // steady-state merge converges to the same materialization
-    "q_stream_steady" ->
-      """SELECT user_id, event_type, value FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_kafka_pipeline" ->
-      """SELECT user_id, event_type, value FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_multi_table_pipeline" ->
-      """SELECT id, name, acctbal, mktsegment FROM (
-        |  SELECT c_custkey * 10 + 1 AS id, c_name AS name, c_acctbal AS acctbal,
-        |         c_mktsegment AS mktsegment FROM customer WHERE c_acctbal >= 0
-        |  UNION ALL
-        |  SELECT s_suppkey * 10 + 2, s_name, s_acctbal, NULL FROM supplier
-        |  UNION ALL
-        |  SELECT n_nationkey * 10 + 3, n_name, NULL, NULL FROM nation)""".stripMargin,
-
-    "q_schema_evolution" ->
-      """SELECT user_id, event_type,
-        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
-        |       THEN NULL ELSE value END AS value
-        |FROM (
-        |  SELECT user_id, event_type, value, event_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_schema_evolution_multi" ->
-      """SELECT user_id,
-        |  CASE WHEN event_id > (SELECT MAX(event_id) // 2 FROM events)
-        |       THEN event_type END AS kind,
-        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
-        |       THEN CAST(event_id % 1000 AS BIGINT)
-        |       ELSE event_id * 1000000 END AS score
-        |FROM (
-        |  SELECT user_id, event_type, event_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_schema_evolution_lenient" ->
-      """SELECT user_id,
-        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
-        |       THEN event_type END AS event_type,
-        |  CASE WHEN event_id <= (SELECT MAX(event_id) // 2 FROM events)
-        |       THEN value END AS value,
-        |  CASE WHEN event_id > (SELECT MAX(event_id) // 2 FROM events)
-        |       THEN event_type END AS kind
-        |FROM (
-        |  SELECT user_id, event_type, value, event_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_chunked_read" ->
-      """SELECT l_returnflag, count(*) AS cnt, ROUND(SUM(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q_functions_string" ->
-      """SELECT p_partkey,
-        |  CONCAT(p_brand, '#', p_type) AS brand_type,
-        |  UPPER(p_name) AS name_upper,
-        |  LOWER(p_brand) AS brand_lower,
-        |  TRIM(p_name) AS name_trim,
-        |  SUBSTRING(p_name, 1, 5) AS name_pfx,
-        |  CAST(LENGTH(p_name) AS BIGINT) AS name_len,
-        |  REGEXP_REPLACE(p_type, ' ', '_', 'g') AS type_u
-        |FROM part""".stripMargin,
-
-    "q_functions_math" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_extendedprice * l_discount AS disc_amt,
-        |  ABS(l_quantity - 25) AS qty_dev,
-        |  CAST(CEIL(l_extendedprice) AS BIGINT) AS price_ceil,
-        |  CAST(FLOOR(l_extendedprice) AS BIGINT) AS price_floor,
-        |  CAST(l_orderkey % 7 AS BIGINT) AS mod7
-        |FROM lineitem""".stripMargin,
-
-    "q_functions_conditional" ->
-      """SELECT o_orderkey,
-        |  CASE o_orderstatus WHEN 'F' THEN 'done' WHEN 'O' THEN 'open' ELSE 'other' END AS status_word,
-        |  CASE WHEN o_totalprice > 200000 THEN 'big' WHEN o_totalprice > 100000 THEN 'mid' ELSE 'small' END AS size_class,
-        |  COALESCE(NULLIF(o_orderpriority, '1-URGENT'), 'URGENT!') AS prio,
-        |  CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END AS is_large
-        |FROM orders""".stripMargin,
-
-    "q_functions_cast" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(l_quantity AS INTEGER) AS qty_int,
-        |  CAST(l_orderkey AS VARCHAR) AS ok_str,
-        |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price_dec,
-        |  (l_returnflag = 'R') AS is_return
-        |FROM lineitem""".stripMargin,
-
-    "q_functions_temporal" ->
-      """SELECT o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS od_fmt,
-        |  CAST(YEAR(o_orderdate) AS BIGINT) AS od_year,
-        |  CAST(MONTH(o_orderdate) AS BIGINT) AS od_month,
-        |  CAST(FLOOR(date_diff('second', TIMESTAMP '1995-01-01 00:00:00', o_orderdate) / 86400.0) AS BIGINT) AS days_since
-        |FROM orders""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS doc_id, count(*) AS dup_cnt FROM documents
-        |GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))""".stripMargin,
-
-    "q_fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-        |FROM documents""".stripMargin,
-
-    // decomposed accent (chr 769 = U+0301), vertical tab, BEL and ragged
-    // whitespace appended — NFC must compose, controls strip, runs collapse
-    "q_text_normalize" ->
-      """SELECT doc_id, trim(regexp_replace(regexp_replace(
-        |  nfc_normalize(text || ' caf' || chr(101) || chr(769) || '  ' ||
-        |                chr(11) || chr(9) || 'z' || chr(7) || ' '),
-        |  '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-        |  '[ \t\n\r]+', ' ', 'g')) AS clean
-        |FROM documents""".stripMargin,
-
-    "q_paragraph_dedup" ->
-      """WITH pages AS (
-        |  SELECT doc_id // 4 AS page_id,
-        |         'begin boilerplate header end' || chr(10) || chr(10) ||
-        |           string_agg(text, chr(10) || chr(10) ORDER BY doc_id) AS text
-        |  FROM documents GROUP BY 1),
-        |parts AS (
-        |  SELECT page_id, u.pos - 1 AS pos, u.para
-        |  FROM (SELECT page_id, string_split(text, chr(10) || chr(10)) AS arr FROM pages),
-        |       LATERAL (SELECT unnest(arr) AS para,
-        |                       unnest(generate_series(1, len(arr))) AS pos) u
-        |  WHERE trim(u.para) <> ''),
-        |kept AS (
-        |  SELECT page_id, pos, para, row_number() OVER (
-        |    PARTITION BY md5(regexp_replace(lower(trim(para)), '\s+', ' ', 'g'))
-        |    ORDER BY page_id, pos) AS rn
-        |  FROM parts)
-        |SELECT page_id, string_agg(para, chr(10) || chr(10) ORDER BY pos) AS text
-        |FROM kept WHERE rn = 1 GROUP BY page_id""".stripMargin,
-
-    "q_dedup_pairs" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT -doc_id - 1, text FROM documents WHERE doc_id % 50 = 0),
-        |fp AS (SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS f
-        |       FROM all_docs),
-        |sized AS (SELECT *, count(*) OVER (PARTITION BY f) AS csz FROM fp)
-        |SELECT x.doc_id AS a, y.doc_id AS b
-        |FROM sized x JOIN sized y ON x.f = y.f AND x.doc_id < y.doc_id
-        |WHERE x.csz BETWEEN 2 AND 64""".stripMargin,
-
-    "q_text_quality" ->
-      """SELECT doc_id,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) END AS n_words,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS INTEGER) AS n_punct,
-        |  ROUND(CASE WHEN length(text) > 0
-        |    THEN CAST(length(regexp_replace(text, '[^\p{L}]', '', 'g')) AS DOUBLE) / length(text)
-        |    ELSE 0.0 END, 4) AS alpha_ratio,
-        |  ROUND(CASE WHEN length(trim(text)) = 0 THEN 0.0
-        |    ELSE 1.0 - CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS DOUBLE)
-        |               / len(string_split_regex(trim(text), '\s+')) END, 4) AS rep_ratio
-        |FROM documents""".stripMargin,
-
-    "q_repetition_stats" -> repetitionStatsOracleSql,
-
-    "q_repetition_filter" ->
-      (s"""SELECT doc_id FROM ($repetitionStatsOracleSql)
-         |WHERE dup_line_frac <= 0.3 AND dup_line_char_frac <= 0.2
-         |  AND dup_para_frac <= 0.3 AND dup_para_char_frac <= 0.2
-         |  AND top_bigram_frac <= 0.05 AND dup_5gram_frac <= 0.15""".stripMargin),
-
-    "q_lang_id" -> langIdOracleSql,
-
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) END AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[\p{L}]+|[\p{N}]+|[^\p{L}\p{N}\s]')) AS INTEGER) AS subword_tokens
-        |FROM documents""".stripMargin,
-
-    // the vocab's bookkeeping replayed independently: same tokenization as
-    // q_bpe_pairs, freq per word, rejoins pinned to literal TRUE
-    "q_bpe_audit" ->
-      """SELECT w AS word, CAST(count(*) AS BIGINT) AS freq, TRUE AS rejoins
-        |FROM (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                x -> x <> '')) AS w
-        |  FROM documents)
-        |GROUP BY w""".stripMargin,
-
-    // the encode path's bookkeeping: per-doc word-occurrence counts from an
-    // independent tokenize, rejoins pinned to literal TRUE
-    "q_bpe_encode_audit" ->
-      """SELECT doc_id,
-        |       CAST(len(list_filter(string_split_regex(lower(text), '\W+'),
-        |                            x -> x <> '')) AS BIGINT) AS n_words,
-        |       TRUE AS rejoins
-        |FROM documents
-        |WHERE len(list_filter(string_split_regex(lower(text), '\W+'),
-        |                      x -> x <> '')) > 0""".stripMargin,
-
-    // MMR's entry point and bookkeeping: the first pick is the brute-force
-    // relevance argmax, the second is argmax of λ·rel − (1−λ)·cos(d, first)
-    // over the rest (the λ arithmetic in the hard gate; the coefficient is
-    // written (1 - 0.7) to mirror the engine's IEEE evaluation exactly),
-    // the size is min(k, |candidates|), membership TRUE
-    "q_mmr_audit" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |cand AS (
-        |  SELECT e.vec_id, e.embedding,
-        |         list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS score
-        |  FROM embeddings e, q
-        |  ORDER BY score DESC, e.vec_id LIMIT 40),
-        |first AS (SELECT vec_id, embedding FROM cand ORDER BY score DESC, vec_id LIMIT 1),
-        |second AS (
-        |  SELECT c.vec_id, c.embedding FROM cand c, first f
-        |  WHERE c.vec_id <> f.vec_id
-        |  ORDER BY 0.7 * c.score
-        |           - (1 - 0.7) * list_cosine_similarity(c.embedding::DOUBLE[],
-        |                                                f.embedding::DOUBLE[]) DESC,
-        |           c.vec_id
-        |  LIMIT 1)
-        |SELECT (SELECT vec_id FROM first) AS first_id,
-        |       (SELECT vec_id FROM second) AS second_id,
-        |       (SELECT c.vec_id FROM cand c, first f, second s2
-        |        WHERE c.vec_id <> f.vec_id AND c.vec_id <> s2.vec_id
-        |        ORDER BY 0.7 * c.score
-        |                 - (1 - 0.7) * greatest(
-        |                     list_cosine_similarity(c.embedding::DOUBLE[],
-        |                                            f.embedding::DOUBLE[]),
-        |                     list_cosine_similarity(c.embedding::DOUBLE[],
-        |                                            s2.embedding::DOUBLE[])) DESC,
-        |                 c.vec_id
-        |        LIMIT 1) AS third_id,
-        |       CAST(least(10, (SELECT count(*) FROM cand)) AS BIGINT) AS n_selected,
-        |       TRUE AS all_members""".stripMargin,
-
-    // the incremental fold path's weight conservation + p50 rank band:
-    // same pure input functions as q_tdigest_audit, read off the MERGED
-    // state+batch digests
-    "q_quantile_incremental_audit" ->
-      """SELECT event_type, CAST(count(value) AS BIGINT) AS n_obs,
-        |       TRUE AS in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // the PCA eigensolve's entire INPUT, recomputed independently: n,
-    // per-dim sums, and the full second-moment upper triangle (raw IEEE
-    // doubles — the 1e-6 gate tolerance absorbs summation-order ulps)
-    "q_pca_audit" ->
-      """WITH flat AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |         unnest(embedding)::DOUBLE AS x
-        |  FROM embeddings),
-        |pairs AS (
-        |  SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS moment
-        |  FROM flat a JOIN flat b ON a.vec_id = b.vec_id AND b.i >= a.i
-        |  GROUP BY a.i, b.i),
-        |sums AS (SELECT i, sum(x) AS sum_i FROM flat GROUP BY i)
-        |SELECT CAST(p.i - 1 AS BIGINT) AS i, CAST(p.j - 1 AS BIGINT) AS j,
-        |       (SELECT count(*) FROM embeddings) AS n, s.sum_i, p.moment
-        |FROM pairs p JOIN sums s ON s.i = p.i""".stripMargin,
-
-    // the t-digest contract: exact per-cell observation count (weight
-    // conservation) + the p50 rank band, in_band pinned to literal TRUE
-    "q_tdigest_audit" ->
-      """SELECT event_type, CAST(count(value) AS BIGINT) AS n_obs,
-        |       TRUE AS in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // the HLL error contract: exact distinct per rollup cell recomputed
-    // independently, in_band pinned to literal TRUE
-    "q_hll_audit" ->
-      """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |       TRUE AS in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q_bpe_pairs" ->
-      """WITH words AS (
-        |  SELECT w AS word, count(*) AS freq FROM (
-        |    SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                              x -> x <> '')) AS w
-        |    FROM documents) GROUP BY w),
-        |pairs AS (
-        |  SELECT word[i:i] AS a, word[i+1:i+1] AS b, freq FROM (
-        |    SELECT word, freq, unnest(generate_series(1, length(word) - 1)) AS i
-        |    FROM words WHERE length(word) >= 2))
-        |SELECT a, b, CAST(sum(freq) AS BIGINT) AS cnt
-        |FROM pairs GROUP BY a, b
-        |ORDER BY cnt DESC, a, b LIMIT 30""".stripMargin,
-
-    "q_pack_stats" ->
-      """WITH tok AS (
-        |  SELECT CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS n
-        |  FROM documents)
-        |SELECT (n // 16) * 16 AS len_bucket,
-        |       count(*) AS docs,
-        |       CAST(sum(n) AS BIGINT) AS tokens,
-        |       CAST(sum((n + 127) // 128) AS BIGINT) AS padded_windows,
-        |       CAST(sum((n + 127) // 128) * 128 - sum(n) AS BIGINT) AS waste_tokens
-        |FROM tok WHERE n > 0 GROUP BY len_bucket""".stripMargin,
-
-    "q_pack_bins_audit" -> OracleHashSql.packBinsAudit(bands = 32),
-
-    "q_frame_sample" ->
-      """SELECT CAST(p_partkey AS BIGINT) AS asset_id,
-        |       CAST(unnest(range(0, (p_partkey % 32) + 1, 4)) AS BIGINT) AS frame_idx
-        |FROM part""".stripMargin,
-
-    "q_embed_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id FROM embeddings e, q
-        |ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) DESC, e.vec_id
-        |LIMIT 10""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  ROUND(SUM(l_quantity), 2) AS sum_qty,
-        |  ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-        |  ROUND(AVG(l_discount), 4) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_join_broadcast" ->
-      """SELECT r_name, n_name, count(*) AS n_cust, ROUND(SUM(c_acctbal), 2) AS sum_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "q_ai_chat" ->
-      """SELECT doc_id, '[stub-model] ' || substring(text, 1, 64) AS reply,
-        |       64 AS embed_dim
-        |FROM documents""".stripMargin,
-
-    "q3_shipping" ->
-      """SELECT l_orderkey, CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate < TIMESTAMP '1995-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q13_custdist" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey) t
-        |GROUP BY c_count""".stripMargin,
-
-    "q22_idle_balance" ->
-      """WITH s AS (
-        |  SELECT count(*) AS n, SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS tot
-        |  FROM customer WHERE c_acctbal > 0)
-        |SELECT c_mktsegment, count(*) AS numcust,
-        |       CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS totacctbal
-        |FROM customer c, s
-        |WHERE CAST(c_acctbal AS DECIMAL(18,4)) * s.n > s.tot
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q10_returned_items" ->
-      """WITH rev AS (
-        |  SELECT o_custkey,
-        |         CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE l_returnflag = 'R'
-        |    AND o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'
-        |  GROUP BY 1)
-        |SELECT c_custkey, c_name, n_name,
-        |       CAST(ROUND(CAST(c_acctbal AS DECIMAL(18,4)), 2) AS DOUBLE) AS c_acctbal,
-        |       revenue
-        |FROM rev JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey""".stripMargin,
-
-    "q14_promo_share" ->
-      """SELECT
-        |  CAST(ROUND(SUM(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
-        |    ELSE CAST(0 AS DECIMAL(18,4)) END), 2) AS DOUBLE) AS promo_revenue,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS total_revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
-
-    "q17_small_qty_revenue" ->
-      """WITH bp AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#23'),
-        |bl AS (SELECT l_partkey, l_quantity, l_extendedprice
-        |       FROM lineitem JOIN bp ON l_partkey = p_partkey),
-        |st AS (SELECT l_partkey AS s_partkey, count(*) AS cnt_qty,
-        |              SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty
-        |       FROM bl GROUP BY 1)
-        |SELECT count(*) AS n_lines,
-        |       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |FROM bl JOIN st ON l_partkey = s_partkey
-        |WHERE CAST(l_quantity AS DECIMAL(18,4)) * 5 * cnt_qty < sum_qty""".stripMargin,
-
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty_dec
-        |  FROM lineitem GROUP BY 1
-        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 250)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |       CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,4)), 2) AS DOUBLE) AS o_total,
-        |       CAST(qty_dec AS DOUBLE) AS sum_qty
-        |FROM big JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey""".stripMargin,
-
-    "q19_disjunctive" ->
-      """SELECT count(*) AS n_lines,
-        |       CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_quantity BETWEEN 1 AND 30
-        |  AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1 AND 11)
-        |    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        |    OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))""".stripMargin,
-
-    "q21_waiting_supplier" ->
-      """WITH lo AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |         (l_shipdate > o_orderdate + INTERVAL 60 DAY) AS is_late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F')
-        |SELECT s_name, count(*) AS numwait
-        |FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM lo WHERE is_late) l1
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE EXISTS (SELECT 1 FROM lo l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lo l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey AND l3.is_late)
-        |GROUP BY s_name""".stripMargin,
-
-    "q5_local_supplier" ->
-      """SELECT n_name, CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-
-    "q6_forecast" ->
-      """SELECT CAST(ROUND(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q_quality_filter" -> qualityFilterOracleSql,
-
-    "q_span_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |base AS (SELECT doc_id, len(tk) AS n_tokens, tk FROM toks),
-        |w AS (
-        |  SELECT doc_id, i - 1 AS start, array_to_string(tk[i:i+9], ' ') AS win
-        |  FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 9)) AS i
-        |        FROM base WHERE n_tokens >= 10)),
-        |d AS (SELECT win FROM w GROUP BY win HAVING count(DISTINCT doc_id) > 1),
-        |dup AS (SELECT w.doc_id, w.start FROM w JOIN d USING (win)),
-        |cov AS (
-        |  SELECT doc_id, count(*) AS dup_tokens FROM (
-        |    SELECT DISTINCT doc_id, j FROM (
-        |      SELECT doc_id, unnest(generate_series(start, start + 9)) AS j FROM dup))
-        |  GROUP BY doc_id)
-        |SELECT b.doc_id, b.n_tokens,
-        |       coalesce(c.dup_tokens, 0) AS dup_tokens,
-        |       CASE WHEN b.n_tokens = 0 THEN 0.0
-        |            ELSE coalesce(c.dup_tokens, 0) / b.n_tokens END AS dup_frac
-        |FROM base b LEFT JOIN cov c USING (doc_id)""".stripMargin,
-
-    "q_gopher_stats" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '') AS words,
-        |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-        |                l -> l <> '') AS lines,
-        |    length(text) - length(replace(text, '#', '')) AS hashes,
-        |    (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN len(words) = 0 THEN 0.0
-        |       ELSE list_sum(list_transform(words, w -> length(w))) / len(words) END
-        |    AS mean_word_len,
-        |  CASE WHEN len(words) = 0 THEN 0.0
-        |       ELSE (hashes + ellipses) / len(words) END AS symbol_word_ratio,
-        |  CASE WHEN len(lines) = 0 THEN 0.0
-        |       ELSE len(list_filter(lines, l -> starts_with(l, '-') OR starts_with(l, '*')
-        |                                     OR starts_with(l, '•'))) / len(lines) END
-        |    AS bullet_line_frac,
-        |  CASE WHEN len(lines) = 0 THEN 0.0
-        |       ELSE len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…')))
-        |            / len(lines) END AS ellipsis_line_frac,
-        |  CASE WHEN len(words) = 0 THEN 0.0
-        |       ELSE len(list_filter(words, w -> regexp_matches(w, '[\p{L}]'))) / len(words) END
-        |    AS alpha_word_frac,
-        |  len(list_filter(['the','be','to','of','and','that','have','with'],
-        |      sw -> list_contains(list_transform(words, w -> lower(w)), sw))) AS stopword_hits
-        |FROM base""".stripMargin,
-
-    "q_gopher_filter" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '') AS words,
-        |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-        |                l -> l <> '') AS lines,
-        |    length(text) - length(replace(text, '#', '')) AS hashes,
-        |    (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses
-        |  FROM documents)
-        |SELECT doc_id FROM base
-        |WHERE len(words) > 0
-        |  AND list_sum(list_transform(words, w -> length(w))) / len(words) >= 4.2
-        |  AND list_sum(list_transform(words, w -> length(w))) / len(words) <= 10.0
-        |  AND (hashes + ellipses) / len(words) <= 0.1
-        |  AND (len(lines) = 0 OR
-        |       len(list_filter(lines, l -> starts_with(l, '-') OR starts_with(l, '*')
-        |                                OR starts_with(l, '•'))) / len(lines) <= 0.9)
-        |  AND (len(lines) = 0 OR
-        |       len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…')))
-        |       / len(lines) <= 0.3)
-        |  AND len(list_filter(words, w -> regexp_matches(w, '[\p{L}]'))) / len(words) >= 0.8
-        |  AND len(list_filter(['the','be','to','of','and','that','have','with'],
-        |          sw -> list_contains(list_transform(words, w -> lower(w)), sw))) >= 1""".stripMargin,
-
-    "q_source_filter" ->
-      """WITH stats AS (
-        |  SELECT source, count(*) AS total,
-        |         count(*) FILTER (
-        |           CASE WHEN length(trim(text)) = 0 THEN 0
-        |                ELSE len(string_split_regex(trim(text), '\s+')) END < 40) AS bad
-        |  FROM documents GROUP BY source)
-        |SELECT doc_id, source FROM documents
-        |WHERE source IN (SELECT source FROM stats WHERE bad / total <= 0.35)""".stripMargin,
-
-    "q_window_topn" ->
-      """WITH hourly AS (
-        |  SELECT epoch_us(ts) // 3600000000 AS hour_bucket, user_id,
-        |         ROUND(SUM(value), 2) AS sum_value, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (
-        |        PARTITION BY hour_bucket
-        |        ORDER BY sum_value DESC, user_id) AS rn FROM hourly)
-        |SELECT hour_bucket, user_id, sum_value, cnt FROM r WHERE rn <= 3""".stripMargin,
-
-    "q_window_agg" ->
-      """SELECT epoch_us(ts) // 3600000000 AS hour_bucket, event_type,
-        |       count(*) AS cnt, ROUND(SUM(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT l.user_id, l.event_id, l.event_type, l.value, r.last_purchase
-        |FROM events l ASOF LEFT JOIN (
-        |  SELECT user_id, event_id, value AS last_purchase FROM events
-        |  WHERE event_type = 'purchase') r
-        |ON l.user_id = r.user_id AND l.event_id >= r.event_id""".stripMargin,
-
-    "q_asof_forward" ->
-      """SELECT l.user_id, l.event_id, l.event_type, l.value, r.next_purchase
-        |FROM events l ASOF LEFT JOIN (
-        |  SELECT user_id, event_id, value AS next_purchase FROM events
-        |  WHERE event_type = 'purchase') r
-        |ON l.user_id = r.user_id AND l.event_id <= r.event_id""".stripMargin,
-
-    "q_profile" ->
-      """SELECT 'o_orderkey' AS "column", count(*) AS n,
-        |  CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |  count(DISTINCT o_orderkey) AS n_distinct,
-        |  CAST(min(o_orderkey) AS VARCHAR) AS min_v, CAST(max(o_orderkey) AS VARCHAR) AS max_v
-        |FROM orders
-        |UNION ALL
-        |SELECT 'o_orderstatus', count(*),
-        |  CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  count(DISTINCT o_orderstatus),
-        |  CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'o_orderpriority', count(*),
-        |  CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  count(DISTINCT o_orderpriority),
-        |  CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR)
-        |FROM orders""".stripMargin,
-
-    "q_pii_redact" ->
-      """WITH blob AS (
-        |  SELECT c_custkey,
-        |    CONCAT(c_name, ' user', c_custkey, '@ex', c_nationkey, '.com ip 10.0.',
-        |      c_custkey % 256, '.', c_custkey * 7 % 256, ' tel ',
-        |      c_custkey % 89 + 10, '-', c_custkey * 3 % 899 + 100, '-',
-        |      c_custkey * 5 % 900 + 100, '-', c_custkey * 11 % 9000 + 1000) AS contact
-        |  FROM customer)
-        |SELECT c_custkey,
-        |  regexp_replace(regexp_replace(regexp_replace(contact,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\d{2,3}[- .]\d{3}[- .]\d{3,4}[- .]\d{4}', '<PHONE>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS clean,
-        |  CAST(
-        |    len(regexp_extract_all(contact, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |  + len(regexp_extract_all(contact, '\d{2,3}[- .]\d{3}[- .]\d{3,4}[- .]\d{4}'))
-        |  + len(regexp_extract_all(contact, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
-        |  AS BIGINT) AS n_pii
-        |FROM blob""".stripMargin,
-
-    "q_sample_stratified" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE CASE WHEN lang = 'en'
-        |  THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
-        |  ELSE TRUE END""".stripMargin,
-
-    "q_mix_rebalance" ->
-      """WITH w(s, wt) AS (SELECT s, CAST(wt AS DOUBLE) FROM (VALUES ('en', 0.4), ('zh', 0.15),
-        |                  ('es', 0.15), ('de', 0.15), ('fr', 0.15)) t(s, wt)),
-        |cnt AS (SELECT lang AS s, CAST(count(*) AS DOUBLE) AS n FROM documents GROUP BY 1),
-        |budget AS (SELECT min(c.n / w.wt) AS t FROM cnt c JOIN w USING (s)),
-        |rates AS (
-        |  SELECT c.s, round(least(1.0, w.wt * b.t / c.n) * 65536) AS thr
-        |  FROM cnt c JOIN w USING (s) CROSS JOIN budget b)
-        |SELECT d.doc_id, d.lang
-        |FROM documents d JOIN rates r ON r.s = d.lang
-        |WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
-        |  ELSE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
-        |  END""".stripMargin,
-
-    // temperature mixing: q_d ∝ n_d^0.5 derived from observed counts; Z is
-    // folded in stratum-sorted order (the engine's fixed accumulation
-    // order), then the same budget/rate/threshold math as q_mix_rebalance
-    "q_mix_temperature" ->
-      """WITH cnt AS (SELECT lang AS s, CAST(count(*) AS DOUBLE) AS n
-        |            FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-        |z AS (SELECT list_reduce(list_prepend(0.0, list(pow(n, 0.5) ORDER BY s)),
-        |             (a, x) -> a + x) AS z FROM cnt),
-        |w AS (SELECT s, n, pow(n, 0.5) / z.z AS wt FROM cnt, z),
-        |budget AS (SELECT min(n / wt) AS t FROM w),
-        |rates AS (
-        |  SELECT w.s, round(least(1.0, w.wt * b.t / w.n) * 65536) AS thr
-        |  FROM w CROSS JOIN budget b)
-        |SELECT d.doc_id, d.lang
-        |FROM documents d JOIN rates r ON r.s = d.lang
-        |WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
-        |  ELSE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
-        |  END""".stripMargin,
-
-    "q_corpus_assembly" ->
-      """WITH surv AS (
-        |  SELECT doc_id, lang, text,
-        |         row_number() OVER (PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |                            ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |gated AS (
-        |  SELECT doc_id, lang,
-        |         CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tok
-        |  FROM surv WHERE rn = 1),
-        |gated2 AS (SELECT * FROM gated WHERE n_tok >= 30),
-        |w(s, wt) AS (SELECT s, CAST(wt AS DOUBLE) FROM (VALUES ('en', 0.4), ('zh', 0.15),
-        |             ('es', 0.15), ('de', 0.15), ('fr', 0.15)) t(s, wt)),
-        |cnt AS (SELECT lang AS s, CAST(count(*) AS DOUBLE) AS n FROM gated2 GROUP BY 1),
-        |budget AS (SELECT min(c.n / w.wt) AS t FROM cnt c JOIN w USING (s)),
-        |rates AS (
-        |  SELECT c.s, round(least(1.0, w.wt * b.t / c.n) * 65536) AS thr
-        |  FROM cnt c JOIN w USING (s) CROSS JOIN budget b),
-        |bal AS (
-        |  SELECT g.* FROM gated2 g JOIN rates r ON r.s = g.lang
-        |  WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
-        |    ELSE substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
-        |    END),
-        |spl AS (
-        |  SELECT lang, n_tok,
-        |         CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' THEN 'train'
-        |              WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'f333' THEN 'val'
-        |              ELSE 'test' END AS split
-        |  FROM bal)
-        |SELECT lang, split, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM spl GROUP BY 1, 2""".stripMargin,
-
-    "q_vocab_topk" ->
-      """SELECT tok, count(*) AS cnt
-        |FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS tok
-        |      FROM documents)
-        |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 50""".stripMargin,
-
-    "q_doc_rarity" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '[a-z]+'))) AS tok
-        |  FROM documents),
-        |dfreq AS (SELECT tok, COUNT(*) AS df FROM toks GROUP BY tok)
-        |SELECT t.doc_id, COUNT(*) AS n_tokens,
-        |       CAST(SUM(d.df) AS BIGINT) AS df_sum, MIN(d.df) AS df_min
-        |FROM toks t JOIN dfreq d USING (tok) GROUP BY t.doc_id""".stripMargin,
-
-    "q_corpus_curation" ->
-      """WITH stats AS (
-        |  SELECT source, count(*) AS total,
-        |         count(*) FILTER (
-        |           CASE WHEN length(trim(text)) = 0 THEN 0
-        |                ELSE len(string_split_regex(trim(text), '\s+')) END < 40) AS bad
-        |  FROM documents GROUP BY source),
-        |src_ok AS (
-        |  SELECT doc_id, lang, source, text FROM documents
-        |  WHERE source IN (SELECT source FROM stats WHERE bad / total <= 0.35)),
-        |g_base AS (
-        |  SELECT doc_id, lang, source, text,
-        |    list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '') AS words,
-        |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-        |                l -> l <> '') AS lines,
-        |    length(text) - length(replace(text, '#', '')) AS hashes,
-        |    (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses
-        |  FROM src_ok),
-        |g_ok AS (
-        |  SELECT doc_id, lang, source, text FROM g_base
-        |  WHERE len(words) > 0
-        |    AND list_sum(list_transform(words, w -> length(w))) / len(words) >= 4.2
-        |    AND list_sum(list_transform(words, w -> length(w))) / len(words) <= 10.0
-        |    AND (hashes + ellipses) / len(words) <= 0.1
-        |    AND (len(lines) = 0 OR
-        |         len(list_filter(lines, l -> starts_with(l, '-') OR starts_with(l, '*')
-        |                                  OR starts_with(l, '•'))) / len(lines) <= 0.9)
-        |    AND (len(lines) = 0 OR
-        |         len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…')))
-        |         / len(lines) <= 0.3)
-        |    AND len(list_filter(words, w -> regexp_matches(w, '[\p{L}]'))) / len(words) >= 0.8
-        |    AND len(list_filter(['the','be','to','of','and','that','have','with'],
-        |            sw -> list_contains(list_transform(words, w -> lower(w)), sw))) >= 1),
-        |toks AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS tk
-        |  FROM g_ok),
-        |sbase AS (SELECT doc_id, len(tk) AS n_tokens, tk FROM toks),
-        |w AS (
-        |  SELECT doc_id, i - 1 AS start, array_to_string(tk[i:i+9], ' ') AS win
-        |  FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 9)) AS i
-        |        FROM sbase WHERE n_tokens >= 10)),
-        |d AS (SELECT win FROM w GROUP BY win HAVING count(DISTINCT doc_id) > 1),
-        |dup AS (SELECT w.doc_id, w.start FROM w JOIN d USING (win)),
-        |cov AS (
-        |  SELECT doc_id, count(*) AS dup_tokens FROM (
-        |    SELECT DISTINCT doc_id, j FROM (
-        |      SELECT doc_id, unnest(generate_series(start, start + 9)) AS j FROM dup))
-        |  GROUP BY doc_id),
-        |span_ok AS (
-        |  SELECT g.doc_id, g.lang, g.source FROM g_ok g
-        |  JOIN sbase b USING (doc_id) LEFT JOIN cov c USING (doc_id)
-        |  WHERE (CASE WHEN b.n_tokens = 0 THEN 0.0
-        |              ELSE coalesce(c.dup_tokens, 0) / b.n_tokens END) <= 0.3)
-        |SELECT doc_id, lang, source FROM (
-        |  SELECT doc_id, lang, source, row_number() OVER (
-        |    PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM span_ok) t WHERE rn <= 10""".stripMargin,
-
-    "q_sample_fixed_k" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang, row_number() OVER (
-        |    PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents) t WHERE rn <= 25""".stripMargin,
-
-    // the naive single-window form of the budget prefix — the engine's
-    // histogram-fold + bin-local-window plan must equal it bit-for-bit
-    "q_token_budget" ->
-      """WITH scored AS (
-        |  SELECT doc_id,
-        |         CAST(n_chars AS DOUBLE) / tok AS score,
-        |         CAST(tok AS BIGINT) AS n_tokens
-        |  FROM (SELECT doc_id, n_chars,
-        |          CASE WHEN length(trim(text)) = 0 THEN 0
-        |               ELSE len(string_split_regex(trim(text), '\s+')) END AS tok
-        |        FROM documents)
-        |  WHERE tok >= 1),
-        |ord AS (
-        |  SELECT doc_id, score, n_tokens,
-        |         sum(n_tokens) OVER (ORDER BY score DESC, doc_id
-        |                             ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM scored)
-        |SELECT doc_id, score, n_tokens FROM ord WHERE cum <= 20000""".stripMargin,
-
-    // the YAML curate route: same selection semantics as q_token_budget
-    // (TOKEN_COUNT replays as the trim/split SQL), same naive-window oracle
-    "q_yaml_budget" ->
-      """WITH scored AS (
-        |  SELECT doc_id,
-        |         CAST(n_chars AS DOUBLE) / tok AS score,
-        |         CAST(tok AS BIGINT) AS n_tokens
-        |  FROM (SELECT doc_id, n_chars,
-        |          CASE WHEN length(trim(text)) = 0 THEN 0
-        |               ELSE len(string_split_regex(trim(text), '\s+')) END AS tok
-        |        FROM documents)
-        |  WHERE tok >= 1),
-        |ord AS (
-        |  SELECT doc_id, score, n_tokens,
-        |         sum(n_tokens) OVER (ORDER BY score DESC, doc_id
-        |                             ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM scored)
-        |SELECT doc_id, score, n_tokens FROM ord WHERE cum <= 20000""".stripMargin,
-
-    // the YAML split over the pipeline's filtered projection: the same
-    // md5 band arithmetic as q_split_grouped (cum weights 0.8/0.9 →
-    // bounds cccd/e666), valid = [cccd, e666)
-    "q_yaml_split" ->
-      """SELECT doc_id, n_chars, source, tok FROM (
-        |  SELECT doc_id, n_chars, source,
-        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END
-        |              AS BIGINT) AS tok
-        |  FROM documents)
-        |WHERE tok >= 1
-        |  AND substring(md5(source), 1, 4) >= 'cccd'
-        |  AND substring(md5(source), 1, 4) < 'e666'""".stripMargin,
-
-    // the YAML stratified sample over the pipeline's filtered projection:
-    // per-source md5 thresholds (0.25→4000, 0.5→8000, default 0.75→c000)
-    "q_yaml_sample" ->
-      """SELECT doc_id, source, tok FROM (
-        |  SELECT doc_id, source,
-        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END
-        |              AS BIGINT) AS tok
-        |  FROM documents)
-        |WHERE tok >= 1
-        |  AND substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
-        |      CASE source WHEN 'src1' THEN '4000'
-        |                  WHEN 'src2' THEN '8000' ELSE 'c000' END""".stripMargin,
-
-    // the YAML temperature mix over the pipeline's filtered projection:
-    // the q_mix_temperature decision-table arithmetic re-derived off the
-    // same base (alpha = 1/T = 0.5; z summed in stratum order — the
-    // engine's pinned fold order)
-    "q_yaml_mix" ->
-      """WITH flt AS (
-        |  SELECT doc_id, source, tok FROM (
-        |    SELECT doc_id, source,
-        |           CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |                ELSE len(string_split_regex(trim(text), '\s+')) END
-        |                AS BIGINT) AS tok
-        |    FROM documents)
-        |  WHERE tok >= 1),
-        |cnt AS (SELECT source AS s, CAST(count(*) AS DOUBLE) AS n
-        |        FROM flt WHERE source IS NOT NULL GROUP BY 1),
-        |z AS (SELECT list_reduce(list_prepend(0.0, list(pow(n, 0.5) ORDER BY s)),
-        |             (a, x) -> a + x) AS z FROM cnt),
-        |w AS (SELECT s, n, pow(n, 0.5) / z.z AS wt FROM cnt, z),
-        |budget AS (SELECT min(n / wt) AS t FROM w),
-        |rates AS (
-        |  SELECT w.s, round(least(1.0, w.wt * b.t / w.n) * 65536) AS thr
-        |  FROM w CROSS JOIN budget b)
-        |SELECT f.doc_id, f.source, f.tok
-        |FROM flt f JOIN rates r ON r.s = f.source
-        |WHERE CASE WHEN r.thr >= 65536 THEN TRUE WHEN r.thr <= 0 THEN FALSE
-        |  ELSE substr(md5(CAST(f.doc_id AS VARCHAR)), 1, 4) < printf('%04x', CAST(r.thr AS INTEGER))
-        |  END""".stripMargin,
-
-    // the curate drift audit over the YAML pipeline's rebuilt asset: the
-    // asset leg must equal the table leg's token mass under the fold's
-    // exact row filter (tok >= 1 from the pipeline filter; score/tokens
-    // non-null and tokens >= 0 from the fold) — both legs re-derive as
-    // ONE sum in DuckDB, and `consistent` is asserted TRUE
-    "q_curate_audit" ->
-      """WITH flt AS (
-        |  SELECT CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END
-        |         AS BIGINT) AS tok,
-        |         n_chars
-        |  FROM documents)
-        |SELECT CAST(sum(tok) AS BIGINT) AS asset_tokens,
-        |       CAST(sum(tok) AS BIGINT) AS table_tokens,
-        |       TRUE AS consistent
-        |FROM flt
-        |WHERE tok >= 1 AND (CAST(n_chars AS DOUBLE) / tok) IS NOT NULL""".stripMargin,
-
-    // binning affects only the plan, never the result — the incremental
-    // asset's selection replays as the same naive global window
-    "q_token_budget_incremental" ->
-      """WITH scored AS (
-        |  SELECT doc_id,
-        |         CAST(n_chars AS DOUBLE) / tok AS score,
-        |         CAST(tok AS BIGINT) AS n_tokens
-        |  FROM (SELECT doc_id, n_chars,
-        |          CASE WHEN length(trim(text)) = 0 THEN 0
-        |               ELSE len(string_split_regex(trim(text), '\s+')) END AS tok
-        |        FROM documents)
-        |  WHERE tok >= 1),
-        |ord AS (
-        |  SELECT doc_id, score, n_tokens,
-        |         sum(n_tokens) OVER (ORDER BY score DESC, doc_id
-        |                             ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM scored)
-        |SELECT doc_id, score, n_tokens FROM ord WHERE cum <= 20000""".stripMargin,
-
-    "q_corpus_holdout" ->
-      (s"""WITH surv AS (
-         |  SELECT doc_id, lang, text FROM (
-         |    SELECT doc_id, lang, text, row_number() OVER (
-         |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-         |      ORDER BY doc_id) AS rn
-         |    FROM documents) WHERE rn = 1),
-         |reps AS (${repetitionStatsOracleSqlFrom("surv")}),
-         |kept AS (
-         |  SELECT s.doc_id, s.lang FROM surv s JOIN reps r USING (doc_id)
-         |  WHERE r.dup_line_frac <= 0.3 AND r.dup_line_char_frac <= 0.2
-         |    AND r.dup_para_frac <= 0.3 AND r.dup_para_char_frac <= 0.2
-         |    AND r.top_bigram_frac <= 0.05 AND r.dup_5gram_frac <= 0.15)
-         |SELECT doc_id, lang FROM (
-         |  SELECT doc_id, lang, row_number() OVER (
-         |    PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-         |  FROM kept) t WHERE rn <= 10""".stripMargin),
-
-    "q_sample_weighted" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang,
-        |    CAST(round(least(greatest(
-        |      1.0 - (CASE WHEN length(trim(text)) = 0 THEN 0.0
-        |             ELSE ROUND(1.0 -
-        |               CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS DOUBLE)
-        |               / len(string_split_regex(trim(text), '\s+')), 4) END),
-        |      0.0), 1.0) * 65536) AS INTEGER) AS thr
-        |  FROM documents)
-        |SELECT doc_id, lang FROM s
-        |WHERE CASE WHEN thr >= 65536 THEN TRUE WHEN thr <= 0 THEN FALSE
-        |  ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < printf('%04x', thr) END""".stripMargin,
-
-    "q_salt_join" ->
-      """SELECT o_orderpriority, count(*) AS cnt, ROUND(SUM(l_quantity), 2) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q_interval_join" ->
-      """SELECT l.event_id, count(r.event_id) AS n_errors
-        |FROM (SELECT event_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'purchase') l
-        |LEFT JOIN (SELECT event_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'error') r
-        |  ON r.ts_us > l.ts_us - 300000000 AND r.ts_us <= l.ts_us
-        |GROUP BY l.event_id""".stripMargin,
-
-    "q_stream_session_window" ->
-      """WITH tagged AS (
-        |  SELECT user_id, epoch_us(ts) AS ts,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts))
-        |), numbered AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM tagged)
-        |SELECT user_id, count(*) AS n_events,
-        |       MIN(ts) AS session_start, MAX(ts) AS session_end
-        |FROM numbered GROUP BY user_id, session_idx""".stripMargin,
-
-    "q_stream_dedup" ->
-      "SELECT DISTINCT user_id FROM events",
-
-    "q_partition_pruning" ->
-      """SELECT epoch_us(ts) // 86400000000 AS day_bucket,
-        |       count(*) AS cnt, CAST(SUM(user_id) AS BIGINT) AS sum_users
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY 1""".stripMargin,
-
-    "q_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n_lines,
-        |       CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_type, CAST(json_extract(props, '$.k') AS BIGINT) // 10 AS k_decade,
-        |       count(*) AS cnt, CAST(SUM(CAST(json_extract(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-        |       MIN(CAST(json_extract(props, '$.k') AS INTEGER)) AS min_k,
-        |       MAX(CAST(json_extract(props, '$.k') AS INTEGER)) AS max_k
-        |FROM events
-        |WHERE json_extract(props, '$.k') IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q12_priority_counts" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1""".stripMargin,
-
-    "q20_excess_suppliers" ->
-      """SELECT s_suppkey, s_name, n_name
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
-        |  AND s_suppkey IN (
-        |    SELECT l_suppkey FROM lineitem JOIN part ON l_partkey = p_partkey
-        |    WHERE p_type = 'SMALL'
-        |      AND l_shipdate >= TIMESTAMP '1997-01-01'
-        |      AND l_shipdate < TIMESTAMP '1998-01-01'
-        |    GROUP BY l_suppkey, p_partkey
-        |    HAVING SUM(l_quantity) > 50)""".stripMargin,
-
-    "q_window_analytics" ->
-      """SELECT user_id, event_id,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us,
-        |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))) OVER
-        |    (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE)
-        |    AS running_value,
-        |  percent_rank() OVER w AS pct_rank
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)""".stripMargin,
-
-    "q_dedup_best_rep" -> OracleHashSql.dedupBestRep,
-
-    "q8_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(SUM(CASE WHEN sn.n_name = 'NATION_5'
-        |        THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
-        |        ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
-        |  / CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)
-        |  AS mkt_share
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |JOIN region ON cn.n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |WHERE r_name = 'AMERICA'
-        |GROUP BY 1""".stripMargin,
-
-    "q9_profit" ->
-      """SELECT sn.n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    - p_retailprice * l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_type = 'ECONOMY'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q11_important_parts" ->
-      """WITH per_part AS (
-        |  SELECT l_partkey,
-        |         SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(18,4))) AS part_value
-        |  FROM lineitem GROUP BY 1),
-        |total AS (SELECT SUM(part_value) AS total_value FROM per_part)
-        |SELECT l_partkey, CAST(ROUND(part_value, 2) AS DOUBLE) AS part_value
-        |FROM per_part, total
-        |WHERE part_value * 10000 > total_value""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey,
-        |         SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name,
-        |       CAST(ROUND(total_revenue, 2) AS DOUBLE) AS total_revenue
-        |FROM revenue JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)""".stripMargin,
-
-    "q16_supplier_cnt" ->
-      """SELECT p_brand, p_type, p_size,
-        |       COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 9, 13, 17)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q2_min_cost_supplier" ->
-      """WITH priced AS (
-        |  SELECT p_partkey, l_suppkey,
-        |         MIN(CAST(l_extendedprice AS DECIMAL(18,4))) AS supply_cost
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_type = 'SMALL'
-        |  GROUP BY 1, 2),
-        |min_cost AS (
-        |  SELECT p_partkey AS m_partkey, MIN(supply_cost) AS min_cost
-        |  FROM priced GROUP BY 1)
-        |SELECT p.p_partkey, s_suppkey, s_name,
-        |       CAST(ROUND(p.supply_cost, 2) AS DOUBLE) AS supply_cost
-        |FROM priced p
-        |JOIN min_cost m ON p.p_partkey = m.m_partkey AND p.supply_cost = m.min_cost
-        |JOIN supplier ON p.l_suppkey = s_suppkey""".stripMargin,
-
-    "q7_nation_volume" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       EXTRACT(year FROM l_shipdate) AS l_year,
-        |       CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q_chat_render" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id,
-        |    CASE WHEN event_type IN ('purchase', 'error') THEN 'assistant'
-        |         ELSE 'user' END AS role,
-        |    event_type || '#' || CAST(event_id AS VARCHAR) AS content
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, event_id, role, content,
-        |    '<|' || role || '|>' || content || '<|end|>' AS piece
-        |  FROM t),
-        |s AS (
-        |  SELECT *,
-        |    SUM(length(piece)) OVER (PARTITION BY user_id ORDER BY event_id
-        |      ROWS UNBOUNDED PRECEDING) - length(piece) AS start
-        |  FROM p)
-        |SELECT user_id,
-        |  string_agg(piece, '' ORDER BY event_id) AS text,
-        |  string_agg(CASE WHEN role = 'assistant'
-        |    THEN CAST(start + length(role) + 4 AS VARCHAR) || '-'
-        |      || CAST(start + length(role) + 4 + length(content) AS VARCHAR)
-        |    END, ',' ORDER BY event_id) AS spans_str
-        |FROM s GROUP BY user_id""".stripMargin,
-
-    "q_gap_fill" ->
-      """WITH hourly AS (
-        |  SELECT event_type, epoch_us(ts) // 3600000000 AS hour,
-        |         CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
-        |  FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT event_type, min(hour) AS mn, max(hour) AS mx
-        |           FROM hourly GROUP BY 1),
-        |spine AS (SELECT event_type, unnest(generate_series(mn, mx)) AS hour
-        |          FROM bounds)
-        |SELECT s.event_type, s.hour,
-        |       last_value(h.sum_value IGNORE NULLS) OVER (
-        |         PARTITION BY s.event_type ORDER BY s.hour
-        |         ROWS UNBOUNDED PRECEDING) AS filled_value,
-        |       h.sum_value IS NULL AS is_gap
-        |FROM spine s LEFT JOIN hourly h USING (event_type, hour)""".stripMargin,
-
-    "q_retention_cohorts" ->
-      """WITH act AS (
-        |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
-        |  FROM events),
-        |cohort AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY 1)
-        |SELECT cohort_day, day - cohort_day AS day_offset, count(*) AS n_users
-        |FROM act JOIN cohort USING (user_id)
-        |WHERE day - cohort_day <= 7
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_funnel_stages" ->
-      """WITH slim AS (
-        |  SELECT user_id, epoch_us(ts) AS f_ts,
-        |    CASE event_type WHEN 'signup' THEN 0 WHEN 'view' THEN 1
-        |         WHEN 'purchase' THEN 2 END AS f_step
-        |  FROM events WHERE event_type IN ('signup', 'view', 'purchase')),
-        |t1 AS (SELECT user_id, min(f_ts) AS ts1 FROM slim WHERE f_step = 0 GROUP BY 1),
-        |t2 AS (SELECT s.user_id, min(f_ts) AS ts2 FROM slim s JOIN t1 USING (user_id)
-        |       WHERE f_step = 1 AND f_ts > ts1 AND f_ts <= ts1 + 3600000000 GROUP BY 1),
-        |t3 AS (SELECT s.user_id, min(f_ts) AS ts3 FROM slim s JOIN t2 USING (user_id)
-        |       WHERE f_step = 2 AND f_ts > ts2 AND f_ts <= ts2 + 3600000000 GROUP BY 1),
-        |base AS (SELECT DISTINCT user_id FROM slim)
-        |SELECT CASE WHEN ts3 IS NOT NULL THEN CAST(3 AS BIGINT)
-        |            WHEN ts2 IS NOT NULL THEN 2
-        |            WHEN ts1 IS NOT NULL THEN 1 ELSE 0 END AS stage,
-        |       count(*) AS n_keys
-        |FROM base LEFT JOIN t1 USING (user_id) LEFT JOIN t2 USING (user_id)
-        |LEFT JOIN t3 USING (user_id)
-        |GROUP BY 1""".stripMargin,
-
-    "q_drift_langmix" ->
-      """WITH c AS (
-        |  SELECT coalesce(lang, 'und') AS feature,
-        |         count(*) FILTER (WHERE source < 'src2') AS cnt_a,
-        |         count(*) FILTER (WHERE NOT (source < 'src2')) AS cnt_b
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT SUM(cnt_a) AS ta, SUM(cnt_b) AS tb FROM c)
-        |SELECT feature, cnt_a, cnt_b,
-        |       CAST(ABS(CAST(cnt_a AS HUGEINT) * tb - CAST(cnt_b AS HUGEINT) * ta) AS DOUBLE) AS drift_num
-        |FROM c, t""".stripMargin,
-
-    "q_bm25_incremental" -> graft.ops.Bm25.oracleSql(
-      "documents", "doc_id", "text", "spark window merge stream", k = 20),
-
-    "q_bm25_indexed" -> graft.ops.Bm25.oracleSql(
-      "documents", "doc_id", "text", "spark window merge stream", k = 20),
-
-    "q_bm25_topk" -> graft.ops.Bm25.oracleSql(
-      "documents", "doc_id", "text", "spark window merge stream", k = 20),
-
-    "q_hybrid_retrieval" -> OracleHashSql.hybridRetrieval(
-      graft.ops.Bm25.oracleSql("documents", "doc_id", "text",
-        "spark window merge stream", k = 20),
-      graft.functions.AiFunctions.fakeEmbed("spark window merge stream"),
-      kList = 20, k = 10),
-
-    "q_source_pagerank" -> sourcePageRankOracleSql,
-
-    "q_stream_enrich" ->
-      """SELECT e.event_id, e.user_id, p.user_total
-        |FROM events e
-        |JOIN (SELECT user_id, count(*) AS user_total
-        |      FROM events GROUP BY 1) p USING (user_id)""".stripMargin,
-
-    "q_stream_window_agg" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS wstart_us,
-        |       event_type, count(*) AS cnt, ROUND(SUM(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q_stream_interval_join" ->
-      """SELECT l.event_id AS p_event_id, r.event_id AS e_event_id,
-        |       l.ts_us AS p_ts_us, r.ts_us AS e_ts_us
-        |FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |      FROM events WHERE event_type = 'purchase') l
-        |JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |      FROM events WHERE event_type = 'error') r
-        |  ON l.user_id = r.user_id
-        | AND r.ts_us > l.ts_us - 86400000000 AND r.ts_us <= l.ts_us""".stripMargin,
-
-    "q_stream_outer_join" ->
-      """SELECT l.event_id AS p_event_id, r.event_id AS e_event_id,
-        |       l.ts_us AS p_ts_us, r.ts_us AS e_ts_us
-        |FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |      FROM events WHERE event_type = 'purchase') l
-        |LEFT JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |      FROM events WHERE event_type = 'error') r
-        |  ON l.user_id = r.user_id
-        | AND r.ts_us > l.ts_us - 86400000000 AND r.ts_us <= l.ts_us""".stripMargin,
-
-    "q_watermark_lateness" -> graft.OracleHashSql.watermarkLateness,
-
-    "q_fuzzy_join" ->
+    Q("q_fuzzy_join", Oracle(
       """WITH s AS (
         |  SELECT doc_id, substr(text, 1, 32) AS k FROM documents
         |  WHERE len(substr(text, 1, 32)) >= 3),
@@ -5597,8 +5074,27 @@ object SparkEntry {
         |SELECT id_a, id_b, CAST(levenshtein(sa.k, sb.k) AS INTEGER) AS dist
         |FROM cand JOIN s sa ON id_a = sa.doc_id JOIN s sb ON id_b = sb.doc_id
         |WHERE levenshtein(sa.k, sb.k) <= 2""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // entity-resolution fuzzy self-join on the documents' 32-char text
+      // prefix: PPJoin-style prefix-filter blocking (each record blocks
+      // on its n·d+1 RAREST grams under one global order — candidate
+      // volume is Σ(prefix-df)², tiny, where all-gram blocking is Σdf²,
+      // quadratic in every template cluster) + exact Levenshtein ≤ 2
+      // verify on distinct survivors only. The boilerplate df-cap SCALES
+      // with the corpus (max(100, n/5)): an absolute cap that blocks 20%
+      // of records at one SF blocks 2% at 10× and silently empties the
+      // candidate set on this template-generated corpus; n/25 is the
+      // tightest fraction with FULL measured recall at both gate SFs
+      // (256/256 at sf0.1, where n/50 loses 70% of true pairs)
+      val keys = t(dir, "documents").select(col("doc_id"),
+        expr("substring(text, 1, 32)").as("k"))
+      val n = keys.where(length(col("k")) >= 3).count()
+      graft.ops.FuzzyJoin.editDistanceJoin(keys, "doc_id", "k",
+        dfCap = math.max(100L, n / 25).toInt)
+    },
 
-    "q_fuzzy_join_probe" ->
+    Q("q_fuzzy_join_probe", Oracle(
       """WITH s AS (
         |  SELECT doc_id, substr(text, 1, 32) AS k FROM documents
         |  WHERE len(substr(text, 1, 32)) >= 3),
@@ -5639,39 +5135,345 @@ object SparkEntry {
         |SELECT id, match_id, CAST(levenshtein(sa.k, sb.k) AS INTEGER) AS dist
         |FROM cand JOIN sn sa ON id = sa.doc_id JOIN si sb ON match_id = sb.doc_id
         |WHERE levenshtein(sa.k, sb.k) <= 2""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // steady-state incremental fuzzy join: a new batch (doc_id % 4 == 0)
+      // probed against the PERSISTED blocking-key index over the rest of
+      // the corpus — the per-micro-batch cost of a deployment's entity-
+      // resolution ingest, build amortized outside the timed body (the
+      // q_dedup_incremental_probe split). The batch's prefix grams prune
+      // the index read at the file listing; candidate ids push into the
+      // id-sorted string store; prefixes on BOTH sides are selected under
+      // the index's frozen (df, gram) order, the PPJoin guarantee's
+      // shared-total-order requirement.
+      val (idxDir, dfCap) = fuzzyIndexFor(dir)
+      val batch = t(dir, "documents")
+        .select(col("doc_id"), expr("substring(text, 1, 32)").as("k"))
+        .where(length(col("k")) >= 3 && col("doc_id") % 4 === 0)
+      graft.ops.FuzzyJoin.indexProbe(batch, "doc_id", "k", idxDir, dfCap = dfCap)
+    },
 
-    "q_stream_full_outer" ->
-      """SELECT l.event_id AS p_event_id, r.event_id AS e_event_id,
-        |       l.ts_us AS p_ts_us, r.ts_us AS e_ts_us
-        |FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |      FROM events WHERE event_type = 'purchase') l
-        |FULL JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |      FROM events WHERE event_type = 'error') r
-        |  ON l.user_id = r.user_id
-        | AND r.ts_us > l.ts_us - 86400000000 AND r.ts_us <= l.ts_us""".stripMargin,
+    Q("q_hll_distinct", RowsOnly("q_hll_audit")) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // mergeable distinct-count sketch table: per-(type, day) HLL
+      // sketches built once (the persisted KB-sized artifact), rolled up
+      // per type by sketch union — COUNT(DISTINCT) semantics at any
+      // grouping without re-shuffling the corpus. Rows-only check: no
+      // SQL oracle can replay DataSketches register state (and the
+      // coupon-mode promotion makes the state shard-sensitive at the
+      // last digit — see DistinctSketch's caveat); the spec pins error
+      // bands vs exact and shard-union-vs-one-shot tolerance instead.
+      val sketches = graft.ops.DistinctSketch.buildSketches(
+        events(dir).withColumn("day", expr("ts_us DIV 86400000000")),
+        Seq("event_type", "day"), "user_id")
+      graft.ops.DistinctSketch.estimate(sketches, Seq("event_type"))
+    },
 
-    "q_grouping_sets" ->
+    Q("q_hll_audit", Oracle(
+      // the HLL error contract: exact distinct per rollup cell recomputed
+      // independently, in_band pinned to literal TRUE
+      """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
+        |       TRUE AS in_band
+        |FROM events GROUP BY event_type""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // ORACLE-gated audit of the sketch table above (the q_pack_bins_audit
+      // pattern): the exact distinct count per rollup cell — independently
+      // recomputed by DuckDB — next to an in-band flag pinned to the
+      // oracle's literal TRUE. The sketch's error CONTRACT (|approx−exact|
+      // ≤ 5% ≈ 3σ at lgK=12) lands in the hard gate; the register state
+      // itself stays rows-only. The build still goes through the per-(type,
+      // day) sketch table + union rollup — auditing the deployed path, not
+      // a shortcut
+      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
+      val sketches = graft.ops.DistinctSketch.buildSketches(
+        ev, Seq("event_type", "day"), "user_id")
+      val est = graft.ops.DistinctSketch.estimate(sketches, Seq("event_type"))
+      val exact = ev.groupBy("event_type")
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      exact.join(est, Seq("event_type"))
+        .select(col("event_type"), col("n_exact"),
+          (abs(col("approx_distinct") - col("n_exact").cast("double"))
+            <= col("n_exact").cast("double") * lit(0.05)).as("in_band"))
+    },
+
+    Q("q_tdigest_audit", Oracle(
+      // the t-digest contract: exact per-cell observation count (weight
+      // conservation) + the p50 rank band, in_band pinned to literal TRUE
+      """SELECT event_type, CAST(count(value) AS BIGINT) AS n_obs,
+        |       TRUE AS in_band
+        |FROM events GROUP BY event_type""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // ORACLE-gated audit of the t-digest sketch table (the
+      // q_pack_bins_audit pattern, completing the trilogy with
+      // q_bpe_audit/q_hll_audit): per rollup cell, the EXACT observation
+      // count — digest weights are integer-valued doubles, so Σweights
+      // must equal DuckDB's independent COUNT — and a rank-band flag
+      // pinned to the oracle's literal TRUE: the union-rolled digest's
+      // p50 estimate must lie between the cell's exact p40 and p60
+      // VALUES (a ±10%-rank band, 10× the published ≤1% bound —
+      // QuantileSketchSpec pins the tight band; this pins the contract
+      // in the hard gate through the deployed build+union path)
+      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
+      val sketches = graft.ops.QuantileSketch.buildSketches(
+        ev, Seq("event_type", "day"), "value")
+      // n_obs read OFF THE DIGESTS (not a trivial re-count): per-type sum
+      // of each day-cell digest's weight total — equal to the oracle's
+      // COUNT only if the build conserved every observation's weight
+      val nObs = sketches.groupBy("event_type").agg(
+        expr("CAST(sum(aggregate(sketch.weights, 0D, (a, x) -> a + x)) AS BIGINT)")
+          .as("n_obs"))
+      val est = graft.ops.QuantileSketch.estimate(sketches,
+        Seq("event_type"), Seq(0.5))
+      val bands = ev.groupBy("event_type").agg(
+        expr("percentile(value, 0.4)").as("__p40"),
+        expr("percentile(value, 0.6)").as("__p60"))
+      nObs.join(est.where(col("q") === 0.5), Seq("event_type"))
+        .join(bands, Seq("event_type"))
+        .select(col("event_type"), col("n_obs"),
+          (col("est") >= col("__p40") && col("est") <= col("__p60"))
+            .as("in_band"))
+    },
+
+    Q("q_quantile_sketch", RowsOnly("q_tdigest_audit")) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // mergeable quantile-sketch table (t-digest): per-(type, day)
+      // digests built once (the persisted KB-sized artifact), rolled up
+      // per type by lossless digest union — p50/p90/p99 at any grouping
+      // without re-shuffling the corpus. Rows-only check, the
+      // q_hll_distinct stance: digest centroids are merge-order-sensitive
+      // within the published rank-error bound, so no SQL oracle can
+      // replay them; QuantileSketchSpec pins rank-error bands vs exact
+      // and shard-union-vs-one-shot agreement instead.
+      val sketches = graft.ops.QuantileSketch.buildSketches(
+        events(dir).withColumn("day", expr("ts_us DIV 86400000000")),
+        Seq("event_type", "day"), "value")
+      graft.ops.QuantileSketch.estimate(sketches, Seq("event_type"),
+        Seq(0.5, 0.9, 0.99))
+    },
+
+    Q("q_pca_variance", RowsOnly("q_pca_audit")) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // distributed PCA spectrum of the embedding corpus: one corpus scan
+      // for the d + d² sufficient statistics (map-side partials collapse
+      // each partition to ≤ d² rows pre-shuffle), O(d³) Jacobi eigen on
+      // the driver — legitimate because d is the embedding WIDTH, never a
+      // data dimension. Rows-only: no SQL engine replays an eigensolve;
+      // PcaSpec pins orthonormality, Cv=λv residuals vs a naive
+      // covariance, spectrum ordering, and projection equivalence.
+      graft.ops.Pca.varianceReport(
+        t(dir, "embeddings"), "embedding", k = 8)
+    },
+
+    Q("q_pca_incremental", RowsOnly("q_pca_audit")) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // the persisted suffstats asset: two half-corpus appends fold into
+      // an EpochStore epoch table (suffstats are a commutative monoid —
+      // element-wise sums), then the spectrum is read off the ONE-ROW
+      // asset with zero corpus scans. At 100 TB this is how the
+      // projection tracks a growing corpus: each batch pays one scan of
+      // ITSELF, fit time never re-reads the corpus. Rows-only for the
+      // q_pca_variance reason (no SQL engine replays an eigensolve);
+      // PcaSpec pins batch-folded == one-shot.
+      val emb = t(dir, "embeddings")
+      val tmp = tempDir("graft-pca-inc")
+      try {
+        val path = s"$tmp/stats"
+        graft.ops.Pca.appendStats(
+          emb.where(col("vec_id") % 2 === 0), "embedding", path)
+        graft.ops.Pca.appendStats(
+          emb.where(col("vec_id") % 2 === 1), "embedding", path)
+        // the report reads the asset eagerly and is rebuilt from driver
+        // arrays, so the epoch dirs can be reclaimed before returning —
+        // repeated gate runs must not accumulate orphaned temp assets
+        graft.ops.Pca.varianceReportFromStats(spark, path, k = 8)
+      } finally {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+        ()
+      }
+    },
+
+    Q("q_quantile_incremental", RowsOnly("q_quantile_incremental_audit")) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // incremental sketch-table maintenance: the distribution monitor is
+      // a persisted asset; a micro-batch folds its own per-cell digests in
+      // by cell-wise union (digests are a commutative monoid — incremental
+      // == one-shot within the rank-error band, spec-pinned). The batch
+      // touches only its cells; the corpus is never re-scanned. Rows-only
+      // for the q_quantile_sketch reason.
+      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
+      val maxSeq = ev.agg(max("event_id")).head.getLong(0)
+      val split = maxSeq * 9 / 10
+      val state = graft.ops.QuantileSketch.buildSketches(
+        ev.where(col("event_id") <= split), Seq("event_type", "day"), "value")
+      val batch = graft.ops.QuantileSketch.buildSketches(
+        ev.where(col("event_id") > split), Seq("event_type", "day"), "value")
+      graft.ops.QuantileSketch.estimate(
+        graft.ops.QuantileSketch.mergeSketchTables(state, batch,
+          Seq("event_type", "day")),
+        Seq("event_type"), Seq(0.5, 0.99))
+    },
+
+    Q("q_quantile_incremental_audit", Oracle(
+      // the incremental fold path's weight conservation + p50 rank band:
+      // same pure input functions as q_tdigest_audit, read off the MERGED
+      // state+batch digests
+      """SELECT event_type, CAST(count(value) AS BIGINT) AS n_obs,
+        |       TRUE AS in_band
+        |FROM events GROUP BY event_type""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // ORACLE-gated audit of the INCREMENTAL fold path above —
+      // q_tdigest_audit's contract applied to the maintained asset
+      // (completing the audit program: every rows-only family now has a
+      // hard-gate companion): per rollup cell, Σweights read OFF the
+      // state+batch MERGED digests must equal DuckDB's independent COUNT
+      // (mergeSketchTables conserves every observation's weight — a cell
+      // dropped, double-folded, or re-clustered lossily by the merge
+      // breaks the sum), and the merged p50 must lie in the cell's exact
+      // p40–p60 value band, pinned to the oracle's literal TRUE
+      val ev = events(dir).withColumn("day", expr("ts_us DIV 86400000000"))
+      val maxSeq = ev.agg(max("event_id")).head.getLong(0)
+      val split = maxSeq * 9 / 10
+      val state = graft.ops.QuantileSketch.buildSketches(
+        ev.where(col("event_id") <= split), Seq("event_type", "day"), "value")
+      val batch = graft.ops.QuantileSketch.buildSketches(
+        ev.where(col("event_id") > split), Seq("event_type", "day"), "value")
+      val merged = graft.ops.QuantileSketch.mergeSketchTables(state, batch,
+        Seq("event_type", "day"))
+      val nObs = merged.groupBy("event_type").agg(
+        expr("CAST(sum(aggregate(sketch.weights, 0D, (a, x) -> a + x)) AS BIGINT)")
+          .as("n_obs"))
+      val est = graft.ops.QuantileSketch.estimate(merged,
+        Seq("event_type"), Seq(0.5))
+      val bands = ev.groupBy("event_type").agg(
+        expr("percentile(value, 0.4)").as("__p40"),
+        expr("percentile(value, 0.6)").as("__p60"))
+      nObs.join(est.where(col("q") === 0.5), Seq("event_type"))
+        .join(bands, Seq("event_type"))
+        .select(col("event_type"), col("n_obs"),
+          (col("est") >= col("__p40") && col("est") <= col("__p60"))
+            .as("in_band"))
+    },
+
+    Q("q_pca_audit", Oracle(
+      // the PCA eigensolve's entire INPUT, recomputed independently: n,
+      // per-dim sums, and the full second-moment upper triangle (raw IEEE
+      // doubles — the 1e-6 gate tolerance absorbs summation-order ulps)
+      """WITH flat AS (
+        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+        |         unnest(embedding)::DOUBLE AS x
+        |  FROM embeddings),
+        |pairs AS (
+        |  SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS moment
+        |  FROM flat a JOIN flat b ON a.vec_id = b.vec_id AND b.i >= a.i
+        |  GROUP BY a.i, b.i),
+        |sums AS (SELECT i, sum(x) AS sum_i FROM flat GROUP BY i)
+        |SELECT CAST(p.i - 1 AS BIGINT) AS i, CAST(p.j - 1 AS BIGINT) AS j,
+        |       (SELECT count(*) FROM embeddings) AS n, s.sum_i, p.moment
+        |FROM pairs p JOIN sums s ON s.i = p.i""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      import s.implicits._
+      // ORACLE-gated audit of the PCA suffstats asset (the last rows-only
+      // family without a hard-gate companion): n, the per-dim sums, and
+      // the FULL second-moment upper triangle, read OFF the persisted
+      // incremental asset after two half-corpus appends (the deployed
+      // maintenance path — appendStats folded twice, not a fresh scan),
+      // must equal the pure input functions DuckDB recomputes from
+      // `embeddings`. n is integer-exact; sums and moments are raw IEEE
+      // doubles (never rounded — the gate's 1e-6 float tolerance absorbs
+      // summation-order ulps). The eigensolve stays rows-only
+      // (q_pca_variance); its entire INPUT is now in the hard gate.
+      // The asset builds ONCE per (session, dir) — pcaStatsFor — so the timed
+      // body is the deployment's per-run cost: the audit read.
+      val path = pcaStatsFor(dir)
+      val live = graft.ops.EpochStore.currentEpoch(spark, path)
+        .getOrElse(throw new IllegalStateException(s"no asset at $path"))
+      val r = spark.read.parquet(live).head()
+      val n = r.getAs[Long]("n")
+      val sums = r.getAs[scala.collection.Seq[Double]]("sums").toArray
+      val tri = r.getAs[scala.collection.Seq[Double]]("gram").toArray
+      val d = sums.length
+      // upper-triangle layout: (i,i) sits at i*d − i(i−1)/2, then j−i
+      val rows = for { i <- 0 until d; j <- i until d } yield
+        (i.toLong, j.toLong, n, sums(i), tri(i * d - i * (i - 1) / 2 + (j - i)))
+      rows.toDF("i", "j", "n", "sum_i", "moment")
+    },
+
+    Q("q_monitor_weights", Oracle(
+      // the monitor fold's conservation law: per-cell digest weight ==
+      // the cell's row count, exactly (estimates stay property-spec'd)
+      """SELECT lang, count(n_chars) AS n_obs FROM documents
+        |GROUP BY lang ORDER BY lang""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // the `monitor:` YAML block's core fold, oracle-checked EXACTLY:
+      // quantile ESTIMATES are rows-only by nature, but digest WEIGHTS
+      // are exact — every observation adds 1.0 and both the clustering
+      // pass and the cell-wise union SUM weights (integer-valued doubles,
+      // exact to 2^53) — so the per-cell observation count after an
+      // incremental two-batch fold must equal a plain GROUP BY count.
+      // This pins the monitor's maintenance arithmetic (fold never drops
+      // or double-counts a cell's rows) in the DuckDB gate, leaving only
+      // the estimate interpolation to the property specs.
+      val d = t(dir, "documents")
+      val a = graft.ops.QuantileSketch.buildSketches(
+        d.where(col("doc_id") % 2 === 0), Seq("lang"), "n_chars")
+      val b = graft.ops.QuantileSketch.buildSketches(
+        d.where(col("doc_id") % 2 === 1), Seq("lang"), "n_chars")
+      graft.ops.QuantileSketch.mergeSketchTables(a, b, Seq("lang"))
+        .select(col("lang"),
+          expr("CAST(aggregate(sketch.weights, 0D, (x, y) -> x + y) AS BIGINT)")
+            .as("n_obs"))
+        .orderBy("lang")
+    },
+
+    Q("q_grouping_sets", Oracle(
       """SELECT event_type, epoch_us(ts) // 86400000000 AS day, count(*) AS cnt,
         |  CAST(grouping(event_type) * 2
         |       + grouping(epoch_us(ts) // 86400000000) AS BIGINT) AS gid
         |FROM events
         |GROUP BY GROUPING SETS ((event_type, epoch_us(ts) // 86400000000), (event_type), ())""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // explicit GROUPING SETS (the general form behind q_cube/q_rollup)
+      // with grouping_id disambiguating the null-as-total rows — one
+      // shuffle, each set an integer-exact rollup
+      events(dir).createOrReplaceTempView("ev_gs")
+      spark.sql(
+        """SELECT event_type, ts_us DIV 86400000000 AS day, count(*) AS cnt,
+          |  CAST(grouping(event_type) * 2
+          |       + grouping(ts_us DIV 86400000000) AS BIGINT) AS gid
+          |FROM ev_gs
+          |GROUP BY GROUPING SETS ((event_type, ts_us DIV 86400000000), (event_type), ())""".stripMargin)
+    },
 
-    "q_monitor_weights" ->
-      // the monitor fold's conservation law: per-cell digest weight ==
-      // the cell's row count, exactly (estimates stay property-spec'd)
-      """SELECT lang, count(n_chars) AS n_obs FROM documents
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_histogram" ->
+    Q("q_histogram", Oracle(
       """WITH mm AS (SELECT min(value) AS vmin, max(value) AS vmax FROM events)
         |SELECT event_type,
         |       least(19, CAST(floor((value - vmin) / ((vmax - vmin) / 20.0)) AS BIGINT)) AS bucket,
         |       count(*) AS cnt
         |FROM events, mm
         |GROUP BY 1, 2""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // equi-width histogram: global [min, max] from one scalar agg
+      // (2 doubles to the driver-free 1-row broadcast), bucket index as a
+      // pinned double expression — floor((v−min)/width) is bit-identical
+      // in both engines given identical parenthesization; the top edge
+      // clamps into the last bucket
+      val ev = events(dir)
+      val mm = ev.agg(min("value").as("vmin"), max("value").as("vmax"))
+      ev.join(broadcast(mm))
+        .selectExpr("event_type",
+          "least(19L, CAST(floor((value - vmin) / ((vmax - vmin) / 20.0)) AS BIGINT)) AS bucket")
+        .groupBy("event_type", "bucket")
+        .agg(count(lit(1)).as("cnt"))
+    },
 
-    "q_first_touch" ->
+    Q("q_first_touch", Oracle(
       """WITH ft AS (
         |  SELECT user_id, event_type AS first_type FROM (
         |    SELECT user_id, event_type,
@@ -5683,8 +5485,28 @@ object SparkEntry {
         |  WHERE event_type = 'purchase' GROUP BY 1)
         |SELECT p.user_id, ft.first_type, p.purchases
         |FROM p JOIN ft USING (user_id)""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // first-touch attribution: each user's purchases attributed to the
+      // user's FIRST-ever event type — one min_by per user (map-side
+      // combined, no sort), joined back onto the purchase rollup. Both
+      // join inputs are per-user aggregates whose cardinality grows with
+      // the corpus, so NO broadcast hint: both sides already carry
+      // hashpartitioning(user_id) from their aggregations, making the
+      // join a zero-exchange sort-merge at scale, and AQE still converts
+      // to broadcast when the stats say one side is small.
+      val ev = events(dir)
+      val firstTouch = ev.groupBy("user_id")
+        .agg(min_by(col("event_type"),
+          struct(col("ts_us"), col("event_id"))).as("first_type"))
+      ev.where(col("event_type") === "purchase")
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("purchases"))
+        .join(firstTouch, "user_id")
+        .select(col("user_id"), col("first_type"), col("purchases"))
+    },
 
-    "q_winsorize" ->
+    Q("q_winsorize", Oracle(
       """WITH bounds AS (
         |  SELECT event_type,
         |         quantile_cont(value, 0.05) AS p05,
@@ -5693,8 +5515,24 @@ object SparkEntry {
         |SELECT event_id, e.event_type, value,
         |       greatest(p05, least(p95, value)) AS value_w
         |FROM events e JOIN bounds b ON e.event_type = b.event_type""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // robust feature clamping (winsorization) for quality/score columns:
+      // per-type exact p05/p95 (one bounded agg, broadcast back — the
+      // Anomaly stats shape), values clamped into the band as a narrow
+      // codegen projection. Interpolated percentiles of the raw doubles
+      // are the same type-7 definition in both engines, and clamp output
+      // is either the original double or the percentile — both bit-exact.
+      val ev = events(dir)
+      val bounds = ev.groupBy("event_type")
+        .agg(expr("percentile(value, 0.05)").as("p05"),
+          expr("percentile(value, 0.95)").as("p95"))
+      ev.join(broadcast(bounds), "event_type")
+        .select(col("event_id"), col("event_type"), col("value"),
+          greatest(col("p05"), least(col("p95"), col("value"))).as("value_w"))
+    },
 
-    "q_corr_features" ->
+    Q("q_corr_features", Oracle(
       """WITH stats AS (
         |  SELECT event_type,
         |    count(*) AS n,
@@ -5713,8 +5551,35 @@ object SparkEntry {
         |     * sqrt(CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
         |  AS r
         |FROM stats""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // Pearson correlation between value and hour-of-day per event type,
+      // the exact-sums-then-formula discipline: the five sufficient
+      // statistics are DECIMAL/BIGINT sums (order-free, exact), and the
+      // final r is ONE pinned double expression over them — never a
+      // running double aggregation (Spark's corr() and DuckDB's disagree
+      // at the ULP because their update orders differ; sufficient
+      // statistics cannot).
+      events(dir)
+        .select(col("event_type"),
+          col("value").as("x"),
+          expr("CAST((ts_us % 86400000000) DIV 3600000000 AS BIGINT)").as("y"))
+        .groupBy("event_type")
+        .agg(
+          count(lit(1)).as("n"),
+          sum(col("x").cast("decimal(24,6)")).as("sx"),
+          sum(col("y")).as("sy"),
+          sum((col("x") * col("y")).cast("decimal(24,6)")).as("sxy"),
+          sum((col("x") * col("x")).cast("decimal(24,6)")).as("sx2"),
+          sum(col("y") * col("y")).as("sy2"))
+        .selectExpr("event_type", "n",
+          """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+            | / (sqrt(CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+            |    * sqrt(CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+            | AS r""".stripMargin)
+    },
 
-    "q_anomaly_mad" ->
+    Q("q_anomaly_mad", Oracle(
       """WITH series AS (
         |  SELECT event_type, epoch_us(ts) // 3600000000 AS hour_bucket,
         |         count(*) AS cnt
@@ -5732,229 +5597,181 @@ object SparkEntry {
         |SELECT d.event_type, d.hour_bucket, d.cnt, d.med, m.mad,
         |       d.adev > 3.0 * m.mad AS is_outlier
         |FROM dev d JOIN mad m USING (event_type)""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // robust ingest-monitoring alarm: hourly event counts per type,
+      // flagged by the median/MAD (Hampel) rule — the series is already
+      // bucket-aggregated (types × hours, NOT corpus-sized) and both
+      // stats passes reduce to one row per type and join back broadcast.
+      // Every decision value is an exact dyadic rational (integer counts →
+      // interpolated medians are averages of integers), so the flag is
+      // bit-identical in both engines.
+      val series = events(dir)
+        .groupBy(col("event_type"), expr("ts_us DIV 3600000000").as("hour_bucket"))
+        .agg(count(lit(1)).as("cnt"))
+      graft.ops.Anomaly.madOutliers(series, Seq("event_type"), "cnt", k = 3.0)
+        .select(col("event_type"), col("hour_bucket"), col("cnt"),
+          col("med"), col("mad"), col("is_outlier"))
+    },
 
-    "q_stream_sessions_state" ->
-      """WITH tagged AS (
-        |  SELECT user_id, epoch_us(ts) AS ts,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts))
-        |), numbered AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM tagged)
-        |SELECT user_id, count(*) AS n_events,
-        |       MIN(ts) AS session_start, MAX(ts) AS session_end
-        |FROM numbered GROUP BY user_id, session_idx""".stripMargin,
+    Q("q_watermark_lateness", Oracle(graft.OracleHashSql.watermarkLateness)) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // event-time disorder profile — the decision table that PICKS a
+      // watermark delay instead of guessing one: arrival order modeled as
+      // event time + a deterministic 0–2 h xxhash64 jitter (the testdata
+      // feed arrives perfectly sorted, so the jitter plants a KNOWN
+      // bounded disorder both engines reproduce bit-exactly); the
+      // event-time frontier is a two-phase distributed prefix max — never
+      // a single-partition global window — and the lateness histogram
+      // reads directly as completeness-vs-delay candidates.
+      val arr = events(dir).withColumn("arr",
+        col("ts_us") + pmod(xxhash64(col("event_id")), lit(7200000000L)))
+      graft.operators.Lateness.profile(arr, "arr", col("ts_us"),
+        boundsUs = Seq(0L, 60000000L, 600000000L, 1800000000L, 3600000000L),
+        tieBreak = Seq("event_id"))
+    },
 
-    "q_sessionize" ->
-      """WITH tagged AS (
-        |  SELECT user_id, epoch_us(ts) AS ts,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts))
-        |), numbered AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM tagged)
-        |SELECT user_id, session_idx, count(*) AS n_events,
-        |       MIN(ts) AS session_start, MAX(ts) AS session_end
-        |FROM numbered GROUP BY user_id, session_idx""".stripMargin,
+    Q("q_stream_temporal_join", Oracle(
+      """WITH ch AS (
+        |  SELECT user_id, event_type, value,
+        |    CASE WHEN event_type = 'error' THEN 'DELETE' ELSE 'REPLACE' END AS op,
+        |    event_id AS seq
+        |  FROM events),
+        |iv AS (
+        |  SELECT user_id, event_type, value, op, seq AS valid_from,
+        |    lead(seq) OVER (PARTITION BY user_id ORDER BY seq) AS valid_to
+        |  FROM ch),
+        |hist AS (
+        |  SELECT user_id, event_type, value, valid_from, valid_to
+        |  FROM iv WHERE op <> 'DELETE'),
+        |probes AS (
+        |  SELECT user_id, seq AS probe_seq FROM ch WHERE event_type = 'purchase')
+        |SELECT p.user_id, p.probe_seq,
+        |       h.event_type AS prev_type, h.value AS prev_value
+        |FROM probes p LEFT JOIN hist h
+        |  ON p.user_id = h.user_id AND h.valid_from <= p.probe_seq - 1
+        | AND (h.valid_to IS NULL OR h.valid_to > p.probe_seq - 1)""".stripMargin,
+    ), launchBound = true) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      import graft.streaming.StreamingNative
+      // the STREAMING face of the temporal table join: each micro-batch
+      // of purchase probes enriches against the (static, versioned) SCD2
+      // history at the probe's OWN seq−1 — stateless per batch like
+      // q_stream_enrich, but against interval-versioned state instead of
+      // a flat dimension. Completes the streaming join matrix: interval,
+      // outer, windowed-agg, static-enrich, temporal.
+      val ch = eventsChangelog(spark, dir)
+      val hist = Changelog.history(ch, Seq("user_id")).localCheckpoint()
+      val base = tempDir("graft-stj")
+      val in = s"$base/in"
+      ch.where(col("event_type") === "purchase")
+        .select(col("user_id"), col(Changelog.SeqCol).as("probe_seq"))
+        .write.parquet(in)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("probe_seq", org.apache.spark.sql.types.LongType)))
+      StreamingNative.fileStreamRuns(spark, in, schema, s"$base/out", s"$base/cp",
+        Seq.empty) { stream =>
+        Changelog.temporalJoin(stream, hist, Seq("user_id"), col("probe_seq") - 1)
+          .select(col("user_id"), col("probe_seq"),
+            col("event_type").as("prev_type"), col("value").as("prev_value"))
+      }
+    },
 
-    "q_percentile" ->
+    Q("q_percentile", Oracle(
       """SELECT event_type,
         |  ROUND(quantile_cont(value, 0.5), 4) AS p50,
         |  ROUND(quantile_cont(value, 0.95), 4) AS p95,
         |  count(*) AS cnt
         |FROM events GROUP BY event_type""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // exact interpolated percentiles (type-7, same definition as DuckDB
+      // quantile_cont). Scale path: approx_percentile (t-digest-style
+      // mergeable sketch) — exact percentile sorts per group
+      t(dir, "events")
+        .groupBy("event_type")
+        .agg(round(expr("percentile(value, 0.5)"), 4).as("p50"),
+          round(expr("percentile(value, 0.95)"), 4).as("p95"),
+          count(lit(1)).as("cnt"))
+    },
 
-    "q_window_sliding" ->
+    Q("q_window_sliding", Oracle(
       """WITH e AS (SELECT event_type, value, epoch_us(ts) AS tus FROM events),
         |w AS (SELECT event_type, value,
         |        (tus // 3600000000 - i) * 3600000000 AS wstart
         |      FROM e, (SELECT unnest([0, 1]) AS i))
         |SELECT wstart, event_type, count(*) AS cnt, ROUND(SUM(value), 2) AS sum_value
         |FROM w GROUP BY wstart, event_type""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // sliding event-time windows (2h width, 1h slide): every event lands
+      // in exactly two epoch-aligned windows — Spark's native window()
+      events(dir)
+        .selectExpr("timestamp_micros(ts_us) AS tts", "event_type", "value")
+        .groupBy(window(col("tts"), "2 hours", "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"))
+        .select(unix_micros(col("window.start")).as("wstart"),
+          col("event_type"), col("cnt"), col("sum_value"))
+    },
 
-    "q_corpus_pipeline" -> corpusPipelineOracleSql,
+    Q("q_corpus_pipeline", Oracle(corpusPipelineOracleSql)) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // the composed training-data flow: exact-dedup survivors → quality
+      // gate → per-language corpus stats. Window-based survivor selection:
+      // ONE scan, one shuffle, no self-join back to the corpus.
+      val docs = t(dir, "documents")
+      Dedup.exactSurvivors(docs, "doc_id", TextAnalysis.fingerprint(col("text")))
+        .select(col("doc_id"),
+          TextAnalysis.langId(col("text")).as("lang_pred"),
+          TextAnalysis.tokenCount(col("text")).as("n_words"),
+          TextAnalysis.subwordCount(col("text")).as("n_subwords"))
+        .where(col("n_words") >= 10 && col("lang_pred") =!= "und")
+        .groupBy("lang_pred")
+        .agg(count(lit(1)).as("docs"),
+          sum(col("n_words").cast("long")).as("total_words"),
+          sum(col("n_subwords").cast("long")).as("total_subwords"))
+    },
 
-    "q_rollup" ->
+    Q("q_rollup", Oracle(
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt, ROUND(SUM(l_quantity), 2) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // grouping-sets family (absent in reference, native in Spark)
+      t(dir, "lineitem")
+        .rollup("l_returnflag", "l_linestatus")
+        .agg(count(lit(1)).as("cnt"), round(sum("l_quantity"), 2).as("sum_qty"))
+    },
 
-    "q_topn" ->
+    Q("q_topn", Oracle(
       """SELECT o_orderkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // top-k with deterministic tiebreak: plans as TakeOrderedAndProject
+      // (per-partition heaps, no global sort)
+      t(dir, "orders")
+        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+        .limit(100)
+        .select("o_orderkey", "o_totalprice")
+    },
 
-    "q_setops" ->
+    Q("q_setops", Oracle(
       """SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'
         |EXCEPT
         |SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin,
-
-    "q_pack_windows" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n
-        |  FROM documents),
-        |offs AS (
-        |  SELECT doc_id, n,
-        |    sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n AS start
-        |  FROM toks)
-        |SELECT doc_id, n AS n_tokens, CAST(start AS BIGINT) AS start,
-        |  CAST(start // 512 AS BIGINT) AS first_window,
-        |  CAST((start + n - 1) // 512 AS BIGINT) AS last_window,
-        |  CAST(start % 512 AS BIGINT) AS offset_in_window
-        |FROM offs WHERE n > 0""".stripMargin,
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-        |       ROUND(SUM(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT user_id,
-        |  ROUND(SUM(value) FILTER (event_type = 'click'), 2) AS click,
-        |  ROUND(SUM(value) FILTER (event_type = 'view'), 2) AS view,
-        |  ROUND(SUM(value) FILTER (event_type = 'purchase'), 2) AS purchase,
-        |  ROUND(SUM(value) FILTER (event_type = 'signup'), 2) AS signup,
-        |  ROUND(SUM(value) FILTER (event_type = 'error'), 2) AS error
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "q_unpivot" ->
-      """WITH u AS (
-        |  SELECT c_custkey, 'acctbal' AS measure, c_acctbal AS value FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, 'nationkey', CAST(c_nationkey AS DOUBLE) FROM customer)
-        |SELECT measure, count(*) AS n, round(sum(value), 2) AS total
-        |FROM u GROUP BY measure""".stripMargin,
-
-    "q_route_replace" ->
-      """SELECT event_id,
-        |  CASE WHEN user_id % 2 = 0 THEN 'ods.events_even'
-        |       ELSE 'ods.events_odd' END AS routed_to
-        |FROM events""".stripMargin,
-
-    "q_startup_timestamp" ->
-      """SELECT user_id, event_type, value FROM (
-        |  SELECT user_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |  FROM events WHERE event_id >= 500) WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    "q_functions_null" ->
-      """SELECT c_custkey,
-        |  coalesce(nullif(c_mktsegment, 'BUILDING') = 'MACHINERY', false) AS eq_null_lit,
-        |  coalesce(nullif(c_mktsegment, c_mktsegment)
-        |           = nullif(c_mktsegment, c_mktsegment), false) AS eq_both_null,
-        |  coalesce(c_mktsegment = 'BUILDING', false) AS eq_plain
-        |FROM customer""".stripMargin,
-
-    "q_split" ->
-      """SELECT doc_id,
-        |  CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd' THEN 'train'
-        |       WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q_jsonl_read" ->
-      "SELECT doc_id, lang, n_chars FROM documents WHERE n_chars >= 200",
-
-    "q_orc_read" ->
-      "SELECT doc_id, lang, n_chars FROM documents WHERE n_chars >= 200",
-
-    "q_csv_read" ->
-      """SELECT event_id, user_id, value FROM events
-        |WHERE event_type = 'purchase' AND value > 100.0""".stripMargin,
-
-    "q_split_grouped" ->
-      """SELECT doc_id, source,
-        |  CASE WHEN substring(md5(source), 1, 4) < 'cccd' THEN 'train'
-        |       WHEN substring(md5(source), 1, 4) < 'e666' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q_split_leakfree" -> OracleHashSql.splitLeakfree,
-
-    // hash-math oracles (full SQL re-implementations of the 64-bit hash
-    // pipelines — FNV-1a/splitmix64/xxhash64 in UBIGINT+HUGEINT arithmetic)
-    "q_decontaminate" -> OracleHashSql.decontaminate,
-    "q_decontaminate_bloom" -> OracleHashSql.decontaminateBloom,
-    "q_shuffle_deterministic" -> OracleHashSql.shuffleDeterministic,
-    "q_dedup_minhash" -> OracleHashSql.dedupMinhash,
-    "q_text_topk" -> OracleHashSql.textTopk,
-    "q_vocab_sketch" -> OracleHashSql.vocabSketch,
-
-    "q_heavy_hitters" ->
-      """SELECT w AS word, count(*) AS cnt FROM (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-        |                            x -> x <> '')) AS w
-        |  FROM documents)
-        |GROUP BY w HAVING count(*) >= 300""".stripMargin,
-    "q_dedup_incremental" -> OracleHashSql.dedupIncremental,
-    "q_dedup_incremental_probe" -> OracleHashSql.dedupIncremental,
-    "q_dedup_clusters" -> OracleHashSql.dedupClusters,
-    "q_dedup_simhash" -> OracleHashSql.dedupSimhash,
-    "q_dedup_ngram" -> OracleHashSql.dedupNgram,
-    "q_dedup_embedding" -> OracleHashSql.dedupEmbedding,
-
-    "q_semdedup" -> OracleHashSql.semdedupSurvivors,
-    "q_embed_lsh_topk" -> OracleHashSql.embedLshTopk,
-    "q_embed_ivf_topk" -> OracleHashSql.embedIvfTopk,
-    "q_knn_join" -> OracleHashSql.knnJoin,
-    "q_knn_join_indexed" -> OracleHashSql.knnJoin,
-    "q_retrieval_eval" -> OracleHashSql.retrievalEval,
-    "q_recall_curve" -> OracleHashSql.recallCurve,
-    "q_hard_negatives" -> OracleHashSql.hardNegatives,
-    "q_embed_sq8_topk" -> OracleHashSql.embedSq8Topk,
-    "q_embed_project_topk" -> OracleHashSql.embedProjectTopk,
-    "q_embed_pq_topk" -> OracleHashSql.embedPqTopk,
-    "q_cluster_balance" -> OracleHashSql.clusterBalance,
-    "q_embed_ivfsq_topk" -> OracleHashSql.embedIvfSq8Topk,
-    "q_embed_ivfsq_incremental" -> OracleHashSql.embedIvfSq8Incremental,
-    "q_chunk_embed_topk" -> OracleHashSql.chunkEmbedTopk,
-    "q_dsir_select" -> OracleHashSql.dsirSelect,
-    "q_lm_head" -> OracleHashSql.lmHead,
-    "q_quality_model" -> OracleHashSql.qualityModel,
-    "q_zorder_layout" -> OracleHashSql.zorderLayout,
-
-    "q_chunk_text" ->
-      """WITH base AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\r]+') AS tk
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |nc AS (
-        |  SELECT doc_id, tk,
-        |         CASE WHEN len(tk) <= 8 THEN 1
-        |              ELSE (len(tk) - 8 + 31) // 32 END AS nchunks
-        |  FROM base),
-        |ex AS (
-        |  SELECT doc_id, tk, unnest(generate_series(0, nchunks - 1)) AS chunk_ix
-        |  FROM nc)
-        |SELECT doc_id, chunk_ix,
-        |       array_to_string(tk[chunk_ix*32 + 1 : chunk_ix*32 + 40], ' ') AS chunk
-        |FROM ex""".stripMargin,
-
-    // raw (log-free) idf: tf·N exact integer, one correctly-rounded division
-    // — bit-identical ranking in every IEEE engine (ln is not)
-    "q_tfidf_terms" ->
-      """WITH tfc AS (
-        |  SELECT doc_id, tok, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+', 0)) AS tok
-        |    FROM documents) GROUP BY doc_id, tok),
-        |dfq AS (
-        |  SELECT tok, count(*) AS df FROM (
-        |    SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '[a-z]+', 0))) AS tok
-        |    FROM documents) GROUP BY tok),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |ranked AS (
-        |  SELECT t.doc_id, t.tok AS term,
-        |         row_number() OVER (PARTITION BY t.doc_id ORDER BY
-        |           CAST(t.tf * n.n AS DOUBLE) / CAST(d.df AS DOUBLE) DESC, t.tok) AS rnk
-        |  FROM tfc t JOIN dfq d USING (tok), n)
-        |SELECT doc_id, term, rnk FROM ranked WHERE rnk <= 3""".stripMargin,
-    "q_multimodal_decode" -> OracleHashSql.multimodalDecode
-  )
+    )) { (spark, dir) =>
+      implicit val s: SparkSession = spark
+      // set operators (absent in reference): BUILDING customers that never
+      // placed an urgent order
+      val building = t(dir, "customer").where(col("c_mktsegment") === "BUILDING")
+        .select(col("c_custkey").as("k"))
+      val urgent = t(dir, "orders").where(col("o_orderpriority") === "1-URGENT")
+        .select(col("o_custkey").as("k"))
+      building.except(urgent)
+    }
+  ))
 
   /** The langId cascade as a DuckDB CASE expression (RE2 dialect: `\x{...}`
     * unicode escapes instead of Java's `\uXXXX`); `$cols` must be a subquery

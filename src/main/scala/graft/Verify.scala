@@ -1,6 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+import graft.Bench.jstr
+/** Driver-run correctness dump: each SparkEntry.catalog result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -12,10 +13,11 @@ object Verify {
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // ONE filtered collection: the dump loop and the summary line's count
     // must not re-derive the predicate separately and drift
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => filters.isEmpty || filters.exists(name.contains) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val selected = SparkEntry.catalog
+      .filter(q => filters.isEmpty || filters.exists(q.name.contains))
+    for (q <- selected) {
+      val name = q.name
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -23,27 +25,17 @@ object Verify {
           String.valueOf(e.getMessage)).take(300)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // RowsOnly entries get no key: check_oracle.py then checks rows > 0
+    val json = SparkEntry.catalog
+      .collect { case SparkEntry.Q(name, SparkEntry.Oracle(sql), _) => name -> sql }.toMap
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // durable per-query failure record: a query that dies in analysis is
     // otherwise ABSENT from the dump, and a downstream correctness report
     // built from present dirs alone silently shrinks its denominator
     // (exactly the round-9 artifact defect). Empty object when clean.
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      failures.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}"))
     // compact self-describing summary as the LAST stdout line — the
     // driver's artifact capture keeps only the stdout tail (see
     // Bench.summaryLine); per-query detail stays in the outDir files.

@@ -46,22 +46,16 @@ object Changelog {
     * 10k updates ships once per task — this is what makes it survive 100 TB
     * changelogs with skewed keys).
     */
-  def materialize(changelog: DataFrame, pkCols: Seq[String]): DataFrame = {
-    val payloadCols = changelog.columns.filterNot(c => c == OpCol || c == SeqCol || pkCols.contains(c))
-    val latest = changelog
-      .groupBy(pkCols.map(col): _*)
-      .agg(max_by(struct((payloadCols.map(col) :+ col(OpCol)).toSeq: _*), col(SeqCol)).as("__last"))
-    latest
-      .where(col(s"__last.$OpCol") =!= "DELETE")
-      .select((pkCols.map(col) ++ payloadCols.map(c => col(s"__last.$c").as(c))).toSeq: _*)
-  }
+  def materialize(changelog: DataFrame, pkCols: Seq[String]): DataFrame =
+    lastImage(changelog, pkCols).where(col(OpCol) =!= "DELETE").drop(OpCol)
 
   /** Per-PK last event INCLUDING delete markers — the reduced frame a
     * MERGE-shaped sink feeds its WHEN MATCHED / NOT MATCHED branches
     * (MERGE requires unique source keys, so the within-batch reduction is
-    * mandatory, not an optimization). Same one-hash-aggregation shape as
-    * [[materialize]]; only the DELETE filter differs — the sink's DELETE
-    * branch needs the marker row.
+    * mandatory, not an optimization). The one last-image kernel:
+    * [[materialize]] is this plus the DELETE filter (Catalyst pushes it
+    * below the projection, onto the aggregate) — the sink's DELETE branch
+    * needs the marker row.
     */
   def lastImage(changelog: DataFrame, pkCols: Seq[String]): DataFrame = {
     val payloadCols = changelog.columns.filterNot(c => c == OpCol || c == SeqCol || pkCols.contains(c))

@@ -116,8 +116,6 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
   // concurrent per-table writes are fine; same-table writes must serialize
   // (N→1 routes can hit one sink table from several sources in a batch)
   private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  // resolved bucket count per table path (meta file wins over the constructor)
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   def tablePath(id: TableId): String =
     s"$rootDir/${Seq(id.namespace, id.schemaName, id.tableName).filter(_.nonEmpty).mkString("__")}"
@@ -126,12 +124,14 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
 
   private def layoutPath(path: String) = new Path(path + ".layout")
 
-  /** Bucket count this table's state is laid out with: the `.layout` meta
-    * file when present (the on-disk layout is ground truth — a writer whose
-    * constant disagrees would prune state reads with the wrong modulus and
-    * lose rows), else the constructor's value, deriving it from the first
-    * batch when that is [[AutoBuckets]]. Cached per table; the meta read is
-    * one small-file open on the table's first write in this JVM.
+  /** Bucket count this table's state is laid out with, and whether the
+    * `.layout` meta file holds it: the meta when present (the on-disk layout
+    * is ground truth — a writer whose constant disagrees would prune state
+    * reads with the wrong modulus and lose rows), else the constructor's
+    * value, deriving it from the first batch when that is [[AutoBuckets]].
+    * Read on every write, one `exists` and one small-file open: a table
+    * truncated and re-derived by another writer must never be pruned with a
+    * modulus remembered from before.
     *
     * The derivation is `max(defaultParallelism, ceil(rows / rowsPerBucket))`:
     * the floor keeps one write task per core however small the first batch
@@ -139,39 +139,35 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     * the target size band once the table outgrows the floor.
     */
   private def effectiveBuckets(spark: SparkSession, fs: FileSystem, path: String,
-                               existing: Set[Int], incoming: DataFrame): Int =
-    layoutCache.computeIfAbsent(path, _ => {
-      val lp = layoutPath(path)
-      if (fs.exists(lp)) {
-        val in = fs.open(lp)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
-      } else if (buckets == AutoBuckets) {
-        // never guess the modulus of existing buckets: name the setting that reads them
-        require(existing.isEmpty,
-          s"bucketed state at $path has no layout meta: it predates the persisted " +
-            "layout and was written with the old default of 32 buckets; set " +
-            "`buckets: 32` (or the count it was written with) to keep using it")
-        val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
-        val rows = incoming.count() // first write only; fills the batch cache
-        val derived = (rows + target - 1) / target
-        math.min(MaxDerivedBuckets.toLong,
-          math.max(spark.sparkContext.defaultParallelism.toLong, derived)).toInt
-      } else buckets
-    }: Integer)
+                               existing: Set[Int], incoming: DataFrame): (Int, Boolean) = {
+    val lp = layoutPath(path)
+    if (fs.exists(lp)) {
+      val in = fs.open(lp)
+      try (scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt, true)
+      finally in.close()
+    } else if (buckets == AutoBuckets) {
+      // never guess the modulus of existing buckets: name the setting that reads them
+      require(existing.isEmpty,
+        s"bucketed state at $path has no layout meta: it predates the persisted " +
+          "layout and was written with the old default of 32 buckets; set " +
+          "`buckets: 32` (or the count it was written with) to keep using it")
+      val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
+      val rows = incoming.count() // first write only; fills the batch cache
+      val derived = (rows + target - 1) / target
+      (math.min(MaxDerivedBuckets.toLong,
+        math.max(spark.sparkContext.defaultParallelism.toLong, derived)).toInt, false)
+    } else (buckets, false)
+  }
 
   /** Persist the resolved bucket count next to the state dir (sibling file:
     * it must survive the per-bucket swaps and the DDL rewrite of the dir).
     * Written aside and renamed in, so a crash mid-write leaves no torn meta.
     */
-  private def writeLayoutIfAbsent(fs: FileSystem, path: String, m: Int): Unit = {
-    val lp = layoutPath(path)
-    if (!fs.exists(lp)) {
-      val aside = new Path(path + ".layout.tmp")
-      val out = fs.create(aside, true)
-      try out.write(m.toString.getBytes("UTF-8")) finally out.close()
-      renameOrThrow(fs, aside, lp)
-    }
+  private def writeLayout(fs: FileSystem, path: String, m: Int): Unit = {
+    val aside = new Path(path + ".layout.tmp")
+    val out = fs.create(aside, true)
+    try out.write(m.toString.getBytes("UTF-8")) finally out.close()
+    renameOrThrow(fs, aside, layoutPath(path))
   }
 
   private def withBucket(df: DataFrame, pks: Seq[String], m: Int): DataFrame =
@@ -259,8 +255,6 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
       // must find nothing to bring rows back from
       Seq(".tmp", ".old", "", ".layout", ".layout.tmp").foreach(sfx =>
         fs.delete(new Path(path + sfx), true))
-      // a recreated table derives a fresh layout from its new first batch
-      layoutCache.remove(path)
       ()
     }
 
@@ -349,7 +343,7 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     val cols = schema.columnNames.map(col)
     val inc = changelog.select(cols :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*).cache()
     try {
-      val m = effectiveBuckets(spark, fs, path, existing, inc)
+      val (m, persisted) = effectiveBuckets(spark, fs, path, existing, inc)
       val bucketed = withBucket(inc, schema.primaryKeys, m)
       val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
       val stateBuckets = touched.filter(existing)
@@ -369,7 +363,7 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
         .write.mode("overwrite").partitionBy(BucketCol).parquet(path + ".tmp")
       // the meta goes first: it is a sibling file, so no crash point leaves a
       // state dir without it
-      writeLayoutIfAbsent(fs, path, m)
+      if (!persisted) writeLayout(fs, path, m)
       commit(fs, path, existing, touched)
     } finally { inc.unpersist(); () }
   }

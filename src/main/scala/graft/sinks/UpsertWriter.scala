@@ -5,7 +5,7 @@ import java.sql.Connection
 import graft.model.{CdcSchema, TableId}
 import graft.operators.Changelog
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Executor-side JDBC upsert writer — the Spark shape of the reference's
   * `DsqlBatchSinkFunction` (SURVEY.md §2.2): used from
@@ -183,11 +183,7 @@ final class UpsertWriter(
     val cols = schema.columnNames
 
     // last image per key, computed distributed (one shuffle, no sort)
-    val payloadCols = batch.columns.filterNot(c => c == Changelog.OpCol || c == Changelog.SeqCol || pks.contains(c))
-    val latest = batch
-      .groupBy(pks.map(col): _*)
-      .agg(max_by(struct((payloadCols.map(col) :+ col(Changelog.OpCol)).toSeq: _*), col(Changelog.SeqCol)).as("__last"))
-      .select((pks.map(col) ++ payloadCols.map(c => col(s"__last.$c").as(c)) :+ col(s"__last.${Changelog.OpCol}").as(Changelog.OpCol)).toSeq: _*)
+    val latest = Changelog.lastImage(batch, pks)
 
     val upsertSql = UpsertSql.insertOnConflict(id, schema)
     val deleteSql = UpsertSql.delete(id, schema)

@@ -125,7 +125,7 @@ class BenchAdjudicateSpec extends AnyFunSuite {
     val line = """{"metric":"total","value":1.2,"queries":{"a":0.1},"cpu_kernel_sec":0.1234,"run_seq":17,"sf":"x"}"""
     val rolled = Bench.rollLine(line, 17L)
     assert(rolled.endsWith(""","rolled_from":17}"""))
-    val p = java.nio.file.Files.createTempFile("bench-prev-prov", ".json")
+    val p = java.nio.file.Paths.get(SparkEntry.tempDir("graft-bench-prev"), "bench-prev-prov.json")
     java.nio.file.Files.writeString(p, rolled + "\n")
     assert(Bench.loadPrevField(p, "cpu_kernel_sec").contains(0.1234))
     assert(Bench.loadPrevField(p, "rolled_from").contains(17.0))
@@ -142,7 +142,7 @@ class BenchAdjudicateSpec extends AnyFunSuite {
     // substring — the old indexOf scan parsed whichever came first
     val line = """{"metric":"total","sf":"note \"cpu_kernel_sec\":99 here",""" +
       """"queries":{"cpu_kernel_sec":7.0,"q1":0.1},"cpu_kernel_sec":0.05,"run_seq":3}"""
-    val p = java.nio.file.Files.createTempFile("bench-prev-shadow", ".json")
+    val p = java.nio.file.Paths.get(SparkEntry.tempDir("graft-bench-prev"), "bench-prev-shadow.json")
     java.nio.file.Files.writeString(p, line + "\n")
     assert(Bench.loadPrevField(p, "cpu_kernel_sec").contains(0.05))
     assert(Bench.loadPrevField(p, "run_seq").contains(3.0))
@@ -332,7 +332,7 @@ class BenchAdjudicateSpec extends AnyFunSuite {
   }
 
   test("loadPrevMedians parses a persisted record line and tolerates absence") {
-    val p = java.nio.file.Files.createTempFile("bench-prev", ".json")
+    val p = java.nio.file.Paths.get(SparkEntry.tempDir("graft-bench-prev"), "bench-prev.json")
     java.nio.file.Files.writeString(p,
       """{"metric":"total","value":1.2,"unit":"sec","queries":{"q1_agg":0.475,"q_topn":0.13},"query_bands":{"q1_agg":[0.4,0.475,0.5]},"sf":"x"}""")
     val m = Bench.loadPrevMedians(p)

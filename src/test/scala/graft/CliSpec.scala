@@ -8,8 +8,8 @@ import graft.streaming.StreamingPipeline
 class CliSpec extends SparkSpec {
 
   test("batch YAML pipeline via Cli writes parquet sink tables") {
-    val out = java.nio.file.Files.createTempDirectory("graft-cli").toString
-    val yaml = java.nio.file.Files.createTempFile("pipe", ".yaml")
+    val out = tempDir("graft-cli")
+    val yaml = java.nio.file.Paths.get(tempDir("graft-pipe"), "pipe.yaml")
     java.nio.file.Files.writeString(yaml,
       s"""source:
          |  type: parquet
@@ -41,8 +41,8 @@ class CliSpec extends SparkSpec {
   test("streaming YAML pipeline: file feed, checkpointed restart resumes incrementally") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-dbz-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-dbz-out").toString
+    val in = tempDir("graft-dbz-in")
+    val out = tempDir("graft-dbz-out")
     val yaml =
       s"""source:
          |  type: debezium-json
@@ -90,8 +90,8 @@ class CliSpec extends SparkSpec {
     // registered on the streaming path too), and only passing docs land
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-corpus-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus-out").toString
+    val in = tempDir("graft-corpus-in")
+    val out = tempDir("graft-corpus-out")
     val p = PipelineDef.fromYaml(
       s"""source:
          |  type: debezium-json
@@ -129,8 +129,8 @@ class CliSpec extends SparkSpec {
     import graft.pipeline.{PipelineDef, QuantileMonitor}
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.functions.{col, expr}
-    val in = java.nio.file.Files.createTempDirectory("graft-mon-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-mon-out").toString
+    val in = tempDir("graft-mon-in")
+    val out = tempDir("graft-mon-out")
     val mon = s"$out/docs_quality"
     val p = PipelineDef.fromYaml(
       s"""source:
@@ -201,8 +201,8 @@ class CliSpec extends SparkSpec {
     // off the asset — no corpus re-scan, no Scala
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-cur-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-cur-out").toString
+    val in = tempDir("graft-cur-in")
+    val out = tempDir("graft-cur-out")
     val asset = s"$out/budget_hist"
     val p = PipelineDef.fromYaml(
       s"""source:
@@ -268,8 +268,8 @@ class CliSpec extends SparkSpec {
     // exact prefix over what remains after takedowns
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-ret-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-ret-out").toString
+    val in = tempDir("graft-ret-in")
+    val out = tempDir("graft-ret-out")
     val p = PipelineDef.fromYaml(
       s"""source:
          |  type: debezium-json
@@ -333,8 +333,8 @@ class CliSpec extends SparkSpec {
     // the exact prefix over the survivors at their CURRENT values
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-upd-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-upd-out").toString
+    val in = tempDir("graft-upd-in")
+    val out = tempDir("graft-upd-out")
     val p = PipelineDef.fromYaml(
       s"""source:
          |  type: debezium-json
@@ -412,7 +412,7 @@ class CliSpec extends SparkSpec {
     // seed arithmetic (worse than the monitor's visible doubled n_obs)
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cur-batch").toString
+    val root = tempDir("graft-cur-batch")
     Seq((1L, 8.0, 10L), (2L, 4.0, 10L), (3L, 2.0, 10L))
       .toDF("id", "score", "tok").write.mode("overwrite")
       .parquet(s"$root/src/docs.parquet")
@@ -457,7 +457,7 @@ class CliSpec extends SparkSpec {
     // mixed-maintainer shape) flips consistent to false
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cur-check").toString
+    val root = tempDir("graft-cur-check")
     Seq((1L, 8.0, 10L), (2L, 4.0, 10L), (3L, 2.0, 10L))
       .toDF("id", "score", "tok").write.mode("overwrite")
       .parquet(s"$root/src/docs.parquet")
@@ -505,7 +505,7 @@ class CliSpec extends SparkSpec {
     // negative reads as drift when the fold behaved exactly as designed
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cur-neg").toString
+    val root = tempDir("graft-cur-neg")
     Seq((1L, 8.0, 10L), (2L, 4.0, 10L), (3L, 2.0, -5L))
       .toDF("id", "score", "tok").write.mode("overwrite")
       .parquet(s"$root/src/docs.parquet")
@@ -542,7 +542,7 @@ class CliSpec extends SparkSpec {
     // and appends recompute the same membership
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-split-sel").toString
+    val root = tempDir("graft-split-sel")
     // 40 docs over 10 groups (4 docs per group g0..g9)
     (0L until 40L).map(i => (i, s"g${i % 10}", i * 3))
       .toDF("id", "grp", "n_chars").write.mode("overwrite")
@@ -600,7 +600,7 @@ class CliSpec extends SparkSpec {
     // declared order won
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-first-match").toString
+    val root = tempDir("graft-first-match")
     (0L until 20L).map(i => (i, if (i < 4) "a" else "b"))
       .toDF("id", "src").write.mode("overwrite")
       .parquet(s"$root/src/docs.parquet")
@@ -687,7 +687,7 @@ class CliSpec extends SparkSpec {
     // asset: re-reads recompute the same subset
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-sample-sel").toString
+    val root = tempDir("graft-sample-sel")
     (0L until 60L).map(i => (i, s"s${i % 3}"))
       .toDF("id", "src").write.mode("overwrite")
       .parquet(s"$root/src/docs.parquet")
@@ -739,7 +739,7 @@ class CliSpec extends SparkSpec {
     // the `rate:`-only shape — one md5 threshold over the whole table
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-sample-uni").toString
+    val root = tempDir("graft-sample-uni")
     (0L until 100L).map(i => (i, i * 2)).toDF("id", "n")
       .write.mode("overwrite").parquet(s"$root/src/docs.parquet")
     val p = PipelineDef.fromYaml(
@@ -775,7 +775,7 @@ class CliSpec extends SparkSpec {
     // q_mix_temperature arithmetic through the YAML read surface
     import graft.pipeline.PipelineDef
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-mix-sel").toString
+    val root = tempDir("graft-mix-sel")
     ((0L until 40L).map(i => (i, "s0")) ++ (40L until 50L).map(i => (i, "s1")))
       .toDF("id", "src").write.mode("overwrite")
       .parquet(s"$root/src/docs.parquet")
@@ -892,7 +892,7 @@ class CliSpec extends SparkSpec {
 
   test("curate-show renders the asset's bins and pinned declaration") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-cshow").toString
+    val path = tempDir("graft-cshow")
     graft.ops.Sampling.appendBudgetHistogram(
       Seq((1L, 1.0, 5L), (2L, 9.0, 7L)).toDF("id", "score", "tok"),
       org.apache.spark.sql.functions.col("score"),
@@ -1004,8 +1004,8 @@ class CliSpec extends SparkSpec {
     // streaming YAML must TERMINATE once the backlog drains (the default
     // ProcessingTime loop awaits forever); unknown trigger values refuse
     import graft.pipeline.PipelineDef
-    val in = java.nio.file.Files.createTempDirectory("graft-drain-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-drain-out").toString
+    val in = tempDir("graft-drain-in")
+    val out = tempDir("graft-drain-out")
     def yaml(trigger: String) =
       s"""source:
          |  type: debezium-json
@@ -1024,7 +1024,7 @@ class CliSpec extends SparkSpec {
          |""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/b1.json"),
       """{"before":null,"after":{"id":1,"name":"ann"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""" + "\n")
-    val y = java.nio.file.Files.createTempFile("drain", ".yaml")
+    val y = java.nio.file.Paths.get(tempDir("graft-drain"), "drain.yaml")
     java.nio.file.Files.writeString(y, yaml("available-now"))
     Cli.main(Array(y.toString)) // returns only because the trigger drains
     val sink = new graft.sinks.ParquetUpsertSink(out, buckets = 2)
@@ -1041,8 +1041,8 @@ class CliSpec extends SparkSpec {
     import graft.pipeline.PipelineDef
     import graft.sinks.ParquetUpsertSink
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-layout-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-layout-out").toString
+    val in = tempDir("graft-layout-in")
+    val out = tempDir("graft-layout-out")
     val p = PipelineDef.fromYaml(
       s"""source:
          |  type: debezium-json
@@ -1087,8 +1087,8 @@ class CliSpec extends SparkSpec {
   test("`buckets: 0` is refused at parse: the unbucketed layout was removed") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-b0-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-b0-out").toString
+    val in = tempDir("graft-b0-in")
+    val out = tempDir("graft-b0-out")
     val p = PipelineDef.fromYaml(
       s"""source:
          |  type: debezium-json
@@ -1114,8 +1114,8 @@ class CliSpec extends SparkSpec {
     import graft.pipeline.{PipelineDef, QuantileMonitor}
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.functions.{col, expr}
-    val in = java.nio.file.Files.createTempDirectory("graft-mon2-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-mon2-out").toString
+    val in = tempDir("graft-mon2-in")
+    val out = tempDir("graft-mon2-out")
     val monDocs = s"$out/docs_len"
     val monImgs = s"$out/imgs_px"
     def ev(table: String, id: Int, payload: String) =
@@ -1193,8 +1193,8 @@ class CliSpec extends SparkSpec {
   test("batch YAML pipeline folds its monitor once per run") {
     import graft.pipeline.QuantileMonitor
     import org.apache.spark.sql.functions.expr
-    val out = java.nio.file.Files.createTempDirectory("graft-monb").toString
-    val yaml = java.nio.file.Files.createTempFile("monb", ".yaml")
+    val out = tempDir("graft-monb")
+    val yaml = java.nio.file.Paths.get(tempDir("graft-monb"), "monb.yaml")
     java.nio.file.Files.writeString(yaml,
       s"""source:
          |  type: parquet
@@ -1223,7 +1223,7 @@ class CliSpec extends SparkSpec {
     // next to the rank-error-bounded estimates, one row per (cell, q)
     import graft.pipeline.{MonitorDef, QuantileMonitor}
     import spark.implicits._
-    val mon = java.nio.file.Files.createTempDirectory("graft-mon-show").toString + "/m"
+    val mon = tempDir("graft-mon-show") + "/m"
     val defs = Seq(MonitorDef("corpus.docs", Seq("lang"), "n_chars", mon))
     // the null-lang cell is a real cell (groupBy keeps the null group) —
     // the render must include it, not drop it the way an equi-join-back
@@ -1261,7 +1261,7 @@ class CliSpec extends SparkSpec {
     // the PCA asset's read surface, symmetric with monitor-show: the
     // spectrum of everything folded so far, zero corpus scans
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-pca-show").toString + "/p"
+    val path = tempDir("graft-pca-show") + "/p"
     val rnd = new scala.util.Random(7)
     val df = (0 until 200).map { i =>
       (i.toLong, Seq(rnd.nextGaussian() * 9, rnd.nextGaussian() * 2,
@@ -1283,7 +1283,7 @@ class CliSpec extends SparkSpec {
     // on one lock (or both could read live epoch N and race epoch_N+1),
     // while genuinely distinct paths must NOT convoy on a shared lock
     import graft.ops.EpochStore
-    val dir = java.nio.file.Files.createTempDirectory("graft-mon-lock").toString
+    val dir = tempDir("graft-mon-lock")
     val a = EpochStore.lockFor(spark, s"$dir/m")
     assert(EpochStore.lockFor(spark, s"$dir/m/") eq a) // trailing slash
     assert(EpochStore.lockFor(spark, s"$dir/./m") eq a) // dot segment
@@ -1300,7 +1300,7 @@ class CliSpec extends SparkSpec {
     import graft.sinks.{BatchCtx, CdcSink}
     import org.apache.spark.sql.functions.{col, expr}
     import spark.implicits._
-    val mon = java.nio.file.Files.createTempDirectory("graft-mon-replay").toString + "/m"
+    val mon = tempDir("graft-mon-replay") + "/m"
     val defs = Seq(MonitorDef("corpus.docs", Seq("lang"), "n_chars", mon))
     val noop = new CdcSink {
       override def write(id: TableId, changelog: org.apache.spark.sql.DataFrame,
@@ -1357,8 +1357,8 @@ class CliSpec extends SparkSpec {
   test("kafka source YAML: injected reader drives debezium feed into parquet-upsert state") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-kafka-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-kafka-out").toString
+    val in = tempDir("graft-kafka-in")
+    val out = tempDir("graft-kafka-out")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/feed.json"),
       """{"before":null,"after":{"id":1,"name":"ann"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""" + "\n" +
       """{"before":null,"after":{"id":2,"name":"bob"},"op":"c","ts_ms":2,"source":{"db":"db","table":"users"}}""" + "\n" +
@@ -1401,7 +1401,7 @@ class CliSpec extends SparkSpec {
   test("kafka sink YAML without `path` runs on the state-dir fallback") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-k2k-in").toString
+    val in = tempDir("graft-k2k-in")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/feed.json"),
       """{"before":null,"after":{"id":7,"name":"eve"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""" + "\n")
     // unique pipeline name → unique fallback state dir (avoids a stale
@@ -1425,6 +1425,7 @@ class CliSpec extends SparkSpec {
     val (_, _, q) = Cli.buildStreaming(spark, p, Trigger.AvailableNow(),
       kafkaWriter = Some(writer))
     q.awaitTermination(60000)
+    deleteStateDir(p)
     assert(records.size === 1)
     assert(records.head._1.contains("\"id\":7"))
   }
@@ -1432,8 +1433,8 @@ class CliSpec extends SparkSpec {
   test("mid-batch kill between two tables' sink writes replays to convergence") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-kill-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-kill-out").toString
+    val in = tempDir("graft-kill-in")
+    val out = tempDir("graft-kill-out")
     def dbz(table: String, payload: String, ts: Long) =
       s"""{"before":null,"after":$payload,"op":"c","ts_ms":$ts,"source":{"db":"db","table":"$table"}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/batch1.json"),
@@ -1500,8 +1501,8 @@ class CliSpec extends SparkSpec {
   test("in-band TruncateTable empties sink state before the batch's own data applies") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-trunc-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-trunc-out").toString
+    val in = tempDir("graft-trunc-in")
+    val out = tempDir("graft-trunc-out")
     def dbz(payload: String, ts: Long) =
       s"""{"before":null,"after":$payload,"op":"c","ts_ms":$ts,"source":{"db":"db","table":"users"}}"""
     val yaml =
@@ -1537,8 +1538,8 @@ class CliSpec extends SparkSpec {
   test("in-band DropTable removes sink state and later rows for the table are skipped") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-drop-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-drop-out").toString
+    val in = tempDir("graft-drop-in")
+    val out = tempDir("graft-drop-out")
     def dbz(payload: String, ts: Long) =
       s"""{"before":null,"after":$payload,"op":"c","ts_ms":$ts,"source":{"db":"db","table":"users"}}"""
     val p = PipelineDef.fromYaml(
@@ -1588,8 +1589,8 @@ class CliSpec extends SparkSpec {
       TableId.of("db", "users"), "age", org.apache.spark.sql.types.IntegerType))
 
     // EXCEPTION: the DDL control record kills the query — never silently applied
-    val in1 = java.nio.file.Files.createTempDirectory("graft-exc-in").toString
-    val out1 = java.nio.file.Files.createTempDirectory("graft-exc-out").toString
+    val in1 = tempDir("graft-exc-in")
+    val out1 = tempDir("graft-exc-out")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in1/feed.json"),
       dbz("""{"id":1,"name":"ann"}""", 1) + "\n" + ddl + "\n")
     val (_, _, q1) = Cli.buildStreaming(spark,
@@ -1601,8 +1602,8 @@ class CliSpec extends SparkSpec {
 
     // IGNORE: the DDL is swallowed; rows with the new field still parse
     // under the OLD schema (extra field dropped), state keeps its shape
-    val in2 = java.nio.file.Files.createTempDirectory("graft-ign-in").toString
-    val out2 = java.nio.file.Files.createTempDirectory("graft-ign-out").toString
+    val in2 = tempDir("graft-ign-in")
+    val out2 = tempDir("graft-ign-out")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in2/feed.json"),
       dbz("""{"id":1,"name":"ann"}""", 1) + "\n" + ddl + "\n" +
       dbz("""{"id":2,"name":"bob","age":40}""", 2) + "\n")
@@ -1653,8 +1654,8 @@ class CliSpec extends SparkSpec {
     }
 
     // TRY_EVOLVE: the DDL failure is tolerated; the post-DDL row still lands
-    val in1 = java.nio.file.Files.createTempDirectory("graft-tryev-in").toString
-    val out1 = java.nio.file.Files.createTempDirectory("graft-tryev-out").toString
+    val in1 = tempDir("graft-tryev-in")
+    val out1 = tempDir("graft-tryev-out")
     feed(in1)
     val (_, _, q1) = Cli.buildStreaming(spark,
       PipelineDef.fromYaml(yamlFor(in1, out1, "try_evolve")), Trigger.AvailableNow(),
@@ -1669,8 +1670,8 @@ class CliSpec extends SparkSpec {
     assert(bob.getAs[Int]("age") === 40)
 
     // EVOLVE: the same refused ALTER must kill the query, not drop the DDL
-    val in2 = java.nio.file.Files.createTempDirectory("graft-ev-in").toString
-    val out2 = java.nio.file.Files.createTempDirectory("graft-ev-out").toString
+    val in2 = tempDir("graft-ev-in")
+    val out2 = tempDir("graft-ev-out")
     feed(in2)
     val (_, _, q2) = Cli.buildStreaming(spark,
       PipelineDef.fromYaml(yamlFor(in2, out2, "evolve")), Trigger.AvailableNow(),
@@ -1684,9 +1685,9 @@ class CliSpec extends SparkSpec {
   test("dead-letter-dir quarantines unroutable records instead of dropping them") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-dlq-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-dlq-out").toString
-    val dlq = java.nio.file.Files.createTempDirectory("graft-dlq").toString
+    val in = tempDir("graft-dlq-in")
+    val out = tempDir("graft-dlq-out")
+    val dlq = tempDir("graft-dlq")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/feed.json"),
       """{"before":null,"after":{"id":1,"name":"ann"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""" + "\n" +
       """this line is not json at all""" + "\n")
@@ -1714,8 +1715,8 @@ class CliSpec extends SparkSpec {
   test("user-defined-function YAML block registers a classpath UDF usable in projections") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-udf-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-udf-out").toString
+    val in = tempDir("graft-udf-in")
+    val out = tempDir("graft-udf-out")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/feed.json"),
       """{"before":null,"after":{"id":1,"name":"ann"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""" + "\n" +
       """{"before":null,"after":{"id":2,"name":null},"op":"c","ts_ms":2,"source":{"db":"db","table":"users"}}""" + "\n")

@@ -9,7 +9,7 @@ package graft
 class PlanInvariantsSpec extends SparkSpec {
 
   private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+    SparkEntry.query(q).build(spark, sf).queryExecution.executedPlan.toString
 
   test("yaml sample read is one scan-bound filter: no exchange, no join") {
     // the sample: block's scale contract — membership is a pure
@@ -122,7 +122,7 @@ class PlanInvariantsSpec extends SparkSpec {
   test("fuzzy join: gram relation computed once; verify never in the join condition") {
     // AQE finalizes (and reuses) stages only on execution — same stance
     // as the tfidf single-tokenization test below
-    val df = SparkEntry.queries("q_fuzzy_join")(spark, sf)
+    val df = SparkEntry.query("q_fuzzy_join").build(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(p.contains("ReusedExchange"), p.take(3000))
@@ -137,7 +137,7 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("anomaly stats: duplicate series subtrees collapse via exchange reuse") {
-    val df = SparkEntry.queries("q_anomaly_mad")(spark, sf)
+    val df = SparkEntry.query("q_anomaly_mad").build(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(p.contains("ReusedExchange"), p.take(3000))
@@ -286,7 +286,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // RegExpExtractAll-bearing scan — a second tokenizer scan means the
     // reuse was lost and the corpus is regex-scanned twice
     for (q <- Seq("q_tfidf_terms", "q_doc_rarity")) {
-      val df = SparkEntry.queries(q)(spark, sf)
+      val df = SparkEntry.query(q).build(spark, sf)
       df.collect() // AQE finalizes (and reuses) stages only on execution
       // the AQE toString appends the pre-execution "Initial Plan" (which
       // legitimately shows both branches) — assert on the FINAL plan only
@@ -380,7 +380,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // the histogram-fold plan must keep exactly ONE window, fed by the
     // straddling-bin filter, with a non-global sort (global=true in a
     // Sort node would mean the corpus order is being re-established)
-    val df = SparkEntry.queries("q_token_budget")(spark, sf)
+    val df = SparkEntry.query("q_token_budget").build(spark, sf)
     val p = df.queryExecution.executedPlan.toString
     assert("Sort \\[[^\\]]*\\], true".r.findFirstIn(p).isEmpty,
       s"global sort in the budget plan:\n${p.take(3000)}")
@@ -395,7 +395,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // the unigram vocabulary is NOT dim-bounded (Heaps' law: 1e8+ distinct
     // tokens at 100 TB) — forcing broadcast(uni) is a driver OOM at scale.
     // The plan must carry NO join hint, leaving the strategy to stats/AQE.
-    val df = SparkEntry.queries("q_pmi_collocations")(spark, sf)
+    val df = SparkEntry.query("q_pmi_collocations").build(spark, sf)
     assert(!df.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "q_pmi_collocations must not force a strategy on the unbounded vocab side")
     val p = df.queryExecution.executedPlan.toString
@@ -412,7 +412,7 @@ class PlanInvariantsSpec extends SparkSpec {
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val pp = SparkEntry.queries("q_pmi_collocations")(spark, sf)
+      val pp = SparkEntry.query("q_pmi_collocations").build(spark, sf)
         .queryExecution.executedPlan.toString
       assert("SortMergeJoin".r.findAllIn(pp).size === 2, pp.take(3000))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
@@ -423,7 +423,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // forced broadcast() of either is a driver OOM at 1e9 users; the plan
     // must carry NO join hint, leaving the strategy to stats/AQE (which
     // broadcasts at bench SF and key-shuffles beyond the threshold).
-    val df = SparkEntry.queries("q_first_touch")(spark, sf)
+    val df = SparkEntry.query("q_first_touch").build(spark, sf)
     assert(!df.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "q_first_touch must not force a join strategy on an unbounded side")
     val p = df.queryExecution.executedPlan.toString
@@ -435,7 +435,7 @@ class PlanInvariantsSpec extends SparkSpec {
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val pp = SparkEntry.queries("q_first_touch")(spark, sf)
+      val pp = SparkEntry.query("q_first_touch").build(spark, sf)
         .queryExecution.executedPlan.toString
       assert(pp.contains("SortMergeJoin"), pp.take(3000))
       assert("Exchange hashpartitioning".r.findAllIn(pp).size === 2, pp.take(3000))

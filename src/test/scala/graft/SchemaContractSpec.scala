@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
   * rounds and has already changed a physical encoding once (`events.ts`:
   * parquet timestamp[ns] → timestamp[us]), which broke nine queries as nine
   * scattered analysis errors. This spec pins the Spark-BOUND dtype of every
-  * column the 101 `SparkEntry.queries` assume, so a future regeneration
+  * column the 101 `SparkEntry.catalog` queries assume, so a future regeneration
   * surfaces as ONE loud, specific failure naming the drifted column.
   *
   * `events.ts` is intentionally looser: it asserts membership in the set of
@@ -90,7 +90,7 @@ class SchemaContractSpec extends SparkSpec {
 
   test("SparkEntry.events yields canonical BIGINT ts_us on the current data") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val df = SparkEntry.queries("q_window_agg")(spark, sf)
+    val df = SparkEntry.query("q_window_agg").build(spark, sf)
     assert(df.schema("hour_bucket").dataType == LongType)
     assert(df.limit(1).count() == 1)
   }
@@ -106,7 +106,7 @@ class SchemaContractSpec extends SparkSpec {
     val base = micros.zipWithIndex.map { case (us, i) => (i.toLong, us) }
       .toDF("event_id", "us")
     def dirFor(make: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft-evts").toString
+      val d = tempDir("graft-evts")
       make(base).write.mode("overwrite").parquet(s"$d/events.parquet")
       d
     }

@@ -196,7 +196,7 @@ class FuzzyJoinSpec extends SparkSpec {
     // never schema requirements (the layout note's compact-to-adopt
     // contract)
     val idxRows = Seq((1L, "same same same"), (2L, "other other otha"))
-    val path = java.nio.file.Files.createTempDirectory("graft-fzidx5").toString
+    val path = tempDir("graft-fzidx5")
     FuzzyJoin.writeIndex(idxRows.toDF("id", "s"), "id", "s", path, numPartitions = 4)
     // strip the prefilter columns from the stored prefix relation,
     // simulating the old layout
@@ -219,7 +219,7 @@ class FuzzyJoinSpec extends SparkSpec {
     // silently drop every candidate against the legacy-indexed records
     // (loses recall, never errors); the bands must treat a missing
     // constant as "filter does not apply"
-    val path = java.nio.file.Files.createTempDirectory("graft-fzidx6").toString
+    val path = tempDir("graft-fzidx6")
     FuzzyJoin.writeIndex(Seq((1L, "same same same")).toDF("id", "s"),
       "id", "s", path, numPartitions = 4)
     val fs = IndexMaintenance.fsOf(path, spark)
@@ -245,7 +245,7 @@ class FuzzyJoinSpec extends SparkSpec {
     // construction) — this pins that the adoption actually HAPPENS: after
     // compacting, the stored schema carries both columns and the probe's
     // candidate stage prunes pairs the legacy index had to carry to verify
-    val path = java.nio.file.Files.createTempDirectory("graft-fzidx7").toString
+    val path = tempDir("graft-fzidx7")
     // record 2 shares the prefix gram "sam" at the same position as the
     // probe but is 19 chars longer — only the len band can reject it
     // before the verify
@@ -310,7 +310,7 @@ class FuzzyJoinSpec extends SparkSpec {
     // index two thirds; probe the rest in two waves, appending in between
     val (idxRows, rest) = all.partition(_._1 % 3 != 0)
     val (wave1, wave2) = rest.partition(_._1 % 6 == 0)
-    val path = java.nio.file.Files.createTempDirectory("graft-fzidx").toString
+    val path = tempDir("graft-fzidx")
     FuzzyJoin.writeIndex(idxRows.toDF("id", "s"), "id", "s", path, numPartitions = 8)
 
     def expectedVs(batch: Seq[(Long, String)], indexed: Seq[(Long, String)]) =
@@ -342,7 +342,7 @@ class FuzzyJoinSpec extends SparkSpec {
   test("probe prunes the prefix listing to the batch's buckets; verify pushes candidate ids") {
     val all = randCorpus(23, 10)
     val (idxRows, batch) = all.partition(_._1 % 4 != 1)
-    val path = java.nio.file.Files.createTempDirectory("graft-fzidx2").toString
+    val path = tempDir("graft-fzidx2")
     FuzzyJoin.writeIndex(idxRows.toDF("id", "s"), "id", "s", path, numPartitions = 16)
     // the candidate stage must push the batch's touched buckets as a
     // file-listing partition filter on the prefix scan
@@ -359,7 +359,7 @@ class FuzzyJoinSpec extends SparkSpec {
 
   test("probe repairs a compaction that died between its two swap renames") {
     val rows = Seq((1L, "same same same"), (2L, "same same samm"))
-    val path = java.nio.file.Files.createTempDirectory("graft-fzidx4").toString
+    val path = tempDir("graft-fzidx4")
     FuzzyJoin.writeIndex(rows.toDF("id", "s"), "id", "s", path)
     // simulate the displace-then-swap dying after rename #1: block is
     // gone, block.old holds the displaced live dir
@@ -374,7 +374,7 @@ class FuzzyJoinSpec extends SparkSpec {
   }
 
   test("append refuses under a live maintainer lease") {
-    val path = java.nio.file.Files.createTempDirectory("graft-fzidx3").toString
+    val path = tempDir("graft-fzidx3")
     FuzzyJoin.writeIndex(Seq((1L, "same same same")).toDF("id", "s"), "id", "s", path)
     val fs = IndexMaintenance.fsOf(path, spark)
     val lock = IndexMaintenance.acquireMaintenanceLock(fs, path, 60000L)

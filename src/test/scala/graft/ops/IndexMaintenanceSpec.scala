@@ -18,7 +18,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
 
   private def withDir(f: (String, FileSystem) => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-maint").toString
+    val dir = tempDir("graft-maint")
     val fs = localFs
     try f(dir, fs)
     finally { val _ = fs.delete(new Path(dir), true) }

@@ -184,7 +184,7 @@ class DedupSpec extends SparkSpec {
       (2L, "completely different content about spark catalyst optimizer internals here"),
       (3L, "a third unrelated document describing shuffle partitions and codegen stages"))
       .toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhidx").toString
+    val dir = tempDir("graft-mhidx")
     try {
       Dedup.writeMinhashIndex(corpus, "id", "text", dir)
       val batch = Seq(
@@ -227,7 +227,7 @@ class DedupSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog again and again every day"),
       (2L, "completely different content about spark catalyst optimizer internals here"))
       .toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhmeta").toString
+    val dir = tempDir("graft-mhmeta")
     try {
       // build with an EXPLICIT 8-partition layout; the meta must pin it
       Dedup.writeMinhashIndex(corpus, "id", "text", dir, numPartitions = 8)
@@ -243,7 +243,7 @@ class DedupSpec extends SparkSpec {
         .select("id", "dup_of").as[(Long, Long)].collect().toSet
       assert(got === Set((100L, 1L)))
       // Auto build on a small corpus derives a single partition dir
-      val dir2 = java.nio.file.Files.createTempDirectory("graft-mhmeta2").toString
+      val dir2 = tempDir("graft-mhmeta2")
       try {
         Dedup.writeMinhashIndex(corpus, "id", "text", dir2)
         val parts = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir2/buckets"))
@@ -273,7 +273,7 @@ class DedupSpec extends SparkSpec {
   test("streaming ingest with index admission: later batches dedup against admitted docs") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.DataFrame
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val dir = tempDir("graft-ingest")
     try {
       Dedup.writeMinhashIndex(
         Seq((1L, "the quick brown fox jumps over the lazy dog again and again every day"))
@@ -308,7 +308,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incremental dedup tolerates an empty micro-batch (streaming loops see these)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhempty").toString
+    val dir = tempDir("graft-mhempty")
     try {
       Dedup.writeMinhashIndex(
         Seq((1L, "some indexed document about spark plans and shuffles ok")).toDF("id", "text"),
@@ -324,7 +324,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("index compaction drops buckets that drifted past the cap across appends") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact")
     try {
       val seedText = "unrelated seed document about shuffle partitions and stages ok then"
       Dedup.writeMinhashIndex(Seq((1L, seedText)).toDF("id", "text"), "id", "text", dir)
@@ -350,7 +350,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("a second concurrent index maintainer is refused; a stale lease is broken") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lock").toString
+    val dir = tempDir("graft-lock")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     try {
       Dedup.writeMinhashIndex(
@@ -384,7 +384,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("probe read path repairs a crashed swap; refuses while a maintainer lease is live") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-swapcrash").toString
+    val dir = tempDir("graft-swapcrash")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     try {
       val text = "some indexed document about spark plans and shuffles ok"
@@ -674,7 +674,7 @@ class IvfSpec extends SparkSpec {
   test("persisted index round-trips and queries prune at the file listing") {
     val df = vecs.toDF("id", "v")
     val model = Ivf.train(df, "id", "v", k = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     try {
     Ivf.writeIndex(Ivf.assign(df, "id", "v", model), model, dir)
 
@@ -705,7 +705,7 @@ class IvfSpec extends SparkSpec {
   test("IVF-SQ8 index: probe recovers the planted vector and prunes the listing") {
     val df = vecs.toDF("id", "v")
     val model = Ivf.train(df, "id", "v", k = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq8").toString
+    val dir = tempDir("graft-ivfsq8")
     try {
       Ivf.writeIndexSq8(df, "id", "v", model, dir)
       val query = vecs(42)._2
@@ -781,7 +781,7 @@ class IvfSpec extends SparkSpec {
     // readModel restores centroid order)
     val df = vecs.toDF("id", "v")
     val model = Ivf.train(df, "id", "v", k = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-knn-idx").toString
+    val dir = tempDir("ivf-knn-idx")
     try {
       Ivf.writeIndex(Ivf.assign(df, "id", "v", model), model, dir)
       val inline = Ivf.knnJoin(df, df, "id", "v", model, k = 3, nprobe = 3)
@@ -890,7 +890,7 @@ class IvfSpec extends SparkSpec {
     val df = vecs.toDF("id", "v")
     val model = Ivf.train(df, "id", "v", k = 4, iters = 1)
     val assigned = Ivf.assign(df, "id", "v", model)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-rebal").toString
+    val dir = tempDir("graft-ivf-rebal")
     try {
       Ivf.writeIndex(assigned, model, dir)
       val uniform = (0 until 4).map(c => c.toString -> 0.25).toMap

@@ -114,8 +114,7 @@ class PcaSpec extends SparkSpec {
     // suffstats are a commutative monoid (element-wise sums): appending
     // the corpus in two halves must give the same model as one scan, up
     // to FP summation order — the incremental-maintenance contract
-    val path = java.nio.file.Files.createTempDirectory("graft-pca-asset")
-      .toString + "/stats"
+    val path = tempDir("graft-pca-asset") + "/stats"
     Pca.appendStats(df.where(col("id") % 2 === 0), "vec", path)
     Pca.appendStats(df.where(col("id") % 2 === 1), "vec", path)
     val inc = Pca.fitFromStats(spark, path, k = d)
@@ -136,7 +135,7 @@ class PcaSpec extends SparkSpec {
   }
 
   test("suffstats asset lifecycle: grace epoch, GC, crash leftovers, empty batch, width") {
-    val root = java.nio.file.Files.createTempDirectory("graft-pca-life").toString
+    val root = tempDir("graft-pca-life")
     val path = s"$root/stats"
     def epochDirs: Set[String] = {
       val dir = new java.io.File(path)

@@ -105,7 +105,7 @@ class QuantileSketchSpec extends SparkSpec {
     assert(e2.getMessage.contains("digest struct"), e2.getMessage)
     // a digest read back from parquet (nullability relaxed) still unions:
     // the shape check must not demand strict type equality
-    val dir = java.nio.file.Files.createTempDirectory("graft-tdt").toString
+    val dir = tempDir("graft-tdt")
     values.toDF("v").agg(QuantileSketch.sketch(col("v")).as("s"))
       .write.mode("overwrite").parquet(dir)
     val rt = spark.read.parquet(dir).agg(QuantileSketch.union(col("s")).as("u"))

@@ -69,7 +69,7 @@ class RetrievalPropertySpec extends SparkSpec {
     val corpus = (1L to 40L).map(i =>
       i -> Seq.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     val df = corpus.toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bm25-prop").toString
+    val path = tempDir("bm25-prop")
     Bm25.writePostings(df, "doc_id", "text", path, termBuckets = 8)
     val query = "alpha theta kappa"
     val brute = Bm25.topK(df, "doc_id", "text", query, 15)
@@ -83,9 +83,9 @@ class RetrievalPropertySpec extends SparkSpec {
     val corpus = (1L to 40L).map(i =>
       i -> Seq.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     val df = corpus.toDF("doc_id", "text")
-    val full = java.nio.file.Files.createTempDirectory("bm25-full").toString
+    val full = tempDir("bm25-full")
     Bm25.writePostings(df, "doc_id", "text", full, termBuckets = 8)
-    val incr = java.nio.file.Files.createTempDirectory("bm25-incr").toString
+    val incr = tempDir("bm25-incr")
     Bm25.writePostings(df.where($"doc_id" <= 20L), "doc_id", "text", incr, termBuckets = 8)
     Bm25.appendToPostings(df.where($"doc_id" > 20L && $"doc_id" <= 30L),
       "doc_id", "text", incr, termBuckets = 8)

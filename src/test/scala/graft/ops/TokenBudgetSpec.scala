@@ -65,7 +65,7 @@ class TokenBudgetSpec extends SparkSpec {
     val rows = (0 until 300).map(i =>
       (i.toLong, rng.nextDouble() * 10, 1L + rng.nextInt(30)))
     val df = rows.toDF("id", "score", "tok")
-    val path = java.nio.file.Files.createTempDirectory("tb-incr").toString
+    val path = tempDir("tb-incr")
     // three appends (uneven split), declared range [0, 10], coarse bins
     for (m <- 0 until 3)
       Sampling.appendBudgetHistogram(df.where(col("id") % 3 === m),
@@ -84,7 +84,7 @@ class TokenBudgetSpec extends SparkSpec {
     val rows = Seq((1L, -5.0, 10L), (2L, 0.5, 10L), (3L, 99.0, 10L),
       (4L, 98.0, 10L), (5L, 0.6, 10L))
     val df = rows.toDF("id", "score", "tok")
-    val path = java.nio.file.Files.createTempDirectory("tb-oor").toString
+    val path = tempDir("tb-oor")
     Sampling.appendBudgetHistogram(df, col("score"), col("tok"),
       path, lo = 0.0, hi = 1.0, bins = 4)
     for (budget <- Seq(10L, 20L, 30L, 45L)) {
@@ -96,7 +96,7 @@ class TokenBudgetSpec extends SparkSpec {
 
   test("asset declaration is pinned; replayed ctx folds are skipped") {
     val df = Seq((1L, 1.0, 5L), (2L, 2.0, 7L)).toDF("id", "score", "tok")
-    val path = java.nio.file.Files.createTempDirectory("tb-ledger").toString
+    val path = tempDir("tb-ledger")
     val ctx = Some(graft.sinks.BatchCtx(4L, "db.docs"))
     Sampling.appendBudgetHistogram(df, col("score"), col("tok"),
       path, lo = 0.0, hi = 10.0, bins = 4, ctx = ctx)
@@ -201,7 +201,7 @@ class TokenBudgetSpec extends SparkSpec {
 
   test("rebuild replaces the asset (batch semantics): re-runs idempotent, appends merge") {
     val df = Seq((1L, 1.0, 5L), (2L, 2.0, 7L)).toDF("id", "score", "tok")
-    val path = java.nio.file.Files.createTempDirectory("tb-rebuild").toString
+    val path = tempDir("tb-rebuild")
     def totalToks = spark.read
       .parquet(graft.ops.EpochStore.currentEpoch(spark, path).get)
       .agg(sum("toks")).head().getLong(0)
@@ -249,7 +249,7 @@ class TokenBudgetSpec extends SparkSpec {
       (i.toLong, rng.nextDouble() * 10, 1L + rng.nextInt(30)))
     val deleted = rows.filter(_._1 % 5 == 0)
     val survivors = rows.filterNot(_._1 % 5 == 0)
-    val path = java.nio.file.Files.createTempDirectory("tb-retract").toString
+    val path = tempDir("tb-retract")
     Sampling.appendBudgetHistogram(rows.toDF("id", "score", "tok"),
       col("score"), col("tok"), path, lo = 0.0, hi = 10.0, bins = 8)
     Sampling.appendBudgetDeltas(deleted.toDF("id", "score", "tok"),

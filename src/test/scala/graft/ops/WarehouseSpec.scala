@@ -7,7 +7,7 @@ class WarehouseSpec extends SparkSpec {
   import spark.implicits._
 
   test("compact coalesces a many-file wave; row identity is untouched") {
-    val path = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val path = tempDir("graft-compact") + "/t"
     // simulate streaming ingest: 12 tiny appended waves
     for (w <- 0 until 12)
       (w * 100L until w * 100L + 100L).toDF("id")
@@ -25,7 +25,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("partitioned write + readback round-trips and prunes") {
-    val path = java.nio.file.Files.createTempDirectory("graft-partrt").toString + "/t"
+    val path = tempDir("graft-partrt") + "/t"
     val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "p")
     Warehouse.writePartitioned(df, "p", path)
     val back = Warehouse.readPartitioned(spark, path).where(col("p") === "a")

@@ -109,7 +109,7 @@ class DeltaMergeSinkSpec extends SparkSpec {
   test("YAML `sink: {type: delta}` drives a debezium feed through Cli into MERGE statements") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-delta-in").toString
+    val in = tempDir("graft-delta-in")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/feed.json"),
       """{"before":null,"after":{"id":1,"name":"ann"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""" + "\n" +
       """{"before":null,"after":{"id":1,"name":"ann2"},"op":"u","ts_ms":2,"source":{"db":"db","table":"users"}}""" + "\n" +
@@ -141,6 +141,7 @@ class DeltaMergeSinkSpec extends SparkSpec {
     val (_, _, q) = graft.Cli.buildStreaming(spark, p, Trigger.AvailableNow(),
       sqlRunner = Some(runner))
     q.awaitTermination(60000)
+    deleteStateDir(p)
     assert(statements.head ===
       "CREATE TABLE IF NOT EXISTS `lake`.`db_users` (`id` BIGINT, `name` STRING) USING delta " +
       "TBLPROPERTIES ('delta.columnMapping.mode' = 'name')")
@@ -155,7 +156,7 @@ class DeltaMergeSinkSpec extends SparkSpec {
     // swap in the real clients
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-k2d-in").toString
+    val in = tempDir("graft-k2d-in")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/feed.json"),
       """{"before":null,"after":{"id":1,"name":"ann"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""" + "\n" +
       """{"before":null,"after":{"id":2,"name":"bob"},"op":"c","ts_ms":2,"source":{"db":"db","table":"users"}}""" + "\n" +
@@ -194,6 +195,7 @@ class DeltaMergeSinkSpec extends SparkSpec {
     val (_, _, q) = graft.Cli.buildStreaming(spark, p, Trigger.AvailableNow(),
       kafkaReader = Some(reader), sqlRunner = Some(runner))
     q.awaitTermination(60000)
+    deleteStateDir(p)
     assert(statements.head ===
       "CREATE TABLE IF NOT EXISTS `lake`.`db_users` (`id` BIGINT, `name` STRING) USING delta " +
       "TBLPROPERTIES ('delta.columnMapping.mode' = 'name')")

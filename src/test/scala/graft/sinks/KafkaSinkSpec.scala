@@ -65,8 +65,8 @@ class KafkaSinkSpec extends SparkSpec {
   }
 
   test("YAML `sink: {type: kafka}` runs the streaming pipeline onto the wire") {
-    val in = java.nio.file.Files.createTempDirectory("graft-kafka-in").toString
-    val state = java.nio.file.Files.createTempDirectory("graft-kafka-state").toString
+    val in = tempDir("graft-kafka-in")
+    val state = tempDir("graft-kafka-state")
     val yaml =
       s"""source:
          |  type: debezium-json

@@ -107,7 +107,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
     */
   private def crashAtEveryCall(buckets: Int, setup: ParquetUpsertSink => Unit,
                                write: ParquetUpsertSink => Unit): Unit = {
-    val clean = java.nio.file.Files.createTempDirectory("graft-crash-clean").toString
+    val clean = tempDir("graft-crash-clean")
     val probe = new CrashingSink(clean, buckets, crashAt = -1)
     setup(probe)
     val before = stateOf(probe)
@@ -117,7 +117,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val calls = probe.crashFs.calls.get() - setupCalls
     assert(calls > 0 && before != after)
     (1 to calls).foreach { k =>
-      val root = java.nio.file.Files.createTempDirectory(s"graft-crash-$k").toString
+      val root = tempDir(s"graft-crash-$k")
       val sink = new CrashingSink(root, buckets, crashAt = setupCalls + k)
       setup(sink)
       intercept[Crash](write(sink))
@@ -133,7 +133,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("bucketed swap failure restores the displaced bucket") {
-    val root = java.nio.file.Files.createTempDirectory("graft-commit-b").toString
+    val root = tempDir("graft-commit-b")
     @volatile var deny = false
     var fsRef: DenyingFs = null
     val sink = new ParquetUpsertSink(root, buckets = 4) {
@@ -168,7 +168,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("crash between the two swap renames is recovered, not destroyed") {
-    val root = java.nio.file.Files.createTempDirectory("graft-crash").toString
+    val root = tempDir("graft-crash")
     val sink = new ParquetUpsertSink(root)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
 
@@ -189,7 +189,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("crash with a displaced bucket under .tmp is recovered on next write") {
-    val root = java.nio.file.Files.createTempDirectory("graft-crash-b").toString
+    val root = tempDir("graft-crash-b")
     val sink = new ParquetUpsertSink(root, buckets = 4)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
       (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
@@ -213,7 +213,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("swap_ready tmp is rolled FORWARD: crash mid-swap applies the batch, once") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fwd").toString
+    val root = tempDir("graft-fwd")
     val sink = new ParquetUpsertSink(root, buckets = 4)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
       (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
@@ -246,7 +246,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("swap_ready roll-forward does not resurrect a displaced emptied bucket") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fwd-e").toString
+    val root = tempDir("graft-fwd-e")
     val sink = new ParquetUpsertSink(root, buckets = 4)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
       (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
@@ -270,7 +270,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("AutoBuckets derives the layout from the first batch and pins it in meta") {
-    val root = java.nio.file.Files.createTempDirectory("graft-auto").toString
+    val root = tempDir("graft-auto")
     val sink = new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
 
@@ -293,7 +293,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("displaced bucket WITH a done marker (emptied by deletes) is not resurrected") {
-    val root = java.nio.file.Files.createTempDirectory("graft-crash-d").toString
+    val root = tempDir("graft-crash-d")
     val sink = new ParquetUpsertSink(root, buckets = 4)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
       (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
@@ -338,7 +338,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("AutoBuckets derives above the parallelism floor once the first batch outgrows it") {
-    val root = java.nio.file.Files.createTempDirectory("graft-auto-big").toString
+    val root = tempDir("graft-auto-big")
     val want = spark.sparkContext.defaultParallelism + 3
     val rows = (1L to 2L * want).map(k => (k, s"v$k", "INSERT", k))
     spark.conf.set(ParquetUpsertSink.RowsPerBucketConf, "2")
@@ -352,8 +352,28 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val _ = localFs.delete(new Path(root), true)
   }
 
+  test("a layout re-derived by another sink instance is read, not remembered") {
+    // two sinks over one root: B truncates the table and re-derives a wider
+    // layout; A must prune its next merge with B's modulus, or keys in the
+    // buckets only B's layout has end up stored twice
+    val root = tempDir("graft-relayout")
+    val keys = (1L to 8L).map(k => (k, s"a$k", "INSERT", k))
+    val a = new ParquetUpsertSink(root)
+    a.write(id, batch(keys: _*), schema)
+    assert(layoutOf(a.tablePath(id)) === 4, "local[4] floor")
+    val b = new ParquetUpsertSink(root)
+    b.applySchemaChange(graft.model.TruncateTableEvent(id))
+    spark.conf.set(ParquetUpsertSink.RowsPerBucketConf, "1")
+    try b.write(id, batch(keys.map(k => (k._1, s"b${k._1}", "INSERT", 10L + k._1)): _*), schema)
+    finally spark.conf.unset(ParquetUpsertSink.RowsPerBucketConf)
+    assert(layoutOf(a.tablePath(id)) === 8, "one bucket per row above the floor")
+    a.write(id, batch(keys.map(k => (k._1, s"u${k._1}", "UPDATE", 100L + k._1)): _*), schema)
+    val rows = a.read(spark, id).as[(Long, String)].collect().toSeq
+    assert(rows.sorted === (1L to 8L).map(k => (k, s"u$k")))
+  }
+
   test("state without a layout meta fails loudly under AutoBuckets, naming the setting that reads it") {
-    val root = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+    val root = tempDir("graft-legacy")
     // bucketed state written before the layout meta existed: the old default 32
     val legacy = new ParquetUpsertSink(root, buckets = 32)
     legacy.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
@@ -370,7 +390,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
     assert(pairsOf(pinned) === Set((1L, "a"), (2L, "b"), (3L, "c")))
 
     // state in the removed unbucketed layout: parquet files at the table root
-    val root0 = java.nio.file.Files.createTempDirectory("graft-legacy0").toString
+    val root0 = tempDir("graft-legacy0")
     val flat = new ParquetUpsertSink(root0, buckets = ParquetUpsertSink.AutoBuckets)
     Seq((1L, "a")).toDF("id", "v").write.parquet(flat.tablePath(id))
     val e0 = intercept[IllegalArgumentException] {
@@ -384,7 +404,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   test("flat state is refused by every writer and by DDL, and stays readable") {
     // a bucketed commit next to root parquet files hides them from readers:
     // partition discovery drops the root files once `__bucket=` dirs exist
-    val root = java.nio.file.Files.createTempDirectory("graft-flat").toString
+    val root = tempDir("graft-flat")
     val pinned = new ParquetUpsertSink(root, buckets = 4)
     val tablePath = pinned.tablePath(id)
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(tablePath)
@@ -408,7 +428,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("DDL on a table whose rows were all deleted is a no-op; the next write takes the new shape") {
-    val root = java.nio.file.Files.createTempDirectory("graft-emptied-ddl").toString
+    val root = tempDir("graft-emptied-ddl")
     val sink = new ParquetUpsertSink(root, buckets = 4)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
     sink.write(id, batch((1L, "a", "DELETE", 3L), (2L, "b", "DELETE", 4L)), schema)

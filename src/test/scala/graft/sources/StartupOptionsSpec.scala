@@ -44,8 +44,8 @@ class StartupOptionsSpec extends SparkSpec {
   test("latest mode through the streaming CLI skips the pre-launch backlog") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft-startup-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-startup-out").toString
+    val in = tempDir("graft-startup-in")
+    val out = tempDir("graft-startup-out")
     def line(id: Long, ts: Long) =
       s"""{"before":null,"after":{"id":$id,"name":"n$id"},"op":"c","ts_ms":$ts,"source":{"db":"db","table":"users"}}"""
     // backlog written BEFORE launch — must be skipped by latest mode

@@ -17,7 +17,7 @@ class StreamingBudgetSpec extends SparkSpec {
   import spark.implicits._
 
   test("foreachBatch maintains the histogram asset; selection equals one-shot") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sbudget").toString
+    val base = tempDir("graft-sbudget")
     val in = s"$base/in"
     val asset = s"$base/hist"
     val rnd = new scala.util.Random(29)

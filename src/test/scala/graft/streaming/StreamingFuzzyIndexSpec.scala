@@ -36,7 +36,7 @@ class StreamingFuzzyIndexSpec extends SparkSpec {
     }
     val waves: Map[Int, Seq[(Long, String)]] = rows.groupBy(_._1.toInt % 3)
 
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-sfi").toString
+    val baseDir = tempDir("graft-sfi")
     val in = s"$baseDir/in"
     val idx = s"$baseDir/idx"
     val P = 8

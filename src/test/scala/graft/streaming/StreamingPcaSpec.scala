@@ -16,7 +16,7 @@ class StreamingPcaSpec extends SparkSpec {
   import spark.implicits._
 
   test("foreachBatch maintains the suffstats asset across micro-batches") {
-    val base = java.nio.file.Files.createTempDirectory("graft-spca").toString
+    val base = tempDir("graft-spca")
     val in = s"$base/in"
     val stats = s"$base/stats"
     val rnd = new scala.util.Random(43)
@@ -67,7 +67,7 @@ class StreamingPcaSpec extends SparkSpec {
       .head().getAs[Long]("n")
 
   test("ctx appends are effectively-once under crash replay") {
-    val stats = java.nio.file.Files.createTempDirectory("graft-spca-replay").toString
+    val stats = tempDir("graft-spca-replay")
     val batch = (0 until 100).map(i => (i.toLong, Seq(i.toFloat, -i.toFloat)))
       .toDF("id", "vec")
     val ctx7 = Some(graft.sinks.BatchCtx(7L, "db.events"))
@@ -92,7 +92,7 @@ class StreamingPcaSpec extends SparkSpec {
   }
 
   test("ctx-less appends preserve the recorded ledger") {
-    val stats = java.nio.file.Files.createTempDirectory("graft-spca-ctxless").toString
+    val stats = tempDir("graft-spca-ctxless")
     val batch = (0 until 50).map(i => (i.toLong, Seq(i.toFloat, 2f * i)))
       .toDF("id", "vec")
     val ctx = Some(graft.sinks.BatchCtx(3L, "db.events"))

@@ -251,7 +251,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("parquet upsert sink maintains state across batches, idempotently") {
     val registry = new SchemaRegistry(SchemaChangeBehavior.Evolve)
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val dir = tempDir("graft-upsert")
     val sink = new ParquetUpsertSink(dir)
     val pipe = new StreamingPipeline(registry, sink = sink)
     pipe.applySchemaChange(CreateTableEvent(usersId, usersSchema))
@@ -276,7 +276,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("bucketed parquet sink: merges across batches, only touched buckets rewritten") {
     val registry = new SchemaRegistry(SchemaChangeBehavior.Evolve)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    val dir = tempDir("graft-bucketed")
     val sink = new ParquetUpsertSink(dir, buckets = 8)
     val pipe = new StreamingPipeline(registry, sink = sink)
     pipe.applySchemaChange(CreateTableEvent(usersId, usersSchema))
@@ -297,7 +297,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("parquet sink survives mid-stream AddColumn (state coerced to evolved schema)") {
     val registry = new SchemaRegistry(SchemaChangeBehavior.Evolve)
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve-pq").toString
+    val dir = tempDir("graft-evolve-pq")
     val sink = new ParquetUpsertSink(dir, buckets = 4)
     val pipe = new StreamingPipeline(registry, sink = sink)
     pipe.applySchemaChange(CreateTableEvent(usersId,
@@ -315,7 +315,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("hybrid source: snapshot load then change stream supersedes per key") {
     import org.apache.spark.sql.functions._
     val registry = new SchemaRegistry(SchemaChangeBehavior.Evolve)
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid").toString
+    val dir = tempDir("graft-hybrid")
     val sink = new ParquetUpsertSink(dir)
     val pipe = new StreamingPipeline(registry, sink = sink)
     pipe.applySchemaChange(CreateTableEvent(usersId, usersSchema))
@@ -367,7 +367,7 @@ class StreamingPipelineSpec extends SparkSpec {
     pipe.applySchemaChange(CreateTableEvent(usersId, usersSchema))
 
     val mem = MemoryStream[String]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt")
     val q = pipe.start(mem.toDF().withColumnRenamed("value", "value"), ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
 

@@ -17,7 +17,7 @@ class StreamingQuantileSpec extends SparkSpec {
   import spark.implicits._
 
   test("foreachBatch maintains the sketch table across micro-batches") {
-    val base = java.nio.file.Files.createTempDirectory("graft-squant").toString
+    val base = tempDir("graft-squant")
     val in = s"$base/in"
     val rnd = new scala.util.Random(37)
     val all = (0 until 9000).map(i =>
