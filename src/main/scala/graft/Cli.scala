@@ -154,9 +154,7 @@ object Cli {
     */
   def curateShow(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val live = graft.ops.EpochStore.currentEpoch(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no budget-histogram asset at $path"))
-    spark.read.parquet(live)
+    graft.ops.EpochStore.read(spark, path, "budget-histogram asset")
       .select(col("bin"), col("toks"), col("lo"), col("hi"), col("bins"))
       .orderBy(col("bin").desc)
   }
@@ -282,7 +280,7 @@ object Cli {
         Some(out)
       case other => throw new IllegalArgumentException(s"unknown batch sink: $other")
     }
-    // monitor and curate blocks fold AFTER delivery (the MonitorSink
+    // monitor and curate blocks fold AFTER delivery (the AssetFoldSink
     // ordering: a failed sink must not advance asset state), reading the
     // parquet sink's materialized output rather than re-executing lineage
     results.foreach { case (id, df) =>
@@ -424,15 +422,11 @@ object Cli {
       case _ => new ParquetUpsertSink(statePath, buckets)
     }
     val sink = sinkDecorator.map(_(sink0)).getOrElse(sink0)
-    // monitor + curate blocks fold per micro-batch AFTER the data write
-    // (decorators stack); the tuple still returns the inner sink (tests
-    // read state through it)
-    val sinkMonitored: graft.sinks.CdcSink =
-      if (p.monitors.isEmpty) sink
-      else new graft.pipeline.QuantileMonitor.MonitorSink(sink, spark, p.monitors)
+    // monitor + curate blocks fold per micro-batch AFTER the data write;
+    // the tuple still returns the inner sink (tests read state through it)
     val sinkForPipe: graft.sinks.CdcSink =
-      if (p.curations.isEmpty) sinkMonitored
-      else new graft.pipeline.BudgetCurator.CurateSink(sinkMonitored, spark, p.curations)
+      if (p.monitors.isEmpty && p.curations.isEmpty) sink
+      else new graft.pipeline.AssetFoldSink(sink, spark, p.monitors, p.curations)
     // `dead-letter-dir`: unroutable records (unparseable JSON, missing
     // source ids) quarantine as text under one dir per batch instead of
     // silently dropping — the YAML face of StreamingPipeline.deadLetter.
@@ -449,7 +443,7 @@ object Cli {
       tableParallelism = p.config.getOrElse("table-parallelism", "4").toInt,
       deadLetter = deadLetter,
       // a retract: true curate block needs the (−before, +after) pair for
-      // in-place updates; the CurateSink above strips the UPDATE_BEFORE
+      // in-place updates; the AssetFoldSink above strips the UPDATE_BEFORE
       // leg before the materializing sink
       emitUpdateBefore = p.curations.exists(_.retract))
 

@@ -5389,12 +5389,7 @@ object SparkEntry {
       // The asset builds ONCE per (session, dir) — pcaStatsFor — so the timed
       // body is the deployment's per-run cost: the audit read.
       val path = pcaStatsFor(dir)
-      val live = graft.ops.EpochStore.currentEpoch(spark, path)
-        .getOrElse(throw new IllegalStateException(s"no asset at $path"))
-      val r = spark.read.parquet(live).head()
-      val n = r.getAs[Long]("n")
-      val sums = r.getAs[scala.collection.Seq[Double]]("sums").toArray
-      val tri = r.getAs[scala.collection.Seq[Double]]("gram").toArray
+      val (n, sums, tri) = graft.ops.Pca.readStats(spark, path)
       val d = sums.length
       // upper-triangle layout: (i,i) sits at i*d − i(i−1)/2, then j−i
       val rows = for { i <- 0 until d; j <- i until d } yield

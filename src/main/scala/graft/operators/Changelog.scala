@@ -17,7 +17,7 @@ object Changelog {
     * before-image emitted as its own changelog row so retraction-folding
     * consumers ([[graft.pipeline.BudgetCurator]] `retract: true`) can
     * negate exactly what the superseded image contributed. NEVER reaches
-    * a sink's materialization (the CurateSink decorator strips it before
+    * a sink's materialization (the AssetFoldSink decorator strips it before
     * delegating): its (key, seq) pair collides with its paired
     * after-image row, which would make a per-key `max_by(…, seq)`
     * nondeterministic. Emitted only when

@@ -221,68 +221,41 @@ object Pca {
     *
     * Cost per append: ONE scan of the batch (the same single-scan
     * aggregate as [[fit]]), a driver-side O(d²) array merge, an O(d²)
-    * one-row parquet write under the [[EpochStore]] single-writer
-    * protocol (per-path lock, `_SUCCESS`-committed epoch listing, one
-    * grace epoch). An empty batch is a no-op. With a
-    * [[graft.sinks.BatchCtx]] the append is EFFECTIVELY-ONCE under
-    * foreachBatch crash replays: the shared [[EpochStore]] replay ledger
-    * — (batchId, route legs) columns committed atomically with the stats
-    * row — identifies an already-folded (batchId, leg) and skips it, the
-    * same protocol the `monitor:` sketch folds use. Ctx-less appends
-    * remain at-least-once and PRESERVE any recorded ledger.
+    * one-row [[EpochStore.fold]] (lock, replay ledger, epoch write, GC).
+    * An empty batch is a no-op.
     */
   def appendStats(df: DataFrame, vecCol: String, path: String,
                   ctx: Option[graft.sinks.BatchCtx] = None): Unit = {
     val spark = df.sparkSession
     val (bn, bsums, btri) = scanStats(df, vecCol)
-    if (bn > 0) EpochStore.lockFor(spark, path).synchronized {
-      val f = EpochStore.fs(spark, path)
-      val epochs = EpochStore.epochStatuses(f, path)
-      val live = EpochStore.committedOf(f, epochs).lastOption.map { n =>
-        (n, spark.read.parquet(s"$path/epoch_$n"))
+    if (bn > 0) EpochStore.fold(spark, path, (BatchCol, LegsCol), ctx) { live =>
+      val (n, sums, tri) = live match {
+        case Some(ldf) =>
+          val r = ldf.head()
+          val ln = r.getAs[Long]("n")
+          val lsums = r.getAs[scala.collection.Seq[Double]]("sums").toArray
+          val ltri = r.getAs[scala.collection.Seq[Double]]("gram").toArray
+          require(lsums.length == bsums.length,
+            s"suffstats width mismatch: asset d=${lsums.length}, batch d=${bsums.length}")
+          var i = 0
+          while (i < lsums.length) { lsums(i) += bsums(i); i += 1 }
+          i = 0
+          while (i < ltri.length) { ltri(i) += btri(i); i += 1 }
+          (ln + bn, lsums, ltri)
+        case None => (bn, bsums, btri)
       }
-      val ctxPair = ctx.map(c => (c.batchId, c.origin))
-      val ledger = live.flatMap { case (_, ldf) =>
-        EpochStore.readLedger(ldf, BatchCol, LegsCol)
-      }
-      if (!EpochStore.isReplay(ctxPair, ledger)) {
-        val (n, sums, tri) = live match {
-          case Some((_, ldf)) =>
-            val r = ldf.head()
-            val ln = r.getAs[Long]("n")
-            val lsums = r.getAs[scala.collection.Seq[Double]]("sums").toArray
-            val ltri = r.getAs[scala.collection.Seq[Double]]("gram").toArray
-            require(lsums.length == bsums.length,
-              s"suffstats width mismatch: asset d=${lsums.length}, batch d=${bsums.length}")
-            var i = 0
-            while (i < lsums.length) { lsums(i) += bsums(i); i += 1 }
-            i = 0
-            while (i < ltri.length) { ltri(i) += btri(i); i += 1 }
-            (ln + bn, lsums, ltri)
-          case None => (bn, bsums, btri)
-        }
-        import spark.implicits._
-        val epochN = live.map(_._1 + 1).getOrElse(0L)
-        EpochStore.stampLedger(
-            Seq((n, sums.toSeq, tri.toSeq)).toDF("n", "sums", "gram"),
-            EpochStore.advanceLedger(ctxPair, ledger), BatchCol, LegsCol)
-          .write.mode("overwrite").parquet(s"$path/epoch_$epochN")
-        EpochStore.gcBelowGrace(f, epochs, epochN)
-      }
+      import spark.implicits._
+      Seq((n, sums.toSeq, tri.toSeq)).toDF("n", "sums", "gram")
     }
   }
 
-  /** Ledger column names of the suffstats asset (constant metadata on the
-    * one stats row; see [[EpochStore.readLedger]]).
-    */
+  /** Ledger column names of the suffstats asset ([[EpochStore.fold]]). */
   private[graft] val BatchCol = "__pca_batch"
   private[graft] val LegsCol = "__pca_legs"
 
-  private def readStats(spark: org.apache.spark.sql.SparkSession, path: String)
+  private[graft] def readStats(spark: org.apache.spark.sql.SparkSession, path: String)
       : (Long, Array[Double], Array[Double]) = {
-    val live = EpochStore.currentEpoch(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no PCA suffstats asset at $path"))
-    val r = spark.read.parquet(live).head()
+    val r = EpochStore.read(spark, path, "PCA suffstats asset").head()
     (r.getAs[Long]("n"),
       r.getAs[scala.collection.Seq[Double]]("sums").toArray,
       r.getAs[scala.collection.Seq[Double]]("gram").toArray)

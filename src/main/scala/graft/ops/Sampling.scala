@@ -407,9 +407,7 @@ object Sampling {
 
   // ------- persisted budget-histogram asset (incremental selection) -------
 
-  /** Ledger column names of the histogram asset (see
-    * [[graft.ops.EpochStore.readLedger]]).
-    */
+  /** Ledger column names of the histogram asset ([[EpochStore.fold]]). */
   private[graft] val BatchCol = "__tb_batch"
   private[graft] val LegsCol = "__tb_legs"
 
@@ -433,10 +431,7 @@ object Sampling {
     * corpus's tokens is re-binned once over its own sub-range at
     * selection time (two extra bounded aggregates over the slice) —
     * declaring the range honestly remains the cheap path.
-    * Persistence is the shared [[graft.ops.EpochStore]] single-writer
-    * protocol; with a [[graft.sinks.BatchCtx]] the fold is
-    * effectively-once under foreachBatch crash replays (the shared replay
-    * ledger), ctx-less folds stay at-least-once and preserve the ledger.
+    * Persistence and replay handling are [[EpochStore.fold]]'s.
     */
   def appendBudgetHistogram(df: DataFrame, scoreCol: Column, tokensCol: Column,
                             path: String, lo: Double, hi: Double,
@@ -455,10 +450,9 @@ object Sampling {
     * than the monitor's documented at-least-once (doubled digest weights
     * are visibly wrong; a drifted budget cutoff is not). The declared
     * binning stays pinned against the live asset (a different declaration
-    * is a different asset — rotate the path), the streaming replay ledger
-    * is PRESERVED (a rebuild interleaved on a streaming asset's path must
-    * not erase an in-flight batch's replay protection — though mixing the
-    * two maintainers on one path is operator error either way), and an
+    * is a different asset — rotate the path), the rebuild is a ctx-less
+    * [[EpochStore.fold]] (the streaming replay ledger is preserved, though
+    * mixing the two maintainers on one path is operator error), and an
     * empty df is a no-op like the append (selection over an empty corpus
     * is empty regardless of the retained histogram).
     */
@@ -481,8 +475,7 @@ object Sampling {
     * updates when the caller folds their `(−before, +after)` pair as
     * [[graft.pipeline.BudgetCurator.fold]] does; a feed without
     * before-images drifts, and a net-negative bin is the loud symptom).
-    * Same EpochStore persistence/ledger semantics as the unsigned
-    * append.
+    * Same [[EpochStore.fold]] persistence as the unsigned append.
     */
   def appendBudgetDeltas(df: DataFrame, scoreCol: Column,
                          signedTokensCol: Column, path: String,
@@ -504,43 +497,27 @@ object Sampling {
       .withColumn("__bin", budgetBin(col("score"), lo, width, bins))
       .groupBy("__bin").agg(sum("n_tokens").as("toks"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (batchHist.nonEmpty) EpochStore.lockFor(spark, path).synchronized {
-      val f = EpochStore.fs(spark, path)
-      val epochs = EpochStore.epochStatuses(f, path)
-      val live = EpochStore.committedOf(f, epochs).lastOption.map { n =>
-        (n, spark.read.parquet(s"$path/epoch_$n"))
-      }
-      val ctxPair = ctx.map(c => (c.batchId, c.origin))
-      val ledger = live.flatMap { case (_, ldf) =>
-        EpochStore.readLedger(ldf, BatchCol, LegsCol)
-      }
-      if (!EpochStore.isReplay(ctxPair, ledger)) {
-        val merged = scala.collection.mutable.Map.empty[Long, Long]
-        live.foreach { case (_, ldf) =>
-          ldf.select(col("lo"), col("hi"), col("bins")).limit(1).collect()
-            .headOption.foreach { r =>
-              require(r.getDouble(0) == lo && r.getDouble(1) == hi &&
-                  r.getInt(2) == bins,
-                s"histogram asset at $path was declared (lo=${r.getDouble(0)}, " +
-                  s"hi=${r.getDouble(1)}, bins=${r.getInt(2)}) — appends must " +
-                  s"match, got (lo=$lo, hi=$hi, bins=$bins)")
-            }
-          if (merge) ldf.select(col("bin"), col("toks")).collect().foreach { r =>
-            merged(r.getLong(0)) = merged.getOrElse(r.getLong(0), 0L) + r.getLong(1)
+    if (batchHist.nonEmpty) EpochStore.fold(spark, path, (BatchCol, LegsCol), ctx) { live =>
+      val merged = scala.collection.mutable.Map.empty[Long, Long]
+      live.foreach { ldf =>
+        ldf.select(col("lo"), col("hi"), col("bins")).limit(1).collect()
+          .headOption.foreach { r =>
+            require(r.getDouble(0) == lo && r.getDouble(1) == hi &&
+                r.getInt(2) == bins,
+              s"histogram asset at $path was declared (lo=${r.getDouble(0)}, " +
+                s"hi=${r.getDouble(1)}, bins=${r.getInt(2)}) — appends must " +
+                s"match, got (lo=$lo, hi=$hi, bins=$bins)")
           }
+        if (merge) ldf.select(col("bin"), col("toks")).collect().foreach { r =>
+          merged(r.getLong(0)) = merged.getOrElse(r.getLong(0), 0L) + r.getLong(1)
         }
-        batchHist.foreach { case (b, t) =>
-          merged(b) = merged.getOrElse(b, 0L) + t
-        }
-        import spark.implicits._
-        val epochN = live.map(_._1 + 1).getOrElse(0L)
-        EpochStore.stampLedger(
-            merged.toSeq.sorted.map { case (b, t) => (b, t, lo, hi, bins) }
-              .toDF("bin", "toks", "lo", "hi", "bins"),
-            EpochStore.advanceLedger(ctxPair, ledger), BatchCol, LegsCol)
-          .write.mode("overwrite").parquet(s"$path/epoch_$epochN")
-        EpochStore.gcBelowGrace(f, epochs, epochN)
       }
+      batchHist.foreach { case (b, t) =>
+        merged(b) = merged.getOrElse(b, 0L) + t
+      }
+      import spark.implicits._
+      merged.toSeq.sorted.map { case (b, t) => (b, t, lo, hi, bins) }
+        .toDF("bin", "toks", "lo", "hi", "bins")
     }
   }
 
@@ -555,9 +532,7 @@ object Sampling {
                                  budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be non-negative: $budget")
     val spark = df.sparkSession
-    val live = EpochStore.currentEpoch(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no budget-histogram asset at $path"))
-    val asset = spark.read.parquet(live)
+    val asset = EpochStore.read(spark, path, "budget-histogram asset")
     val meta = asset.select(col("lo"), col("hi"), col("bins")).head()
     val (lo, hi, bins) = (meta.getDouble(0), meta.getDouble(1), meta.getInt(2))
     val hist = asset.select(col("bin"), col("toks")).collect()

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
+import graft.model.TableId
 import graft.operators.Changelog
 import graft.ops.Sampling
-import graft.sinks.{BatchCtx, CdcSink}
+import graft.sinks.BatchCtx
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,15 +37,13 @@ import org.apache.spark.sql.functions._
   *     retract: true                       # optional: deletes retract
   * ```
   *
-  * Persistence and delivery semantics are the shared
-  * [[graft.ops.EpochStore]] protocol via `appendBudgetHistogram`:
-  * `_SUCCESS`-committed epoch dirs, per-path fold locks, one grace epoch;
-  * on the streaming path folds are EFFECTIVELY-ONCE under foreachBatch
-  * crash replays (the (batchId, leg) replay ledger rides the asset),
-  * batch-composer maintenance REBUILDS per run and is idempotent. Delete
-  * policy per block: by default the histogram is GROW-ONLY (DELETE rows
-  * carry no observation — the asset describes everything ever offered,
-  * the operating mode of append-shaped corpora); with `retract: true`
+  * Persistence and delivery are the shared epoch-asset protocol
+  * ([[graft.ops.EpochStore.fold]]): effectively-once on the streaming
+  * path; batch-composer maintenance REBUILDS per run and is idempotent.
+  * Delete policy per block: by default the histogram is GROW-ONLY
+  * (DELETE rows carry no observation — the asset describes everything
+  * ever offered, the operating mode of append-shaped corpora); with
+  * `retract: true`
   * DELETE rows fold as exact negations of the offers they retract (the
   * CDC before-image carries the original columns), so the asset tracks
   * the SURVIVING table and takedown/GDPR-delete flows keep selection
@@ -138,34 +136,6 @@ object BudgetCurator {
       Sampling.rebuildBudgetHistogram(table, expr(c.score), expr(c.tokens),
         c.path, c.lo, c.hi, c.bins)
     }
-
-  /** Sink decorator for the streaming path: data write first (idempotent,
-    * the sink's own protocol), then the effectively-once histogram fold
-    * under the write's provenance — the FULL changelog goes to [[fold]],
-    * which applies each block's delete policy (skip vs retract). Stacks
-    * with [[QuantileMonitor.MonitorSink]]. UPDATE_BEFORE retraction rows
-    * are for the fold ONLY: they are stripped before the inner sink (and
-    * every decorator under it — the monitor must not observe superseded
-    * images either), because their (key, seq) collides with the paired
-    * after-image row and would make the sink's per-key `max_by(…, seq)`
-    * materialization nondeterministic.
-    */
-  final class CurateSink(inner: CdcSink, spark: SparkSession,
-                         curations: Seq[CurateDef]) extends CdcSink {
-    override def applySchemaChange(e: SchemaChangeEvent): Unit =
-      inner.applySchemaChange(e)
-    override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit =
-      writeBatch(id, changelog, schema, None)
-    override def writeBatch(id: TableId, changelog: DataFrame, schema: CdcSchema,
-                            ctx: Option[BatchCtx]): Unit = {
-      val forSink =
-        if (changelog.columns.contains(Changelog.OpCol))
-          changelog.where(col(Changelog.OpCol) =!= Changelog.UpdateBeforeOp)
-        else changelog
-      inner.writeBatch(id, forSink, schema, ctx)
-      fold(spark, id, changelog, curations, ctx)
-    }
-  }
 
   /** The read surface: the maximal budget prefix over the sink's
     * MATERIALIZED table, with the cutoff resolved off the maintained

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
-import graft.operators.Changelog
+import graft.model.TableId
 import graft.ops.QuantileSketch
-import graft.sinks.{BatchCtx, CdcSink}
+import graft.sinks.BatchCtx
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,40 +20,9 @@ import org.apache.spark.sql.functions._
   *     path: /warehouse/mon/docs     # persisted sketch-table location
   * ```
   *
-  * Persistence: numbered epoch dirs resolved by LISTING through the Hadoop
-  * FileSystem API (hdfs://, s3a://, local all behave the same) — the live
-  * epoch is the highest `epoch_N` carrying the parquet job-commit
-  * `_SUCCESS`, so a crash mid-write leaves an uncommitted dir the next
-  * fold simply overwrites; no marker file, no non-atomic rename window.
-  * Each fold keeps ONE grace epoch (every epoch dir below N−1 is
-  * reclaimed, committed or crash-leftover — gapped sequences never leak)
-  * so a reader that resolved the previous epoch right before a fold still
-  * scans it — the bounded-staleness trade of a single-writer asset (the
-  * pipeline is the only maintainer of its own monitors; unlike the shared
-  * [[graft.ops.IndexMaintenance]] indexes no cross-job lease is needed,
-  * and concurrent sink writes within one batch serialize on a PER-PATH
-  * lock, so independent monitors never convoy on each other).
-  *
-  * Delivery on the streaming path is EFFECTIVELY-ONCE: each committed
-  * epoch carries a replay ledger — the micro-batch id it folded plus the
-  * route legs of that batch folded so far — as constant metadata columns
-  * of the sketch table itself, so the ledger commits atomically with the
-  * digests (same parquet job, same `_SUCCESS`). A crash-replayed batch
-  * re-offers the same (batchId, leg) pair; the fold sees it in the live
-  * ledger and skips, so weights never double-count, with ZERO coupling to
-  * the sink's commit protocol. Folds without a batch context (the batch
-  * composer's one-shot run, the hybrid snapshot phase) PRESERVE the live
-  * ledger (so an interleaved ctx-less fold cannot erase the replay
-  * protection of an in-flight streaming batch on the same path) and are
-  * themselves at-least-once by design — re-running a batch pipeline
-  * deliberately folds again. Known residual: after an in-place checkpoint
-  * RESET (batch ids restart at 0) on a KEPT monitor path, a first batch
-  * that re-offers the exact (0, leg) pair still in the stale ledger is
-  * indistinguishable from a replay and is skipped once; rotating the
-  * monitor path together with the checkpoint (the recommended reset
-  * practice — the asset describes the stream it was folded from) avoids
-  * the collision entirely, and no query-lineage id is reliably available
-  * inside `foreachBatch` at batch 0 to disambiguate it mechanically.
+  * Persistence and delivery are the shared epoch-asset protocol
+  * ([[graft.ops.EpochStore.fold]]): effectively-once on the streaming
+  * path, at-least-once for ctx-less folds.
   */
 final case class MonitorDef(
     sourceTable: String,
@@ -92,85 +60,27 @@ object QuantileMonitor {
   private[graft] val BatchCol = "__mon_batch"
   private[graft] val LegsCol = "__mon_legs"
 
-  /** The live sketch-table epoch dir under `path`, if any. Persistence and
-    * locking are the shared single-writer [[graft.ops.EpochStore]]
-    * protocol: `_SUCCESS`-committed `epoch_N` listing, per-qualified-path
-    * fold locks, one-grace-epoch GC.
-    */
-  def currentEpoch(spark: SparkSession, path: String): Option[String] =
-    graft.ops.EpochStore.currentEpoch(spark, path)
-
   /** Read the live sketch table (loud error if never folded). The replay
     * ledger is internal bookkeeping — readers see only (dims, sketch).
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(currentEpoch(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no sketch table at $path")))
-      .drop(BatchCol, LegsCol)
+    graft.ops.EpochStore.read(spark, path, "sketch table").drop(BatchCol, LegsCol)
 
   /** Fold one batch slice of sink table `id` into every matching monitor:
-    * per-cell digests of the batch, merged with the live epoch, committed
-    * as the next epoch; every epoch below the reader-grace epoch N−1 is
-    * deleted. Rows are the batch's post-images (DELETE rows carry no new
-    * value observation). With a [[BatchCtx]], a (batchId, leg) already in
-    * the live ledger is a crash replay and is skipped (effectively-once).
+    * per-cell digests of the batch merged with the live epoch
+    * ([[graft.ops.EpochStore.fold]]). Rows are the batch's post-images
+    * (DELETE rows carry no new value observation).
     */
   def fold(spark: SparkSession, id: TableId, batch: DataFrame,
            monitors: Seq[MonitorDef], ctx: Option[BatchCtx] = None): Unit =
     monitors.filter(_.selectors.matches(id)).foreach { m =>
       require((m.dims :+ m.value).forall(batch.columns.contains),
         s"monitor at ${m.path}: table $id lacks ${(m.dims :+ m.value).mkString(",")}")
-      graft.ops.EpochStore.lockFor(spark, m.path).synchronized {
-        val f = graft.ops.EpochStore.fs(spark, m.path)
-        // ONE listing serves both the live-epoch resolution here and the
-        // GC sweep after the write (the lock makes it race-free; the new
-        // epoch written below is above the grace bar by construction)
-        val epochs = graft.ops.EpochStore.epochStatuses(f, m.path)
-        val live = graft.ops.EpochStore.committedOf(f, epochs).lastOption
-          .map(n => (n, spark.read.parquet(s"${m.path}/epoch_$n")))
-        // one tiny limit(1) job over the cell-bounded live table — read on
-        // EVERY fold (ctx-less folds must carry the ledger forward, not
-        // null it out). Parse / replay-decision / advance semantics are
-        // the shared [[graft.ops.EpochStore]] ledger protocol.
-        val ctxPair = ctx.map(c => (c.batchId, c.origin))
-        val ledger = live.flatMap { case (_, df) =>
-          graft.ops.EpochStore.readLedger(df, BatchCol, LegsCol)
-        }
-        if (!graft.ops.EpochStore.isReplay(ctxPair, ledger)) {
-          val sk = QuantileSketch.buildSketches(
-            batch.select(m.dims.map(col) :+ col(m.value): _*), m.dims, m.value,
-            m.compression)
-          val merged0 = live match {
-            case Some((_, cur)) => QuantileSketch.mergeSketchTables(
-              cur.drop(BatchCol, LegsCol), sk, m.dims, m.compression)
-            case None => sk
-          }
-          val merged = graft.ops.EpochStore.stampLedger(merged0,
-            graft.ops.EpochStore.advanceLedger(ctxPair, ledger),
-            BatchCol, LegsCol)
-          val epochN = live.map(_._1 + 1).getOrElse(0L)
-          merged.write.mode("overwrite").parquet(s"${m.path}/epoch_$epochN")
-          graft.ops.EpochStore.gcBelowGrace(f, epochs, epochN)
-        }
+      graft.ops.EpochStore.fold(spark, m.path, (BatchCol, LegsCol), ctx) { live =>
+        val sk = QuantileSketch.buildSketches(
+          batch.select(m.dims.map(col) :+ col(m.value): _*), m.dims, m.value,
+          m.compression)
+        live.fold(sk)(QuantileSketch.mergeSketchTables(_, sk, m.dims, m.compression))
       }
     }
-
-  /** Sink decorator for the streaming path: data write first (idempotent,
-    * exactly-once via the sink's own protocol), then the effectively-once
-    * monitor fold of the batch's non-DELETE rows under the write's
-    * provenance.
-    */
-  final class MonitorSink(inner: CdcSink, spark: SparkSession,
-                          monitors: Seq[MonitorDef]) extends CdcSink {
-    override def applySchemaChange(e: SchemaChangeEvent): Unit =
-      inner.applySchemaChange(e)
-    override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit =
-      writeBatch(id, changelog, schema, None)
-    override def writeBatch(id: TableId, changelog: DataFrame, schema: CdcSchema,
-                            ctx: Option[BatchCtx]): Unit = {
-      inner.writeBatch(id, changelog, schema, ctx)
-      fold(spark, id, changelog.where(col(Changelog.OpCol) =!= "DELETE"),
-        monitors, ctx)
-    }
-  }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * `foreachBatch` batch id plus the route leg (`"src→out"`). An N→1 route
   * writes the same sink table once per SOURCE within a batch, so the pair —
   * not the batch id alone — uniquely identifies the invocation; decorators
-  * ([[graft.pipeline.QuantileMonitor.MonitorSink]]) key crash-replay
+  * ([[graft.pipeline.AssetFoldSink]]) key crash-replay
   * dedup on it.
   */
 final case class BatchCtx(batchId: Long, origin: String)

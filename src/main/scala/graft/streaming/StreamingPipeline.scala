@@ -45,8 +45,8 @@ final class StreamingPipeline(
       * `UPDATE_BEFORE` changelog row ([[graft.sources.DebeziumJson.parse]])
       * so a retraction-folding sink decorator can negate the superseded
       * contribution exactly. Requires a decorator that strips those rows
-      * before the materializing sink ([[graft.pipeline.BudgetCurator
-      * .CurateSink]] does) — set only when a `retract: true` curate block
+      * before the materializing sink ([[graft.pipeline.AssetFoldSink]]
+      * does) — set only when a `retract: true` curate block
       * is in play ([[graft.Cli.buildStreaming]] wires it).
       */
     emitUpdateBefore: Boolean = false) {

@@ -405,6 +405,79 @@ class CliSpec extends SparkSpec {
       (3L, 20L, 10L), (4L, 10L, 10L)))
   }
 
+  test("monitor + retracting curate in one stream: UPDATE_BEFORE feeds only the curate fold") {
+    // one decorator folds both asset kinds: the retract block turns on the
+    // (-before, +after) pair emission, the before-image must reach the
+    // curate fold and neither the monitor nor the materializing sink
+    import graft.pipeline.{PipelineDef, QuantileMonitor}
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.streaming.Trigger
+    val in = tempDir("graft-moncur-in")
+    val out = tempDir("graft-moncur-out")
+    val p = PipelineDef.fromYaml(
+      s"""source:
+         |  type: debezium-json
+         |  path: $in
+         |  schema.corpus.docs: "id BIGINT, lang STRING, n_chars BIGINT, tok BIGINT"
+         |transform:
+         |  - source-table: corpus.docs
+         |    primary-keys: id
+         |monitor:
+         |  - source-table: corpus.docs
+         |    dims: lang
+         |    value: n_chars
+         |    path: $out/mon
+         |curate:
+         |  - source-table: corpus.docs
+         |    id-column: id
+         |    score: "CAST(n_chars AS DOUBLE) / tok"
+         |    tokens: tok
+         |    path: $out/hist
+         |    lo: 0.0
+         |    hi: 64.0
+         |    bins: 8
+         |    retract: true
+         |sink:
+         |  type: parquet-upsert
+         |  path: $out/state
+         |  buckets: 2
+         |""".stripMargin)
+    def img(id: Int, lang: String, nChars: Int, tok: Int) =
+      s"""{"id":$id,"lang":"$lang","n_chars":$nChars,"tok":$tok}"""
+    def ev(op: String, before: String, after: String, ts: Int) =
+      s"""{"before":$before,"after":$after,"op":"$op","ts_ms":$ts,""" +
+        s""""source":{"db":"corpus","table":"docs"}}"""
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/b1.json"),
+      Seq(ev("c", "null", img(1, "en", 80, 10), 1),
+          ev("c", "null", img(2, "en", 40, 10), 2),
+          ev("c", "null", img(3, "fr", 20, 10), 3)).mkString("", "\n", "\n"))
+    val (_, _, q1) = Cli.buildStreaming(spark, p, Trigger.AvailableNow())
+    q1.awaitTermination(60000)
+    // in-place update of id 1: score and tokens both change
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/b2.json"),
+      ev("u", img(1, "en", 80, 10), img(1, "en", 5, 25), 101) + "\n")
+    val (_, _, q2) = Cli.buildStreaming(spark, p, Trigger.AvailableNow())
+    q2.awaitTermination(60000)
+    // the monitor observed four post-images (three inserts, one update);
+    // a leaked UPDATE_BEFORE would have made en 4.0
+    val weights = QuantileMonitor.read(spark, s"$out/mon")
+      .select(col("lang"),
+        expr("aggregate(sketch.weights, 0D, (a, x) -> a + x)").as("w"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(weights === Map("en" -> 3.0, "fr" -> 1.0))
+    // the curate fold retracted the before-image: 30 - 10 + 25
+    val check = Cli.curateCheck(spark, p, "corpus.docs").collect()
+    assert(check.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq ===
+      Seq((45L, 45L, true)))
+    val state = new graft.sinks.ParquetUpsertSink(s"$out/state")
+      .read(spark, graft.model.TableId.of("corpus", "docs"))
+      .select("id", "lang", "n_chars", "tok").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .sortBy(_._1)
+    assert(state.toSeq === Seq((1L, "en", 5L, 25L), (2L, "en", 40L, 10L),
+      (3L, "fr", 20L, 10L)))
+  }
+
   test("batch curate REBUILDS the asset per run: a pipeline re-run is idempotent") {
     // the batch composer re-materializes the complete table each run, so
     // the asset must describe exactly it — an accumulate here would
@@ -1110,7 +1183,7 @@ class CliSpec extends SparkSpec {
     // striping (distinct paths must not convoy, same path must
     // serialize), and the read surface renders each asset afterwards.
     // Monitors match the post-route (sink-side) table ids, the id the
-    // MonitorSink decorator observes.
+    // AssetFoldSink decorator observes.
     import graft.pipeline.{PipelineDef, QuantileMonitor}
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.functions.{col, expr}
@@ -1306,7 +1379,7 @@ class CliSpec extends SparkSpec {
       override def write(id: TableId, changelog: org.apache.spark.sql.DataFrame,
                          schema: CdcSchema): Unit = ()
     }
-    val sink = new QuantileMonitor.MonitorSink(noop, spark, defs)
+    val sink = new graft.pipeline.AssetFoldSink(noop, spark, defs, Nil)
     val id = TableId.of("corpus", "docs")
     val schema = CdcSchema.of("lang" -> "STRING", "n_chars" -> "BIGINT")
     def slice(rows: (String, Long)*) = rows.toSeq.toDF("lang", "n_chars")

@@ -2,11 +2,13 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.ops.EpochStore.Ledger
+import graft.sinks.BatchCtx
 import org.apache.spark.sql.functions.col
 
-/** Unit tests for the shared replay-ledger primitives — the protocol three
-  * assets (monitor sketches, PCA suffstats, budget histograms) ride; the
-  * asset e2es prove the composition, this pins each primitive's edges.
+/** Unit tests for the shared epoch-asset protocol three assets (monitor
+  * sketches, PCA suffstats, budget histograms) ride: each replay-ledger
+  * primitive's edges, plus [[EpochStore.fold]]'s all-or-nothing commit;
+  * the asset e2es prove the composition.
   */
 class EpochLedgerSpec extends SparkSpec {
   import spark.implicits._
@@ -56,5 +58,39 @@ class EpochLedgerSpec extends SparkSpec {
     assert(nulls.schema(B).dataType.typeName === "long")
     assert(nulls.schema(L).dataType.typeName === "array")
     assert(nulls.where(col(B).isNotNull).count() === 0)
+  }
+
+  test("fold: a merge that throws commits nothing; the next good fold advances") {
+    // Pca's width check and the histogram's pinned declaration refuse
+    // inside `next` — the refusal must leave the asset exactly as it was
+    val path = tempDir("graft-epoch-fold") + "/asset"
+    def listing = new java.io.File(path).list().toSet
+    def ledger = EpochStore.readLedger(EpochStore.read(spark, path, "asset"), B, L)
+    EpochStore.fold(spark, path, (B, L), Some(BatchCtx(0L, "a"))) { live =>
+      assert(live.isEmpty)
+      Seq((1L, "x")).toDF("n", "s")
+    }
+    val (epoch0, ledger0, listing0) =
+      (EpochStore.currentEpoch(spark, path), ledger, listing)
+    assert(epoch0.exists(_.endsWith("epoch_0")))
+    assert(ledger0 === Some(Ledger(0L, Set("a"))))
+    val e = intercept[IllegalArgumentException] {
+      EpochStore.fold(spark, path, (B, L), Some(BatchCtx(1L, "a"))) { _ =>
+        throw new IllegalArgumentException("width mismatch")
+      }
+    }
+    assert(e.getMessage === "width mismatch")
+    assert(EpochStore.currentEpoch(spark, path) === epoch0)
+    assert(ledger === ledger0)
+    assert(listing === listing0)
+    // the good fold sees the live rows WITHOUT the ledger columns
+    EpochStore.fold(spark, path, (B, L), Some(BatchCtx(1L, "a"))) { live =>
+      assert(live.map(_.columns.toSeq) === Some(Seq("n", "s")))
+      live.get.unionByName(Seq((2L, "y")).toDF("n", "s"))
+    }
+    assert(EpochStore.currentEpoch(spark, path).exists(_.endsWith("epoch_1")))
+    assert(ledger === Some(Ledger(1L, Set("a"))))
+    assert(EpochStore.read(spark, path, "asset").select("n").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 2L))
   }
 }

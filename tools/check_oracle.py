@@ -6,8 +6,10 @@ Usage: check_oracle.py <sfDir> <verifyOutDir>
 For each query dir under verifyOutDir, loads the Spark parquet result and the
 DuckDB result of oracle_sql.json[query] over the sf tables, sorts columns by
 name and rows by all columns, and diffs values (floats to 1e-9 rel tol).
+Each oracle execution's wall time is recorded as `oracle_s` in
+correctness-local.json; the 10 slowest print after the verdict line.
 """
-import json, os, sys
+import json, os, sys, time
 import duckdb
 import pandas as pd
 
@@ -55,17 +57,20 @@ def main(sf_dir: str, out_dir: str) -> int:
                 record[q] = {"status": "fail", "rows": 0, "detail": "zero rows"}
                 failures += 1
             continue
+        t0 = time.perf_counter()
         duck_df = con.execute(oracle[q]).fetchdf()
+        oracle_s = round(time.perf_counter() - t0, 3)
         a, b = normalize(spark_df), normalize(duck_df)
         if list(a.columns) != list(b.columns):
             print(f"  FAIL {q}: columns {list(a.columns)} vs {list(b.columns)}")
-            record[q] = {"status": "fail", "rows": len(a),
+            record[q] = {"status": "fail", "rows": len(a), "oracle_s": oracle_s,
                          "detail": f"columns {list(a.columns)} vs {list(b.columns)}"}
             failures += 1
             continue
         if len(a) != len(b):
             print(f"  FAIL {q}: rows {len(a)} vs {len(b)}")
-            record[q] = {"status": "fail", "rows": len(a), "detail": f"rows {len(a)} vs {len(b)}"}
+            record[q] = {"status": "fail", "rows": len(a), "oracle_s": oracle_s,
+                         "detail": f"rows {len(a)} vs {len(b)}"}
             failures += 1
             continue
         mismatch = None
@@ -105,11 +110,13 @@ def main(sf_dir: str, out_dir: str) -> int:
                 break
         if mismatch:
             print(f"  FAIL {q}: {mismatch}")
-            record[q] = {"status": "fail", "rows": len(a), "detail": mismatch}
+            record[q] = {"status": "fail", "rows": len(a), "oracle_s": oracle_s,
+                         "detail": mismatch}
             failures += 1
         else:
             print(f"  OK   {q}: {len(a)} rows")
-            record[q] = {"status": "ok", "rows": len(a), "detail": ""}
+            record[q] = {"status": "ok", "rows": len(a), "oracle_s": oracle_s,
+                         "detail": ""}
     # builder-side durable record: the driver's artifact collection has
     # failed three rounds running, so every full compare also writes its
     # per-query result map for committing into the round tree
@@ -120,6 +127,12 @@ def main(sf_dir: str, out_dir: str) -> int:
     with open(os.path.join(out_dir, "correctness-local.json"), "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True)
     print(f"{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
+    timed = sorted(((r["oracle_s"], q) for q, r in record.items() if "oracle_s" in r),
+                   reverse=True)
+    if timed:
+        print("slowest oracles:")
+        for secs, q in timed[:10]:
+            print(f"  {secs:9.3f}s  {q}")
     return 1 if failures else 0
 
 
