@@ -364,6 +364,26 @@ object Cli {
           s"move the old dir: mv '$legacy' '$resolved'")
     }
 
+  /** The tables a source block declares as `schema.<table-id>: "col TYPE, ..."`,
+    * keyed by the matching transform's primary keys (default: the first
+    * column). A malformed spec is refused with its key.
+    */
+  private[graft] def declaredTables(p: PipelineDef): Seq[CreateTableEvent] =
+    p.source.options.toSeq.collect { case (k, v) if k.startsWith("schema.") =>
+      val id = TableId.parse(k.stripPrefix("schema."))
+      val cols = v.split(",").map(_.trim).filter(_.nonEmpty).map { c =>
+        c.split("\\s+", 2) match {
+          case Array(n, t) => n -> t
+          case _ => throw new IllegalArgumentException(
+            s"source option `$k`: column spec '$c' needs a name and a type")
+        }
+      }
+      require(cols.nonEmpty, s"source option `$k` declares no columns: '$v'")
+      val pks = p.transforms.find(_.selectors.matches(id)).map(_.primaryKeys).getOrElse(Nil)
+      val pk = if (pks.nonEmpty) pks else Seq(cols.head._1) // default: first column
+      CreateTableEvent(id, CdcSchema.of(cols.toIndexedSeq: _*).copy(primaryKeys = pk))
+    }
+
   /** Build the streaming pipeline + launch the query; factored out so tests
     * can drive it with `Trigger.AvailableNow` instead of awaiting forever.
     * Returns (pipeline, sink, running query). `kafkaWriter` substitutes the
@@ -393,22 +413,18 @@ object Cli {
       .warn(s"pipeline '${p.name}' state dir: $statePath")
     warnIfLegacyStateDir(p, statePath)
 
-    // same function surface as the batch composer: parity UDFs, corpus ops,
-    // models — usable in streaming transform projections/filters too
-    graft.functions.CdcFunctions.register(spark, p.localTimeZone)
-    graft.functions.CorpusFunctions.register(spark)
-    p.udfs.foreach(u => graft.functions.CdcUdf.fromClasspath(spark, u.classpath, Some(u.name)))
-    p.models.foreach(m => graft.functions.AiFunctions.registerModel(spark, m.name, m.options))
+    // same function surface as the batch composer, usable in streaming
+    // transform projections/filters too
+    Composer.bindFunctions(spark, p)
 
     val registry = new SchemaRegistry(SchemaChangeBehavior.of(p.schemaChangeBehavior))
     // no `buckets` (or `buckets: auto`) derives the count from the session's
     // parallelism and the first batch, and pins it in the table's layout meta
     // (scale-adaptive file sizing); an explicit integer >= 1 pins a layout
     // (the sink refuses `buckets: 0`, the removed unbucketed layout)
-    val buckets = p.sink.options.getOrElse("buckets", "auto") match {
-      case "auto" => ParquetUpsertSink.AutoBuckets
-      case n => n.toInt
-    }
+    val buckets =
+      if (p.sink.options.get("buckets").contains("auto")) ParquetUpsertSink.AutoBuckets
+      else PipelineDef.intOption(p.sink.options, "buckets", ParquetUpsertSink.AutoBuckets)
     val sink0: graft.sinks.CdcSink = p.sink.kind match {
       case "kafka" => new graft.sinks.KafkaChangelogSink(
         p.sink.options.getOrElse("properties.bootstrap.servers",
@@ -440,23 +456,14 @@ object Cli {
     // concurrent per-table writes within a batch (reference: parallelized
     // pipeline, FlinkParallelizedPipelineITCase)
     val pipe = new StreamingPipeline(registry, p.transforms, p.routes, sinkForPipe,
-      tableParallelism = p.config.getOrElse("table-parallelism", "4").toInt,
+      tableParallelism = PipelineDef.intOption(p.config, "table-parallelism", 4),
       deadLetter = deadLetter,
       // a retract: true curate block needs the (−before, +after) pair for
       // in-place updates; the AssetFoldSink above strips the UPDATE_BEFORE
       // leg before the materializing sink
       emitUpdateBefore = p.curations.exists(_.retract))
 
-    // source block declares table schemas as `schema.<table-id>: "col TYPE, ..."`
-    p.source.options.collect { case (k, v) if k.startsWith("schema.") =>
-      val id = TableId.parse(k.stripPrefix("schema."))
-      val cols = v.split(",").map(_.trim).filter(_.nonEmpty).map { c =>
-        val Array(n, t) = c.split("\\s+", 2); n -> t
-      }
-      val pks = p.transforms.find(_.selectors.matches(id)).map(_.primaryKeys).getOrElse(Nil)
-      val pk = if (pks.nonEmpty) pks else Seq(cols.head._1) // default: first column
-      pipe.applySchemaChange(CreateTableEvent(id, CdcSchema.of(cols.toIndexedSeq: _*).copy(primaryKeys = pk)))
-    }
+    declaredTables(p).foreach(pipe.applySchemaChange)
 
     val stream = p.source.kind match {
       case "kafka" =>
@@ -472,15 +479,23 @@ object Cli {
         // restart must resume from the stored position, not re-anchor past
         // unprocessed data.
         val mode = graft.sources.StartupOptions.parse(p.source.options)
+        // The anchor lives on the state dir's own file system (a `file:` or
+        // `hdfs://` path is not a local relative path), written aside and
+        // renamed in so a crash mid-write leaves no torn anchor.
         def anchoredPosition: Long = {
-          val f = java.nio.file.Paths.get(s"$statePath/_startup_position")
-          if (java.nio.file.Files.exists(f)) java.nio.file.Files.readString(f).trim.toLong
-          else {
-            val pos = graft.sources.StartupOptions.filePosition(spark, inPath)
-            java.nio.file.Files.createDirectories(f.getParent)
-            java.nio.file.Files.writeString(f, pos.toString)
-            pos
+          import org.apache.hadoop.fs.Path
+          val f = new Path(statePath, "_startup_position")
+          val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (!fs.exists(f)) {
+            val aside = new Path(statePath, "_startup_position.tmp")
+            val out = fs.create(aside, true)
+            try out.write(graft.sources.StartupOptions.filePosition(spark, inPath).toString
+              .getBytes("UTF-8")) finally out.close()
+            if (!fs.rename(aside, f)) throw new java.io.IOException(
+              s"could not persist the startup anchor: rename $aside -> $f")
           }
+          val in = fs.open(f)
+          try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
         }
         graft.sources.StartupOptions(
           spark.readStream.format("text").load(inPath), mode,

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a `SparkSession` is built. Every main, `Cli` and the test
-  * suite's shared session come through [[local]], so core count, master and
-  * the base conf cannot drift apart between them.
+  * suite's shared session come through [[local]], so core count, master,
+  * the base conf and the SQL function surface cannot drift apart between them.
   */
 object Sessions {
 
@@ -15,7 +15,9 @@ object Sessions {
   /** Session on `SPARK_MASTER` when set, else `local[cpus]`, with one
     * shuffle partition per core, UTC session time, no UI and WARN logging.
     * `conf` entries override that base; a `null` value drops the base key,
-    * leaving Spark's own default (or a `-Dspark.*` property) in force.
+    * leaving Spark's own default (or a `-Dspark.*` property) in force. The
+    * engine's built-in SQL functions are installed on it
+    * ([[graft.functions.FunctionCatalog]]).
     */
   def local(app: String, cpus: Int = Sessions.cpus, conf: Map[String, String] = Map.empty): SparkSession = {
     val base = Map(
@@ -28,6 +30,7 @@ object Sessions {
     for ((k, v) <- base ++ conf if v != null) b.config(k, v)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.FunctionCatalog.install(spark)
     spark
   }
 }

@@ -1826,7 +1826,6 @@ object SparkEntry {
         |FROM orders""".stripMargin,
     )) { (spark, dir) =>
       implicit val s: SparkSession = spark
-      graft.functions.CdcFunctions.register(spark)
       // parquet NTZ timestamps cast to LTZ under the UTC session zone = same wall time
       t(dir, "orders").selectExpr(
         "o_orderkey",
@@ -2038,7 +2037,6 @@ object SparkEntry {
       implicit val s: SparkSession = spark
       // documents contain genuine near-dup texts; embed them (stub embedding
       // UDF) and find cosine near-dup pairs — the composed LLM-pipeline shape
-      graft.functions.AiFunctions.register(spark)
       val embedded = t(dir, "documents")
         .selectExpr("doc_id", "GET_EMBEDDING(text) AS embedding")
       Dedup.embeddingCandidates(embedded, "doc_id", "embedding", threshold = 0.95)
@@ -2050,7 +2048,6 @@ object SparkEntry {
       // SemDeDup survivor selection: the curation-pipeline output shape —
       // one representative (min id) per semantic-duplicate chain, wide
       // vectors confined to the bounded per-bucket stage, id-only anti-join
-      graft.functions.AiFunctions.register(spark)
       val embedded = t(dir, "documents")
         .selectExpr("doc_id", "GET_EMBEDDING(text) AS embedding")
       Dedup.semanticSurvivors(embedded, "doc_id", "embedding").select("doc_id")
@@ -2861,7 +2858,6 @@ object SparkEntry {
       implicit val s: SparkSession = spark
       // AI transform functions as projection expressions (§2.4): stubbed
       // deterministically, so even the chat output is oracle-checkable
-      graft.functions.AiFunctions.register(spark)
       t(dir, "documents").selectExpr(
         "doc_id",
         "AI_CHAT_PREDICT(text) AS reply",
@@ -4948,7 +4944,6 @@ object SparkEntry {
       // top-20, fused by Reciprocal Rank Fusion — rank-only fusion, so the
       // two scorers' incomparable scales never meet and the fused doubles
       // are exact functions of small integer ranks.
-      graft.functions.AiFunctions.register(spark)
       val docs = t(dir, "documents")
       val query = "spark window merge stream"
       val lex = graft.ops.Retrieval.ranked(

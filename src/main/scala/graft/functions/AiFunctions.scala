@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.types._
 
 /** The reference's AI/LLM transform functions
@@ -45,26 +44,16 @@ object AiFunctions {
     * Embedding-flavored models return ARRAY<FLOAT>, chat models STRING.
     */
   def registerModel(spark: SparkSession, name: String, options: Map[String, String]): Unit = {
-    val model = options.getOrElse("model-name", options.getOrElse("openai.model", "chat"))
-    if (model.toLowerCase.contains("embed"))
-      spark.udf.register(name, new UDF1[String, Array[Float]] {
-        override def call(t: String): Array[Float] = fakeEmbed(t)
-      }, ArrayType(FloatType))
-    else
-      spark.udf.register(name, new UDF1[String, String] {
-        override def call(t: String): String = fakeChat(t)
-      }, StringType)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("GET_EMBEDDING", new UDF1[String, Array[Float]] {
-      override def call(t: String): Array[Float] = fakeEmbed(t)
-    }, ArrayType(FloatType))
-    spark.udf.register("AI_CHAT_PREDICT", new UDF1[String, String] {
-      override def call(t: String): String = fakeChat(t)
-    }, StringType)
-    spark.udf.register("AI_LANGCHAIN_PREDICT", new UDF1[String, String] {
-      override def call(t: String): String = fakeChat(t)
-    }, StringType)
+    val embeds = options.getOrElse("model-name", options.getOrElse("openai.model", "chat"))
+      .toLowerCase.contains("embed")
+    val modelName = name
+    CdcUdf.register(spark, new CdcUdf {
+      def name: String = modelName
+      def returnType: DataType = if (embeds) ArrayType(FloatType) else StringType
+      def eval(args: Seq[Any]): Any = {
+        val text = args.head.asInstanceOf[String]
+        if (embeds) fakeEmbed(text) else fakeChat(text)
+      }
+    })
   }
 }

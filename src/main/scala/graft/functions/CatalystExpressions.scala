@@ -1,10 +1,9 @@
 package graft.functions
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -1434,43 +1433,4 @@ object CdcExpressions {
       org.apache.spark.sql.catalyst.expressions.Literal(
         bloomBytes, org.apache.spark.sql.types.BinaryType),
       GraftBridge.expression(value)))
-
-  /** SQL names on an existing session (tests / interactive). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_signature",
-      (args: Seq[Expression]) => MinHashSignature(args.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      (args: Seq[Expression]) => SimHash64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("hash64",
-      (args: Seq[Expression]) => Hash64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("mix64",
-      (args: Seq[Expression]) => Mix64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      (args: Seq[Expression]) => CosineSim(args(0), args(1)), "built-in")
-  }
-}
-
-/** Session-extension injector: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * makes the functions available in every session of the deployment — the
-  * SparkSessionExtensions registration path (SURVEY custom-operator order (b)).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (args: Seq[Expression]) => MinHashSignature(args.head)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((FunctionIdentifier("hash64"),
-      new ExpressionInfo(classOf[Hash64].getName, "hash64"),
-      (args: Seq[Expression]) => Hash64(args.head)))
-    ext.injectFunction((FunctionIdentifier("mix64"),
-      new ExpressionInfo(classOf[Mix64].getName, "mix64"),
-      (args: Seq[Expression]) => Mix64(args.head)))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSim(args(0), args(1))))
-  }
 }

@@ -3,8 +3,7 @@ package graft.functions
 import java.text.SimpleDateFormat
 import java.util.TimeZone
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.api.java.{UDF1, UDF2, UDF3}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,68 +56,57 @@ object CdcFunctions {
     }
   }
 
-  /** Register the parity UDFs on a session so `selectExpr`/SQL can call them
-    * by the reference's names. The pipeline `local-time-zone` is bound at
-    * registration (reference binds it per pipeline config, JaninoCompiler.java:82-83).
+  private def parity(name: String, arity: Int, t: DataType)(f: String => AnyRef) = (name, arity, t, f)
+
+  /** The parity functions by SQL name: (name, arity, return type, body for
+    * a zone id). [[FunctionCatalog]] binds the zone to the session's when a
+    * call is analyzed: the pipeline's `local-time-zone`, which `graft.Cli`
+    * builds the session in (the reference binds it per pipeline config,
+    * JaninoCompiler.java:82-83).
     */
-  def register(spark: SparkSession, timeZone: String = "UTC"): Unit = {
-    spark.udf.register("CDC_DATE_FORMAT", new UDF2[java.sql.Timestamp, String, String] {
-      override def call(ts: java.sql.Timestamp, fmt: String): String =
-        if (ts == null || fmt == null) null else formatter(fmt, timeZone).format(ts)
-    }, StringType)
+  private[functions] val zoned: Seq[(String, Int, DataType, String => AnyRef)] = Seq(
+    parity("CDC_DATE_FORMAT", 2, StringType)(tz => (ts: java.sql.Timestamp, fmt: String) =>
+      if (ts == null || fmt == null) null else formatter(fmt, tz).format(ts)),
 
-    spark.udf.register("CDC_TO_TIMESTAMP", new UDF2[String, String, java.sql.Timestamp] {
-      override def call(s: String, fmt: String): java.sql.Timestamp =
-        if (s == null) null
-        else new java.sql.Timestamp(formatter(if (fmt == null) "yyyy-MM-dd HH:mm:ss" else fmt, timeZone).parse(s).getTime)
-    }, TimestampType)
+    parity("CDC_TO_TIMESTAMP", 2, TimestampType)(tz => (s: String, fmt: String) =>
+      if (s == null) null
+      else new java.sql.Timestamp(formatter(if (fmt == null) "yyyy-MM-dd HH:mm:ss" else fmt, tz).parse(s).getTime)),
 
-    spark.udf.register("CDC_TO_DATE", new UDF2[String, String, java.sql.Date] {
-      override def call(s: String, fmt: String): java.sql.Date =
-        if (s == null) null
-        else new java.sql.Date(formatter(if (fmt == null) "yyyy-MM-dd" else fmt, timeZone).parse(s).getTime)
-    }, DateType)
+    parity("CDC_TO_DATE", 2, DateType)(tz => (s: String, fmt: String) =>
+      if (s == null) null
+      else new java.sql.Date(formatter(if (fmt == null) "yyyy-MM-dd" else fmt, tz).parse(s).getTime)),
 
-    spark.udf.register("CDC_TIMESTAMP_DIFF", new UDF3[String, java.sql.Timestamp, java.sql.Timestamp, java.lang.Long] {
-      override def call(unit: String, from: java.sql.Timestamp, to: java.sql.Timestamp): java.lang.Long =
-        if (from == null || to == null) null else Long.box(timestampDiff(unit, from, to, timeZone))
-    }, LongType)
+    parity("CDC_TIMESTAMP_DIFF", 3, LongType)(tz =>
+      (unit: String, from: java.sql.Timestamp, to: java.sql.Timestamp) =>
+        if (from == null || to == null) null else Long.box(timestampDiff(unit, from, to, tz))),
 
-    spark.udf.register("CDC_UNIX_TIMESTAMP", new UDF2[String, String, java.lang.Long] {
-      override def call(s: String, fmt: String): java.lang.Long =
-        if (s == null) null
-        else Long.box(formatter(if (fmt == null) "yyyy-MM-dd HH:mm:ss" else fmt, timeZone).parse(s).getTime / 1000L)
-    }, LongType)
+    parity("CDC_UNIX_TIMESTAMP", 2, LongType)(tz => (s: String, fmt: String) =>
+      if (s == null) null
+      else Long.box(formatter(if (fmt == null) "yyyy-MM-dd HH:mm:ss" else fmt, tz).parse(s).getTime / 1000L)),
 
-    spark.udf.register("CDC_FROM_UNIXTIME", new UDF2[java.lang.Long, String, String] {
-      override def call(epochSec: java.lang.Long, fmt: String): String =
-        if (epochSec == null) null
-        else formatter(if (fmt == null) "yyyy-MM-dd HH:mm:ss" else fmt, timeZone)
-          .format(new java.util.Date(epochSec * 1000L))
-    }, StringType)
+    parity("CDC_FROM_UNIXTIME", 2, StringType)(tz => (epochSec: java.lang.Long, fmt: String) =>
+      if (epochSec == null) null
+      else formatter(if (fmt == null) "yyyy-MM-dd HH:mm:ss" else fmt, tz)
+        .format(new java.util.Date(epochSec * 1000L))),
 
     // TIMESTAMPADD with calendar-aware MONTH/YEAR arithmetic
     // (SystemFunctionUtils.timestampadd:244-265)
-    spark.udf.register("CDC_TIMESTAMP_ADD", new UDF3[String, Integer, java.sql.Timestamp, java.sql.Timestamp] {
-      override def call(unit: String, n: Integer, ts: java.sql.Timestamp): java.sql.Timestamp = {
-        if (n == null || ts == null) return null
-        val zone = java.time.ZoneId.of(timeZone)
-        val z = ts.toInstant.atZone(zone)
-        val out = unit.toUpperCase match {
-          case "SECOND" => z.plusSeconds(n.toLong)
-          case "MINUTE" => z.plusMinutes(n.toLong)
-          case "HOUR"   => z.plusHours(n.toLong)
-          case "DAY"    => z.plusDays(n.toLong)
-          case "WEEK"   => z.plusWeeks(n.toLong)
-          case "MONTH"  => z.plusMonths(n.toLong)
-          case "QUARTER" => z.plusMonths(3L * n)
-          case "YEAR"   => z.plusYears(n.toLong)
-          case other => throw new IllegalArgumentException(s"unit: $other")
-        }
-        java.sql.Timestamp.from(out.toInstant)
-      }
-    }, TimestampType)
-
-    AiFunctions.register(spark)
-  }
+    parity("CDC_TIMESTAMP_ADD", 3, TimestampType)(tz =>
+      (unit: String, n: Integer, ts: java.sql.Timestamp) =>
+        if (n == null || ts == null) null
+        else {
+          val z = ts.toInstant.atZone(java.time.ZoneId.of(tz))
+          val out = unit.toUpperCase match {
+            case "SECOND" => z.plusSeconds(n.toLong)
+            case "MINUTE" => z.plusMinutes(n.toLong)
+            case "HOUR"   => z.plusHours(n.toLong)
+            case "DAY"    => z.plusDays(n.toLong)
+            case "WEEK"   => z.plusWeeks(n.toLong)
+            case "MONTH"  => z.plusMonths(n.toLong)
+            case "QUARTER" => z.plusMonths(3L * n)
+            case "YEAR"   => z.plusYears(n.toLong)
+            case other => throw new IllegalArgumentException(s"unit: $other")
+          }
+          java.sql.Timestamp.from(out.toInstant)
+        }))
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.functions.{CdcFunctions, CdcUdf}
+import graft.functions.{AiFunctions, CdcUdf, FunctionCatalog}
 import graft.model.TableId
 import graft.operators.{SchemaDerivator, TableIdRouter, Transform}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -33,12 +33,28 @@ object Composer {
       .map(f => TableId.of(schema, f.getName.stripSuffix(".parquet")) -> f.getAbsolutePath)
   }
 
+  /** The SQL names a pipeline's expressions resolve against, on a session
+    * the caller may have built: the built-in catalog (installed once per
+    * session) plus the pipeline's own `user-defined-function:` and `model:`
+    * blocks. Refuses a pipeline whose `local-time-zone` (default UTC) is not
+    * the session's zone: the `CDC_*` functions and timestamp casts run in the
+    * session zone, so the pipeline's would be silently ignored.
+    */
+  def bindFunctions(spark: SparkSession, p: PipelineDef): Unit = {
+    val session = spark.conf.get("spark.sql.session.timeZone")
+    def zone(id: String) = java.time.ZoneId.of(id, java.time.ZoneId.SHORT_IDS).normalized
+    require(zone(p.localTimeZone) == zone(session),
+      s"pipeline '${p.name}' sets local-time-zone ${p.localTimeZone} but its session runs in " +
+        s"$session (spark.sql.session.timeZone): build the session in the pipeline's zone, " +
+        "as graft.Cli does")
+    FunctionCatalog.install(spark)
+    p.udfs.foreach(u => CdcUdf.fromClasspath(spark, u.classpath, Some(u.name)))
+    p.models.foreach(m => AiFunctions.registerModel(spark, m.name, m.options))
+  }
+
   /** Run a batch pipeline; returns final materialized frames per sink table. */
   def composeBatch(spark: SparkSession, p: PipelineDef): Map[TableId, DataFrame] = {
-    CdcFunctions.register(spark, p.localTimeZone)
-    graft.functions.CorpusFunctions.register(spark)
-    p.udfs.foreach(u => CdcUdf.fromClasspath(spark, u.classpath, Some(u.name)))
-    p.models.foreach(m => graft.functions.AiFunctions.registerModel(spark, m.name, m.options))
+    bindFunctions(spark, p)
 
     val dir = p.source.options.getOrElse("path",
       throw new IllegalArgumentException("parquet source needs `path`"))

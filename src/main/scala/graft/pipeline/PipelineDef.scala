@@ -58,6 +58,13 @@ final case class PipelineDef(
 
 object PipelineDef {
 
+  /** An integer option, or `default` when absent; a malformed value is
+    * refused with its key.
+    */
+  def intOption(options: Map[String, String], key: String, default: Int): Int =
+    options.get(key).fold(default)(v => v.toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"`$key` must be an integer, got '$v'")))
+
   /** Parse the reference's YAML pipeline spec (snakeyaml ships with Spark). */
   def fromYaml(yaml: String): PipelineDef = {
     val root = new org.yaml.snakeyaml.Yaml()

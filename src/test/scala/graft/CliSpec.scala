@@ -1842,6 +1842,152 @@ class CliSpec extends SparkSpec {
     assert(Cli.stateDir(kafkaDef("  topic-pattern: db\\..*", "t1")) !== base)
   }
 
+  test("building a pipeline twice on one session replaces no registered function") {
+    import graft.pipeline.{Composer, PipelineDef}
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.streaming.Trigger
+    val reg = spark.sessionState.functionRegistry
+    def builders = graft.functions.FunctionCatalog.names
+      .map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    val before = builders
+    val batch = PipelineDef.fromYaml(
+      s"""source:
+         |  type: parquet
+         |  path: $sf
+         |  schema-name: corpus
+         |  tables: corpus.documents
+         |transform:
+         |  - source-table: corpus.documents
+         |    projection: "doc_id, TOKEN_COUNT(text) AS n"
+         |    filter: "LANG_ID(text) <> 'und'"
+         |sink:
+         |  type: values
+         |""".stripMargin)
+    for (_ <- 1 to 2) Composer.composeBatch(spark, batch).values.foreach(_.count())
+    val in = tempDir("graft-rebuild-in")
+    val out = tempDir("graft-rebuild-out")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/feed.json"),
+      """{"before":null,"after":{"id":1,"text":"a b c"},"op":"c","ts_ms":1,"source":{"db":"db","table":"docs"}}""" + "\n")
+    val streaming = PipelineDef.fromYaml(
+      s"""source:
+         |  type: debezium-json
+         |  path: $in
+         |  schema.db.docs: "id BIGINT, text STRING"
+         |transform:
+         |  - source-table: db.docs
+         |    projection: "id, TOKEN_COUNT(text) AS n, CDC_FROM_UNIXTIME(CAST(0 AS BIGINT), 'yyyy') AS y"
+         |    primary-keys: id
+         |sink:
+         |  type: parquet-upsert
+         |  path: $out
+         |  buckets: 1
+         |""".stripMargin)
+    for (_ <- 1 to 2) Cli.buildStreaming(spark, streaming, Trigger.AvailableNow())._3.awaitTermination(60000)
+    assert(builders.zip(before).forall { case (a, b) => a eq b })
+  }
+
+  test("a pipeline whose local-time-zone is not its session's zone is refused") {
+    import graft.pipeline.{Composer, PipelineDef}
+    import org.apache.spark.sql.streaming.Trigger
+    def pipe(zone: String) = PipelineDef.fromYaml(
+      s"""source:
+         |  type: parquet
+         |  path: $sf
+         |  schema-name: tpch
+         |  tables: tpch.nation
+         |sink:
+         |  type: parquet-upsert
+         |  path: ${tempDir("graft-zone-out")}
+         |pipeline:
+         |  local-time-zone: $zone
+         |""".stripMargin)
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    val batch = intercept[IllegalArgumentException](Composer.composeBatch(spark, pipe("Asia/Shanghai")))
+    assert(batch.getMessage.contains("Asia/Shanghai") && batch.getMessage.contains("UTC"),
+      batch.getMessage)
+    val streaming = intercept[IllegalArgumentException](
+      Cli.buildStreaming(spark, pipe("Asia/Shanghai"), Trigger.AvailableNow()))
+    assert(streaming.getMessage === batch.getMessage)
+    // zones compare as zone ids, not as spellings
+    assert(Composer.composeBatch(spark, pipe("Etc/UTC")).nonEmpty)
+  }
+
+  test("latest startup anchor lands under a file: URI state dir and is reused on restart") {
+    import graft.pipeline.PipelineDef
+    import org.apache.spark.sql.streaming.Trigger
+    val in = tempDir("graft-anchor-in")
+    val out = tempDir("graft-anchor-out")
+    def line(id: Long, ts: Long) =
+      s"""{"before":null,"after":{"id":$id,"name":"n$id"},"op":"c","ts_ms":$ts,"source":{"db":"db","table":"users"}}"""
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/backlog.json"),
+      line(1, 10) + "\n" + line(2, 20) + "\n")
+    val p = PipelineDef.fromYaml(
+      s"""source:
+         |  type: debezium-json
+         |  path: $in
+         |  scan.startup.mode: latest
+         |  schema.db.users: "id BIGINT, name STRING"
+         |sink:
+         |  type: parquet-upsert
+         |  path: file:$out
+         |  buckets: 2
+         |""".stripMargin)
+    val anchor = java.nio.file.Paths.get(out, "_startup_position")
+    Cli.buildStreaming(spark, p, Trigger.AvailableNow())._3.awaitTermination(60000)
+    assert(java.nio.file.Files.readString(anchor).trim === "20")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"file:$out")),
+      "the anchor must not land under a cwd-relative 'file:' dir")
+    // a restart resumes from the stored anchor, not from a new one past ts 30
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/new.json"), line(3, 30) + "\n")
+    val (_, sink, q) = Cli.buildStreaming(spark, p, Trigger.AvailableNow())
+    q.awaitTermination(60000)
+    assert(java.nio.file.Files.readString(anchor).trim === "20")
+    assert(sink.asInstanceOf[graft.sinks.ParquetUpsertSink].read(spark, TableId.of("db", "users"))
+      .select("id").collect().map(_.getLong(0)).toSeq === Seq(3L))
+  }
+
+  /** The message `buildStreaming` refuses a pipeline with; `schema` is the
+    * `schema.db.users` option, `extra` more sink and pipeline lines.
+    */
+  private def refusal(schema: String, sinkExtra: String = "", pipelineExtra: String = ""): String = {
+    import graft.pipeline.PipelineDef
+    import org.apache.spark.sql.streaming.Trigger
+    val p = PipelineDef.fromYaml(
+      s"""source:
+         |  type: debezium-json
+         |  path: ${tempDir("graft-badopt-in")}
+         |  schema.db.users: "$schema"
+         |sink:
+         |  type: parquet-upsert
+         |  path: ${tempDir("graft-badopt-out")}
+         |$sinkExtra
+         |pipeline:
+         |  name: bad-options
+         |$pipelineExtra
+         |""".stripMargin)
+    intercept[IllegalArgumentException](Cli.buildStreaming(spark, p, Trigger.AvailableNow())).getMessage
+  }
+
+  test("a schema column without a type is refused naming the key and the column spec") {
+    val m = refusal("id BIGINT, name")
+    assert(m.contains("schema.db.users") && m.contains("'name'"), m)
+  }
+
+  test("an empty schema spec without transform primary keys is refused naming the key") {
+    val m = refusal(" , ")
+    assert(m.contains("schema.db.users") && m.contains("no columns"), m)
+  }
+
+  test("a non-integer `buckets` is refused naming the key") {
+    val m = refusal("id BIGINT", sinkExtra = "  buckets: four")
+    assert(m.contains("`buckets`") && m.contains("'four'"), m)
+  }
+
+  test("a non-integer `table-parallelism` is refused naming the key") {
+    val m = refusal("id BIGINT", pipelineExtra = "  table-parallelism: 2.5")
+    assert(m.contains("`table-parallelism`") && m.contains("'2.5'"), m)
+  }
+
   test("KafkaSource.kafkaOptions maps the reference option surface") {
     import graft.sources.KafkaSource.kafkaOptions
     val base = Map("properties.bootstrap.servers" -> "b:9092", "topic" -> "t")

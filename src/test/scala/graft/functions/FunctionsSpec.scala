@@ -15,7 +15,7 @@ class CdcFunctionsSpec extends SparkSpec {
   }
 
   test("CDC_DATE_FORMAT uses SimpleDateFormat dialect") {
-    CdcFunctions.register(spark)
+    FunctionCatalog.install(spark)
     val out = Seq("2024-03-05 10:30:00").toDF("s")
       .selectExpr("CDC_DATE_FORMAT(CAST(s AS TIMESTAMP), 'yyyy/MM/dd HH:mm') AS f")
       .as[String].head()
@@ -33,7 +33,7 @@ class CdcFunctionsSpec extends SparkSpec {
   }
 
   test("CDC_TIMESTAMP_ADD does calendar month arithmetic") {
-    CdcFunctions.register(spark)
+    FunctionCatalog.install(spark)
     val out = Seq("2024-01-31 00:00:00").toDF("s")
       .selectExpr(
         "CDC_DATE_FORMAT(CDC_TIMESTAMP_ADD('MONTH', 1, CAST(s AS TIMESTAMP)), 'yyyy-MM-dd') AS m",
@@ -43,6 +43,42 @@ class CdcFunctionsSpec extends SparkSpec {
     assert(out.getString(0) === "2024-02-29") // month-end clamp, leap year
     assert(out.getString(1) === "2024-02-02")
     assert(out.getString(2) === "1970-01-01")
+  }
+
+  test("FunctionCatalog.install: every built-in name once; a second install writes nothing") {
+    val reg = spark.sessionState.functionRegistry
+    val names = FunctionCatalog.names
+    assert(names.size === 27)
+    assert(names.map(_.toLowerCase).distinct.size === names.size, "hash64 registered once")
+    def builders = names.map(n => reg.lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(builders.forall(_.isDefined), "Sessions.local installs the catalog")
+    val before = builders.map(_.get)
+    FunctionCatalog.install(spark)
+    FunctionCatalog.install(spark)
+    assert(builders.map(_.get).zip(before).forall { case (a, b) => a eq b })
+  }
+
+  test("CDC_* functions use the session zone, read when the call is analyzed") {
+    val shanghai = spark.newSession()
+    shanghai.conf.set("spark.sql.session.timeZone", "Asia/Shanghai")
+    FunctionCatalog.install(shanghai)
+    def render(s: org.apache.spark.sql.SparkSession) =
+      s.sql("SELECT CDC_FROM_UNIXTIME(CAST(0 AS BIGINT), 'yyyy-MM-dd HH:mm') AS e").head().getString(0)
+    assert(render(shanghai) === "1970-01-01 08:00")
+    assert(render(spark) === "1970-01-01 00:00")
+    // one registration serves every zone: the same session, re-zoned
+    shanghai.conf.set("spark.sql.session.timeZone", "UTC")
+    assert(render(shanghai) === "1970-01-01 00:00")
+  }
+
+  test("equal calls of a UDF-backed built-in are equal expressions: GROUP BY matches the select list") {
+    Seq(0L, 60L, 86400L).toDF("s").createOrReplaceTempView("cdc_days")
+    val days = spark.sql("SELECT CDC_FROM_UNIXTIME(s, 'yyyy-MM-dd') AS d, " +
+      "AI_CHAT_PREDICT(CDC_FROM_UNIXTIME(s, 'yyyy')) AS y, COUNT(*) AS n FROM cdc_days " +
+      "GROUP BY CDC_FROM_UNIXTIME(s, 'yyyy-MM-dd'), AI_CHAT_PREDICT(CDC_FROM_UNIXTIME(s, 'yyyy')) " +
+      "ORDER BY d").as[(String, String, Long)].collect().toSeq
+    assert(days === Seq(("1970-01-01", "[stub-model] 1970", 2L), ("1970-01-02", "[stub-model] 1970", 1L)))
   }
 
   test("named model registration from a YAML model block") {
@@ -159,7 +195,7 @@ class CatalystExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: functions callable from selectExpr and codegen'd") {
-    CdcExpressions.register(spark)
+    FunctionCatalog.install(spark)
     val out = Seq("hello world again and again").toDF("text")
       .selectExpr("SIZE(minhash_signature(text)) AS n", "simhash64(text) AS sh")
       .head()
@@ -172,7 +208,7 @@ class CatalystExpressionsSpec extends SparkSpec {
   }
 
   test("CorpusFunctions YAML surface: CLEAN_TEXT callable from SQL expressions") {
-    CorpusFunctions.register(spark)
+    FunctionCatalog.install(spark)
     val out = Seq("  A  \tB ").toDF("text")
       .selectExpr("CLEAN_TEXT(text) AS c", "TOKEN_COUNT(CLEAN_TEXT(text)) AS n")
       .head()
@@ -181,7 +217,7 @@ class CatalystExpressionsSpec extends SparkSpec {
   }
 
   test("CorpusFunctions YAML surface: REP_KEEP/REP_STATS drive a repetition gate from SQL") {
-    CorpusFunctions.register(spark)
+    FunctionCatalog.install(spark)
     val docs = Seq(
       (1L, "buy now\nbuy now\nbuy now\nbuy now"),
       (2L, "a quiet morning over the harbor")).toDF("doc_id", "text")
@@ -194,7 +230,7 @@ class CatalystExpressionsSpec extends SparkSpec {
   }
 
   test("CorpusFunctions YAML surface: GOPHER_KEEP gate and HASH64 bucketing from SQL") {
-    CorpusFunctions.register(spark)
+    FunctionCatalog.install(spark)
     val docs = Seq(
       (1L, "the cat sat with the hat and that mat"), // passes defaults
       (2L, "## ### tag # soup # here"))              // symbol noise fails
@@ -221,7 +257,7 @@ class CatalystExpressionsSpec extends SparkSpec {
   }
 
   test("cosine_sim matches the scala reference and handles zero norms") {
-    CdcExpressions.register(spark)
+    FunctionCatalog.install(spark)
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 2.0f), Array(0.5f, 1.0f, -1.0f)),
       (2L, Array(0.0f, 0.0f, 0.0f), Array(1.0f, 1.0f, 1.0f)))
