@@ -451,7 +451,7 @@ object Bench {
       val schema = CdcSchema.of("user_id" -> "BIGINT", "event_type" -> "STRING", "value" -> "DOUBLE")
         .copy(primaryKeys = Seq("user_id"))
       val out = SparkEntry.tempDir("graft-bench-mb")
-      val sink = new graft.sinks.ParquetUpsertSink(out, buckets = 32)
+      val sink = new graft.sinks.ParquetUpsertSink(out)
       val pipe = new graft.streaming.StreamingPipeline(new graft.operators.SchemaRegistry(), sink = sink)
       pipe.applySchemaChange(CreateTableEvent(srcId, schema))
       val batch = graft.sinks.ChangelogJson.debezium(

@@ -1,10 +1,13 @@
 package graft.sinks
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
 import graft.operators.Changelog
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Sink SPI — the Spark shape of the reference's `DataSink =
   * EventSinkProvider + MetadataApplier` (common/sink/DataSink.java:29-35,
@@ -66,53 +69,58 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   }
 }
 
-/** Parquet-backed upsert sink: maintains one parquet directory per table as
+/** Parquet-backed upsert sink: maintains one directory per table as
   * materialized state; each batch merges last-image-per-PK changes into it.
   *
   * This is the lakehouse `MERGE INTO` shape of the reference's DSQL sink
-  * (SURVEY.md §2.2 "Iceberg/Delta: MERGE INTO in foreachBatch") without a
-  * table format: state' = materialize(state-as-inserts ∪ batch). All heavy
-  * work is distributed (one hash aggregation keyed by PK); the driver only
-  * moves directories. Idempotent per batch — replaying a batch converges to
-  * the same state, so at-least-once delivery becomes effectively-once.
-  * Schema evolution: DDL rewrites state eagerly ([[applySchemaChange]]), and
-  * the merge path ALSO coerces (cast + null-pad) on read as a belt-and-
-  * braces for state that lags after a crash between DDL and rewrite.
+  * (SURVEY.md §2.2 "Iceberg/Delta: MERGE INTO in foreachBatch") on the
+  * smallest table format that commits atomically: state' =
+  * materialize(state-as-inserts ∪ batch). All heavy work is distributed (one
+  * hash aggregation keyed by PK); the driver only publishes manifests.
+  * Idempotent per batch — replaying a batch converges to the same state, so
+  * at-least-once delivery becomes effectively-once.
   *
-  * State is partitioned by `pmod(xxhash64(pk), buckets)` into `__bucket=N`
-  * dirs: a batch reads and rewrites ONLY the PK-hash partitions it touches
-  * (partition pruning on read) — merge cost scales with batch footprint, not
-  * table size. At 100 TB this is the difference between O(state) and
-  * O(touched-buckets) per micro-batch; a production deployment swaps in
-  * Delta/Iceberg MERGE behind the same interface. Every change to state, a
-  * batch merge or a DDL rewrite, lands through one per-bucket swap
-  * ([[commit]]), which [[recoverCrashedSwap]] completes or undoes after a
-  * crash.
+  * A table is one directory of `_manifest/<N>` files and immutable data
+  * dirs, and it is whatever its highest-numbered manifest says
+  * ([[ParquetUpsertSink.Manifest]]): the file schema, the PK names, the
+  * bucket count and the data dir of each non-empty bucket. Rows are bucketed
+  * by `pmod(xxhash64(pk), buckets)`, so a batch reads and rewrites only the
+  * buckets it touches — merge cost scales with batch footprint, not table
+  * size. Every change, a batch merge or a DDL rewrite, is one [[commit]]: the
+  * buckets it rewrites go to a fresh data dir, manifest N+1 is written aside
+  * and renamed in, and every file and dir that manifest does not name is
+  * deleted. A crash leaves manifest N or N+1, plus at most files the next
+  * commit deletes: nothing is ever recovered. Reads use the manifest's
+  * schema and dirs, with no inference and no partition discovery. A
+  * production deployment swaps in Delta/Iceberg MERGE behind the same
+  * interface; their logs are this manifest grown up.
   *
-  * The bucket count is a LAYOUT property of the table, not of the writer: it
-  * is persisted in a `<table>.layout` meta file at state creation and every
-  * later write/merge resolves it from there — a writer configured with a
-  * different constant can no longer silently prune against the wrong modulus
-  * (r20). [[ParquetUpsertSink.AutoBuckets]] (the default, here and in the
-  * CLI) derives the count from the session and the first batch's size: one
-  * bucket per core at least, one per [[ParquetUpsertSink.RowsPerBucketConf]]
-  * rows above that (guide §6 scale-adaptive file sizing). A 100 k-row
-  * fixture on 4 cores gets 4 buckets — one write task per core, no 32-way
-  * small-file fan-out per merge — while a 10^9-row production snapshot gets
-  * ~2000, keeping per-bucket files in the 10^5-10^6-row (~64-128 MB) range.
+  * The bucket count belongs to the table, not to the writer: a table with
+  * rows keeps its manifest's count whatever the constructor says, so a
+  * writer configured with another constant never prunes with the wrong
+  * modulus. An empty table (new, truncated or emptied by deletes) takes the
+  * constructor's count at its next write; [[ParquetUpsertSink.AutoBuckets]]
+  * (the default, here and in the CLI) derives it from the session and that
+  * batch's size: one bucket per core at least, one per
+  * [[ParquetUpsertSink.RowsPerBucketConf]] rows above that (guide §6
+  * scale-adaptive file sizing). A 100 k-row fixture on 4 cores gets 4
+  * buckets — one write task per core, no small-file fan-out per merge — while
+  * a 10^9-row production snapshot gets ~2000, keeping per-bucket files in
+  * the 10^5-10^6-row (~64-128 MB) range.
   *
-  * State in the flat layout of earlier versions (parquet files at the state
-  * root, no bucket dirs) is refused by writes and DDL; [[read]] still
-  * returns its rows, so they can be replayed into a new state dir.
+  * State of the earlier displace-and-swap format, a table dir without
+  * `_manifest` or `<table>.*` leftovers beside it, is refused with a message
+  * naming the dir; replay the table's changelog into a new state dir.
   */
 class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBuckets)
     extends CdcSink {
-  import ParquetUpsertSink.{AutoBuckets, MaxDerivedBuckets, RowsPerBucketConf, SwapReady}
+  import ParquetUpsertSink.{AutoBuckets, Manifest, MaxDerivedBuckets, RowsPerBucketConf, decode, encode}
   require(buckets == AutoBuckets || buckets >= 1,
     s"upsert-sink buckets must be auto or >= 1, got $buckets: the unbucketed layout " +
       "(`buckets: 0`) was removed, every upsert state is PK-bucketed")
 
   private val BucketCol = "__bucket"
+  private val ManifestDir = "_manifest"
   // concurrent per-table writes are fine; same-table writes must serialize
   // (N→1 routes can hit one sink table from several sources in a batch)
   private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -122,58 +130,75 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
 
   private def lockOf(path: String): Object = tableLocks.computeIfAbsent(path, _ => new Object)
 
-  private def layoutPath(path: String) = new Path(path + ".layout")
+  /** The table's newest manifest: None before its first write or after a
+    * drop. Read on every call, never cached: another writer may have
+    * truncated the table and re-derived its bucket count.
+    */
+  private[graft] def manifest(spark: SparkSession, id: TableId): Option[Manifest] = {
+    val path = tablePath(id)
+    current(hfs(spark, path), path)
+  }
 
-  /** Bucket count this table's state is laid out with, and whether the
-    * `.layout` meta file holds it: the meta when present (the on-disk layout
-    * is ground truth — a writer whose constant disagrees would prune state
-    * reads with the wrong modulus and lose rows), else the constructor's
-    * value, deriving it from the first batch when that is [[AutoBuckets]].
-    * Read on every write, one `exists` and one small-file open: a table
-    * truncated and re-derived by another writer must never be pruned with a
-    * modulus remembered from before.
-    *
-    * The derivation is `max(defaultParallelism, ceil(rows / rowsPerBucket))`:
-    * the floor keeps one write task per core however small the first batch
+  private def current(fs: FileSystem, path: String): Option[Manifest] = {
+    val dir = new Path(path, ManifestDir)
+    val versions = try fs.listStatus(dir).map(_.getPath.getName)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+    catch { case _: java.io.FileNotFoundException => refuseSwapFormat(fs, path); Array.empty[Long] }
+    versions.maxOption.flatMap { v =>
+      try {
+        val in = fs.open(new Path(dir, v.toString))
+        try Some(decode(v, in.readAllBytes())) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => current(fs, path) } // a newer commit swept it
+    }
+  }
+
+  /** A table without `_manifest` is new, unless state of the earlier swap
+    * format is there: a table dir (every first commit creates `_manifest`
+    * before any data) or a `<table>.*` sibling (this format keeps nothing
+    * outside the table dir).
+    */
+  private def refuseSwapFormat(fs: FileSystem, path: String): Unit = {
+    val table = new Path(path)
+    val siblings = try fs.listStatus(table.getParent).map(_.getPath.getName)
+      .filter(_.startsWith(table.getName + "."))
+    catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+    val found = if (siblings.nonEmpty) siblings.mkString("", ", ", " beside it") else s"no $ManifestDir dir"
+    require(siblings.isEmpty && !fs.exists(table),
+      s"upsert state at $path predates the manifest format ($found): this sink neither " +
+        "reads nor converts it; replay the table's changelog into a new state dir")
+  }
+
+  /** The rows of buckets `bs`, read with the manifest's schema. */
+  private def scan(spark: SparkSession, path: String, m: Manifest, bs: Iterable[Int]): DataFrame =
+    if (bs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema)
+    else spark.read.schema(m.schema).parquet(bs.toSeq.map(b => s"$path/${m.live(b)}"): _*)
+
+  /** Bucket count for an empty table: the constructor's, or under
+    * [[AutoBuckets]] `max(defaultParallelism, ceil(rows / rowsPerBucket))`.
+    * The floor keeps one write task per core however small the first batch
     * is (a first batch does not bound the table), the ratio keeps files in
     * the target size band once the table outgrows the floor.
     */
-  private def effectiveBuckets(spark: SparkSession, fs: FileSystem, path: String,
-                               existing: Set[Int], incoming: DataFrame): (Int, Boolean) = {
-    val lp = layoutPath(path)
-    if (fs.exists(lp)) {
-      val in = fs.open(lp)
-      try (scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt, true)
-      finally in.close()
-    } else if (buckets == AutoBuckets) {
-      // never guess the modulus of existing buckets: name the setting that reads them
-      require(existing.isEmpty,
-        s"bucketed state at $path has no layout meta: it predates the persisted " +
-          "layout and was written with the old default of 32 buckets; set " +
-          "`buckets: 32` (or the count it was written with) to keep using it")
+  private def bucketsFor(spark: SparkSession, incoming: DataFrame): Int =
+    if (buckets != AutoBuckets) buckets
+    else {
       val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
-      val rows = incoming.count() // first write only; fills the batch cache
+      val rows = incoming.count() // fills the batch cache
       val derived = (rows + target - 1) / target
-      (math.min(MaxDerivedBuckets.toLong,
-        math.max(spark.sparkContext.defaultParallelism.toLong, derived)).toInt, false)
-    } else (buckets, false)
-  }
-
-  /** Persist the resolved bucket count next to the state dir (sibling file:
-    * it must survive the per-bucket swaps and the DDL rewrite of the dir).
-    * Written aside and renamed in, so a crash mid-write leaves no torn meta.
-    */
-  private def writeLayout(fs: FileSystem, path: String, m: Int): Unit = {
-    val aside = new Path(path + ".layout.tmp")
-    val out = fs.create(aside, true)
-    try out.write(m.toString.getBytes("UTF-8")) finally out.close()
-    renameOrThrow(fs, aside, layoutPath(path))
-  }
+      math.min(MaxDerivedBuckets.toLong,
+        math.max(spark.sparkContext.defaultParallelism.toLong, derived)).toInt
+    }
 
   private def withBucket(df: DataFrame, pks: Seq[String], m: Int): DataFrame =
     df.withColumn(BucketCol, pmod(xxhash64(pks.map(col): _*), lit(m.toLong)).cast("int"))
 
-  /** Coerce on-disk state (possibly older schema) to the evolved shape and
+  /** The schema a frame's rows are stored and read with: every column but
+    * the bucket, nullable, as a parquet read returns them.
+    */
+  private def fileSchema(df: DataFrame): StructType =
+    StructType(df.schema.fields.filter(_.name != BucketCol).map(_.copy(nullable = true)))
+
+  /** Coerce state (possibly of another shape) to the batch's schema and
     * stamp it as lowest-seq inserts so batch rows win per PK.
     */
   private def stateAsInserts(state: DataFrame, schema: CdcSchema): DataFrame = {
@@ -192,17 +217,18 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     }
 
   /** DDL applies EAGERLY to on-disk state (the reference's MetadataApplier
-    * runs its ALTER TABLE before the data resumes): lazy coercion alone
-    * would leave buckets a batch never touches under the OLD shape, and a
-    * schema-less `spark.read.parquet` of mixed-shape files infers whichever
-    * file it samples — a dropped column could resurface or an added one
-    * vanish from [[read]]. A rewrite per DDL event is O(state), but DDL is
-    * rare by construction; the Delta/Iceberg swap-in does the same change as
-    * a metadata-only commit. Rename never arrives here — the routed-schema
-    * diff normalizes it to add+drop ([[graft.operators.SchemaDerivator.diff]],
-    * reference SchemaDerivator.java:154-296) — but is handled for direct SPI
-    * callers. Each rewrite is idempotent (guarded on the current on-disk
-    * shape), so a crash-replayed batch re-applying its in-band DDL converges.
+    * runs its ALTER TABLE before the data resumes): every bucket is
+    * rewritten into the new shape and published with the new schema in one
+    * [[commit]], so no reader ever sees a table of two shapes. A rewrite per
+    * DDL event is O(state), but DDL is rare by construction; the
+    * Delta/Iceberg swap-in does the same change as a metadata-only commit.
+    * Rename never arrives here — the routed-schema diff normalizes it to
+    * add+drop ([[graft.operators.SchemaDerivator.diff]], reference
+    * SchemaDerivator.java:154-296) — but is handled for direct SPI callers.
+    * Each rewrite is idempotent (skipped when the shape is already the new
+    * one), so a crash-replayed batch re-applying its in-band DDL converges.
+    * Truncate publishes an empty manifest that keeps the schema; drop
+    * deletes the table dir.
     */
   override def applySchemaChange(e: SchemaChangeEvent): Unit = {
     import graft.model._
@@ -212,12 +238,17 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
         rewriteState(id)(df => if (df.columns.contains(n)) df
                                else df.withColumn(n, lit(null).cast(dt)))
       case DropColumnEvent(id, n) => rewriteState(id)(_.drop(n))
-      case RenameColumnEvent(id, f, t) => rewriteState(id)(_.withColumnRenamed(f, t))
+      case RenameColumnEvent(id, f, t) => rewriteState(id, f -> t)(_.withColumnRenamed(f, t))
       case AlterColumnTypeEvent(id, n, dt) =>
         rewriteState(id)(df => if (df.columns.contains(n)) df.withColumn(n, col(n).cast(dt))
                                else df)
-      case TruncateTableEvent(id) => deleteState(id)
-      case DropTableEvent(id) => deleteState(id)
+      case TruncateTableEvent(id) => onTable(id) { (_, fs, path, cur) =>
+        if (cur.live.nonEmpty) commit(fs, path, cur.copy(version = cur.version + 1, live = Map.empty), None)
+        else sweep(fs, path, cur)
+      }
+      case DropTableEvent(id) =>
+        val path = tablePath(id)
+        lockOf(path).synchronized { hfs(session(), path).delete(new Path(path), true); () }
     }
   }
 
@@ -225,37 +256,35 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     .orElse(SparkSession.getDefaultSession)
     .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
 
-  /** Rewrite every live bucket through `fn` and land it with the write
-    * path's [[commit]]. A table with no bucket dirs holds no rows, so there
-    * is nothing to rewrite: its next write materializes the evolved schema.
+  /** Runs `change` on the newest manifest of a table under its lock; a
+    * table never written has nothing to change. A change that turns out to
+    * be a no-op (the replay of a DDL event already applied) still sweeps, to
+    * finish the deletes of a commit that crashed after its publish.
     */
-  private def rewriteState(id: TableId)(fn: DataFrame => DataFrame): Unit =
+  private def onTable(id: TableId)(change: (SparkSession, FileSystem, String, Manifest) => Unit): Unit =
     lockOf(tablePath(id)).synchronized {
       val spark = session()
       val path = tablePath(id)
       val fs = hfs(spark, path)
-      val existing = recoveredBuckets(fs, path)
-      if (existing.nonEmpty) {
-        val state = spark.read.parquet(path)
-        val next = fn(state)
-        // cheap no-op detection: same shape → skip the rewrite (idempotent
-        // replay of a batch's DDL, or a drop of a never-present column)
-        if (next.schema != state.schema) {
-          next.write.mode("overwrite").partitionBy(BucketCol).parquet(path + ".tmp")
-          commit(fs, path, existing, existing.toSeq)
-        }
-      }
+      current(fs, path).foreach(change(spark, fs, path, _))
     }
 
-  private def deleteState(id: TableId): Unit =
-    lockOf(tablePath(id)).synchronized {
-      val path = tablePath(id)
-      val fs = hfs(session(), path)
-      // commit leftovers go before the live dir: once it is gone, recovery
-      // must find nothing to bring rows back from
-      Seq(".tmp", ".old", "", ".layout", ".layout.tmp").foreach(sfx =>
-        fs.delete(new Path(path + sfx), true))
-      ()
+  /** Rewrite every bucket through `fn` and [[commit]] the result with its
+    * schema. The bucket is re-derived from the rewritten PKs: a PK type
+    * change moves keys between buckets. An empty table rewrites no data,
+    * only its schema.
+    */
+  private def rewriteState(id: TableId, renamed: (String, String)*)(fn: DataFrame => DataFrame): Unit =
+    onTable(id) { (spark, fs, path, cur) =>
+      val state = scan(spark, path, cur, cur.live.keys)
+      val next = fn(state)
+      // same shape: a replayed batch's DDL, or a drop of a never-present column
+      if (next.schema != state.schema) {
+        val pks = cur.primaryKeys.map(p => renamed.toMap.getOrElse(p, p))
+        commit(fs, path, cur.copy(version = cur.version + 1, schema = fileSchema(next),
+          primaryKeys = pks, live = Map.empty),
+          Option.when(cur.live.nonEmpty)(withBucket(next, pks, cur.buckets)))
+      } else sweep(fs, path, cur)
     }
 
   /** All state moves go through Hadoop [[org.apache.hadoop.fs.FileSystem]] so
@@ -266,188 +295,110 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
   protected def hfs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"upsert-sink commit failed: rename $src -> $dst " +
-        "(state preserved; check permissions / cross-filesystem paths)")
-
-  /** Crash recovery for [[commit]], run before every read, write and DDL of
-    * a table: a commit that died part-way must not leave the next writer a
-    * table that looks smaller than it is.
-    *  - `.tmp/.swap_ready` present — the commit's parquet write completed,
-    *    the buckets it empties are already displaced, and its swap-ins began
-    *    (the marker is created between the two, and deleted if a swap rename
-    *    fails and is rolled back): roll the commit FORWARD by finishing the
-    *    remaining per-bucket moves. The tmp contents are complete by
-    *    construction, every swap decision is final, and a displaced bucket
-    *    with no replacement dir was emptied on purpose — nothing is ever
-    *    resurrected.
-    *  - no marker — a half-written tmp or displacement: restore displaced
-    *    buckets whose live dir is absent (rollback).
-    * Two leftovers of older versions are still honoured, though neither is
-    * written any more: a whole-dir `<table>.old` with no live dir (a crash
-    * inside the removed whole-directory swap) is restored, and a `.done_N`
-    * marker keeps its emptied bucket from being restored on rollback.
-    */
-  private def recoverCrashedSwap(fs: FileSystem, path: String): Unit = {
-    val dst = new Path(path)
-    val old = new Path(path + ".old")
-    if (!fs.exists(dst) && fs.exists(old)) renameOrThrow(fs, old, dst)
-    val tmp = new Path(path + ".tmp")
-    if (fs.exists(tmp)) {
-      val entries = fs.listStatus(tmp)
-      if (entries.exists(_.getPath.getName == SwapReady)) {
-        val moves = entries.filter(_.getPath.getName.startsWith(s"$BucketCol="))
-        // a table's first write creates its state dir after the marker
-        if (moves.nonEmpty && !fs.exists(dst)) fs.mkdirs(dst)
-        moves.foreach { s =>
-          val b = s.getPath.getName.stripPrefix(s"$BucketCol=")
-          val bucketDst = new Path(s"$path/$BucketCol=$b")
-          if (fs.exists(bucketDst)) renameOrThrow(fs, bucketDst, new Path(s"$tmp/.old_$b"))
-          renameOrThrow(fs, s.getPath, bucketDst)
-        }
-        fs.delete(tmp, true)
-        ()
-      } else {
-        entries.filter(_.getPath.getName.startsWith(".old_")).foreach { s =>
-          val b = s.getPath.getName.stripPrefix(".old_")
-          val bucketDst = new Path(s"$path/$BucketCol=$b")
-          val done = new Path(s"$tmp/.done_$b")
-          if (!fs.exists(bucketDst) && !fs.exists(done)) renameOrThrow(fs, s.getPath, bucketDst)
-        }
-      }
-    }
-  }
-
-  /** Recover a crashed commit, then list the live buckets (none without a
-    * state dir).
-    */
-  private def recoveredBuckets(fs: FileSystem, path: String): Set[Int] = {
-    recoverCrashedSwap(fs, path)
-    if (fs.exists(new Path(path))) bucketSet(fs, path) else Set.empty
-  }
-
-  /** The write path: merge + rewrite only the PK-hash partitions the batch
-    * touches, then [[commit]] them.
+  /** The write path: merge the batch into the buckets it touches and
+    * [[commit]] them. A batch whose columns, types or keys differ from the
+    * table's (its writer skipped the DDL) rewrites every bucket, so a table
+    * keeps one file schema and one PK hash.
     */
   private def doWrite(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
     require(schema.primaryKeys.nonEmpty, s"upsert sink requires primary keys on $id")
     val spark = changelog.sparkSession
     val path = tablePath(id)
     val fs = hfs(spark, path)
-    val existing = recoveredBuckets(fs, path)
+    val cur = current(fs, path)
+    val live = cur.fold(Map.empty[Int, String])(_.live)
+    val pks = schema.primaryKeys
 
-    // cached ahead of the layout resolution: the Auto-derive count() on a
-    // table's first write fills the cache, so the batch is parsed once; the
+    // cached ahead of the bucket count: the Auto-derive count() on an empty
+    // table's write fills the cache, so the batch is parsed once; the
     // touched probe and the merged write re-derive the bucket hash from it
     val cols = schema.columnNames.map(col)
     val inc = changelog.select(cols :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*).cache()
     try {
-      val (m, persisted) = effectiveBuckets(spark, fs, path, existing, inc)
-      val bucketed = withBucket(inc, schema.primaryKeys, m)
-      val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-      val stateBuckets = touched.filter(existing)
-      val merged = if (stateBuckets.nonEmpty) {
-        // partition pruning: only the touched __bucket=N dirs are read
-        val state = spark.read.parquet(path).where(col(BucketCol).isin(stateBuckets: _*))
-        Changelog.materialize(
-          withBucket(stateAsInserts(state, schema), schema.primaryKeys, m).unionByName(bucketed),
-          schema.primaryKeys :+ BucketCol) // bucket is pk-functional: same groups
-      } else Changelog.materialize(bucketed, schema.primaryKeys :+ BucketCol)
+      val m = if (live.nonEmpty) cur.get.buckets else bucketsFor(spark, inc)
+      val bucketed = withBucket(inc, pks, m)
+      val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+      val fresh = Changelog.materialize(bucketed, pks :+ BucketCol)
+      def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
+      val reshaped = cur.exists(c => c.primaryKeys != pks || columns(c.schema) != columns(fileSchema(fresh)))
+      val rewritten = if (reshaped) touched ++ live.keySet else touched
+      val stateBuckets = rewritten.filter(live.contains)
+      val merged = if (stateBuckets.isEmpty) fresh else Changelog.materialize(
+        withBucket(stateAsInserts(scan(spark, path, cur.get, stateBuckets), schema), pks, m)
+          .unionByName(bucketed),
+        pks :+ BucketCol) // bucket is pk-functional: same groups
 
-      // one write task per touched bucket: buckets are sized to the target
-      // file size at layout derivation, so task == output file == bucket
-      // (the previous keyless-width repartition left most tasks empty when
-      // touched ≪ spark.sql.shuffle.partitions)
-      merged.repartition(math.max(touched.size, 1), col(BucketCol))
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(path + ".tmp")
-      // the meta goes first: it is a sibling file, so no crash point leaves a
-      // state dir without it
-      if (!persisted) writeLayout(fs, path, m)
-      commit(fs, path, existing, touched)
+      // one write task per rewritten bucket: buckets are sized to the target
+      // file size, so task == output file == bucket
+      commit(fs, path, Manifest(cur.fold(0L)(_.version + 1), fileSchema(merged), pks, m, live -- rewritten),
+        Some(merged.repartition(math.max(rewritten.size, 1), col(BucketCol))))
     } finally { inc.unpersist(); () }
   }
 
-  /** The one commit of a state change, shared by writes and DDL: `<table>.tmp`
-    * holds the complete new content of the `touched` buckets as `__bucket=N`
-    * dirs, and a touched bucket it lacks was emptied. Each touched bucket is
-    * swapped in (or, emptied, out) by renames. NOT dynamic partition
-    * overwrite: that only rewrites partitions present in the OUTPUT, so an
-    * emptied bucket would keep its stale files — and it would read and
-    * overwrite the same path in one job.
-    *
-    * Displace-then-swap: an old bucket moves into the (dot-prefixed,
-    * reader-invisible) tmp area first, so a failed swap can restore it —
-    * state is never deleted before its replacement is in place. FS traffic is
-    * one listing of tmp, one rename per moved dir and the single `.swap_ready`
-    * marker, created between the completed parquet write and the first
-    * swap-in rename and deleted with tmp; recovery rolls a marker-bearing tmp
-    * FORWARD ([[recoverCrashedSwap]]). Emptied buckets are displaced BEFORE
-    * the marker: roll-forward only sees the buckets tmp holds, so an emptied
-    * bucket still live at a crash after the marker would keep its deleted
-    * rows.
+  /** The one commit of a state change, shared by writes and DDL. `next` is
+    * the new manifest less the buckets `data` holds: those are written to
+    * the fresh data dir `v<version>` (a rewritten bucket `data` lacks was
+    * emptied). The manifest is written aside as `_manifest/.<version>.tmp`
+    * and renamed in, the one step that publishes anything; then [[sweep]]
+    * deletes what it no longer names. The sink's own FS writes per commit
+    * are that create, that rename and the sweep's deletes (plus the
+    * `_manifest` mkdirs of a table's first commit).
     */
-  private def commit(fs: FileSystem, path: String, existing: Set[Int], touched: Seq[Int]): Unit = {
-    val tmp = path + ".tmp"
-    val produced = bucketSet(fs, tmp)
-    def displaced(b: Int) = new Path(s"$tmp/.old_$b")
-    def live(b: Int) = new Path(s"$path/$BucketCol=$b")
-    touched.filter(b => existing(b) && !produced(b))
-      .foreach(b => renameOrThrow(fs, live(b), displaced(b)))
-    val swapReady = new Path(s"$tmp/$SwapReady")
-    fs.mkdirs(swapReady)
-    // after the marker, so a crash never leaves an empty state dir behind
-    if (existing.isEmpty && produced.nonEmpty) fs.mkdirs(new Path(path))
-    touched.filter(produced).foreach { b =>
-      val hadState = existing(b)
-      if (hadState) renameOrThrow(fs, live(b), displaced(b))
-      try renameOrThrow(fs, new Path(s"$tmp/$BucketCol=$b"), live(b))
-      catch {
-        case e: java.io.IOException =>
-          if (hadState && !fs.rename(displaced(b), live(b))) {
-            e.addSuppressed(new java.io.IOException(s"restore of bucket $b also failed"))
-          }
-          // the commit did NOT happen: drop the roll-forward marker so
-          // recovery does not silently apply it later (it rolls back the
-          // displaced buckets instead; the batch's replay re-applies them)
-          try { fs.delete(swapReady, true); () }
-          catch { case _: java.io.IOException => () }
-          throw e
-      }
+  private def commit(fs: FileSystem, path: String, next: Manifest, data: Option[DataFrame]): Unit = {
+    val dir = new Path(path, ManifestDir)
+    // before any data: a table dir without it is the earlier format's
+    if (next.version == 0) fs.mkdirs(dir)
+    val dataDir = s"v${next.version}"
+    val produced = data.fold(Map.empty[Int, String]) { df =>
+      // overwrite: a commit that crashed before its rename left this dir
+      df.write.mode("overwrite").option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy(BucketCol).parquet(s"$path/$dataDir")
+      children(fs, new Path(path, dataDir)).filter(_.startsWith(s"$BucketCol="))
+        .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$dataDir/$n").toMap
     }
-    fs.delete(new Path(tmp), true)
-    ()
+    val published = next.copy(live = next.live ++ produced)
+    val aside = new Path(dir, s".${next.version}.tmp")
+    val out = fs.create(aside, true)
+    try out.write(encode(published)) finally out.close()
+    if (!fs.rename(aside, new Path(dir, next.version.toString)))
+      throw new java.io.IOException(s"upsert-sink commit failed: rename $aside into $dir " +
+        "(state preserved; check permissions / cross-filesystem paths)")
+    sweep(fs, path, published)
   }
 
-  /** Bucket ids present as `__bucket=N` child dirs of `dir` (one listing).
-    * Parquet files at the root are the flat layout of earlier versions:
-    * refused, because bucket dirs committed next to them would hide them
-    * from every reader (partition discovery drops root files).
+  private def children(fs: FileSystem, dir: Path): Seq[String] =
+    try fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** Delete every file and dir under the table that `m` does not name:
+    * older manifests, superseded buckets, and what crashed or refused
+    * commits left.
     */
-  private def bucketSet(fs: FileSystem, dir: String): Set[Int] = {
-    val names = fs.listStatus(new Path(dir)).map(_.getPath.getName)
-    require(!names.exists(_.endsWith(".parquet")),
-      s"upsert state at $dir has parquet files at its root, the removed unbucketed " +
-        "layout, which this sink can no longer write or alter: read its rows with " +
-        "ParquetUpsertSink.read and write them to a new state dir")
-    names.iterator.filter(_.startsWith(s"$BucketCol="))
-      .map(_.stripPrefix(s"$BucketCol=").toInt).toSet
+  private def sweep(fs: FileSystem, path: String, m: Manifest): Unit = {
+    val named = m.live.values.toSet + s"$ManifestDir/${m.version}"
+    val parents = named.map(_.takeWhile(_ != '/'))
+    children(fs, new Path(path)).foreach { top =>
+      if (!parents(top)) fs.delete(new Path(path, top), true)
+      else children(fs, new Path(path, top)).filterNot(c => named(s"$top/$c"))
+        .foreach(c => fs.delete(new Path(s"$path/$top/$c"), true))
+    }
   }
 
+  /** The table's rows with its manifest's schema: an empty frame once every
+    * row was deleted or the table truncated.
+    */
   def read(spark: SparkSession, id: TableId): DataFrame = {
-    val path = tablePath(id)
-    // a crashed commit may have left the only state copy displaced; readers
-    // recover it too, not just the next write
-    lockOf(path).synchronized { recoverCrashedSwap(hfs(spark, path), path) }
-    spark.read.parquet(path).drop(BucketCol) // flat state has no bucket column
+    val m = manifest(spark, id)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no upsert state at ${tablePath(id)}"))
+    scan(spark, tablePath(id), m, m.live.keys)
   }
 }
 
 object ParquetUpsertSink {
-  /** `buckets` sentinel: derive the bucket count from the session and the
-    * first batch's row count — `max(defaultParallelism, ceil(rows /`
-    * [[RowsPerBucketConf]]`))`, capped at [[MaxDerivedBuckets]] — and persist
-    * it in the table's layout meta.
+  /** `buckets` sentinel: derive an empty table's bucket count from the
+    * session and the batch's row count — `max(defaultParallelism, ceil(rows /`
+    * [[RowsPerBucketConf]]`))`, capped at [[MaxDerivedBuckets]] — and keep it
+    * in the table's manifest.
     */
   val AutoBuckets: Int = -1
   /** Target rows per PK-hash bucket for [[AutoBuckets]] derivation (Spark
@@ -456,8 +407,28 @@ object ParquetUpsertSink {
     */
   val RowsPerBucketConf = "spark.graft.upsert.rowsPerBucket"
   val MaxDerivedBuckets = 4096
-  /** Swap-phase-begun marker inside a commit's tmp dir (see recoverCrashedSwap). */
-  private[sinks] val SwapReady = ".swap_ready"
+
+  /** One published version of an upsert table, stored as JSON in
+    * `_manifest/<version>`: the schema its data files are read with (in the
+    * column order [[ParquetUpsertSink.read]] returns), the PK names the
+    * bucket hash is taken over, the bucket count, and the data dir of each
+    * non-empty bucket, relative to the table dir.
+    */
+  private[graft] final case class Manifest(version: Long, schema: StructType, primaryKeys: Seq[String],
+                                          buckets: Int, live: Map[Int, String])
+
+  private val mapper = new ObjectMapper()
+
+  private def encode(m: Manifest): Array[Byte] = mapper.writeValueAsBytes(Map[String, Any](
+    "schema" -> mapper.readTree(m.schema.json), "primaryKeys" -> m.primaryKeys.asJava,
+    "buckets" -> m.buckets, "live" -> m.live.map { case (b, d) => b.toString -> d }.asJava).asJava)
+
+  private def decode(version: Long, bytes: Array[Byte]): Manifest = {
+    val root = mapper.readTree(bytes)
+    Manifest(version, DataType.fromJson(root.get("schema").toString).asInstanceOf[StructType],
+      root.get("primaryKeys").elements.asScala.map(_.asText).toSeq, root.get("buckets").asInt,
+      root.get("live").properties.asScala.map(e => e.getKey.toInt -> e.getValue.asText).toMap)
+  }
 }
 
 /** JDBC upsert sink: DDL via [[UpsertSql]], data via [[UpsertWriter]] —

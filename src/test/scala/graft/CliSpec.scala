@@ -1138,10 +1138,8 @@ class CliSpec extends SparkSpec {
     val (_, s1, q1) = Cli.buildStreaming(spark, p, Trigger.AvailableNow())
     q1.awaitTermination(60000)
     val sink = s1.asInstanceOf[ParquetUpsertSink]
-    def layout = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(sink.tablePath(users) + ".layout")), "UTF-8").trim.toInt
-    def bucketIds = new java.io.File(sink.tablePath(users)).list().toSeq
-      .filter(_.startsWith("__bucket=")).map(_.stripPrefix("__bucket=").toInt)
+    def layout = sink.manifest(spark, users).get.buckets
+    def bucketIds = sink.manifest(spark, users).get.live.keySet
     assert(layout === cores, "a 2-row first batch derives one bucket per core")
 
     // restart with a batch that would derive more buckets on its own: the

@@ -5,9 +5,10 @@ import graft.model.{CdcSchema, TableId}
 import graft.operators.Changelog
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 
-/** The swap-commit of [[ParquetUpsertSink]] must be atomic-or-loud: a rename
-  * that cannot complete has to THROW with the previous state intact — a
-  * silently dropped Boolean here means a batch reports success while the
+/** The manifest commit of [[ParquetUpsertSink]] must be atomic-or-loud: a
+  * crash anywhere leaves the table as before or as after the change, and a
+  * rename that cannot complete has to THROW with the previous state intact —
+  * a silently dropped Boolean here means a batch reports success while the
   * table state is gone (round-2 verdict, "What's wrong #1").
   *
   * Rename failures are injected through a [[FilterFileSystem]] that refuses
@@ -19,20 +20,21 @@ class ParquetSinkCommitSpec extends SparkSpec {
 
   private val id = TableId.of("db", "t")
   private val schema = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING").copy(primaryKeys = Seq("id"))
+  private val intSchema = CdcSchema.of("id" -> "INT", "v" -> "STRING").copy(primaryKeys = Seq("id"))
 
   private def batch(rows: (Long, String, String, Long)*) =
     rows.toDF("id", "v", Changelog.OpCol, Changelog.SeqCol)
 
+  private def intBatch(rows: (Int, String, String, Long)*) =
+    rows.toDF("id", "v", Changelog.OpCol, Changelog.SeqCol)
+
   private def localFs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
 
-  private def layoutOf(tablePath: String): Int = {
-    val in = localFs.open(new Path(tablePath + ".layout"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt finally in.close()
+  /** Bucket count and live bucket ids of the table's newest manifest. */
+  private def layoutOf(sink: ParquetUpsertSink): (Int, Set[Int]) = {
+    val m = sink.manifest(spark, id).get
+    (m.buckets, m.live.keySet)
   }
-
-  private def bucketDirs(tablePath: String): Set[Int] =
-    localFs.listStatus(new Path(tablePath)).map(_.getPath.getName)
-      .filter(_.startsWith("__bucket=")).map(_.stripPrefix("__bucket=").toInt).toSet
 
   /** The buckets `keys` hash to under modulus `m`, by the sink's own rule. */
   private def bucketsOf(keys: Seq[Long], m: Int): Set[Int] = {
@@ -41,22 +43,37 @@ class ParquetSinkCommitSpec extends SparkSpec {
       .as[Int].collect().toSet
   }
 
-  /** Table state as (bucket schema, row) pairs, read bucket by bucket after
-    * the sink's own recovery: a state whose buckets disagree on their columns
-    * cannot pass for either side of a schema change. Empty when the table has
-    * no state dir.
+  /** Table state as its read schema and rows, None without a manifest. Every
+    * live bucket's files must carry the manifest's schema: a table whose
+    * buckets disagree on their columns cannot pass for either side of a
+    * schema change.
     */
-  private def stateOf(sink: ParquetUpsertSink): Set[(String, Seq[Any])] =
-    try {
-      sink.read(spark, id)
-      bucketDirs(sink.tablePath(id)).flatMap { b =>
-        val df = spark.read.parquet(s"${sink.tablePath(id)}/__bucket=$b")
-        df.collect().map(r => (df.schema.toDDL, r.toSeq)).toSet
+  private def stateOf(sink: ParquetUpsertSink): Option[(String, Set[Seq[Any]])] =
+    sink.manifest(spark, id).map { m =>
+      def columns(s: org.apache.spark.sql.types.StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+      m.live.values.foreach { dir =>
+        assert(columns(spark.read.parquet(s"${sink.tablePath(id)}/$dir").schema) === columns(m.schema),
+          s"bucket dir $dir")
       }
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException if !localFs.exists(new Path(sink.tablePath(id))) =>
-        Set.empty
+      val df = sink.read(spark, id)
+      (df.schema.toDDL, df.collect().map(_.toSeq.toSeq).toSet)
     }
+
+  /** The table dir holds the newest manifest and the data dirs it names,
+    * nothing else; no table dir at all without a manifest.
+    */
+  private def assertSwept(sink: ParquetUpsertSink): Unit = {
+    val table = new Path(sink.tablePath(id))
+    def children(p: Path) = localFs.listStatus(p).map(_.getPath.getName).toSet
+    sink.manifest(spark, id) match {
+      case None => assert(!localFs.exists(table))
+      case Some(m) =>
+        val named = m.live.values.toSet + s"_manifest/${m.version}"
+        val tops = named.map(_.takeWhile(_ != '/'))
+        assert(children(table) === tops)
+        tops.foreach(t => assert(children(new Path(table, t)).map(c => s"$t/$c") === named.filter(_.startsWith(s"$t/"))))
+    }
+  }
 
   private def pairsOf(sink: ParquetUpsertSink): Set[(Long, String)] =
     sink.read(spark, id).as[(Long, String)].collect().toSet
@@ -101,18 +118,19 @@ class ParquetSinkCommitSpec extends SparkSpec {
     override protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): FileSystem = crashFs
   }
 
-  /** Crash `write` after each of its mutating FS calls in turn; after every
+  /** Crash `change` after each of its mutating FS calls in turn; after every
     * crash a restarted sink must read the state either before or after the
-    * batch — never a mix — and a replay of the batch must converge to after.
+    * change — never a mix — and a replay of the change must converge to
+    * after, with everything the newest manifest does not name deleted.
     */
   private def crashAtEveryCall(buckets: Int, setup: ParquetUpsertSink => Unit,
-                               write: ParquetUpsertSink => Unit): Unit = {
+                               change: ParquetUpsertSink => Unit): Unit = {
     val clean = tempDir("graft-crash-clean")
     val probe = new CrashingSink(clean, buckets, crashAt = -1)
     setup(probe)
     val before = stateOf(probe)
     val setupCalls = probe.crashFs.calls.get()
-    write(probe)
+    change(probe)
     val after = stateOf(probe)
     val calls = probe.crashFs.calls.get() - setupCalls
     assert(calls > 0 && before != after)
@@ -120,34 +138,34 @@ class ParquetSinkCommitSpec extends SparkSpec {
       val root = tempDir(s"graft-crash-$k")
       val sink = new CrashingSink(root, buckets, crashAt = setupCalls + k)
       setup(sink)
-      intercept[Crash](write(sink))
+      intercept[Crash](change(sink))
       val restarted = new ParquetUpsertSink(root, buckets)
       val recovered = stateOf(restarted)
       assert(recovered == before || recovered == after,
         s"crash after call $k of $calls: recovered $recovered, want $before or $after")
-      write(restarted)
+      change(restarted)
       assert(stateOf(restarted) === after, s"replay after a crash at call $k of $calls")
+      assertSwept(restarted)
       localFs.delete(new Path(root), true)
     }
     val _ = localFs.delete(new Path(clean), true)
   }
 
-  test("bucketed swap failure restores the displaced bucket") {
+  test("a refused manifest rename throws and leaves the table as it was") {
     val root = tempDir("graft-commit-b")
     @volatile var deny = false
     var fsRef: DenyingFs = null
     val sink = new ParquetUpsertSink(root, buckets = 4) {
       override protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): FileSystem = {
-        // deny the swap-IN of new bucket data (src under .tmp/__bucket=) but
-        // allow the displace (src = live bucket) and the restore (src = .old_)
+        // deny the publishing rename of the manifest written aside
         if (fsRef == null) fsRef = new DenyingFs(super.hfs(spark, path),
-          p => deny && p.contains(".tmp/__bucket="))
+          p => deny && p.contains("/_manifest/."))
         fsRef
       }
     }
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
       (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
-    val before = sink.read(spark, id).as[(Long, String)].collect().toSet
+    val before = pairsOf(sink)
     assert(before === Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
 
     deny = true
@@ -157,116 +175,12 @@ class ParquetSinkCommitSpec extends SparkSpec {
     assert(e.getMessage.contains("commit failed"))
     assert(fsRef.denied.get() > 0, "injected rename failure never hit")
     deny = false
-    assert(sink.read(spark, id).as[(Long, String)].collect().toSet === before,
-      "displaced bucket must be restored after a failed swap")
+    assert(pairsOf(sink) === before, "an unpublished commit must not change the table")
 
     sink.write(id, batch((1L, "a2", "UPDATE", 9L)), schema)
-    assert(sink.read(spark, id).as[(Long, String)].collect().toSet ===
-      Set((1L, "a2"), (2L, "b"), (3L, "c"), (4L, "d")))
-    val _ = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-      .delete(new Path(root), true)
-  }
-
-  test("crash between the two swap renames is recovered, not destroyed") {
-    val root = tempDir("graft-crash")
-    val sink = new ParquetUpsertSink(root)
-    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
-
-    // simulate a process death between rename(dst -> old) and
-    // rename(tmp -> dst): the only copy of table state sits under .old
-    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(sink.tablePath(id))
-    assert(fs.rename(dst, new Path(sink.tablePath(id) + ".old")))
-    assert(!fs.exists(dst))
-
-    // next write must restore .old first — treating the table as empty
-    // would silently drop keys 1 and 2
-    sink.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    assert(sink.read(spark, id).as[(Long, String)].collect().toSet ===
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-    assert(!fs.exists(new Path(sink.tablePath(id) + ".old")))
-    val _ = fs.delete(new Path(root), true)
-  }
-
-  test("crash with a displaced bucket under .tmp is recovered on next write") {
-    val root = tempDir("graft-crash-b")
-    val sink = new ParquetUpsertSink(root, buckets = 4)
-    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
-      (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
-
-    // find a live bucket and displace it the way a mid-swap crash would:
-    // bucket dir moved to .tmp/.old_N, replacement never swapped in
-    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val tablePath = sink.tablePath(id)
-    val liveBucket = fs.listStatus(new Path(tablePath))
-      .map(_.getPath.getName).filter(_.startsWith("__bucket=")).head
-    val b = liveBucket.stripPrefix("__bucket=")
-    assert(fs.mkdirs(new Path(s"$tablePath.tmp")))
-    assert(fs.rename(new Path(s"$tablePath/$liveBucket"), new Path(s"$tablePath.tmp/.old_$b")))
-
-    // next write (touching any bucket) must first restore the displaced one;
-    // before recovery the overwrite of .tmp would destroy its only copy
-    sink.write(id, batch((1L, "a2", "UPDATE", 9L)), schema)
-    assert(sink.read(spark, id).as[(Long, String)].collect().toSet ===
-      Set((1L, "a2"), (2L, "b"), (3L, "c"), (4L, "d")))
-    val _ = fs.delete(new Path(root), true)
-  }
-
-  test("swap_ready tmp is rolled FORWARD: crash mid-swap applies the batch, once") {
-    val root = tempDir("graft-fwd")
-    val sink = new ParquetUpsertSink(root, buckets = 4)
-    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
-      (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
-
-    // simulate a crash between the parquet write (complete, marker created)
-    // and the swaps: tmp holds the batch's full output for one bucket
-    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val tablePath = sink.tablePath(id)
-    val liveBucket = fs.listStatus(new Path(tablePath))
-      .map(_.getPath.getName).filter(_.startsWith("__bucket=")).head
-    assert(fs.mkdirs(new Path(s"$tablePath.tmp")))
-    // the "new" bucket content = a copy of a DIFFERENT live bucket's dir,
-    // moved under tmp as the would-be replacement of liveBucket
-    val other = fs.listStatus(new Path(tablePath))
-      .map(_.getPath.getName).filter(_.startsWith("__bucket=")).apply(1)
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(s"$tablePath/$other"), new java.io.File(s"$tablePath.tmp/$liveBucket"))
-    assert(fs.mkdirs(new Path(s"$tablePath.tmp/.swap_ready")))
-
-    // read-path recovery must displace the live bucket, swap the tmp copy in,
-    // and clean tmp — the batch applies exactly once, forward
-    val expectOther = spark.read.parquet(s"$tablePath/$other")
-      .drop("__bucket").as[(Long, String)].collect().toSet
-    val recovered = sink.read(spark, id)
-    val inBucket = spark.read.parquet(s"$tablePath/$liveBucket")
-      .as[(Long, String)].collect().toSet
-    assert(inBucket === expectOther, "tmp replacement must be swapped in forward")
-    assert(!fs.exists(new Path(s"$tablePath.tmp")), "tmp must be cleaned after roll-forward")
-    assert(recovered.count() > 0)
-  }
-
-  test("swap_ready roll-forward does not resurrect a displaced emptied bucket") {
-    val root = tempDir("graft-fwd-e")
-    val sink = new ParquetUpsertSink(root, buckets = 4)
-    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
-      (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
-
-    // crash after an emptied bucket's displace, marker present, no
-    // replacement dir in tmp: roll-forward must leave dst absent
-    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val tablePath = sink.tablePath(id)
-    val liveBucket = fs.listStatus(new Path(tablePath))
-      .map(_.getPath.getName).filter(_.startsWith("__bucket=")).head
-    val b = liveBucket.stripPrefix("__bucket=")
-    val before = sink.read(spark, id).as[(Long, String)].collect().toSet
-    assert(fs.mkdirs(new Path(s"$tablePath.tmp")))
-    assert(fs.mkdirs(new Path(s"$tablePath.tmp/.swap_ready")))
-    assert(fs.rename(new Path(s"$tablePath/$liveBucket"), new Path(s"$tablePath.tmp/.old_$b")))
-
-    val after = sink.read(spark, id).as[(Long, String)].collect().toSet
-    assert(after.subsetOf(before) && after.size < before.size,
-      "emptied bucket must stay deleted under roll-forward recovery")
-    assert(!fs.exists(new Path(s"$tablePath.tmp")))
+    assert(pairsOf(sink) === Set((1L, "a2"), (2L, "b"), (3L, "c"), (4L, "d")))
+    assertSwept(sink)
+    val _ = localFs.delete(new Path(root), true)
   }
 
   test("AutoBuckets derives the layout from the first batch and pins it in meta") {
@@ -274,54 +188,22 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val sink = new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)
     sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
 
-    val tablePath = sink.tablePath(id)
     val cores = spark.sparkContext.defaultParallelism
-    assert(localFs.exists(new Path(tablePath + ".layout")), "layout meta must be written at state creation")
-    assert(layoutOf(tablePath) === cores,
+    assert(layoutOf(sink) === ((cores, bucketsOf(Seq(1L, 2L), cores))),
       "a 2-row first batch derives one bucket per core, the parallelism floor")
-    assert(bucketDirs(tablePath) === bucketsOf(Seq(1L, 2L), cores))
 
     // a second writer with a DIFFERENT constructor constant must follow the
-    // on-disk layout (meta wins), not prune state with the wrong modulus
+    // manifest's layout, not prune state with the wrong modulus
     val sink2 = new ParquetUpsertSink(root, buckets = 32)
     sink2.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    assert(sink2.read(spark, id).as[(Long, String)].collect().toSet ===
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-    assert(bucketDirs(tablePath) === bucketsOf(Seq(1L, 2L, 3L), cores),
-      "the merge must keep the meta's layout, not fan out to 32")
+    assert(pairsOf(sink2) === Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(layoutOf(sink2) === ((cores, bucketsOf(Seq(1L, 2L, 3L), cores))),
+      "the merge must keep the manifest's layout, not fan out to 32")
     val _ = localFs.delete(new Path(root), true)
   }
 
-  test("displaced bucket WITH a done marker (emptied by deletes) is not resurrected") {
-    val root = tempDir("graft-crash-d")
-    val sink = new ParquetUpsertSink(root, buckets = 4)
-    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L),
-      (3L, "c", "INSERT", 3L), (4L, "d", "INSERT", 4L)), schema)
-
-    // simulate a crash AFTER an emptied bucket's swap decision completed
-    // (marker written, tmp not yet cleaned): dst absent by design
-    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val tablePath = sink.tablePath(id)
-    val liveBucket = fs.listStatus(new Path(tablePath))
-      .map(_.getPath.getName).filter(_.startsWith("__bucket=")).head
-    val b = liveBucket.stripPrefix("__bucket=")
-    val before = sink.read(spark, id).as[(Long, String)].collect().toSet
-    assert(fs.mkdirs(new Path(s"$tablePath.tmp")))
-    assert(fs.rename(new Path(s"$tablePath/$liveBucket"), new Path(s"$tablePath.tmp/.old_$b")))
-    assert(fs.mkdirs(new Path(s"$tablePath.tmp/.done_$b")))
-
-    val after = sink.read(spark, id).as[(Long, String)].collect().toSet
-    assert(after.subsetOf(before) && after.size < before.size,
-      "marker-completed deletion must stay deleted on read and write")
-    sink.write(id, batch((5L, "e", "INSERT", 10L)), schema)
-    assert(sink.read(spark, id).as[(Long, String)].collect().toSet === after + ((5L, "e")))
-    val _ = fs.delete(new Path(root), true)
-  }
-
-  test("a crash after the roll-forward marker never resurrects a bucket the batch emptied") {
-    // the batch deletes every key of one bucket and updates a key of
-    // another: roll-forward only sees the buckets tmp holds, so the emptied
-    // one must be displaced before the marker exists
+  test("a crash anywhere in a bucket-emptying merge never resurrects the emptied bucket") {
+    // the batch deletes every key of one bucket and updates a key of another
     val keys = (1L to 8L).map(k => (k, s"v$k", "INSERT", k))
     val emptied = bucketsOf(Seq(1L), 4).head
     val inEmptied = keys.map(_._1).filter(k => bucketsOf(Seq(k), 4).head == emptied)
@@ -331,8 +213,8 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("a crash anywhere in an AutoBuckets first write leaves state a restart can write") {
-    // the layout meta goes down before the state dir: no crash point leaves
-    // a meta-less state dir for the restarted writer to refuse
+    // `_manifest` goes down before any data: no crash point leaves a table
+    // dir the restarted writer refuses as the earlier format
     crashAtEveryCall(ParquetUpsertSink.AutoBuckets, _ => (),
       _.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema))
   }
@@ -345,8 +227,8 @@ class ParquetSinkCommitSpec extends SparkSpec {
     try {
       val sink = new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)
       sink.write(id, batch(rows: _*), schema)
-      assert(layoutOf(sink.tablePath(id)) === want, "ceil(rows / rowsPerBucket) above the floor")
-      assert(bucketDirs(sink.tablePath(id)) === bucketsOf(rows.map(_._1), want))
+      assert(layoutOf(sink) === ((want, bucketsOf(rows.map(_._1), want))),
+        "ceil(rows / rowsPerBucket) above the floor")
       assert(pairsOf(sink) === rows.map(r => (r._1, r._2)).toSet)
     } finally spark.conf.unset(ParquetUpsertSink.RowsPerBucketConf)
     val _ = localFs.delete(new Path(root), true)
@@ -360,70 +242,68 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val keys = (1L to 8L).map(k => (k, s"a$k", "INSERT", k))
     val a = new ParquetUpsertSink(root)
     a.write(id, batch(keys: _*), schema)
-    assert(layoutOf(a.tablePath(id)) === 4, "local[4] floor")
+    assert(layoutOf(a)._1 === 4, "local[4] floor")
     val b = new ParquetUpsertSink(root)
     b.applySchemaChange(graft.model.TruncateTableEvent(id))
     spark.conf.set(ParquetUpsertSink.RowsPerBucketConf, "1")
     try b.write(id, batch(keys.map(k => (k._1, s"b${k._1}", "INSERT", 10L + k._1)): _*), schema)
     finally spark.conf.unset(ParquetUpsertSink.RowsPerBucketConf)
-    assert(layoutOf(a.tablePath(id)) === 8, "one bucket per row above the floor")
+    assert(layoutOf(a)._1 === 8, "one bucket per row above the floor")
     a.write(id, batch(keys.map(k => (k._1, s"u${k._1}", "UPDATE", 100L + k._1)): _*), schema)
     val rows = a.read(spark, id).as[(Long, String)].collect().toSeq
     assert(rows.sorted === (1L to 8L).map(k => (k, s"u$k")))
   }
 
-  test("state without a layout meta fails loudly under AutoBuckets, naming the setting that reads it") {
-    val root = tempDir("graft-legacy")
-    // bucketed state written before the layout meta existed: the old default 32
-    val legacy = new ParquetUpsertSink(root, buckets = 32)
-    legacy.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
-    assert(localFs.delete(new Path(legacy.tablePath(id) + ".layout"), false))
-    val e = intercept[IllegalArgumentException] {
-      new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)
-        .write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    }
-    assert(e.getMessage.contains("`buckets: 32`"), e.getMessage)
-    assert(pairsOf(legacy) === Set((1L, "a"), (2L, "b")), "a refused write leaves state untouched")
-    // the named setting does read and extend it
-    val pinned = new ParquetUpsertSink(root, buckets = 32)
-    pinned.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    assert(pairsOf(pinned) === Set((1L, "a"), (2L, "b"), (3L, "c")))
-
-    // state in the removed unbucketed layout: parquet files at the table root
-    val root0 = tempDir("graft-legacy0")
-    val flat = new ParquetUpsertSink(root0, buckets = ParquetUpsertSink.AutoBuckets)
+  test("state of the earlier swap format is refused by writes, DDL and reads, naming its dir") {
+    def refused(sink: ParquetUpsertSink, what: String): Unit =
+      Seq[() => Any](() => sink.write(id, batch((3L, "c", "INSERT", 3L)), schema),
+        () => sink.applySchemaChange(graft.model.AddColumnEvent(id, "n",
+          org.apache.spark.sql.types.IntegerType)),
+        () => sink.read(spark, id)).foreach { op =>
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains(s"${sink.tablePath(id)} predates the manifest format"), s"$what: ${e.getMessage}")
+      }
+    // bucket dirs at the table root, with a layout meta beside them
+    val bucketed = new ParquetUpsertSink(tempDir("graft-swap-format"), buckets = 4)
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"${bucketed.tablePath(id)}/__bucket=0")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(bucketed.tablePath(id) + ".layout"), "4")
+    refused(bucketed, "bucketed")
+    // the flat layout: parquet files at the table root
+    val flat = new ParquetUpsertSink(tempDir("graft-flat-format"))
     Seq((1L, "a")).toDF("id", "v").write.parquet(flat.tablePath(id))
-    val e0 = intercept[IllegalArgumentException] {
-      flat.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-    }
-    assert(e0.getMessage.contains("removed unbucketed layout"), e0.getMessage)
-    localFs.delete(new Path(root), true)
-    val _ = localFs.delete(new Path(root0), true)
+    refused(flat, "flat")
+    // a layout meta left beside no table dir
+    val sibling = new ParquetUpsertSink(tempDir("graft-sibling-format"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(sibling.tablePath(id) + ".layout"), "4")
+    refused(sibling, "sibling")
+    assert(!localFs.exists(new Path(sibling.tablePath(id))), "a refused write creates nothing")
+    assert(spark.read.parquet(flat.tablePath(id)).as[(Long, String)].collect().toSeq === Seq((1L, "a")),
+      "a refused write leaves the old state untouched")
   }
 
-  test("flat state is refused by every writer and by DDL, and stays readable") {
-    // a bucketed commit next to root parquet files hides them from readers:
-    // partition discovery drops the root files once `__bucket=` dirs exist
-    val root = tempDir("graft-flat")
-    val pinned = new ParquetUpsertSink(root, buckets = 4)
-    val tablePath = pinned.tablePath(id)
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(tablePath)
-    val planted = Set((1L, "a"), (2L, "b"))
-    Seq(pinned, new ParquetUpsertSink(root, buckets = ParquetUpsertSink.AutoBuckets)).foreach { sink =>
-      val e = intercept[IllegalArgumentException] {
-        sink.write(id, batch((3L, "c", "INSERT", 3L)), schema)
-      }
-      assert(e.getMessage.contains("removed unbucketed layout"), e.getMessage)
-      assert(pairsOf(sink) === planted)
-    }
-    val e = intercept[IllegalArgumentException] {
-      pinned.applySchemaChange(graft.model.AddColumnEvent(id, "n",
-        org.apache.spark.sql.types.IntegerType))
-    }
-    assert(e.getMessage.contains("removed unbucketed layout"), e.getMessage)
-    assert(bucketDirs(tablePath).isEmpty && !localFs.exists(new Path(tablePath + ".layout")),
-      "a refused write leaves flat state untouched")
-    assert(pairsOf(pinned) === planted)
+  test("a table emptied by deletes or by truncate reads as an empty frame of its schema") {
+    val root = tempDir("graft-emptied-read")
+    val sink = new ParquetUpsertSink(root, buckets = 4)
+    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
+    val shape = sink.read(spark, id).schema
+    sink.write(id, batch((1L, "a", "DELETE", 3L), (2L, "b", "DELETE", 4L)), schema)
+    val emptied = sink.read(spark, id)
+    assert(emptied.schema === shape && emptied.count() === 0)
+    sink.write(id, batch((3L, "c", "INSERT", 5L)), schema)
+    sink.applySchemaChange(graft.model.TruncateTableEvent(id))
+    val truncated = sink.read(spark, id)
+    assert(truncated.schema === shape && truncated.count() === 0)
+    val _ = localFs.delete(new Path(root), true)
+  }
+
+  test("a PK type change re-buckets every key: an update after it stores each key once") {
+    val root = tempDir("graft-pk-type")
+    val sink = new ParquetUpsertSink(root, buckets = 4)
+    sink.write(id, intBatch((1 to 8).map(k => (k, s"v$k", "INSERT", k.toLong)): _*), intSchema)
+    sink.applySchemaChange(graft.model.AlterColumnTypeEvent(id, "id", org.apache.spark.sql.types.LongType))
+    sink.write(id, batch((1L to 8L).map(k => (k, s"u$k", "UPDATE", 100L + k)): _*), schema)
+    assert(sink.read(spark, id).as[(Long, String)].collect().toSeq.sorted ===
+      (1L to 8L).map(k => (k, s"u$k")))
     val _ = localFs.delete(new Path(root), true)
   }
 
@@ -453,9 +333,20 @@ class ParquetSinkCommitSpec extends SparkSpec {
     }
   }
 
+  test("a crash anywhere in a PK type change recovers to the old or the re-bucketed table") {
+    crashAtEveryCall(4, _.write(id, intBatch((1 to 8).map(k => (k, s"v$k", "INSERT", k.toLong)): _*), intSchema),
+      _.applySchemaChange(graft.model.AlterColumnTypeEvent(id, "id", org.apache.spark.sql.types.LongType)))
+  }
+
   test("a crash anywhere in a truncate recovers to the full or the empty table") {
     val keys = (1L to 8L).map(k => (k, s"v$k", "INSERT", k))
     crashAtEveryCall(4, _.write(id, batch(keys: _*), schema),
       _.applySchemaChange(graft.model.TruncateTableEvent(id)))
+  }
+
+  test("a crash anywhere in a drop recovers to the table or to no table") {
+    val keys = (1L to 8L).map(k => (k, s"v$k", "INSERT", k))
+    crashAtEveryCall(4, _.write(id, batch(keys: _*), schema),
+      _.applySchemaChange(graft.model.DropTableEvent(id)))
   }
 }

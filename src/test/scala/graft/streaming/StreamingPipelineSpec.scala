@@ -291,8 +291,10 @@ class StreamingPipelineSpec extends SparkSpec {
 
     val state = sink.read(spark, usersId).orderBy("id").as[(Long, String, Int)].collect().toSeq
     assert(state === Seq((1L, "a2", 21), (3L, "c", 40)))
-    // partitioned layout on disk
-    assert(new java.io.File(sink.tablePath(usersId)).listFiles().exists(_.getName.startsWith("__bucket=")))
+    // the live buckets are exactly those of the keys left
+    val layout = sink.manifest(spark, usersId).get
+    assert(layout.buckets === 8 && layout.live.keySet ===
+      Seq(1L, 3L).toDF("id").select(pmod(xxhash64(col("id")), lit(8L)).cast("int")).as[Int].collect().toSet)
   }
 
   test("parquet sink survives mid-stream AddColumn (state coerced to evolved schema)") {
