@@ -79,59 +79,69 @@ object Bm25 {
     }
   }
 
-  /** Persist the inverted index: postings (tok, doc_id, tf) Hive-partitioned
-    * by `pmod(xxhash64(tok), termBuckets)` — a probe reads ONLY the
-    * partitions its own query terms hash into (file-listing pruning, the
-    * IVF-lists stance) — plus the doc-length table and the one-row corpus
-    * stats. Build cost is the same single tokenization pass the brute path
-    * pays ONCE, amortized over every subsequent query.
+  private val What = "postings index"
+
+  /** Persist the inverted index, one [[IndexMaintenance]] build: postings
+    * (tok, doc_id, tf) Hive-partitioned by `pmod(xxhash64(tok),
+    * termBuckets)` — a probe reads ONLY the partitions its own query terms
+    * hash into (file-listing pruning, the IVF-lists stance) — plus the
+    * doc-length table and the one-row corpus stats. `termBuckets` is pinned
+    * in the manifest. Build cost is the same single tokenization pass the
+    * brute path pays ONCE, amortized over every subsequent query.
     */
   def writePostings(docs: DataFrame, idCol: String, textCol: String,
-                    path: String, termBuckets: Int = 64): Unit = {
+                    path: String, termBuckets: Int = 64): Unit =
+    IndexMaintenance.build(docs.sparkSession, path) { fresh =>
+      writeDocs(docs, idCol, textCol, path, termBuckets, fresh)
+      termBuckets
+    }
+
+  /** Postings, doc lengths and one stats delta row (n, sum_dl) of `docs`,
+    * each into a fresh dir: stats are delta rows because increments
+    * commute, and probes SUM them.
+    */
+  private def writeDocs(docs: DataFrame, idCol: String, textCol: String, path: String,
+                        termBuckets: Int, fresh: IndexMaintenance.Fresh): Unit = {
     val toks = docs.select(col(idCol).as("doc_id"),
       explode(expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)")).as("tok"))
-    val postings = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    postings
+    toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(termBuckets)))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
+      .write.partitionBy("bucket").parquet(s"$path/${fresh("postings")}")
     val doclens = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    doclens.write.mode("overwrite").parquet(s"$path/doclens")
-    // stats are APPEND-ONLY delta rows (n, sum_dl): increments commute, so
-    // concurrent appends can never lose an update the way a
-    // read-modify-write single row would; probes SUM the deltas
+    doclens.write.parquet(s"$path/${fresh("doclens")}")
     doclens.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+      .coalesce(1).write.parquet(s"$path/${fresh("stats")}")
   }
 
   /** Append a DISJOINT batch of new documents to a persisted postings
-    * index — the streaming-ingest growth path, under the shared
-    * epoch-marker append protocol ([[IndexMaintenance]], the MinHash/IVF
-    * stance). Postings and doc lengths are purely additive because doc
-    * sets are disjoint; corpus stats land as one more delta row (sums
-    * commute — no read-modify-write, no lost update under concurrency).
-    * df/avgdl/N at probe time therefore reflect every append, so an
-    * incremental index scores IDENTICALLY to a fresh full build.
+    * index — the streaming-ingest growth path ([[IndexMaintenance.append]]).
+    * Postings and doc lengths are purely additive because doc sets are
+    * disjoint; corpus stats land as one more delta row. df/avgdl/N at probe
+    * time therefore reflect every append, so an incremental index scores
+    * IDENTICALLY to a fresh full build. Each append adds one dir per
+    * relation; [[compactPostings]] coalesces them.
     */
-  def appendToPostings(docs: DataFrame, idCol: String, textCol: String,
-                       path: String, termBuckets: Int = 64,
-                       leaseMs: Long = IndexMaintenance.DefaultLeaseMs): Unit = {
-    val spark = docs.sparkSession
-    val fs = IndexMaintenance.fsOf(path, spark)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats")),
-      s"no postings index at $path — writePostings first")
-    val marker = IndexMaintenance.beginAppend(fs, path, leaseMs)
-    try {
-      val toks = docs.select(col(idCol).as("doc_id"),
-        explode(expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)")).as("tok"))
-      toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .withColumn("bucket", pmod(xxhash64(col("tok")), lit(termBuckets)))
-        .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
-      val doclens = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      doclens.write.mode("append").parquet(s"$path/doclens")
-      doclens.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
-        .coalesce(1).write.mode("append").parquet(s"$path/stats")
-    } finally IndexMaintenance.endAppend(fs, marker)
-  }
+  def appendToPostings(docs: DataFrame, idCol: String, textCol: String, path: String): Unit =
+    IndexMaintenance.append(docs.sparkSession, path, What) { (base, fresh) =>
+      writeDocs(docs, idCol, textCol, path, base.partitions, fresh)
+    }
+
+  /** Compact a persisted postings index: rewrite its postings, doc lengths
+    * and stats deltas, which every append grows by one dir each, as one dir
+    * each — the stats as ONE (n, sum_dl) row — so a probe again lists one
+    * dir per relation ([[IndexMaintenance.compact]]). Scores are unchanged:
+    * the rows are the same and the stats sums are exact. An append that
+    * published meanwhile keeps its dirs.
+    */
+  def compactPostings(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    IndexMaintenance.compact(spark, path, What, Seq("postings", "doclens", "stats")) { (base, fresh) =>
+      def rel(name: String) = IndexMaintenance.read(spark, path, base, name)
+      rel("postings").repartition(col("bucket"))
+        .write.partitionBy("bucket").parquet(s"$path/${fresh("postings")}")
+      rel("doclens").write.parquet(s"$path/${fresh("doclens")}")
+      rel("stats").agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
+        .coalesce(1).write.parquet(s"$path/${fresh("stats")}")
+    }
 
   /** Query the persisted index: read only the query terms' bucket
     * partitions, pivot the matching postings to per-doc tf columns, join
@@ -140,11 +150,13 @@ object Bm25 {
     * stats, same tf values, same expression.
     */
   def topKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                  query: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
-                  termBuckets: Int = 64): DataFrame = {
+                  query: String, k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val idx = IndexMaintenance.current(spark, path, What)
+    def rel(name: String) = IndexMaintenance.read(spark, path, idx, name)
+    val termBuckets = idx.partitions
     val terms = queryTerms(query)
     require(terms.nonEmpty, "BM25 query has no [a-z]+ terms")
-    val statsRow = spark.read.parquet(s"$path/stats")
+    val statsRow = rel("stats")
       .agg(sum(col("n")), sum(col("sum_dl"))).head()
     val n = statsRow.getLong(0)
     val avgdl = statsRow.getLong(1).toDouble / n.toDouble
@@ -152,7 +164,7 @@ object Bm25 {
     val buckets = terms.map(t =>
       spark.range(1).select(pmod(xxhash64(lit(t)), lit(termBuckets)))
         .head().getLong(0)).distinct
-    val hits = spark.read.parquet(s"$path/postings")
+    val hits = rel("postings")
       .where(col("bucket").isin(buckets: _*) && col("tok").isin(terms: _*))
     val perDoc = hits.groupBy("doc_id").agg(
       terms.zipWithIndex.map { case (t, i) =>
@@ -170,7 +182,7 @@ object Bm25 {
       math.log((n.toDouble - df + 0.5) / (df + 0.5) + 1.0)
     }
     perDoc
-      .join(spark.read.parquet(s"$path/doclens"), Seq("doc_id"))
+      .join(rel("doclens"), Seq("doc_id"))
       .select(col("doc_id"), scoreExpr(terms.size, idf, avgdl, k1, b).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)

@@ -323,78 +323,89 @@ object Dedup {
 
   // ---------- persisted MinHash-LSH index (incremental dedup) ----------
 
-  /** Persist a MinHash-LSH dedup index for incremental (streaming-ingest)
-    * dedup: `path/buckets` holds one slim row per (band, bucket, id),
-    * hash-partitioned on disk by `pbucket = pmod(xxhash64(band, bucket), P)`
-    * so a new batch's candidate lookup prunes at the FILE LISTING — only the
-    * partitions the batch's own band keys hash into are ever read;
-    * `path/sigs` holds (id, signature) range-partitioned and sorted by id,
-    * so the verify join's candidate-id filter prunes at parquet row-group
-    * stats. Degenerate buckets (> `maxBucketSize` members — empty or
-    * boilerplate text, guaranteed at web scale) are dropped at BUILD time,
-    * so no future batch can quadratically explode against them; singleton
-    * buckets stay (a new doc can match a so-far-unique one).
-    */
   /** `numPartitions` sentinel: derive the bucket layout's disk-partition
-    * count from the materialized sigs size at build and resolve it from the
-    * index's `_layout` meta at probe/append/compact time (r20; guide §6).
+    * count from the materialized sigs size at build; every later append,
+    * compaction and probe hashes with the count the index's manifest pins
+    * (r20; guide §6).
     */
   val AutoPartitions: Int = 0
 
-  /** The index's on-disk partition count: its `_layout` meta when present
-    * (layout is ground truth — a mismatched caller constant silently prunes
-    * the wrong partitions), else the caller's value (pre-meta index), with
-    * the historical 64 for [[AutoPartitions]].
-    */
-  private def indexLayout(spark: org.apache.spark.sql.SparkSession, path: String,
-                          numPartitions: Int): Int =
-    IndexMaintenance.resolveLayout(IndexMaintenance.fsOf(path, spark), path,
-      if (numPartitions == AutoPartitions) 64 else numPartitions)
+  private val What = "minhash index"
 
-  def writeMinhashIndex(df: DataFrame, idCol: String, textCol: String, path: String,
-                        shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
-                        maxBucketSize: Int = 64, numPartitions: Int = AutoPartitions): Unit = {
-    // (r19: pushing the range exchange BELOW the signature projection —
-    // hash once, sample on raw text — measured neutral-to-slower here and
-    // trades sig-bytes shuffle for text-bytes shuffle at scale; kept the
-    // original shape.)
-    val sigs = signatures(df, idCol, textCol, shingleSize, numHashes)
-    sigs.repartitionByRange(col(idCol)).sortWithinPartitions(idCol)
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    // scale-adaptive layout, pinned in the index meta: derived from the
-    // just-written sigs bytes (driver-side listing, no job) — a 5 MB local
-    // corpus gets ONE bucket dir instead of a constant 64-way small-file
-    // fan-out; a web corpus gets thousands for listing-level probe pruning
-    val fs = IndexMaintenance.fsOf(path, df.sparkSession)
-    val p = if (numPartitions == AutoPartitions)
-      IndexMaintenance.derivePartitions(df.sparkSession, fs,
-        new org.apache.hadoop.fs.Path(s"$path/sigs"))
-    else numPartitions
-    IndexMaintenance.writeLayout(fs, path, p)
-    // derive the band buckets from the JUST-WRITTEN sigs asset, not the
-    // lineage: the signature pass already ran twice for the write above
-    // (range-sample + output), and re-deriving from lineage would hash the
-    // corpus a third time — reading back the slim materialized (id, sig)
-    // table costs one parallel scan instead (r19; guide §2.3/§8: decide on
-    // the materialized proxy, don't recompute the heavy pass)
-    val sigsBack = df.sparkSession.read.parquet(s"$path/sigs")
-    val buckets = sigsBack.select(col(idCol).as("id"),
-      posexplode(graft.functions.CdcExpressions.minhashBands(col("sig"), bands))
-        .as(Seq("band", "bucket")))
-    buckets
+  /** The band-bucket rows of a signature relation, hash-partitioned by
+    * `pbucket = pmod(xxhash64(band, bucket), p)`, degenerate buckets
+    * (> `maxBucketSize` members) dropped: the one shape build, append and
+    * compaction write.
+    */
+  private def bandBuckets(sigs: DataFrame, idCol: String, bands: Int, maxBucketSize: Int,
+                          p: Int): DataFrame =
+    sigs.select(col(idCol).as("id"),
+        posexplode(graft.functions.CdcExpressions.minhashBands(col("sig"), bands))
+          .as(Seq("band", "bucket")))
       .withColumn("__bsz", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
       .where(col("__bsz") <= maxBucketSize).drop("__bsz")
       .withColumn("pbucket", pmod(xxhash64(col("band"), col("bucket")), lit(p)))
       .repartition(col("pbucket")) // one writer wave per disk partition, no small files
-      .write.mode("overwrite").partitionBy("pbucket").parquet(s"$path/buckets")
+
+  /** Persist a MinHash-LSH dedup index for incremental (streaming-ingest)
+    * dedup ([[IndexMaintenance]] publishes it): relation `buckets` holds one
+    * slim row per (band, bucket, id), hash-partitioned on disk by `pbucket`
+    * so a new batch's candidate lookup prunes at the FILE LISTING — only
+    * the partitions the batch's own band keys hash into are ever read;
+    * relation `sigs` holds (id, signature) range-partitioned and sorted by
+    * id, so the verify join's candidate-id filter prunes at parquet
+    * row-group stats. Degenerate buckets (> `maxBucketSize` members — empty
+    * or boilerplate text, guaranteed at web scale) are dropped at BUILD
+    * time, so no future batch can quadratically explode against them;
+    * singleton buckets stay (a new doc can match a so-far-unique one).
+    */
+  def writeMinhashIndex(df: DataFrame, idCol: String, textCol: String, path: String,
+                        shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
+                        maxBucketSize: Int = 64, numPartitions: Int = AutoPartitions): Unit =
+    IndexMaintenance.build(df.sparkSession, path) { fresh =>
+      // (r19: pushing the range exchange BELOW the signature projection —
+      // hash once, sample on raw text — measured neutral-to-slower here and
+      // trades sig-bytes shuffle for text-bytes shuffle at scale; kept the
+      // original shape.)
+      // scale-adaptive layout, pinned in the manifest: derived from the
+      // just-written sigs bytes (driver-side listing, no job) — a 5 MB local
+      // corpus gets ONE bucket dir instead of a constant 64-way small-file
+      // fan-out; a web corpus gets thousands for listing-level probe pruning
+      writeSigsAndBuckets(signatures(df, idCol, textCol, shingleSize, numHashes), idCol, path,
+        bands, maxBucketSize, fresh) { sigsDir =>
+        if (numPartitions == AutoPartitions) IndexMaintenance.derivePartitions(df.sparkSession, sigsDir)
+        else numPartitions
+      }
+    }
+
+  /** Write `sigs` as one id-range-partitioned, id-sorted `sigs` dir, then
+    * the band buckets under the partition count `partitions` picks from
+    * that dir, into one `buckets` dir. The buckets are derived from the
+    * JUST-WRITTEN sigs, not the lineage: the signature pass already ran
+    * twice for the write (range-sample + output), and re-deriving from
+    * lineage would hash the corpus a third time — reading back the slim
+    * materialized (id, sig) table costs one parallel scan instead (r19;
+    * guide §2.3/§8: decide on the materialized proxy, don't recompute the
+    * heavy pass).
+    */
+  private def writeSigsAndBuckets(sigs: DataFrame, idCol: String, path: String, bands: Int,
+                                  maxBucketSize: Int, fresh: IndexMaintenance.Fresh)
+                                 (partitions: String => Int): Int = {
+    val sigsDir = s"$path/${fresh("sigs")}"
+    sigs.repartitionByRange(col(idCol)).sortWithinPartitions(idCol).write.parquet(sigsDir)
+    val p = partitions(sigsDir)
+    bandBuckets(sigs.sparkSession.read.parquet(sigsDir), idCol, bands, maxBucketSize, p)
+      .write.partitionBy("pbucket").parquet(s"$path/${fresh("buckets")}")
+    p
   }
 
   /** Append an (already admitted) batch to an existing index — the write
     * half of a streaming ingest loop: dedup the micro-batch against the
     * index, then append the survivors so later batches dedup against them
     * too. Same on-disk layout and per-wave `maxBucketSize` cap as
-    * [[writeMinhashIndex]]; a bucket can still drift past the cap in
+    * [[writeMinhashIndex]], written as fresh `sigs` and `buckets` dirs the
+    * next manifest names; a bucket can still drift past the cap in
     * AGGREGATE across many waves — a perf (never correctness) concern,
     * since [[incrementalCandidates]] verifies every pair — and
     * [[compactMinhashIndex]] restores it. Appended sig files are each
@@ -403,102 +414,39 @@ object Dedup {
     */
   def appendToMinhashIndex(df: DataFrame, idCol: String, textCol: String, path: String,
                            shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
-                           maxBucketSize: Int = 64, numPartitions: Int = AutoPartitions,
-                           leaseMs: Long = IndexMaintenance.DefaultLeaseMs): Unit = {
-    val p = indexLayout(df.sparkSession, path, numPartitions)
-    // An append racing a compaction is silent data loss, not a crash: bucket
-    // rows landing in the live dir after the rebuild's read are dropped by
-    // the swap (their sigs survive, so probes MISS those docs until the next
-    // compaction — admitted duplicates). Refuse while a maintainer lease is
-    // LIVE; for the residual check-then-act window (our lease check passes
-    // just before a maintainer acquires), beginAppend publishes an epoch
-    // marker BEFORE any write — the compactor re-checks markers + the sigs
-    // listing before its swap and rebuilds again if we raced it.
-    val fs = IndexMaintenance.fsOf(path, df.sparkSession)
-    val marker = IndexMaintenance.beginAppend(fs, path, leaseMs)
-    try {
+                           maxBucketSize: Int = 64): Unit =
+    IndexMaintenance.append(df.sparkSession, path, What) { (base, fresh) =>
       // the batch's signatures feed three passes (the range sample, the
       // sigs append, the bucket append) — persist them for the append's
       // duration: unlike the full-corpus build (where a signature cache
-      // would be corpus-scale state), this is MICRO-BATCH-bounded, and
-      // append mode cannot read its own rows back the way
-      // [[writeMinhashIndex]] does (the sigs dir mixes every prior batch)
+      // would be corpus-scale state), this is MICRO-BATCH-bounded
       val sigs = signatures(df, idCol, textCol, shingleSize, numHashes).persist()
       try {
         sigs.repartitionByRange(col(idCol)).sortWithinPartitions(idCol)
-          .write.mode("append").parquet(s"$path/sigs")
-        sigs.select(col(idCol).as("id"),
-            posexplode(graft.functions.CdcExpressions.minhashBands(col("sig"), bands))
-              .as(Seq("band", "bucket")))
-          .withColumn("__bsz", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-          .where(col("__bsz") <= maxBucketSize).drop("__bsz")
-          .withColumn("pbucket", pmod(xxhash64(col("band"), col("bucket")), lit(p)))
-          .repartition(col("pbucket"))
-          .write.mode("append").partitionBy("pbucket").parquet(s"$path/buckets")
+          .write.parquet(s"$path/${fresh("sigs")}")
+        bandBuckets(sigs, idCol, bands, maxBucketSize, base.partitions)
+          .write.partitionBy("pbucket").parquet(s"$path/${fresh("buckets")}")
       } finally { sigs.unpersist(); () }
-    } finally IndexMaintenance.endAppend(fs, marker)
-  }
+    }
 
-  /** The single-maintainer lease file guarding index rewrites (shared
-    * protocol: [[IndexMaintenance]]).
-    */
-  private[graft] def maintenanceLock(path: String): org.apache.hadoop.fs.Path =
-    IndexMaintenance.maintenanceLock(path)
-
-  /** Compact a persisted index: rebuild `path/buckets` FROM THE SIGNATURE
-    * STORE (no corpus text needed) and re-apply the degenerate-bucket cap
-    * that per-wave appends let drift in aggregate — a bucket fed 40+40
-    * identical docs in two waves passes each wave's cap but is degenerate
-    * combined, and every future batch pays for probing it until compaction
-    * drops it.
-    *
-    * The rewrite is displace-then-swap: build `buckets.compact`, rename the
-    * live dir aside, rename the rebuild in, delete the old. A plain
-    * filesystem has no atomic multi-dir commit, so a crash between the two
-    * renames leaves no live dir — the next compaction call repairs it from
-    * `buckets.old` before doing anything else (and so does the probe read
-    * path when no maintainer is live). The single-writer assumption is
-    * ENFORCED: a `_maintenance.lock` lease is taken for the duration, and a
-    * second concurrent maintainer fails loudly instead of corrupting the
-    * swap; a lease left by a dead maintainer is broken after `leaseMs`.
-    * An append whose lease check passed JUST before this lease was acquired
-    * may still be writing during the rebuild — before swapping, the sigs
-    * listing is re-checked against the pre-rebuild snapshot and in-flight
-    * append markers must have drained ([[IndexMaintenance.quiescedSince]]);
-    * anything moved → rebuild again (the in-flight set only shrinks, since
-    * new appends refuse under this live lease). Probes during the
-    * (two-rename) swap window still race by design — schedule compaction
-    * off the ingest path.
+  /** Compact a persisted index: rewrite its signature store as one dir and
+    * rebuild its `buckets` FROM IT (no corpus text needed), re-applying the
+    * degenerate-bucket cap that per-wave appends let drift in aggregate — a
+    * bucket fed 40+40 identical docs in two waves passes each wave's cap but
+    * is degenerate combined, and every future batch pays for probing it
+    * until compaction drops it. The new dirs replace exactly the `sigs` and
+    * `buckets` dirs of the manifest the compaction read, so a probe again
+    * lists one dir of each; an append that published meanwhile keeps its
+    * dirs ([[IndexMaintenance.compact]]). The partition count is the
+    * manifest's, never re-derived, so probes keep pruning with it.
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, idCol: String,
-                          path: String, bands: Int = 32, maxBucketSize: Int = 64,
-                          numPartitions: Int = AutoPartitions,
-                          leaseMs: Long = IndexMaintenance.DefaultLeaseMs,
-                          maxRebuilds: Int = 5): Unit = {
-    val fs = IndexMaintenance.fsOf(path, spark)
-    // layout resolved from the index meta, never re-derived: the meta is
-    // immutable for the index lifetime so probes racing this compaction
-    // keep pruning with the correct modulus
-    val p = indexLayout(spark, path, numPartitions)
-    val live = new org.apache.hadoop.fs.Path(s"$path/buckets")
-    val old = new org.apache.hadoop.fs.Path(s"$path/buckets.old")
-    val next = new org.apache.hadoop.fs.Path(s"$path/buckets.compact")
-    val sigsDir = new org.apache.hadoop.fs.Path(s"$path/sigs")
-    IndexMaintenance.runCompaction(fs, path, live, old, next, sigsDir,
-        leaseMs, maxRebuilds) { () =>
-      spark.read.parquet(sigsDir.toString)
-        .select(col(idCol).as("id"),
-          posexplode(graft.functions.CdcExpressions.minhashBands(col("sig"), bands))
-            .as(Seq("band", "bucket")))
-        .withColumn("__bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
-        .where(col("__bsz") <= maxBucketSize).drop("__bsz")
-        .withColumn("pbucket", pmod(xxhash64(col("band"), col("bucket")), lit(p)))
-        .repartition(col("pbucket"))
-        .write.mode("overwrite").partitionBy("pbucket").parquet(next.toString)
+                          path: String, bands: Int = 32, maxBucketSize: Int = 64): Unit =
+    IndexMaintenance.compact(spark, path, What, Seq("sigs", "buckets")) { (base, fresh) =>
+      writeSigsAndBuckets(IndexMaintenance.read(spark, path, base, "sigs"), idCol, path,
+        bands, maxBucketSize, fresh)(_ => base.partitions)
+      ()
     }
-  }
 
   /** Raw band-collision probe of a new batch against the index: lazy
     * (id, dup_of) pairs, with the batch's own band-partition keys pushed as
@@ -507,39 +455,23 @@ object Dedup {
     * [[incrementalCandidates]] wraps this with the est-jaccard check.
     */
   def indexProbe(newDf: DataFrame, idCol: String, textCol: String, path: String,
-                 shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
-                 numPartitions: Int = AutoPartitions,
-                 leaseMs: Long = IndexMaintenance.DefaultLeaseMs): DataFrame =
-    probeFromSigs(signatures(newDf, idCol, textCol, shingleSize, numHashes),
-      idCol, path, bands, numPartitions, leaseMs)
+                 shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32): DataFrame =
+    probeFromSigs(signatures(newDf, idCol, textCol, shingleSize, numHashes), idCol, path,
+      IndexMaintenance.current(newDf.sparkSession, path, What), bands)
 
   private def probeFromSigs(newSigs: DataFrame, idCol: String, path: String,
-                            bands: Int, numPartitions: Int, leaseMs: Long): DataFrame = {
+                            idx: IndexMaintenance.Index, bands: Int): DataFrame = {
     val spark = newSigs.sparkSession
-    val p = indexLayout(spark, path, numPartitions)
-    // A compaction that died between its two swap renames leaves no live
-    // buckets dir. When no maintainer is LIVE (no lease, or a stale one —
-    // a dead maintainer's lock must not turn every probe into an error),
-    // the read path repairs it here instead of failing until the next
-    // compaction happens to run; under a live lease the swap is in flight —
-    // surface WHAT is happening rather than a bare missing-path error.
-    // `leaseMs` is the SAME value the append/compact paths use — a probe
-    // judging liveness by a different clock would treat a live short-lease
-    // maintainer as dead (or error on an already-stale long lease).
-    val fs = IndexMaintenance.fsOf(path, spark)
-    IndexMaintenance.ensureLiveDir(fs, path,
-      new org.apache.hadoop.fs.Path(s"$path/buckets"),
-      new org.apache.hadoop.fs.Path(s"$path/buckets.old"), leaseMs)
     val newBuckets = newSigs.select(col(idCol).as("id"),
         posexplode(graft.functions.CdcExpressions.minhashBands(col("sig"), bands))
           .as(Seq("band", "bucket")))
-      .withColumn("pbucket", pmod(xxhash64(col("band"), col("bucket")), lit(p)))
+      .withColumn("pbucket", pmod(xxhash64(col("band"), col("bucket")), lit(idx.partitions)))
     val touched = newBuckets.select("pbucket").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val idx = spark.read.parquet(s"$path/buckets")
+    val buckets = IndexMaintenance.read(spark, path, idx, "buckets")
       .where(col("pbucket").isin(touched: _*))
     newBuckets
-      .join(idx.withColumnRenamed("id", "dup_of"), Seq("band", "bucket"))
+      .join(buckets.withColumnRenamed("id", "dup_of"), Seq("band", "bucket"))
       .where(col("id") =!= col("dup_of")) // re-indexed batch: skip self-match
       .select("id", "dup_of").distinct()
   }
@@ -548,22 +480,21 @@ object Dedup {
     * est_jaccard) where `id` is a new doc and `dup_of` an indexed one.
     *
     * Scale shape: the batch's band keys determine which `pbucket` disk
-    * partitions can possibly hold a collision — that set (≤ `numPartitions`
-    * ints, a bounded driver collect) is pushed as a partition filter, so a
-    * micro-batch reads a FRACTION of a 100 TB index's file listing. The
-    * est-jaccard verify joins the new signatures with the signature store;
-    * candidate ids up to `maxIdPushdown` are pushed as a literal IN filter
-    * so the id-sorted store prunes at row-group stats, beyond that it
-    * degrades to a plain shuffle join of slim rows. `numPartitions` MUST
-    * match the value the index was written with — the partition filter
-    * silently misses collisions otherwise.
+    * partitions can possibly hold a collision — that set (≤ the index's
+    * partition count, a bounded driver collect) is pushed as a partition
+    * filter, so a micro-batch reads a FRACTION of a 100 TB index's file
+    * listing. The est-jaccard verify joins the new signatures with the
+    * signature store; candidate ids up to `maxIdPushdown` are pushed as a
+    * literal IN filter so the id-sorted store prunes at row-group stats,
+    * beyond that it degrades to a plain shuffle join of slim rows. The
+    * probe reads the index through ONE manifest, so its buckets and sigs
+    * are of one version.
     */
   def incrementalCandidates(newDf: DataFrame, idCol: String, textCol: String, path: String,
                             shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
-                            threshold: Double = 0.8, numPartitions: Int = AutoPartitions,
-                            maxIdPushdown: Int = 100000,
-                            leaseMs: Long = IndexMaintenance.DefaultLeaseMs): DataFrame = {
+                            threshold: Double = 0.8, maxIdPushdown: Int = 100000): DataFrame = {
     val spark = newDf.sparkSession
+    val idx = IndexMaintenance.current(spark, path, What)
     // ONE signature pass per batch: pinned (batch-bounded) and shared by
     // the probe's bucket/touched stages and the verify join below
     val newSigs = signatures(newDf, idCol, textCol, shingleSize, numHashes)
@@ -571,9 +502,8 @@ object Dedup {
     // pinned: bounded by (bucket cap × batch size) slim rows, and consumed
     // twice below (candidate-id collect + final join) — without the pin the
     // pruned index probe would run twice
-    val pairs = probeFromSigs(newSigs, idCol, path, bands, numPartitions, leaseMs)
-      .localCheckpoint()
-    val sigStore = spark.read.parquet(s"$path/sigs")
+    val pairs = probeFromSigs(newSigs, idCol, path, idx, bands).localCheckpoint()
+    val sigStore = IndexMaintenance.read(spark, path, idx, "sigs")
     val candIds = pairs.select("dup_of").distinct().limit(maxIdPushdown + 1)
       .collect().map(_.getLong(0))
     val idxSigs =
@@ -591,17 +521,13 @@ object Dedup {
   /** Admission filter for ingest: keep only new docs that near-dup NOTHING
     * already in the index (the standard grow-a-corpus dedup policy). The
     * result is EAGER (settled before return) so the admit → append loop
-    * can mutate the index files immediately — a lazy plan would re-read
-    * them mid-mutation. `numPartitions` must match the index layout, as in
-    * [[incrementalCandidates]].
+    * can publish a new index version immediately.
     */
   def incrementalDedup(newDf: DataFrame, idCol: String, textCol: String, path: String,
                        shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
-                       threshold: Double = 0.8, numPartitions: Int = AutoPartitions,
-                       maxIdPushdown: Int = 100000,
-                       leaseMs: Long = IndexMaintenance.DefaultLeaseMs): DataFrame = {
+                       threshold: Double = 0.8, maxIdPushdown: Int = 100000): DataFrame = {
     val doomed = incrementalCandidates(newDf, idCol, textCol, path,
-        shingleSize, numHashes, bands, threshold, numPartitions, maxIdPushdown, leaseMs)
+        shingleSize, numHashes, bands, threshold, maxIdPushdown)
       .select(col("id").as(idCol)).distinct()
     newDf.join(doomed, Seq(idCol), "left_anti").localCheckpoint()
   }

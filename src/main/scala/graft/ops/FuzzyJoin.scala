@@ -105,46 +105,43 @@ object FuzzyJoin {
   // ---------- persisted blocking-key index (incremental fuzzy join) ----------
   //
   // The fourth member of the persisted-index family (MinHash-LSH buckets,
-  // IVF/IVF-SQ8 lists, BM25 postings — all under the [[IndexMaintenance]]
-  // lease/marker/swap protocol): the prefix relation above, promoted from a
+  // IVF/IVF-SQ8 lists, BM25 postings — all published through
+  // [[IndexMaintenance]]): the prefix relation above, promoted from a
   // per-query localCheckpoint to an on-disk blocking-key table a streaming
   // ingest probes per batch.
   //
-  // Layout at `path`:
-  //   strings/          (id, s) range-partitioned and per-file sorted by id,
-  //                     so the verify join's candidate-id filter prunes at
-  //                     parquet row-group stats (the Dedup sigs discipline);
-  //   block/gramdf/     (gram, df) — the FULL gram document-frequency table
-  //                     FROZEN at build/compaction time. The PPJoin prefix
-  //                     theorem holds for ANY total order shared by both
-  //                     sides, so the order is frozen rather than recomputed
-  //                     per batch (a drifting order would silently break the
-  //                     guarantee between a record indexed yesterday and a
-  //                     probe today). Uncapped dfs are stored so a probe can
-  //                     distinguish "boilerplate, excluded from the order"
-  //                     (df > dfCap: must be dropped from the probe's gram
-  //                     list too, or its effective prefix shrinks below
-  //                     n·d+1 and recall silently decays) from "never seen"
-  //                     (df 0: the RAREST possible — two appended batches
-  //                     sharing a novel gram still collide);
-  //   block/prefix/     (gram, pos, id, len, sig) prefix-occurrence rows,
-  //                     hash-partitioned on disk by
-  //                     pbucket = pmod(xxhash64(gram), P) so a batch's
-  //                     lookup prunes at the FILE LISTING. `len` (string
-  //                     length, INT) and `sig` (64-bucket char-presence
-  //                     bitmap, LONG) are the per-record constants of the
-  //                     two exact lower-bound prefilters: the probe join
-  //                     prunes candidates with |len_a − len_b| > maxDist
-  //                     or bit_count(sig_a ^ sig_b) > 2·maxDist. An index
-  //                     written before either column existed still probes
-  //                     correctly — a missing column skips its filter
-  //                     (compact to adopt them).
+  // Relations of the index's manifest:
+  //   strings   (id, s) range-partitioned and per-file sorted by id,
+  //             so the verify join's candidate-id filter prunes at
+  //             parquet row-group stats (the Dedup sigs discipline);
+  //   gramdf    (gram, df) — the FULL gram document-frequency table
+  //             FROZEN at build/compaction time. The PPJoin prefix
+  //             theorem holds for ANY total order shared by both
+  //             sides, so the order is frozen rather than recomputed
+  //             per batch (a drifting order would silently break the
+  //             guarantee between a record indexed yesterday and a
+  //             probe today). Uncapped dfs are stored so a probe can
+  //             distinguish "boilerplate, excluded from the order"
+  //             (df > dfCap: must be dropped from the probe's gram
+  //             list too, or its effective prefix shrinks below
+  //             n·d+1 and recall silently decays) from "never seen"
+  //             (df 0: the RAREST possible — two appended batches
+  //             sharing a novel gram still collide);
+  //   prefix    (gram, pos, id, len, sig) prefix-occurrence rows,
+  //             hash-partitioned on disk by
+  //             pbucket = pmod(xxhash64(gram), P) so a batch's
+  //             lookup prunes at the FILE LISTING. `len` (string
+  //             length, INT) and `sig` (64-bucket char-presence
+  //             bitmap, LONG) are the per-record constants of the
+  //             two exact lower-bound prefilters: the probe join
+  //             prunes candidates with |len_a − len_b| > maxDist
+  //             or bit_count(sig_a ^ sig_b) > 2·maxDist.
   //
-  // `block` (gramdf + prefix together — they must stay mutually consistent)
-  // is the compaction swap unit; `strings` is the append-only rebuild
-  // source. `n`/`maxDist`/`dfCap`/`numPartitions` MUST match across
-  // build/append/probe — a mismatched order or partition count silently
-  // loses recall, never errors (the Dedup `numPartitions` contract).
+  // Every prefix dir a manifest names is under that manifest's gramdf:
+  // gramdf and prefix are one order. `strings` is the append-only rebuild
+  // source. `n`/`maxDist`/`dfCap` MUST match across build/append/probe — a
+  // mismatched order silently loses recall, never errors; the partition
+  // count is the manifest's.
 
   /** The blocking relation of `df`: the prefix-occurrence rows
     * (gram, pos, __id, __len, __sig) under the corpus's own (df, gram)
@@ -241,118 +238,133 @@ object FuzzyJoin {
       col("__len").as("len"), col("__sig").as("sig"),
       pmod(xxhash64(col("gram")), lit(numPartitions)).as("pbucket"))
 
-  /** `numPartitions` sentinel: derive the block layout's disk-partition
-    * count from the materialized string store at build time and resolve it
-    * from the index's `_layout` meta on probe/append/compact (r20; the
-    * Dedup minhash-index contract).
+  /** `numPartitions` sentinel: derive the prefix layout's disk-partition
+    * count from the materialized string store at build time; appends,
+    * compactions and probes hash with the count the manifest pins (r20;
+    * the Dedup minhash-index contract).
     */
   val AutoPartitions: Int = 0
 
-  /** The index's on-disk partition count: its `_layout` meta when present
-    * (layout is ground truth — a mismatched caller constant silently prunes
-    * the wrong partitions), else the caller's value (pre-meta index), with
-    * the historical 64 for [[AutoPartitions]].
-    */
-  private def indexLayout(spark: org.apache.spark.sql.SparkSession, path: String,
-                          numPartitions: Int): Int =
-    IndexMaintenance.resolveLayout(IndexMaintenance.fsOf(path, spark), path,
-      if (numPartitions == AutoPartitions) 64 else numPartitions)
+  private val What = "fuzzy index"
 
-  /** Build the persisted index over `df`: freeze the gram order, write the
-    * blocking prefix and the string store.
+  /** The (gram, __df) order of the gramdf dirs of `idx`. */
+  private def frozenOrder(spark: org.apache.spark.sql.SparkSession, path: String,
+                          idx: IndexMaintenance.Index): DataFrame =
+    IndexMaintenance.read(spark, path, idx, "gramdf").select("gram", "__df")
+
+  /** The slim (__id, __s) rows of string dirs `dirs`. */
+  private def storedStrings(spark: org.apache.spark.sql.SparkSession, path: String,
+                            dirs: Seq[String]): DataFrame =
+    IndexMaintenance.readDirs(spark, path, "strings", dirs)
+      .select(col("id").as("__id"), col("s").as("__s"))
+
+  /** Write the slim (__id, __s) rows `strs` as an id-sorted string dir. */
+  private def writeStrings(strs: DataFrame, dir: String): Unit =
+    strs.select(col("__id").as("id"), col("__s").as("s"))
+      .repartitionByRange(col("id")).sortWithinPartitions("id")
+      .write.parquet(dir)
+
+  /** Write the prefix rows of `strs` under `order` into a fresh prefix dir. */
+  private def writePrefix(strs: DataFrame, order: DataFrame, p: Int, n: Int, maxDist: Int,
+                          dfCap: Int, dir: String): Unit =
+    withBucket(prefixOf(gramsOf(strs, n), order, n, maxDist, dfCap), p)
+      .repartition(col("pbucket")) // one writer wave per disk partition
+      .write.partitionBy("pbucket").parquet(dir)
+
+  /** Write the gramdf of `strs` into a fresh gramdf dir. */
+  private def writeGramdf(strs: DataFrame, p: Int, n: Int, dir: String): Unit =
+    gramsOf(strs, n).select("gram", "__id").distinct()
+      .groupBy("gram").agg(count(lit(1)).as("__df"))
+      .withColumn("pbucket", pmod(xxhash64(col("gram")), lit(p)))
+      .repartition(col("pbucket"))
+      .write.partitionBy("pbucket").parquet(dir)
+
+  /** Build the persisted index over `df`: write the string store, freeze
+    * the gram order and write the blocking prefix under it.
     */
   def writeIndex(df: DataFrame, idCol: String, strCol: String, path: String,
                  n: Int = 3, maxDist: Int = 2, dfCap: Int = Int.MaxValue,
                  numPartitions: Int = AutoPartitions): Unit = {
+    val spark = df.sparkSession
     val strs = slimStrs(df, idCol, strCol, n)
-    strs.select(col("__id").as("id"), col("__s").as("s"))
-      .repartitionByRange(col("id")).sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(s"$path/strings")
-    // scale-adaptive layout pinned in the index meta (see AutoPartitions):
-    // derived from the just-written string store (driver-side listing)
-    val fs = IndexMaintenance.fsOf(path, df.sparkSession)
-    // the gram-prefix relation being partitioned is ~10x its string-store
-    // proxy (n-gram explode), so scale the derivation accordingly
-    val p = if (numPartitions == AutoPartitions)
-      IndexMaintenance.derivePartitions(df.sparkSession, fs,
-        new org.apache.hadoop.fs.Path(s"$path/strings"), expansion = 10L)
-    else numPartitions
-    IndexMaintenance.writeLayout(fs, path, p)
-    val gramPos = gramsOf(strs, n)
-    val gramdf = gramPos.select("gram", "__id").distinct()
-      .groupBy("gram").agg(count(lit(1)).as("__df"))
-      .withColumn("pbucket", pmod(xxhash64(col("gram")), lit(p)))
-    gramdf.repartition(col("pbucket"))
-      .write.mode("overwrite").partitionBy("pbucket").parquet(s"$path/block/gramdf")
-    val frozen = df.sparkSession.read.parquet(s"$path/block/gramdf")
-      .select("gram", "__df")
-    withBucket(prefixOf(gramPos, frozen, n, maxDist, dfCap), p)
-      .repartition(col("pbucket")) // one writer wave per disk partition
-      .write.mode("overwrite").partitionBy("pbucket").parquet(s"$path/block/prefix")
-  }
-
-  /** Append an (already admitted) batch: its prefix is selected under the
-    * FROZEN order (novel grams rank rarest at df 0), so recall against both
-    * indexed and co-appended records holds without touching `gramdf`.
-    * Same epoch-marker discipline as the other persisted indexes: refuses
-    * under a live maintainer lease; the marker makes a racing compaction
-    * rebuild again rather than silently dropping these rows at its swap.
-    */
-  def appendToIndex(df: DataFrame, idCol: String, strCol: String, path: String,
-                    n: Int = 3, maxDist: Int = 2, dfCap: Int = Int.MaxValue,
-                    numPartitions: Int = AutoPartitions,
-                    leaseMs: Long = IndexMaintenance.DefaultLeaseMs): Unit = {
-    val p = indexLayout(df.sparkSession, path, numPartitions)
-    val fs = IndexMaintenance.fsOf(path, df.sparkSession)
-    val marker = IndexMaintenance.beginAppend(fs, path, leaseMs)
-    try {
-      val strs = slimStrs(df, idCol, strCol, n)
-      strs.select(col("__id").as("id"), col("__s").as("s"))
-        .repartitionByRange(col("id")).sortWithinPartitions("id")
-        .write.mode("append").parquet(s"$path/strings")
-      val frozen = df.sparkSession.read.parquet(s"$path/block/gramdf")
-        .select("gram", "__df")
-      withBucket(prefixOf(gramsOf(strs, n), frozen, n, maxDist, dfCap), p)
-        .repartition(col("pbucket"))
-        .write.mode("append").partitionBy("pbucket").parquet(s"$path/block/prefix")
-    } finally IndexMaintenance.endAppend(fs, marker)
-  }
-
-  /** Compact: refresh the frozen gram order from the string store and
-    * rebuild the prefix relation under it, as one displace-then-swap of the
-    * whole `block` dir (gramdf and prefix must never be from different
-    * epochs). Appends that landed under the old order are re-prefixed under
-    * the new one — compaction is also how order drift is repaid.
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                   n: Int = 3, maxDist: Int = 2, dfCap: Int = Int.MaxValue,
-                   numPartitions: Int = AutoPartitions,
-                   leaseMs: Long = IndexMaintenance.DefaultLeaseMs,
-                   maxRebuilds: Int = 5): Unit = {
-    val fs = IndexMaintenance.fsOf(path, spark)
-    // layout resolved from the index meta, never re-derived: probes racing
-    // this compaction must keep pruning with the correct modulus
-    val p = indexLayout(spark, path, numPartitions)
-    val live = new org.apache.hadoop.fs.Path(s"$path/block")
-    val old = new org.apache.hadoop.fs.Path(s"$path/block.old")
-    val next = new org.apache.hadoop.fs.Path(s"$path/block.compact")
-    val stringsDir = new org.apache.hadoop.fs.Path(s"$path/strings")
-    IndexMaintenance.runCompaction(fs, path, live, old, next, stringsDir,
-        leaseMs, maxRebuilds) { () =>
-      val strs = spark.read.parquet(stringsDir.toString)
-        .select(col("id").as("__id"), col("s").as("__s"))
-      val gramPos = gramsOf(strs, n)
-      val gramdf = gramPos.select("gram", "__id").distinct()
-        .groupBy("gram").agg(count(lit(1)).as("__df"))
-        .withColumn("pbucket", pmod(xxhash64(col("gram")), lit(p)))
-      gramdf.repartition(col("pbucket"))
-        .write.mode("overwrite").partitionBy("pbucket").parquet(s"$next/gramdf")
-      val frozen = spark.read.parquet(s"$next/gramdf").select("gram", "__df")
-      withBucket(prefixOf(gramPos, frozen, n, maxDist, dfCap), p)
-        .repartition(col("pbucket"))
-        .write.mode("overwrite").partitionBy("pbucket").parquet(s"$next/prefix")
+    IndexMaintenance.build(spark, path) { fresh =>
+      val stringsDir = s"$path/${fresh("strings")}"
+      writeStrings(strs, stringsDir)
+      // scale-adaptive layout pinned in the manifest (see AutoPartitions):
+      // derived from the just-written string store (driver-side listing);
+      // the gram-prefix relation being partitioned is ~10x its string-store
+      // proxy (n-gram explode), so scale the derivation accordingly
+      val p = if (numPartitions == AutoPartitions)
+        IndexMaintenance.derivePartitions(spark, stringsDir, expansion = 10L)
+      else numPartitions
+      val gramdfDir = s"$path/${fresh("gramdf")}"
+      writeGramdf(strs, p, n, gramdfDir)
+      writePrefix(strs, spark.read.parquet(gramdfDir).select("gram", "__df"), p, n, maxDist,
+        dfCap, s"$path/${fresh("prefix")}")
+      p
     }
   }
+
+  /** Append an (already admitted) batch: its strings go to a fresh string
+    * dir and its prefix is selected under the FROZEN order (novel grams rank
+    * rarest at df 0), so recall against both indexed and co-appended records
+    * holds without touching `gramdf`. If a compaction published a new order
+    * first, the re-base writes the batch's prefix again under that order.
+    */
+  def appendToIndex(df: DataFrame, idCol: String, strCol: String, path: String,
+                    n: Int = 3, maxDist: Int = 2, dfCap: Int = Int.MaxValue): Unit = {
+    val spark = df.sparkSession
+    val strs = slimStrs(df, idCol, strCol, n)
+    IndexMaintenance.commit(spark, path, What) { (base, fresh) =>
+      val stringsDir = fresh("strings")
+      writeStrings(strs, s"$path/$stringsDir")
+      def prefixUnder(idx: IndexMaintenance.Index): (Seq[String], String) = {
+        val dir = fresh("prefix")
+        writePrefix(strs, frozenOrder(spark, path, idx), idx.partitions, n, maxDist, dfCap,
+          s"$path/$dir")
+        (idx("gramdf"), dir)
+      }
+      var mine = prefixUnder(base)
+      cur => {
+        if (cur("gramdf") != mine._1) mine = prefixUnder(cur)
+        Some(Map("strings" -> ((Nil, Seq(stringsDir))), "prefix" -> ((Nil, Seq(mine._2)))))
+      }
+    }
+  }
+
+  /** Compact: rewrite the string store as one dir, refresh the frozen gram
+    * order from it and rebuild the prefix relation under that order,
+    * published as one new strings, gramdf and prefix dir in place of those
+    * it read (gramdf and prefix must never be from different orders).
+    * Appends that landed under the old order are re-prefixed under the new
+    * one — compaction is also how order drift is repaid — and so are the
+    * strings of appends that published while this compaction ran, in its
+    * re-base; their string dirs are carried forward.
+    */
+  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                   n: Int = 3, maxDist: Int = 2, dfCap: Int = Int.MaxValue): Unit =
+    IndexMaintenance.commit(spark, path, What) { (base, fresh) =>
+      val p = base.partitions
+      val stringsDir = fresh("strings")
+      writeStrings(storedStrings(spark, path, base("strings")), s"$path/$stringsDir")
+      val gramdfDir = fresh("gramdf")
+      val strs = storedStrings(spark, path, Seq(stringsDir))
+      writeGramdf(strs, p, n, s"$path/$gramdfDir")
+      val order = spark.read.parquet(s"$path/$gramdfDir").select("gram", "__df")
+      def prefixOfStrings(dirs: Seq[String]): String = {
+        val dir = fresh("prefix")
+        writePrefix(storedStrings(spark, path, dirs), order, p, n, maxDist, dfCap, s"$path/$dir")
+        dir
+      }
+      var prefixed = base("strings")
+      var prefixDirs = Seq(prefixOfStrings(Seq(stringsDir)))
+      cur => Option.when(cur("gramdf") == base("gramdf")) {
+        val added = cur("strings").filterNot(prefixed.contains)
+        if (added.nonEmpty) { prefixDirs :+= prefixOfStrings(added); prefixed ++= added }
+        Map("strings" -> ((base("strings"), Seq(stringsDir))),
+          "gramdf" -> ((cur("gramdf"), Seq(gramdfDir))), "prefix" -> ((cur("prefix"), prefixDirs)))
+      }
+    }
 
   /** The lazy candidate-pair stage of [[indexProbe]] — exposed so plan
     * specs can assert the pruned prefix scan BEFORE the checkpoint that
@@ -361,49 +373,24 @@ object FuzzyJoin {
     */
   private[graft] def probePairs(df: DataFrame, idCol: String, strCol: String,
                                 path: String, n: Int, maxDist: Int, dfCap: Int,
-                                numPartitions: Int): DataFrame = {
+                                idx: IndexMaintenance.Index): DataFrame = {
     val spark = df.sparkSession
     val strs = slimStrs(df, idCol, strCol, n)
-    val frozen = spark.read.parquet(s"$path/block/gramdf").select("gram", "__df")
     // batch-bounded and consumed twice (touched-bucket collect + the join)
     val probePrefix = withBucket(
-        prefixOf(gramsOf(strs, n), frozen, n, maxDist, dfCap), numPartitions)
+        prefixOf(gramsOf(strs, n), frozenOrder(spark, path, idx), n, maxDist, dfCap),
+        idx.partitions)
       .localCheckpoint()
     val touched = probePrefix.select("pbucket").distinct()
       .collect().map(_.getLong(0)).toSeq
-    // NOTE deliberately NO mergeSchema: it would re-read every touched
-    // footer on every probe of every healthy index to serve only the
-    // transitional mixed-schema state (an index appended to across the
-    // len/sig layout upgrade). Plain inference samples one footer; if it
-    // lands on a legacy file the prefilter columns read as absent and
-    // the bands are skipped (correct, just unpruned until compaction);
-    // if it lands on a new file, legacy rows fill len/sig as NULL and
-    // the coalesce below keeps them
-    val idx = spark.read.parquet(s"$path/block/prefix")
+    val prefix = IndexMaintenance.read(spark, path, idx, "prefix")
       .where(col("pbucket").isin(touched: _*))
-    // the lower-bound prefilters need their column on BOTH sides; an
-    // index written before a column existed (see the layout note) skips
-    // that filter — correct either way, the verify rejects the same
-    // pairs. coalesce(_, true): a LEGACY row inside an upgraded index
-    // reads len/sig as NULL, and a NULL band predicate would silently
-    // DROP every candidate against that record (the exact loses-recall-
-    // never-errors failure the layout contract warns about) — a missing
-    // constant must mean "filter does not apply", never "no match"
-    val hasLen = idx.columns.contains("len")
-    val hasSig = idx.columns.contains("sig")
-    val iCols = Seq(col("gram").as("igram"), col("pos").as("ipos"),
-      col("id").as("match_id")) ++
-      (if (hasLen) Seq(col("len").as("ilen")) else Nil) ++
-      (if (hasSig) Seq(col("sig").as("isig")) else Nil)
-    val lenBand =
-      if (hasLen) coalesce(abs(col("len") - col("ilen")) <= maxDist, lit(true))
-      else lit(true)
-    val sigBand =
-      if (hasSig) coalesce(bitmapBand(col("sig"), col("isig"), maxDist), lit(true))
-      else lit(true)
-    probePrefix.join(idx.select(iCols: _*),
+    probePrefix.join(prefix.select(col("gram").as("igram"), col("pos").as("ipos"),
+          col("id").as("match_id"), col("len").as("ilen"), col("sig").as("isig")),
         col("gram") === col("igram") &&
-          abs(col("pos") - col("ipos")) <= maxDist && lenBand && sigBand)
+          abs(col("pos") - col("ipos")) <= maxDist &&
+          abs(col("len") - col("ilen")) <= maxDist &&
+          bitmapBand(col("sig"), col("isig"), maxDist))
       .where(col("id") =!= col("match_id")) // re-probed batch: skip self
       .select("id", "match_id").distinct()
   }
@@ -412,7 +399,7 @@ object FuzzyJoin {
     * `id` is a batch record and `match_id` an indexed one within `maxDist`.
     *
     * Scale shape: the batch's prefix grams determine which `pbucket` disk
-    * partitions can hold a collision — that set (≤ numPartitions ints, a
+    * partitions can hold a collision — that set (≤ the partition count, a
     * bounded collect) is pushed as the file-listing partition filter, so a
     * micro-batch reads a fraction of a 100 TB index's prefix listing.
     * Candidate ids up to `maxIdPushdown` are pushed as a literal IN filter
@@ -421,18 +408,13 @@ object FuzzyJoin {
     */
   def indexProbe(df: DataFrame, idCol: String, strCol: String, path: String,
                  n: Int = 3, maxDist: Int = 2, dfCap: Int = Int.MaxValue,
-                 numPartitions: Int = AutoPartitions, maxIdPushdown: Int = 100000,
-                 leaseMs: Long = IndexMaintenance.DefaultLeaseMs): DataFrame = {
+                 maxIdPushdown: Int = 100000): DataFrame = {
     val spark = df.sparkSession
-    val fs = IndexMaintenance.fsOf(path, spark)
-    IndexMaintenance.ensureLiveDir(fs, path,
-      new org.apache.hadoop.fs.Path(s"$path/block"),
-      new org.apache.hadoop.fs.Path(s"$path/block.old"), leaseMs)
+    val idx = IndexMaintenance.current(spark, path, What)
     val strs = slimStrs(df, idCol, strCol, n)
-    val pairs = probePairs(df, idCol, strCol, path, n, maxDist, dfCap,
-        indexLayout(spark, path, numPartitions))
+    val pairs = probePairs(df, idCol, strCol, path, n, maxDist, dfCap, idx)
       .localCheckpoint()
-    val strStore = spark.read.parquet(s"$path/strings")
+    val strStore = IndexMaintenance.read(spark, path, idx, "strings")
     val candIds = pairs.select("match_id").distinct().limit(maxIdPushdown + 1)
       .collect().map(_.getLong(0))
     val idxStrs =

@@ -342,48 +342,54 @@ object Ivf {
       .select(col("__lid").as(idCol), col("__rid").as("neg_id"),
         col("__rn").as("rank"))
 
+  private val What = "IVF index"
+
   /** Persist the index `partitionBy(centroid_id)` plus the centroids as a
-    * tiny side table. At 100 TB this is what makes IVF an INDEX rather than
-    * a plan: a query's `centroid_id IN (probes)` filter prunes at the FILE
-    * LISTING, so only nprobe/k of the data is ever read (assert via the
-    * scan's `PartitionFilters` — PlanInvariantsSpec does).
+    * tiny side table, one [[IndexMaintenance]] build. At 100 TB this is what
+    * makes IVF an INDEX rather than a plan: a query's `centroid_id IN
+    * (probes)` filter prunes at the FILE LISTING, so only nprobe/k of the
+    * data is ever read (assert via the scan's `PartitionFilters` —
+    * PlanInvariantsSpec does).
     */
-  def writeIndex(assigned: DataFrame, model: Model, path: String): Unit = {
-    val spark = assigned.sparkSession
+  def writeIndex(assigned: DataFrame, model: Model, path: String): Unit =
+    IndexMaintenance.build(assigned.sparkSession, path) { fresh =>
+      assigned
+        .repartition(col("centroid_id")) // one writer wave per list, no small files
+        .write.partitionBy("centroid_id").parquet(s"$path/${fresh("lists")}")
+      writeCentroids(assigned.sparkSession, model, s"$path/${fresh("centroids")}")
+      0
+    }
+
+  private def writeCentroids(spark: SparkSession, model: Model, dir: String): Unit = {
     import spark.implicits._
-    assigned
-      .repartition(col("centroid_id")) // one writer wave per list, no small files
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
     model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("centroid_id", "centroid")
       .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+      .write.parquet(dir)
   }
 
   /** Reload a persisted index's model: only the k centroids are collected
-    * to the driver. The centroids table is append-free (appends assign with
-    * the EXISTING model; re-training is a rebuild, see [[compactIndexSq8]]),
-    * so this read needs no maintenance guard.
+    * to the driver. The centroids never change after the build (appends
+    * assign with the EXISTING model; re-training is a rebuild, see
+    * [[compactIndexSq8]]).
     */
-  def readModel(spark: SparkSession, path: String): Model = {
+  def readModel(spark: SparkSession, path: String): Model =
+    modelOf(spark, path, IndexMaintenance.current(spark, path, What))
+
+  private def modelOf(spark: SparkSession, path: String, idx: IndexMaintenance.Index): Model = {
     import spark.implicits._
-    Model(spark.read.parquet(s"$path/centroids")
+    Model(IndexMaintenance.read(spark, path, idx, "centroids")
       .select("centroid_id", "centroid").as[(Int, Seq[Float])]
       .collect().sortBy(_._1).map(_._2.toArray))
   }
 
-  /** Reload a persisted index: (assigned lists, model). Only the k centroids
-    * are collected to the driver.
+  /** Reload a persisted index: (assigned lists, model), both of one
+    * manifest. Only the k centroids are collected to the driver.
     */
   def readIndex(spark: SparkSession, path: String): (DataFrame, Model) = {
-    val fs = IndexMaintenance.fsOf(path, spark)
-    IndexMaintenance.ensureLiveDir(fs, path, listsDir(path), oldListsDir(path),
-      IndexMaintenance.DefaultLeaseMs)
-    (spark.read.parquet(s"$path/lists"), readModel(spark, path))
+    val idx = IndexMaintenance.current(spark, path, What)
+    (IndexMaintenance.read(spark, path, idx, "lists"), modelOf(spark, path, idx))
   }
-
-  private def listsDir(path: String) = new org.apache.hadoop.fs.Path(s"$path/lists")
-  private def oldListsDir(path: String) = new org.apache.hadoop.fs.Path(s"$path/lists.old")
 
   /** Persist an IVF-SQ8 index (the Faiss `IVF,SQ8` layout): inverted lists
     * partitioned by `centroid_id` storing uint8 codes + per-vector
@@ -394,80 +400,59 @@ object Ivf {
     * [[Similarity.sq8Quant]] expression shapes, so an oracle can replay it.
     */
   def writeIndexSq8(df: DataFrame, idCol: String, vecCol: String, model: Model,
-                    path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
+                    path: String): Unit =
+    IndexMaintenance.build(df.sparkSession, path) { fresh =>
+      sq8Codes(df, idCol, vecCol, model)
+        .write.partitionBy("centroid_id").parquet(s"$path/${fresh("lists")}")
+      writeCentroids(df.sparkSession, model, s"$path/${fresh("centroids")}")
+      0
+    }
+
+  /** The quantized list rows of `df` under `model`, one write wave per list. */
+  private def sq8Codes(df: DataFrame, idCol: String, vecCol: String, model: Model): DataFrame = {
     val (vmin, scale, codes) = Similarity.sq8Quant(col(vecCol))
     assign(df, idCol, vecCol, model)
       .select(col(idCol), col("centroid_id"),
         vmin.as("vmin"), scale.as("scale"), codes.as("codes"))
       .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
-    model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("centroid_id", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
   }
 
   /** Append a batch of vectors to a persisted IVF-SQ8 index: assign with
     * the EXISTING centroids (read from the index — appending must not move
     * the quantizer under concurrent probes), quantize with the same
-    * [[Similarity.sq8Quant]] shapes, and land the codes as new files inside
-    * the existing `centroid_id=` partition dirs. The growth path of a
+    * [[Similarity.sq8Quant]] shapes, and land the codes as a fresh lists dir
+    * with its own `centroid_id=` partition dirs, published beside the
+    * existing ones ([[IndexMaintenance.append]]). The growth path of a
     * 100 TB embedding store: per-batch cost is one narrow codegen pass over
     * the BATCH (assign + quantize) plus one write wave per touched list —
     * the index is never rewritten. Drift care: vectors far from every
     * centroid still land in their nearest list (recall decays gracefully);
     * re-training is a REBUILD, not an append — see [[compactIndexSq8]].
-    *
-    * Maintenance protocol = the MinHash index's ([[IndexMaintenance]]):
-    * refuses while a compactor's lease is live, and publishes an
-    * append-epoch marker so a racing compactor detects us and rebuilds.
     */
-  def appendToIndexSq8(df: DataFrame, idCol: String, vecCol: String, path: String,
-                       leaseMs: Long = IndexMaintenance.DefaultLeaseMs): Unit = {
-    val spark = df.sparkSession
-    val fs = IndexMaintenance.fsOf(path, spark)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/centroids")),
-      s"no IVF-SQ8 index at $path (missing centroids) — writeIndexSq8 first")
-    val marker = IndexMaintenance.beginAppend(fs, path, leaseMs)
-    try {
-      val model = readModel(spark, path)
-      val (vmin, scale, codes) = Similarity.sq8Quant(col(vecCol))
-      assign(df, idCol, vecCol, model)
-        .select(col(idCol), col("centroid_id"),
-          vmin.as("vmin"), scale.as("scale"), codes.as("codes"))
-        .repartition(col("centroid_id")) // one file wave per touched list
-        .write.mode("append").partitionBy("centroid_id").parquet(s"$path/lists")
-    } finally IndexMaintenance.endAppend(fs, marker)
-  }
+  def appendToIndexSq8(df: DataFrame, idCol: String, vecCol: String, path: String): Unit =
+    IndexMaintenance.append(df.sparkSession, path, What) { (base, fresh) =>
+      sq8Codes(df, idCol, vecCol, modelOf(df.sparkSession, path, base))
+        .write.partitionBy("centroid_id").parquet(s"$path/${fresh("lists")}")
+    }
 
-  /** Compact a persisted IVF/IVF-SQ8 index: rewrite `path/lists` from its
-    * own files, coalescing the one-file-wave-per-append accumulation back
-    * to one wave per list (a year of hourly appends is ~9k files per
-    * partition dir — the listing, not the bytes, becomes the probe cost).
-    * Same displace-then-swap + lease + append-quiescence protocol as the
-    * MinHash index ([[IndexMaintenance.runCompaction]]); the source dir IS
-    * the live dir, so a retry re-reads whatever a racing append landed.
+  /** Compact a persisted IVF/IVF-SQ8 index: rewrite its lists from the list
+    * dirs it read, coalescing the one-dir-per-append accumulation back to
+    * one wave per list (a year of hourly appends is ~9k files per
+    * partition — the listing, not the bytes, becomes the probe cost). The
+    * rewrite replaces exactly those dirs; appends that published meanwhile
+    * keep theirs ([[IndexMaintenance.compact]]).
     *
     * Deliberately does NOT re-train: new centroids re-partition EVERY code
     * (a full rebuild, not a compaction) and invalidate concurrent probes'
     * centroid snapshots mid-flight. To re-train, build a fresh index with
     * [[train]]+[[writeIndexSq8]] at a new path and flip the reader.
     */
-  def compactIndexSq8(spark: SparkSession, path: String,
-                      leaseMs: Long = IndexMaintenance.DefaultLeaseMs,
-                      maxRebuilds: Int = 5): Unit = {
-    val fs = IndexMaintenance.fsOf(path, spark)
-    val live = listsDir(path)
-    val next = new org.apache.hadoop.fs.Path(s"$path/lists.compact")
-    IndexMaintenance.runCompaction(fs, path, live, oldListsDir(path), next,
-        sourceDir = live, leaseMs, maxRebuilds, recursiveListing = true) { () =>
-      spark.read.parquet(live.toString)
+  def compactIndexSq8(spark: SparkSession, path: String): Unit =
+    IndexMaintenance.compact(spark, path, What, Seq("lists")) { (base, fresh) =>
+      IndexMaintenance.read(spark, path, base, "lists")
         .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(next.toString)
+        .write.partitionBy("centroid_id").parquet(s"$path/${fresh("lists")}")
     }
-  }
 
   /** Query an IVF-SQ8 index: probe the nprobe nearest lists (file-listing
     * pruning), rank the probed codes by the dequantized approximate dot,
@@ -478,14 +463,11 @@ object Ivf {
     */
   def topKSq8(spark: SparkSession, path: String, full: DataFrame,
               idCol: String, vecCol: String, query: Array[Float], k: Int,
-              nprobe: Int = 4, rerank: Int = 40,
-              leaseMs: Long = IndexMaintenance.DefaultLeaseMs): DataFrame = {
+              nprobe: Int = 4, rerank: Int = 40): DataFrame = {
     import spark.implicits._
-    val fs = IndexMaintenance.fsOf(path, spark)
-    IndexMaintenance.ensureLiveDir(fs, path, listsDir(path), oldListsDir(path), leaseMs)
-    val probes = readModel(spark, path).nearest(query, nprobe)
-    val lists = spark.read.parquet(s"$path/lists")
-      .where(col("centroid_id").isin(probes: _*))
+    val (all, model) = readIndex(spark, path)
+    val probes = model.nearest(query, nprobe)
+    val lists = all.where(col("centroid_id").isin(probes: _*))
     val approx = Similarity.sq8ApproxDot(col("vmin"), col("scale"), col("codes"), query)
     val candIds = lists.select(col(idCol), approx.as("__approx"))
       .orderBy(col("__approx").desc, col(idCol)).limit(rerank)

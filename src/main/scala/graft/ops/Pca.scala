@@ -221,14 +221,14 @@ object Pca {
     *
     * Cost per append: ONE scan of the batch (the same single-scan
     * aggregate as [[fit]]), a driver-side O(d²) array merge, an O(d²)
-    * one-row [[EpochStore.fold]] (lock, replay ledger, epoch write, GC).
+    * one-row [[EpochStore.fold]] (lock, replay ledger, epoch write, sweep).
     * An empty batch is a no-op.
     */
   def appendStats(df: DataFrame, vecCol: String, path: String,
                   ctx: Option[graft.sinks.BatchCtx] = None): Unit = {
     val spark = df.sparkSession
     val (bn, bsums, btri) = scanStats(df, vecCol)
-    if (bn > 0) EpochStore.fold(spark, path, (BatchCol, LegsCol), ctx) { live =>
+    if (bn > 0) EpochStore.fold(spark, path, ctx) { live =>
       val (n, sums, tri) = live match {
         case Some(ldf) =>
           val r = ldf.head()
@@ -248,10 +248,6 @@ object Pca {
       Seq((n, sums.toSeq, tri.toSeq)).toDF("n", "sums", "gram")
     }
   }
-
-  /** Ledger column names of the suffstats asset ([[EpochStore.fold]]). */
-  private[graft] val BatchCol = "__pca_batch"
-  private[graft] val LegsCol = "__pca_legs"
 
   private[graft] def readStats(spark: org.apache.spark.sql.SparkSession, path: String)
       : (Long, Array[Double], Array[Double]) = {

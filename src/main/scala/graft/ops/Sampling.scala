@@ -407,10 +407,6 @@ object Sampling {
 
   // ------- persisted budget-histogram asset (incremental selection) -------
 
-  /** Ledger column names of the histogram asset ([[EpochStore.fold]]). */
-  private[graft] val BatchCol = "__tb_batch"
-  private[graft] val LegsCol = "__tb_legs"
-
   /** Fold one batch's per-bin token histogram into the persisted asset at
     * `path` — the incremental-maintenance tier of [[tokenBudgetSelect]]:
     * per-bin token sums are a commutative integer monoid, so the folded
@@ -492,12 +488,12 @@ object Sampling {
     require(hi > lo, s"need hi > lo: [$lo, $hi]")
     val spark = df.sparkSession
     val width = (hi - lo) / bins
-    val batchHist = budgetBase(df.withColumn("__tb_id", lit(0L)), "__tb_id",
+    val batchHist = budgetBase(df.withColumn("__budget_id", lit(0L)), "__budget_id",
         scoreCol, tokensCol, signed)
       .withColumn("__bin", budgetBin(col("score"), lo, width, bins))
       .groupBy("__bin").agg(sum("n_tokens").as("toks"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (batchHist.nonEmpty) EpochStore.fold(spark, path, (BatchCol, LegsCol), ctx) { live =>
+    if (batchHist.nonEmpty) EpochStore.fold(spark, path, ctx) { live =>
       val merged = scala.collection.mutable.Map.empty[Long, Long]
       live.foreach { ldf =>
         ldf.select(col("lo"), col("hi"), col("bins")).limit(1).collect()

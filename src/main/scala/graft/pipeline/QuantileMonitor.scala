@@ -30,9 +30,8 @@ final case class MonitorDef(
     value: String,
     path: String,
     compression: Int = 100) {
-  // reserved names collide with the sketch table's own column ("sketch"),
-  // the replay-ledger metadata, or monitor-show's generated render columns
-  // (n_obs/q/est) — refuse at definition time, not with an
+  // reserved names collide with the sketch table's own column ("sketch")
+  // or monitor-show's generated render columns (n_obs/q/est) — refuse at definition time, not with an
   // ambiguous-column AnalysisException at fold or render time
   MonitorDef.reserved.intersect(dims.toSet).toSeq.sorted match {
     case Seq() => ()
@@ -49,22 +48,14 @@ object MonitorDef {
     * foreign tables cannot drift apart when a render column is added.
     */
   private[graft] val renderCols: Set[String] = Set("n_obs", "q", "est")
-  private[pipeline] val reserved: Set[String] =
-    Set("sketch") ++ renderCols ++
-      Set(QuantileMonitor.BatchCol, QuantileMonitor.LegsCol)
+  private[pipeline] val reserved: Set[String] = Set("sketch") ++ renderCols
 }
 
 object QuantileMonitor {
 
-  /** Replay-ledger metadata columns, constant across the epoch's rows. */
-  private[graft] val BatchCol = "__mon_batch"
-  private[graft] val LegsCol = "__mon_legs"
-
-  /** Read the live sketch table (loud error if never folded). The replay
-    * ledger is internal bookkeeping — readers see only (dims, sketch).
-    */
+  /** Read the live sketch table (loud error if never folded). */
   def read(spark: SparkSession, path: String): DataFrame =
-    graft.ops.EpochStore.read(spark, path, "sketch table").drop(BatchCol, LegsCol)
+    graft.ops.EpochStore.read(spark, path, "sketch table")
 
   /** Fold one batch slice of sink table `id` into every matching monitor:
     * per-cell digests of the batch merged with the live epoch
@@ -76,7 +67,7 @@ object QuantileMonitor {
     monitors.filter(_.selectors.matches(id)).foreach { m =>
       require((m.dims :+ m.value).forall(batch.columns.contains),
         s"monitor at ${m.path}: table $id lacks ${(m.dims :+ m.value).mkString(",")}")
-      graft.ops.EpochStore.fold(spark, m.path, (BatchCol, LegsCol), ctx) { live =>
+      graft.ops.EpochStore.fold(spark, m.path, ctx) { live =>
         val sk = QuantileSketch.buildSketches(
           batch.select(m.dims.map(col) :+ col(m.value): _*), m.dims, m.value,
           m.compression)

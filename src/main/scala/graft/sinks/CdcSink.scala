@@ -1,6 +1,7 @@
 package graft.sinks
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.VersionedDir
 import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
 import graft.operators.Changelog
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -80,17 +81,17 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   * Idempotent per batch — replaying a batch converges to the same state, so
   * at-least-once delivery becomes effectively-once.
   *
-  * A table is one directory of `_manifest/<N>` files and immutable data
-  * dirs, and it is whatever its highest-numbered manifest says
+  * A table is one [[graft.VersionedDir]]: numbered manifests and immutable
+  * data dirs, and it is whatever its newest manifest says
   * ([[ParquetUpsertSink.Manifest]]): the file schema, the PK names, the
   * bucket count and the data dir of each non-empty bucket. Rows are bucketed
   * by `pmod(xxhash64(pk), buckets)`, so a batch reads and rewrites only the
   * buckets it touches — merge cost scales with batch footprint, not table
   * size. Every change, a batch merge or a DDL rewrite, is one [[commit]]: the
-  * buckets it rewrites go to a fresh data dir, manifest N+1 is written aside
-  * and renamed in, and every file and dir that manifest does not name is
-  * deleted. A crash leaves manifest N or N+1, plus at most files the next
-  * commit deletes: nothing is ever recovered. Reads use the manifest's
+  * buckets it rewrites go to a fresh data dir, manifest N+1 is published,
+  * and every file and dir that manifest does not name is swept. A crash
+  * leaves manifest N or N+1, plus at most files the next commit deletes:
+  * nothing is ever recovered. Reads use the manifest's
   * schema and dirs, with no inference and no partition discovery. A
   * production deployment swaps in Delta/Iceberg MERGE behind the same
   * interface; their logs are this manifest grown up.
@@ -108,9 +109,13 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   * a 10^9-row production snapshot gets ~2000, keeping per-bucket files in
   * the 10^5-10^6-row (~64-128 MB) range.
   *
-  * State of the earlier displace-and-swap format, a table dir without
-  * `_manifest` or `<table>.*` leftovers beside it, is refused with a message
+  * State of the earlier displace-and-swap format, a table dir without a
+  * manifest or `<table>.*` leftovers beside it, is refused with a message
   * naming the dir; replay the table's changelog into a new state dir.
+  *
+  * A data batch never removes a column: one that lacks a column of its
+  * table (its writer forgot an in-band AddColumn) is refused, naming the
+  * table and the columns. Only DDL drops a column.
   */
 class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBuckets)
     extends CdcSink {
@@ -120,52 +125,36 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
       "(`buckets: 0`) was removed, every upsert state is PK-bucketed")
 
   private val BucketCol = "__bucket"
-  private val ManifestDir = "_manifest"
-  // concurrent per-table writes are fine; same-table writes must serialize
-  // (N→1 routes can hit one sink table from several sources in a batch)
-  private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   def tablePath(id: TableId): String =
     s"$rootDir/${Seq(id.namespace, id.schemaName, id.tableName).filter(_.nonEmpty).mkString("__")}"
 
-  private def lockOf(path: String): Object = tableLocks.computeIfAbsent(path, _ => new Object)
+  /** The table's store; its lock serializes same-table writes (N→1 routes
+    * hit one sink table from several sources in a batch).
+    */
+  private def store(spark: SparkSession, id: TableId): VersionedDir =
+    VersionedDir(hfs(spark, tablePath(id)), tablePath(id))
 
   /** The table's newest manifest: None before its first write or after a
     * drop. Read on every call, never cached: another writer may have
     * truncated the table and re-derived its bucket count.
     */
-  private[graft] def manifest(spark: SparkSession, id: TableId): Option[Manifest] = {
-    val path = tablePath(id)
-    current(hfs(spark, path), path)
-  }
+  private[graft] def manifest(spark: SparkSession, id: TableId): Option[Manifest] =
+    current(store(spark, id))
 
-  private def current(fs: FileSystem, path: String): Option[Manifest] = {
-    val dir = new Path(path, ManifestDir)
-    val versions = try fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-    catch { case _: java.io.FileNotFoundException => refuseSwapFormat(fs, path); Array.empty[Long] }
-    versions.maxOption.flatMap { v =>
-      try {
-        val in = fs.open(new Path(dir, v.toString))
-        try Some(decode(v, in.readAllBytes())) finally in.close()
-      } catch { case _: java.io.FileNotFoundException => current(fs, path) } // a newer commit swept it
-    }
-  }
+  private def current(vd: VersionedDir): Option[Manifest] =
+    vd.current.map { case (v, b) => decode(v, b) }.orElse { refuseSwapSiblings(vd); None }
 
-  /** A table without `_manifest` is new, unless state of the earlier swap
-    * format is there: a table dir (every first commit creates `_manifest`
-    * before any data) or a `<table>.*` sibling (this format keeps nothing
-    * outside the table dir).
+  /** A table without a manifest is new, unless a `<table>.*` sibling of the
+    * earlier swap format is there (this format keeps nothing outside the
+    * table dir).
     */
-  private def refuseSwapFormat(fs: FileSystem, path: String): Unit = {
-    val table = new Path(path)
-    val siblings = try fs.listStatus(table.getParent).map(_.getPath.getName)
-      .filter(_.startsWith(table.getName + "."))
+  private def refuseSwapSiblings(vd: VersionedDir): Unit = {
+    val siblings = try vd.fs.listStatus(vd.root.getParent).map(_.getPath.getName)
+      .filter(_.startsWith(vd.root.getName + "."))
     catch { case _: java.io.FileNotFoundException => Array.empty[String] }
-    val found = if (siblings.nonEmpty) siblings.mkString("", ", ", " beside it") else s"no $ManifestDir dir"
-    require(siblings.isEmpty && !fs.exists(table),
-      s"upsert state at $path predates the manifest format ($found): this sink neither " +
-        "reads nor converts it; replay the table's changelog into a new state dir")
+    require(siblings.isEmpty, s"${vd.path} predates the manifest format (${siblings.mkString(", ")} " +
+      "beside it): it is neither read nor converted; replay the table's changelog into a new state dir")
   }
 
   /** The rows of buckets `bs`, read with the manifest's schema. */
@@ -211,10 +200,10 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
       .withColumn(Changelog.SeqCol, lit(Long.MinValue))
   }
 
-  override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit =
-    lockOf(tablePath(id)).synchronized {
-      doWrite(id, changelog, schema)
-    }
+  override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
+    val vd = store(changelog.sparkSession, id)
+    vd.locked(doWrite(vd, id, changelog, schema))
+  }
 
   /** DDL applies EAGERLY to on-disk state (the reference's MetadataApplier
     * runs its ALTER TABLE before the data resumes): every bucket is
@@ -242,13 +231,11 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
       case AlterColumnTypeEvent(id, n, dt) =>
         rewriteState(id)(df => if (df.columns.contains(n)) df.withColumn(n, col(n).cast(dt))
                                else df)
-      case TruncateTableEvent(id) => onTable(id) { (_, fs, path, cur) =>
-        if (cur.live.nonEmpty) commit(fs, path, cur.copy(version = cur.version + 1, live = Map.empty), None)
-        else sweep(fs, path, cur)
+      case TruncateTableEvent(id) => onTable(id) { (_, vd, cur) =>
+        if (cur.live.nonEmpty) commit(vd, cur.copy(version = cur.version + 1, live = Map.empty), None)
+        else vd.sweep(cur.version, cur.live.values)
       }
-      case DropTableEvent(id) =>
-        val path = tablePath(id)
-        lockOf(path).synchronized { hfs(session(), path).delete(new Path(path), true); () }
+      case DropTableEvent(id) => store(session(), id).drop()
     }
   }
 
@@ -261,13 +248,11 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     * be a no-op (the replay of a DDL event already applied) still sweeps, to
     * finish the deletes of a commit that crashed after its publish.
     */
-  private def onTable(id: TableId)(change: (SparkSession, FileSystem, String, Manifest) => Unit): Unit =
-    lockOf(tablePath(id)).synchronized {
-      val spark = session()
-      val path = tablePath(id)
-      val fs = hfs(spark, path)
-      current(fs, path).foreach(change(spark, fs, path, _))
-    }
+  private def onTable(id: TableId)(change: (SparkSession, VersionedDir, Manifest) => Unit): Unit = {
+    val spark = session()
+    val vd = store(spark, id)
+    vd.locked(current(vd).foreach(change(spark, vd, _)))
+  }
 
   /** Rewrite every bucket through `fn` and [[commit]] the result with its
     * schema. The bucket is re-derived from the rewritten PKs: a PK type
@@ -275,16 +260,16 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     * only its schema.
     */
   private def rewriteState(id: TableId, renamed: (String, String)*)(fn: DataFrame => DataFrame): Unit =
-    onTable(id) { (spark, fs, path, cur) =>
-      val state = scan(spark, path, cur, cur.live.keys)
+    onTable(id) { (spark, vd, cur) =>
+      val state = scan(spark, vd.path, cur, cur.live.keys)
       val next = fn(state)
       // same shape: a replayed batch's DDL, or a drop of a never-present column
       if (next.schema != state.schema) {
         val pks = cur.primaryKeys.map(p => renamed.toMap.getOrElse(p, p))
-        commit(fs, path, cur.copy(version = cur.version + 1, schema = fileSchema(next),
+        commit(vd, cur.copy(version = cur.version + 1, schema = fileSchema(next),
           primaryKeys = pks, live = Map.empty),
           Option.when(cur.live.nonEmpty)(withBucket(next, pks, cur.buckets)))
-      } else sweep(fs, path, cur)
+      } else vd.sweep(cur.version, cur.live.values)
     }
 
   /** All state moves go through Hadoop [[org.apache.hadoop.fs.FileSystem]] so
@@ -296,16 +281,19 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The write path: merge the batch into the buckets it touches and
-    * [[commit]] them. A batch whose columns, types or keys differ from the
-    * table's (its writer skipped the DDL) rewrites every bucket, so a table
-    * keeps one file schema and one PK hash.
+    * [[commit]] them. A batch that adds columns, or changes types or keys
+    * (its writer skipped the DDL), rewrites every bucket, so a table keeps
+    * one file schema and one PK hash; a batch that lacks a column of the
+    * table is refused.
     */
-  private def doWrite(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
+  private def doWrite(vd: VersionedDir, id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
     require(schema.primaryKeys.nonEmpty, s"upsert sink requires primary keys on $id")
     val spark = changelog.sparkSession
-    val path = tablePath(id)
-    val fs = hfs(spark, path)
-    val cur = current(fs, path)
+    val path = vd.path
+    val cur = current(vd)
+    val missing = cur.toSeq.flatMap(_.schema.fieldNames).filterNot(schema.columnNames.toSet)
+    require(missing.isEmpty, s"upsert sink refuses a batch for $id without its column(s) " +
+      s"${missing.mkString(", ")}: only DDL removes a column (did a restart lose an in-band AddColumn?)")
     val live = cur.fold(Map.empty[Int, String])(_.live)
     val pks = schema.primaryKeys
 
@@ -330,7 +318,7 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
 
       // one write task per rewritten bucket: buckets are sized to the target
       // file size, so task == output file == bucket
-      commit(fs, path, Manifest(cur.fold(0L)(_.version + 1), fileSchema(merged), pks, m, live -- rewritten),
+      commit(vd, Manifest(cur.fold(0L)(_.version + 1), fileSchema(merged), pks, m, live -- rewritten),
         Some(merged.repartition(math.max(rewritten.size, 1), col(BucketCol))))
     } finally { inc.unpersist(); () }
   }
@@ -338,16 +326,15 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
   /** The one commit of a state change, shared by writes and DDL. `next` is
     * the new manifest less the buckets `data` holds: those are written to
     * the fresh data dir `v<version>` (a rewritten bucket `data` lacks was
-    * emptied). The manifest is written aside as `_manifest/.<version>.tmp`
-    * and renamed in, the one step that publishes anything; then [[sweep]]
-    * deletes what it no longer names. The sink's own FS writes per commit
-    * are that create, that rename and the sweep's deletes (plus the
-    * `_manifest` mkdirs of a table's first commit).
+    * emptied). Publishing the manifest is the one step that changes the
+    * table; the sweep then deletes what it no longer names. The sink's own
+    * FS writes per commit are the publish's create and rename and the
+    * sweep's deletes (plus the mkdirs of a table's first commit).
     */
-  private def commit(fs: FileSystem, path: String, next: Manifest, data: Option[DataFrame]): Unit = {
-    val dir = new Path(path, ManifestDir)
-    // before any data: a table dir without it is the earlier format's
-    if (next.version == 0) fs.mkdirs(dir)
+  private def commit(vd: VersionedDir, next: Manifest, data: Option[DataFrame]): Unit = {
+    val (fs, path) = (vd.fs, vd.path)
+    // before any data: a table dir without a manifest is the earlier format's
+    if (next.version == 0) vd.begin()
     val dataDir = s"v${next.version}"
     val produced = data.fold(Map.empty[Int, String]) { df =>
       // overwrite: a commit that crashed before its rename left this dir
@@ -357,32 +344,14 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
         .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$dataDir/$n").toMap
     }
     val published = next.copy(live = next.live ++ produced)
-    val aside = new Path(dir, s".${next.version}.tmp")
-    val out = fs.create(aside, true)
-    try out.write(encode(published)) finally out.close()
-    if (!fs.rename(aside, new Path(dir, next.version.toString)))
-      throw new java.io.IOException(s"upsert-sink commit failed: rename $aside into $dir " +
-        "(state preserved; check permissions / cross-filesystem paths)")
-    sweep(fs, path, published)
+    if (!vd.publish(next.version, encode(published), published.live.values))
+      throw new java.io.IOException(s"upsert-sink commit failed: another writer published " +
+        s"version ${next.version} of $path (state preserved)")
   }
 
   private def children(fs: FileSystem, dir: Path): Seq[String] =
     try fs.listStatus(dir).toSeq.map(_.getPath.getName)
     catch { case _: java.io.FileNotFoundException => Nil }
-
-  /** Delete every file and dir under the table that `m` does not name:
-    * older manifests, superseded buckets, and what crashed or refused
-    * commits left.
-    */
-  private def sweep(fs: FileSystem, path: String, m: Manifest): Unit = {
-    val named = m.live.values.toSet + s"$ManifestDir/${m.version}"
-    val parents = named.map(_.takeWhile(_ != '/'))
-    children(fs, new Path(path)).foreach { top =>
-      if (!parents(top)) fs.delete(new Path(path, top), true)
-      else children(fs, new Path(path, top)).filterNot(c => named(s"$top/$c"))
-        .foreach(c => fs.delete(new Path(s"$path/$top/$c"), true))
-    }
-  }
 
   /** The table's rows with its manifest's schema: an empty frame once every
     * row was deleted or the table truncated.
@@ -408,8 +377,8 @@ object ParquetUpsertSink {
   val RowsPerBucketConf = "spark.graft.upsert.rowsPerBucket"
   val MaxDerivedBuckets = 4096
 
-  /** One published version of an upsert table, stored as JSON in
-    * `_manifest/<version>`: the schema its data files are read with (in the
+  /** One published version of an upsert table, stored as the JSON body of
+    * its [[graft.VersionedDir]] manifest: the schema its data files are read with (in the
     * column order [[ParquetUpsertSink.read]] returns), the PK names the
     * bucket hash is taken over, the bucket count, and the data dir of each
     * non-empty bucket, relative to the table dir.

@@ -180,7 +180,7 @@ class CliSpec extends SparkSpec {
     assert(est("de") === 7.0) // single observation: exact
     assert(est("en") >= 20.0 && est("en") <= 30.0, s"en p50 ${est("en")}")
     // the live epoch plus ONE reader-grace epoch remain on disk
-    val ls = new java.io.File(mon).listFiles().map(_.getName).toSet
+    val ls = new java.io.File(mon).listFiles().map(_.getName).toSet - "_manifest"
     assert(ls === Set("epoch_0", "epoch_1"), ls.toString)
     // a third fold drops epoch_0 (grace window is exactly one epoch)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/b3.json"),
@@ -188,7 +188,7 @@ class CliSpec extends SparkSpec {
     val (_, _, q3) = Cli.buildStreaming(spark, p, Trigger.AvailableNow())
     q3.awaitTermination(60000)
     assert(weights("en") === 5.0)
-    val ls3 = new java.io.File(mon).listFiles().map(_.getName).toSet
+    val ls3 = new java.io.File(mon).listFiles().map(_.getName).toSet - "_manifest"
     assert(ls3 === Set("epoch_1", "epoch_2"), ls3.toString)
   }
 
@@ -1318,9 +1318,10 @@ class CliSpec extends SparkSpec {
 
   test("monitor dims colliding with reserved render/ledger columns refuse at definition time") {
     // a dim named q/est/n_obs would make monitor-show's render ambiguous,
-    // one named sketch or a ledger column would corrupt the fold — loud
-    // refusal when the MonitorDef is built, not mid-render
-    for (bad <- Seq("q", "est", "n_obs", "sketch", "__mon_batch")) {
+    // one named sketch would corrupt the fold — loud refusal when the
+    // MonitorDef is built, not mid-render (the replay ledger lives in the
+    // asset's manifest, so no column name is reserved for it)
+    for (bad <- Seq("q", "est", "n_obs", "sketch")) {
       val err = intercept[IllegalArgumentException] {
         graft.pipeline.MonitorDef("corpus.docs", Seq("lang", bad), "n_chars", "/tmp/x")
       }
@@ -1353,13 +1354,13 @@ class CliSpec extends SparkSpec {
     // monitor: blocks naming the same directory differently must serialize
     // on one lock (or both could read live epoch N and race epoch_N+1),
     // while genuinely distinct paths must NOT convoy on a shared lock
-    import graft.ops.EpochStore
+    import graft.VersionedDir
     val dir = tempDir("graft-mon-lock")
-    val a = EpochStore.lockFor(spark, s"$dir/m")
-    assert(EpochStore.lockFor(spark, s"$dir/m/") eq a) // trailing slash
-    assert(EpochStore.lockFor(spark, s"$dir/./m") eq a) // dot segment
-    assert(EpochStore.lockFor(spark, s"file:$dir/m") eq a) // scheme-qualified
-    assert(EpochStore.lockFor(spark, s"$dir/other") ne a)
+    val a = VersionedDir.lockFor(spark, s"$dir/m")
+    assert(VersionedDir.lockFor(spark, s"$dir/m/") eq a) // trailing slash
+    assert(VersionedDir.lockFor(spark, s"$dir/./m") eq a) // dot segment
+    assert(VersionedDir.lockFor(spark, s"file:$dir/m") eq a) // scheme-qualified
+    assert(VersionedDir.lockFor(spark, s"$dir/other") ne a)
   }
 
   test("monitor folds are effectively-once under crash-replayed streaming batches") {
@@ -1413,14 +1414,14 @@ class CliSpec extends SparkSpec {
     sink.writeBatch(id, slice("en" -> 30L), schema,
       Some(BatchCtx(1L, "corpus.docs->corpus.docs"))) // replay of batch 1
     assert(weights === Map("en" -> 3.0, "fr" -> 1.0, "it" -> 1.0))
-    // gapped-epoch GC: a stray uncommitted leftover below the grace epoch
-    // is reclaimed by the next fold instead of leaking forever
+    // a stray unpublished leftover is swept by the next fold instead of
+    // leaking forever
     val stray = new java.io.File(s"$mon/epoch_0")
     stray.mkdirs()
     sink.writeBatch(id, slice("de" -> 7L), schema,
       Some(BatchCtx(2L, "corpus.docs->corpus.docs")))
     assert(!stray.exists(), "stray epoch below the grace window must be GC'd")
-    val ls = new java.io.File(mon).listFiles().map(_.getName).toSet
+    val ls = new java.io.File(mon).listFiles().map(_.getName).toSet - "_manifest"
     assert(ls.forall(_.matches("epoch_\\d+")) && ls.size === 2, ls.toString)
     assert(weights === Map("en" -> 3.0, "fr" -> 1.0, "it" -> 1.0, "de" -> 1.0))
   }

@@ -1,30 +1,16 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{CrashFs, SparkSpec}
 import graft.ops.EpochStore.Ledger
 import graft.sinks.BatchCtx
-import org.apache.spark.sql.functions.col
 
 /** Unit tests for the shared epoch-asset protocol three assets (monitor
   * sketches, PCA suffstats, budget histograms) ride: each replay-ledger
-  * primitive's edges, plus [[EpochStore.fold]]'s all-or-nothing commit;
-  * the asset e2es prove the composition.
+  * primitive's edges, [[EpochStore.fold]]'s all-or-nothing publish, and a
+  * crash at every publish step; the asset e2es prove the composition.
   */
 class EpochLedgerSpec extends SparkSpec {
   import spark.implicits._
-
-  private val B = "__x_batch"
-  private val L = "__x_legs"
-
-  test("readLedger: pre-ledger tables and null ledgers parse to None") {
-    val pre = Seq((1, "a")).toDF("n", "s")
-    assert(EpochStore.readLedger(pre, B, L).isEmpty)
-    val stampedNull = EpochStore.stampLedger(pre, None, B, L)
-    assert(EpochStore.readLedger(stampedNull, B, L).isEmpty)
-    val stamped = EpochStore.stampLedger(pre, Some((7L, Seq("l1", "l2"))), B, L)
-    assert(EpochStore.readLedger(stamped, B, L)
-      === Some(Ledger(7L, Set("l1", "l2"))))
-  }
 
   test("isReplay: exact (batchId, leg) match only") {
     val led = Some(Ledger(7L, Set("a", "b")))
@@ -47,26 +33,13 @@ class EpochLedgerSpec extends SparkSpec {
     assert(EpochStore.advanceLedger(None, None).isEmpty)
   }
 
-  test("stampLedger: constant metadata columns, typed nulls when no ledger") {
-    val df = Seq((1, "x"), (2, "y")).toDF("n", "s")
-    val st = EpochStore.stampLedger(df, Some((3L, Seq("p", "q"))), B, L)
-    val rows = st.select(col(B), col(L)).distinct().collect()
-    assert(rows.length === 1)
-    assert(rows.head.getLong(0) === 3L)
-    assert(rows.head.getSeq[String](1) === Seq("p", "q"))
-    val nulls = EpochStore.stampLedger(df, None, B, L)
-    assert(nulls.schema(B).dataType.typeName === "long")
-    assert(nulls.schema(L).dataType.typeName === "array")
-    assert(nulls.where(col(B).isNotNull).count() === 0)
-  }
-
   test("fold: a merge that throws commits nothing; the next good fold advances") {
     // Pca's width check and the histogram's pinned declaration refuse
     // inside `next` — the refusal must leave the asset exactly as it was
     val path = tempDir("graft-epoch-fold") + "/asset"
     def listing = new java.io.File(path).list().toSet
-    def ledger = EpochStore.readLedger(EpochStore.read(spark, path, "asset"), B, L)
-    EpochStore.fold(spark, path, (B, L), Some(BatchCtx(0L, "a"))) { live =>
+    def ledger = EpochStore.ledgerOf(spark, path)
+    EpochStore.fold(spark, path, Some(BatchCtx(0L, "a"))) { live =>
       assert(live.isEmpty)
       Seq((1L, "x")).toDF("n", "s")
     }
@@ -75,7 +48,7 @@ class EpochLedgerSpec extends SparkSpec {
     assert(epoch0.exists(_.endsWith("epoch_0")))
     assert(ledger0 === Some(Ledger(0L, Set("a"))))
     val e = intercept[IllegalArgumentException] {
-      EpochStore.fold(spark, path, (B, L), Some(BatchCtx(1L, "a"))) { _ =>
+      EpochStore.fold(spark, path, Some(BatchCtx(1L, "a"))) { _ =>
         throw new IllegalArgumentException("width mismatch")
       }
     }
@@ -83,8 +56,8 @@ class EpochLedgerSpec extends SparkSpec {
     assert(EpochStore.currentEpoch(spark, path) === epoch0)
     assert(ledger === ledger0)
     assert(listing === listing0)
-    // the good fold sees the live rows WITHOUT the ledger columns
-    EpochStore.fold(spark, path, (B, L), Some(BatchCtx(1L, "a"))) { live =>
+    // the good fold sees the live rows, which carry no ledger columns
+    EpochStore.fold(spark, path, Some(BatchCtx(1L, "a"))) { live =>
       assert(live.map(_.columns.toSeq) === Some(Seq("n", "s")))
       live.get.unionByName(Seq((2L, "y")).toDF("n", "s"))
     }
@@ -92,5 +65,49 @@ class EpochLedgerSpec extends SparkSpec {
     assert(ledger === Some(Ledger(1L, Set("a"))))
     assert(EpochStore.read(spark, path, "asset").select("n").as[Long]
       .collect().sorted.toSeq === Seq(1L, 2L))
+  }
+
+  /** Asset rows and ledger; the named dirs are the live and grace epochs. */
+  private def stateOf(path: String) =
+    (EpochStore.read(spark, path, "asset").toJSON.collect().toSet, EpochStore.ledgerOf(spark, path))
+
+  private def swept(path: String): Unit = {
+    val version = EpochStore.currentEpoch(spark, path).get.split('/').last.stripPrefix("epoch_").toLong
+    CrashFs.assertOnly(spark, path,
+      Some(Set(s"_manifest/$version", s"epoch_$version") ++ Option.when(version > 0)(s"epoch_${version - 1}")))
+  }
+
+  test("a crash anywhere in a ctx fold recovers to the old or the folded asset; its replay is skipped") {
+    val emb = Seq(Seq(1.0f, 2.0f), Seq(3.0f, 1.0f)).toDF("v")
+    CrashFs.crashAtEveryCall(spark,
+      path => (0L to 1L).foreach(b => Pca.appendStats(emb, "v", path, Some(BatchCtx(b, "a→t")))),
+      path => Pca.appendStats(emb, "v", path, Some(BatchCtx(2L, "a→t"))),
+      stateOf, swept)
+  }
+
+  test("a crash anywhere in a ctx-less fold recovers to the old or the rebuilt asset; the ledger stays") {
+    val docs = Seq((1L, 2.0, 10L), (2L, 5.0, 20L)).toDF("id", "score", "tok")
+    def rebuild(rows: org.apache.spark.sql.DataFrame, path: String) =
+      Sampling.rebuildBudgetHistogram(rows, org.apache.spark.sql.functions.col("score"),
+        org.apache.spark.sql.functions.col("tok"), path, lo = 0.0, hi = 8.0, bins = 8)
+    CrashFs.crashAtEveryCall(spark,
+      { path =>
+        Sampling.appendBudgetHistogram(docs, org.apache.spark.sql.functions.col("score"),
+          org.apache.spark.sql.functions.col("tok"), path, lo = 0.0, hi = 8.0, bins = 8,
+          ctx = Some(BatchCtx(4L, "a→t")))
+        rebuild(docs, path)
+      },
+      path => rebuild(docs.where("id = 1"), path),
+      stateOf, swept)
+  }
+
+  test("an epoch asset of the earlier format is refused, naming its dir") {
+    val path = tempDir("graft-epoch-old") + "/asset"
+    Seq((1L, "x")).toDF("n", "s").write.parquet(s"$path/epoch_0")
+    Seq[() => Any](() => EpochStore.read(spark, path, "asset"),
+      () => EpochStore.fold(spark, path, None)(_ => Seq((2L, "y")).toDF("n", "s"))).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(s"$path predates the manifest format"), e.getMessage)
+    }
   }
 }

@@ -190,94 +190,6 @@ class FuzzyJoinSpec extends SparkSpec {
       s"i -> pmod(ascii(substring($c, i, 1)), 64)), " +
       "0L, (acc, b) -> acc | shiftleft(1L, b))"
 
-  test("probe of a legacy index without the len/sig columns skips the prefilters correctly") {
-    // an index written before the layout carried `len`/`sig` must still
-    // probe with full recall — the lower-bound bands are optimizations,
-    // never schema requirements (the layout note's compact-to-adopt
-    // contract)
-    val idxRows = Seq((1L, "same same same"), (2L, "other other otha"))
-    val path = tempDir("graft-fzidx5")
-    FuzzyJoin.writeIndex(idxRows.toDF("id", "s"), "id", "s", path, numPartitions = 4)
-    // strip the prefilter columns from the stored prefix relation,
-    // simulating the old layout
-    val fs = IndexMaintenance.fsOf(path, spark)
-    val legacy = spark.read.parquet(s"$path/block/prefix").drop("len", "sig")
-      .localCheckpoint()
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/block/prefix"), true)
-    legacy.write.partitionBy("pbucket").parquet(s"$path/block/prefix")
-    val got = FuzzyJoin.indexProbe(
-        Seq((9L, "same same samX")).toDF("id", "s"), "id", "s", path,
-        numPartitions = 4)
-      .as[(Long, Long, Int)].collect().toSet
-    assert(got === Set((9L, 1L, 1)))
-  }
-
-  test("append to a legacy index yields mixed prefix schemas; probe keeps full recall") {
-    // the upgrade-in-place state the layout note's compact-to-adopt
-    // contract leaves open: legacy rows read len/sig as NULL inside an
-    // index whose NEW appends carry them — a NULL band predicate would
-    // silently drop every candidate against the legacy-indexed records
-    // (loses recall, never errors); the bands must treat a missing
-    // constant as "filter does not apply"
-    val path = tempDir("graft-fzidx6")
-    FuzzyJoin.writeIndex(Seq((1L, "same same same")).toDF("id", "s"),
-      "id", "s", path, numPartitions = 4)
-    val fs = IndexMaintenance.fsOf(path, spark)
-    val legacy = spark.read.parquet(s"$path/block/prefix").drop("len", "sig")
-      .localCheckpoint()
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/block/prefix"), true)
-    legacy.write.partitionBy("pbucket").parquet(s"$path/block/prefix")
-    // the new-code append writes rows WITH len/sig beside the legacy files
-    FuzzyJoin.appendToIndex(Seq((2L, "same same samm")).toDF("id", "s"),
-      "id", "s", path, numPartitions = 4)
-    val got = FuzzyJoin.indexProbe(
-        Seq((9L, "same same samX")).toDF("id", "s"), "id", "s", path,
-        numPartitions = 4)
-      .as[(Long, Long, Int)].collect().toSet
-    // one substitution from EACH of the legacy-indexed and appended rows
-    assert(got === Set((9L, 1L, 1), (9L, 2L, 1)))
-  }
-
-  test("compaction adopts the len/sig prefilter columns on a legacy index") {
-    // the last open edge of the layout note's compact-to-adopt contract:
-    // recall on a legacy index is pinned above, and compactIndex re-derives
-    // the prefix relation from strings/ (so adoption is automatic by
-    // construction) — this pins that the adoption actually HAPPENS: after
-    // compacting, the stored schema carries both columns and the probe's
-    // candidate stage prunes pairs the legacy index had to carry to verify
-    val path = tempDir("graft-fzidx7")
-    // record 2 shares the prefix gram "sam" at the same position as the
-    // probe but is 19 chars longer — only the len band can reject it
-    // before the verify
-    val idxRows = Seq((1L, "same same same"),
-      (2L, "samzzzzzzzzzzzzzzzzzzzzzzzzzzzzzz")).toDF("id", "s")
-    FuzzyJoin.writeIndex(idxRows, "id", "s", path, numPartitions = 4)
-    val fs = IndexMaintenance.fsOf(path, spark)
-    val legacy = spark.read.parquet(s"$path/block/prefix").drop("len", "sig")
-      .localCheckpoint()
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/block/prefix"), true)
-    legacy.write.partitionBy("pbucket").parquet(s"$path/block/prefix")
-    val probe = Seq((9L, "same same samX")).toDF("id", "s")
-    val before = FuzzyJoin.probePairs(probe, "id", "s", path,
-        n = 3, maxDist = 2, dfCap = Int.MaxValue, numPartitions = 4)
-      .as[(Long, Long)].collect().toSet
-    // legacy layout: no bands, the impossible pair reaches the verify
-    assert(before === Set((9L, 1L), (9L, 2L)))
-    FuzzyJoin.compactIndex(spark, path, numPartitions = 4)
-    val adopted = spark.read.parquet(s"$path/block/prefix").schema.fieldNames.toSet
-    assert(Set("len", "sig").subsetOf(adopted),
-      s"compaction did not adopt the prefilter columns: $adopted")
-    val after = FuzzyJoin.probePairs(probe, "id", "s", path,
-        n = 3, maxDist = 2, dfCap = Int.MaxValue, numPartitions = 4)
-      .as[(Long, Long)].collect().toSet
-    // adopted bands prune the length-impossible pair before the verify
-    assert(after === Set((9L, 1L)))
-    // the probe's end-to-end result is identical either way
-    val got = FuzzyJoin.indexProbe(probe, "id", "s", path, numPartitions = 4)
-      .as[(Long, Long, Int)].collect().toSet
-    assert(got === Set((9L, 1L, 1)))
-  }
-
   test("short strings never pair; identical strings pair at distance 0") {
     val rows = Seq((1L, "ab"), (2L, "ab"), (3L, "same same same"),
       (4L, "same same same")).toDF("id", "s")
@@ -319,23 +231,20 @@ class FuzzyJoinSpec extends SparkSpec {
         d = lev(sa, sb) if d <= 2
       } yield (ia, ib, d)).toSet
 
-    val got1 = FuzzyJoin.indexProbe(wave1.toDF("id", "s"), "id", "s", path,
-        numPartitions = 8).as[(Long, Long, Int)].collect().toSet
+    val got1 = FuzzyJoin.indexProbe(wave1.toDF("id", "s"), "id", "s", path).as[(Long, Long, Int)].collect().toSet
     assert(got1 === expectedVs(wave1, idxRows))
     assert(got1.nonEmpty)
 
     // append wave1 (its novel grams rank rarest under the frozen order),
     // then wave2's probe must see BOTH the original index and wave1
-    FuzzyJoin.appendToIndex(wave1.toDF("id", "s"), "id", "s", path, numPartitions = 8)
-    val got2 = FuzzyJoin.indexProbe(wave2.toDF("id", "s"), "id", "s", path,
-        numPartitions = 8).as[(Long, Long, Int)].collect().toSet
+    FuzzyJoin.appendToIndex(wave1.toDF("id", "s"), "id", "s", path)
+    val got2 = FuzzyJoin.indexProbe(wave2.toDF("id", "s"), "id", "s", path).as[(Long, Long, Int)].collect().toSet
     assert(got2 === expectedVs(wave2, idxRows ++ wave1))
 
     // compaction refreshes the order and re-prefixes appended rows; probe
     // parity must be unchanged
-    FuzzyJoin.compactIndex(spark, path, numPartitions = 8)
-    val got3 = FuzzyJoin.indexProbe(wave2.toDF("id", "s"), "id", "s", path,
-        numPartitions = 8).as[(Long, Long, Int)].collect().toSet
+    FuzzyJoin.compactIndex(spark, path)
+    val got3 = FuzzyJoin.indexProbe(wave2.toDF("id", "s"), "id", "s", path).as[(Long, Long, Int)].collect().toSet
     assert(got3 === got2)
   }
 
@@ -347,45 +256,13 @@ class FuzzyJoinSpec extends SparkSpec {
     // the candidate stage must push the batch's touched buckets as a
     // file-listing partition filter on the prefix scan
     val pairsPlan = FuzzyJoin.probePairs(batch.toDF("id", "s"), "id", "s", path,
-      n = 3, maxDist = 2, dfCap = Int.MaxValue, numPartitions = 16)
+      n = 3, maxDist = 2, dfCap = Int.MaxValue, IndexMaintenance.current(spark, path, "index"))
       .queryExecution.executedPlan.toString
     assert(pairsPlan.contains("PartitionFilters: [pbucket"), pairsPlan.take(4000))
     // and the verify join pushes candidate ids into the id-sorted string
     // store (row-group stats pruning)
-    val p = FuzzyJoin.indexProbe(batch.toDF("id", "s"), "id", "s", path,
-      numPartitions = 16).queryExecution.executedPlan.toString
+    val p = FuzzyJoin.indexProbe(batch.toDF("id", "s"), "id", "s", path)
+      .queryExecution.executedPlan.toString
     assert(p.contains("In(id, "), p.take(4000))
-  }
-
-  test("probe repairs a compaction that died between its two swap renames") {
-    val rows = Seq((1L, "same same same"), (2L, "same same samm"))
-    val path = tempDir("graft-fzidx4")
-    FuzzyJoin.writeIndex(rows.toDF("id", "s"), "id", "s", path)
-    // simulate the displace-then-swap dying after rename #1: block is
-    // gone, block.old holds the displaced live dir
-    val fs = IndexMaintenance.fsOf(path, spark)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$path/block"),
-      new org.apache.hadoop.fs.Path(s"$path/block.old")))
-    val got = FuzzyJoin.indexProbe(Seq((9L, "same same samX")).toDF("id", "s"),
-        "id", "s", path)
-      .as[(Long, Long, Int)].collect().toSet
-    assert(got === Set((9L, 1L, 1), (9L, 2L, 1))) // samX: 1 sub from each
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/block"))) // repaired in-line
-  }
-
-  test("append refuses under a live maintainer lease") {
-    val path = tempDir("graft-fzidx3")
-    FuzzyJoin.writeIndex(Seq((1L, "same same same")).toDF("id", "s"), "id", "s", path)
-    val fs = IndexMaintenance.fsOf(path, spark)
-    val lock = IndexMaintenance.acquireMaintenanceLock(fs, path, 60000L)
-    try {
-      val err = intercept[IllegalStateException] {
-        FuzzyJoin.appendToIndex(Seq((2L, "same same samm")).toDF("id", "s"),
-          "id", "s", path)
-      }
-      assert(err.getMessage.contains("append refused"))
-    } finally fs.delete(lock, false)
-    // and the marker did not leak: a compaction can proceed immediately
-    FuzzyJoin.compactIndex(spark, path)
   }
 }

@@ -229,26 +229,25 @@ class DedupSpec extends SparkSpec {
       .toDF("id", "text")
     val dir = tempDir("graft-mhmeta")
     try {
-      // build with an EXPLICIT 8-partition layout; the meta must pin it
+      // build with an EXPLICIT 8-partition layout; the manifest must pin it
       Dedup.writeMinhashIndex(corpus, "id", "text", dir, numPartitions = 8)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_layout")))
+      assert(IndexMaintenance.current(spark, dir, "index").partitions === 8)
       val batch = Seq(
         (100L, "the quick brown fox jumps over the lazy dog again and again every night"))
         .toDF("id", "text")
-      // a probe passing a WRONG constant must still find the collision:
-      // the layout meta wins over the caller's modulus
-      val got = Dedup.incrementalCandidates(batch, "id", "text", dir,
-        threshold = 0.5, numPartitions = 64)
+      // the probe takes no modulus: it hashes with the manifest's
+      val got = Dedup.incrementalCandidates(batch, "id", "text", dir, threshold = 0.5)
         .select("id", "dup_of").as[(Long, Long)].collect().toSet
       assert(got === Set((100L, 1L)))
       // Auto build on a small corpus derives a single partition dir
       val dir2 = tempDir("graft-mhmeta2")
       try {
         Dedup.writeMinhashIndex(corpus, "id", "text", dir2)
-        val parts = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir2/buckets"))
+        val idx = IndexMaintenance.current(spark, dir2, "index")
+        val parts = idx("buckets").flatMap(d => fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir2/$d")))
           .count(_.getPath.getName.startsWith("pbucket="))
-        assert(parts === 1, s"small corpus must derive one bucket partition, got $parts")
+        assert(idx.partitions === 1 && parts === 1, s"small corpus must derive one bucket partition, got $parts")
       } finally { val _ = fs.delete(new org.apache.hadoop.fs.Path(dir2), true) }
     } finally {
       val _ = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
@@ -346,65 +345,6 @@ class DedupSpec extends SparkSpec {
     } finally {
       val _ = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(dir), true)
-    }
-  }
-
-  test("a second concurrent index maintainer is refused; a stale lease is broken") {
-    val dir = tempDir("graft-lock")
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    try {
-      Dedup.writeMinhashIndex(
-        Seq((1L, "some indexed document about spark plans and shuffles ok")).toDF("id", "text"),
-        "id", "text", dir)
-      // maintainer A holds the lease → maintainer B must fail loudly, and
-      // must NOT have touched the live dir
-      val lock = Dedup.maintenanceLock(dir)
-      val out = fs.create(lock, false); out.writeBytes("pid=fake\n"); out.close()
-      val e = intercept[IllegalStateException] { Dedup.compactMinhashIndex(spark, "id", dir) }
-      assert(e.getMessage.contains("another maintainer"))
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/buckets")))
-      assert(fs.exists(lock)) // B did not release A's lease
-      // an append during a live lease would be silently dropped by the swap —
-      // it must refuse too
-      val e2 = intercept[IllegalStateException] {
-        Dedup.appendToMinhashIndex(
-          Seq((5L, "another document to append right now")).toDF("id", "text"), "id", "text", dir)
-      }
-      assert(e2.getMessage.contains("append refused"))
-      // a lease older than leaseMs is presumed orphaned and broken
-      fs.setTimes(lock, System.currentTimeMillis() - 60000, -1)
-      Dedup.compactMinhashIndex(spark, "id", dir, leaseMs = 1000)
-      assert(!fs.exists(lock)) // released after the successful run
-      assert(Dedup.indexProbe(
-        Seq((2L, "some indexed document about spark plans and shuffles ok")).toDF("id", "text"),
-        "id", "text", dir).count() === 1)
-    } finally {
-      val _ = fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    }
-  }
-
-  test("probe read path repairs a crashed swap; refuses while a maintainer lease is live") {
-    val dir = tempDir("graft-swapcrash")
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    try {
-      val text = "some indexed document about spark plans and shuffles ok"
-      Dedup.writeMinhashIndex(Seq((1L, text)).toDF("id", "text"), "id", "text", dir)
-      val live = new org.apache.hadoop.fs.Path(s"$dir/buckets")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/buckets.old")
-      // simulate a compaction that died between its two swap renames
-      assert(fs.rename(live, old))
-      val probe = Seq((2L, text)).toDF("id", "text")
-      assert(Dedup.indexProbe(probe, "id", "text", dir).count() === 1) // repaired in-line
-      assert(fs.exists(live) && !fs.exists(old))
-      // same state but a maintainer lease is live → mid-swap, don't race it
-      assert(fs.rename(live, old))
-      val out = fs.create(Dedup.maintenanceLock(dir), false); out.writeBytes("pid=fake\n"); out.close()
-      val e = intercept[IllegalStateException] {
-        Dedup.indexProbe(probe, "id", "text", dir).count()
-      }
-      assert(e.getMessage.contains("mid-swap"))
-    } finally {
-      val _ = fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     }
   }
 
@@ -717,14 +657,14 @@ class IvfSpec extends SparkSpec {
         query, 10, nprobe = 3).select("id").as[Long].collect().toSet
       assert(got.toSet.intersect(full).size >= 8, s"sq8=$got full=$full")
       // the probe filter prunes the CODES scan at the file listing
-      val lists = spark.read.parquet(s"$dir/lists")
+      val lists = Ivf.readIndex(spark, dir)._1
         .where(col("centroid_id").isin(model.nearest(query, 3): _*))
       val scanned = lists.queryExecution.executedPlan.collectLeaves()
         .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.selectedPartitions.partitionCount }
       assert(scanned.exists(_ <= 3), s"expected <= nprobe partitions, got $scanned")
       // the code rows carry no float vectors — the bandwidth win is real
-      assert(!spark.read.parquet(s"$dir/lists").columns.contains("v"))
+      assert(!Ivf.readIndex(spark, dir)._1.columns.contains("v"))
     } finally {
       val _ = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -896,7 +836,7 @@ class IvfSpec extends SparkSpec {
       val uniform = (0 until 4).map(c => c.toString -> 0.25).toMap
       val recomputed = Sampling.rebalance(assigned, col("id"), col("centroid_id"), uniform)
         .select("id").as[Long].collect().toSet
-      val persisted = Sampling.rebalance(spark.read.parquet(s"$dir/lists"),
+      val persisted = Sampling.rebalance(Ivf.readIndex(spark, dir)._1,
           col("id"), col("centroid_id"), uniform)
         .select("id").as[Long].collect().toSet
       assert(persisted === recomputed)

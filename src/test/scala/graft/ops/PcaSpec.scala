@@ -148,13 +148,13 @@ class PcaSpec extends SparkSpec {
     Pca.appendStats(df.where(col("id") >= third && col("id") < 2 * third), "vec", path)
     // live epoch_1 plus ONE grace epoch for an in-flight reader of epoch_0
     assert(epochDirs === Set("epoch_0", "epoch_1"))
-    // a crash mid-write leaves an UNCOMMITTED dir: invisible to readers
+    // a crash mid-write leaves an UNPUBLISHED dir: invisible to readers
     new java.io.File(s"$path/epoch_7").mkdirs()
     assert(EpochStore.currentEpoch(spark, path).exists(_.endsWith("epoch_1")))
     Pca.appendStats(df.where(col("id") >= 2 * third), "vec", path)
-    // epoch_0 reclaimed below the grace bar; the stray leftover above the
-    // new epoch is untouched (overwritten if the sequence ever reaches it)
-    assert(epochDirs === Set("epoch_1", "epoch_2", "epoch_7"))
+    // epoch_0 reclaimed below the grace bar, and the leftover no manifest
+    // names swept with it
+    assert(epochDirs === Set("epoch_1", "epoch_2"))
     // the three thirds folded == the whole corpus
     val inc = Pca.fitFromStats(spark, path, k = 2)
     val one = Pca.fit(df, "vec", k = 2)

@@ -74,7 +74,7 @@ class RetrievalPropertySpec extends SparkSpec {
     val query = "alpha theta kappa"
     val brute = Bm25.topK(df, "doc_id", "text", query, 15)
       .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    val indexed = Bm25.topKIndexed(spark, path, query, 15, termBuckets = 8)
+    val indexed = Bm25.topKIndexed(spark, path, query, 15)
       .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(indexed == brute) // bit-exact, not approx
   }
@@ -88,13 +88,13 @@ class RetrievalPropertySpec extends SparkSpec {
     val incr = tempDir("bm25-incr")
     Bm25.writePostings(df.where($"doc_id" <= 20L), "doc_id", "text", incr, termBuckets = 8)
     Bm25.appendToPostings(df.where($"doc_id" > 20L && $"doc_id" <= 30L),
-      "doc_id", "text", incr, termBuckets = 8)
+      "doc_id", "text", incr)
     Bm25.appendToPostings(df.where($"doc_id" > 30L),
-      "doc_id", "text", incr, termBuckets = 8)
+      "doc_id", "text", incr)
     val q = "beta gamma iota"
-    val a = Bm25.topKIndexed(spark, full, q, 15, termBuckets = 8)
+    val a = Bm25.topKIndexed(spark, full, q, 15)
       .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    val b = Bm25.topKIndexed(spark, incr, q, 15, termBuckets = 8)
+    val b = Bm25.topKIndexed(spark, incr, q, 15)
       .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(a == b) // two appends later: same stats, same scores, bit-exact
   }

@@ -62,18 +62,11 @@ class ParquetSinkCommitSpec extends SparkSpec {
   /** The table dir holds the newest manifest and the data dirs it names,
     * nothing else; no table dir at all without a manifest.
     */
-  private def assertSwept(sink: ParquetUpsertSink): Unit = {
-    val table = new Path(sink.tablePath(id))
-    def children(p: Path) = localFs.listStatus(p).map(_.getPath.getName).toSet
-    sink.manifest(spark, id) match {
-      case None => assert(!localFs.exists(table))
-      case Some(m) =>
-        val named = m.live.values.toSet + s"_manifest/${m.version}"
-        val tops = named.map(_.takeWhile(_ != '/'))
-        assert(children(table) === tops)
-        tops.foreach(t => assert(children(new Path(table, t)).map(c => s"$t/$c") === named.filter(_.startsWith(s"$t/"))))
-    }
-  }
+  private def namedBy(sink: ParquetUpsertSink): Option[Set[String]] =
+    sink.manifest(spark, id).map(m => m.live.values.toSet + s"_manifest/${m.version}")
+
+  private def assertSwept(sink: ParquetUpsertSink): Unit =
+    graft.CrashFs.assertOnly(spark, sink.tablePath(id), namedBy(sink))
 
   private def pairsOf(sink: ParquetUpsertSink): Set[(Long, String)] =
     sink.read(spark, id).as[(Long, String)].collect().toSet
@@ -88,67 +81,17 @@ class ParquetSinkCommitSpec extends SparkSpec {
       else super.rename(src, dst)
   }
 
-  /** Simulated process death: nothing after it runs, nothing cleans up. */
-  private final class Crash extends RuntimeException("simulated crash")
-
-  /** Counts the sink's mutating calls (create, mkdirs, rename, delete) and
-    * dies right after call `crashAt` completes. A crash after a create
-    * leaves the file empty, as a death before its bytes were written would.
-    */
-  private class CrashingFs(underlying: FileSystem, crashAt: Int) extends FilterFileSystem(underlying) {
-    val calls = new java.util.concurrent.atomic.AtomicInteger
-    private def step[T](done: T): T =
-      if (calls.incrementAndGet() == crashAt) throw new Crash else done
-    override def create(f: Path, perm: org.apache.hadoop.fs.permission.FsPermission,
-                        overwrite: Boolean, bufferSize: Int, replication: Short,
-                        blockSize: Long, progress: org.apache.hadoop.util.Progressable) = {
-      val out = super.create(f, perm, overwrite, bufferSize, replication, blockSize, progress)
-      try step(out) catch { case c: Crash => out.close(); throw c }
-    }
-    override def mkdirs(f: Path): Boolean = step(fs.mkdirs(f))
-    override def mkdirs(f: Path, perm: org.apache.hadoop.fs.permission.FsPermission): Boolean =
-      step(fs.mkdirs(f, perm))
-    override def rename(src: Path, dst: Path): Boolean = step(fs.rename(src, dst))
-    override def delete(f: Path, recursive: Boolean): Boolean = step(fs.delete(f, recursive))
-  }
-
-  private class CrashingSink(root: String, buckets: Int, crashAt: Int)
-      extends ParquetUpsertSink(root, buckets) {
-    val crashFs = new CrashingFs(localFs, crashAt)
-    override protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): FileSystem = crashFs
-  }
-
-  /** Crash `change` after each of its mutating FS calls in turn; after every
-    * crash a restarted sink must read the state either before or after the
-    * change — never a mix — and a replay of the change must converge to
-    * after, with everything the newest manifest does not name deleted.
+  /** Crash `change` after each of the sink's mutating FS calls in turn
+    * ([[graft.CrashFs.crashAtEveryCall]]); after every crash a restarted
+    * sink must read the state either before or after the change — never a
+    * mix — and a replay of the change must converge to after, with
+    * everything the newest manifest does not name deleted.
     */
   private def crashAtEveryCall(buckets: Int, setup: ParquetUpsertSink => Unit,
                                change: ParquetUpsertSink => Unit): Unit = {
-    val clean = tempDir("graft-crash-clean")
-    val probe = new CrashingSink(clean, buckets, crashAt = -1)
-    setup(probe)
-    val before = stateOf(probe)
-    val setupCalls = probe.crashFs.calls.get()
-    change(probe)
-    val after = stateOf(probe)
-    val calls = probe.crashFs.calls.get() - setupCalls
-    assert(calls > 0 && before != after)
-    (1 to calls).foreach { k =>
-      val root = tempDir(s"graft-crash-$k")
-      val sink = new CrashingSink(root, buckets, crashAt = setupCalls + k)
-      setup(sink)
-      intercept[Crash](change(sink))
-      val restarted = new ParquetUpsertSink(root, buckets)
-      val recovered = stateOf(restarted)
-      assert(recovered == before || recovered == after,
-        s"crash after call $k of $calls: recovered $recovered, want $before or $after")
-      change(restarted)
-      assert(stateOf(restarted) === after, s"replay after a crash at call $k of $calls")
-      assertSwept(restarted)
-      localFs.delete(new Path(root), true)
-    }
-    val _ = localFs.delete(new Path(clean), true)
+    def sink(root: String) = new ParquetUpsertSink(root, buckets)
+    graft.CrashFs.crashAtEveryCall(spark, root => setup(sink(root)), root => change(sink(root)),
+      root => stateOf(sink(root)), root => assertSwept(sink(root)))
   }
 
   test("a refused manifest rename throws and leaves the table as it was") {
@@ -348,5 +291,23 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val keys = (1L to 8L).map(k => (k, s"v$k", "INSERT", k))
     crashAtEveryCall(4, _.write(id, batch(keys: _*), schema),
       _.applySchemaChange(graft.model.DropTableEvent(id)))
+  }
+
+  test("a batch without a column of its table is refused; rows it never touched keep the column") {
+    // a restart that forgot an in-band AddColumn(age) offers (id, name)
+    // batches to a table of (id, name, age): the batch must not narrow it
+    val root = tempDir("graft-narrow")
+    val sink = new ParquetUpsertSink(root, buckets = 4)
+    val wide = CdcSchema.of("id" -> "BIGINT", "name" -> "STRING", "age" -> "INT").copy(primaryKeys = Seq("id"))
+    val narrow = CdcSchema.of("id" -> "BIGINT", "name" -> "STRING").copy(primaryKeys = Seq("id"))
+    sink.write(id, Seq((1L, "ann", 30, "INSERT", 1L), (2L, "bob", 40, "INSERT", 2L))
+      .toDF("id", "name", "age", Changelog.OpCol, Changelog.SeqCol), wide)
+    val e = intercept[IllegalArgumentException] {
+      sink.write(id, Seq((1L, "ann2", "UPDATE", 3L)).toDF("id", "name", Changelog.OpCol, Changelog.SeqCol), narrow)
+    }
+    assert(e.getMessage.contains(id.toString) && e.getMessage.contains("age"), e.getMessage)
+    assert(sink.read(spark, id).select("id", "name", "age").as[(Long, String, Int)].collect().toSet ===
+      Set((1L, "ann", 30), (2L, "bob", 40)))
+    val _ = localFs.delete(new Path(root), true)
   }
 }

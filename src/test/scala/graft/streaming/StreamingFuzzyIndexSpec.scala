@@ -52,8 +52,7 @@ class StreamingFuzzyIndexSpec extends SparkSpec {
         val (a, b) = (r.getLong(0), r.getLong(1))
         found += ((math.min(a, b), math.max(a, b), r.getInt(2)))
       }
-    fold(FuzzyJoin.indexProbe(waves(0).toDF("id", "s"), "id", "s", idx,
-      numPartitions = P).collect())
+    fold(FuzzyJoin.indexProbe(waves(0).toDF("id", "s"), "id", "s", idx).collect())
 
     // waves 1 and 2 arrive as micro-batches over a real file stream
     waves(1).toDF("id", "s").coalesce(1).write.parquet(s"$in/w1")
@@ -67,13 +66,12 @@ class StreamingFuzzyIndexSpec extends SparkSpec {
       .parquet(s"$in/w[12]")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        FuzzyJoin.appendToIndex(batch, "id", "s", idx, numPartitions = P)
-        fold(FuzzyJoin.indexProbe(batch, "id", "s", idx,
-          numPartitions = P).collect())
+        FuzzyJoin.appendToIndex(batch, "id", "s", idx)
+        fold(FuzzyJoin.indexProbe(batch, "id", "s", idx).collect())
         // mid-stream compaction after the first batch: the gram order is
         // re-frozen from the grown string store; the NEXT batch probes the
         // compacted epoch and recall must hold across the order change
-        if (batches == 0) FuzzyJoin.compactIndex(spark, idx, numPartitions = P)
+        if (batches == 0) FuzzyJoin.compactIndex(spark, idx)
         batches += 1
         ()
       }
