@@ -2,12 +2,12 @@ package graft.sinks
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.VersionedDir
-import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
+import graft.model.{CdcSchema, CdcTypes, SchemaChangeEvent, TableId}
 import graft.operators.Changelog
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, FloatType, StringType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Sink SPI — the Spark shape of the reference's `DataSink =
@@ -19,11 +19,10 @@ import scala.jdk.CollectionConverters._
   * FlushEvent protocol falls out of the batch boundary for free.
   */
 /** Provenance of one `write` call within a streaming micro-batch: the
-  * `foreachBatch` batch id plus the route leg (`"src→out"`). An N→1 route
-  * writes the same sink table once per SOURCE within a batch, so the pair —
-  * not the batch id alone — uniquely identifies the invocation; decorators
-  * ([[graft.pipeline.AssetFoldSink]]) key crash-replay
-  * dedup on it.
+  * `foreachBatch` batch id plus the route (`"src->out"`; an N→1 route's
+  * sources sorted and comma-joined, `"a,b->out"`). A batch writes each sink
+  * table once, with the union of every source routed into it; decorators
+  * ([[graft.pipeline.AssetFoldSink]]) key crash-replay dedup on the pair.
   */
 final case class BatchCtx(batchId: Long, origin: String)
 
@@ -83,16 +82,20 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   *
   * A table is one [[graft.VersionedDir]]: numbered manifests and immutable
   * data dirs, and it is whatever its newest manifest says
-  * ([[ParquetUpsertSink.Manifest]]): the file schema, the PK names, the
-  * bucket count and the data dir of each non-empty bucket. Rows are bucketed
+  * ([[ParquetUpsertSink.Manifest]]): the table schema, the PK names, the
+  * bucket count, the data dir of each non-empty bucket, and the file schema
+  * of each data dir an additive DDL left behind. Rows are bucketed
   * by `pmod(xxhash64(pk), buckets)`, so a batch reads and rewrites only the
   * buckets it touches — merge cost scales with batch footprint, not table
-  * size. Every change, a batch merge or a DDL rewrite, is one [[commit]]: the
-  * buckets it rewrites go to a fresh data dir, manifest N+1 is published,
-  * and every file and dir that manifest does not name is swept. A crash
-  * leaves manifest N or N+1, plus at most files the next commit deletes:
-  * nothing is ever recovered. Reads use the manifest's
-  * schema and dirs, with no inference and no partition discovery. A
+  * size. Every change, a batch merge or a DDL, is one [[commit]]: the
+  * buckets it rewrites (none for an additive DDL) go to a fresh data dir,
+  * manifest N+1 is published, and every file and dir that manifest does not
+  * name is swept. A crash leaves manifest N or N+1, plus at most files the
+  * next commit deletes: nothing is ever recovered. Reads use the manifest's
+  * schemas and dirs, with no inference and no partition discovery: each
+  * group of dirs is read with its own file schema and cast and null-padded
+  * by name to the table schema, and a merge rewrites the buckets it touches
+  * in the table schema, so older file schemas drain away. A
   * production deployment swaps in Delta/Iceberg MERGE behind the same
   * interface; their logs are this manifest grown up.
   *
@@ -119,7 +122,7 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   */
 class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBuckets)
     extends CdcSink {
-  import ParquetUpsertSink.{AutoBuckets, Manifest, MaxDerivedBuckets, RowsPerBucketConf, decode, encode}
+  import ParquetUpsertSink.{AutoBuckets, Manifest, MaxDerivedBuckets, RowsPerBucketConf, columns, decode, encode}
   require(buckets == AutoBuckets || buckets >= 1,
     s"upsert-sink buckets must be auto or >= 1, got $buckets: the unbucketed layout " +
       "(`buckets: 0`) was removed, every upsert state is PK-bucketed")
@@ -129,8 +132,9 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
   def tablePath(id: TableId): String =
     s"$rootDir/${Seq(id.namespace, id.schemaName, id.tableName).filter(_.nonEmpty).mkString("__")}"
 
-  /** The table's store; its lock serializes same-table writes (N→1 routes
-    * hit one sink table from several sources in a batch).
+  /** The table's store; its lock serializes same-table writes and DDL (a
+    * pipeline writes each sink table once per batch, but several writers
+    * may share one table).
     */
   private def store(spark: SparkSession, id: TableId): VersionedDir =
     VersionedDir(hfs(spark, tablePath(id)), tablePath(id))
@@ -157,10 +161,16 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
       "beside it): it is neither read nor converted; replay the table's changelog into a new state dir")
   }
 
-  /** The rows of buckets `bs`, read with the manifest's schema. */
+  /** The rows of buckets `bs` in the table schema: each group of dirs is
+    * read with the file schema the manifest records for it, then cast and
+    * null-padded by name ([[conform]]).
+    */
   private def scan(spark: SparkSession, path: String, m: Manifest, bs: Iterable[Int]): DataFrame =
     if (bs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema)
-    else spark.read.schema(m.schema).parquet(bs.toSeq.map(b => s"$path/${m.live(b)}"): _*)
+    else bs.toSeq.groupBy(b => m.fileSchemas.get(m.dirOf(b))).toSeq.map { case (recorded, group) =>
+      val df = spark.read.schema(recorded.getOrElse(m.schema)).parquet(group.map(b => s"$path/${m.live(b)}"): _*)
+      if (recorded.isEmpty) df else conform(df, m.schema)
+    }.reduce(_ unionByName _)
 
   /** Bucket count for an empty table: the constructor's, or under
     * [[AutoBuckets]] `max(defaultParallelism, ceil(rows / rowsPerBucket))`.
@@ -187,50 +197,73 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
   private def fileSchema(df: DataFrame): StructType =
     StructType(df.schema.fields.filter(_.name != BucketCol).map(_.copy(nullable = true)))
 
+  /** `df`'s columns cast to `schema`'s types by name, in its order; a
+    * column `df` lacks reads as null.
+    */
+  private def conform(df: DataFrame, schema: StructType): DataFrame = {
+    val present = df.columns.toSet
+    df.select(schema.fields.toSeq.map { f =>
+      (if (present.contains(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
   /** Coerce state (possibly of another shape) to the batch's schema and
     * stamp it as lowest-seq inserts so batch rows win per PK.
     */
-  private def stateAsInserts(state: DataFrame, schema: CdcSchema): DataFrame = {
-    val present = state.columns.toSet
-    state.select(schema.struct.fields.toSeq.map { f =>
-      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+  private def stateAsInserts(state: DataFrame, schema: CdcSchema): DataFrame =
+    conform(state, schema.struct)
       .withColumn(Changelog.OpCol, lit("INSERT"))
       .withColumn(Changelog.SeqCol, lit(Long.MinValue))
-  }
 
   override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
     val vd = store(changelog.sparkSession, id)
     vd.locked(doWrite(vd, id, changelog, schema))
   }
 
-  /** DDL applies EAGERLY to on-disk state (the reference's MetadataApplier
-    * runs its ALTER TABLE before the data resumes): every bucket is
-    * rewritten into the new shape and published with the new schema in one
-    * [[commit]], so no reader ever sees a table of two shapes. A rewrite per
-    * DDL event is O(state), but DDL is rare by construction; the
-    * Delta/Iceberg swap-in does the same change as a metadata-only commit.
-    * Rename never arrives here — the routed-schema diff normalizes it to
-    * add+drop ([[graft.operators.SchemaDerivator.diff]], reference
-    * SchemaDerivator.java:154-296) — but is handled for direct SPI callers.
-    * Each rewrite is idempotent (skipped when the shape is already the new
-    * one), so a crash-replayed batch re-applying its in-band DDL converges.
-    * Truncate publishes an empty manifest that keeps the schema; drop
-    * deletes the table dir.
+  /** DDL changes the table in one [[commit]], as the reference's
+    * MetadataApplier runs one ALTER TABLE before the data resumes.
+    *  - An additive change rewrites no data: an AddColumn, or an
+    *    AlterColumnType of a non-PK column to a wider type other than
+    *    STRING and FLOAT (`CdcTypes.widerType(from, to) == to`). It publishes the new table
+    *    schema and records, for each live data dir, the file schema its
+    *    files keep; reads cast and null-pad those dirs to the table schema,
+    *    and the next merge rewrites the buckets it touches in it.
+    *  - Every other change is an eager rewrite of every bucket in the new
+    *    shape: a drop (so a column dropped and added back reads null on
+    *    every old row), a rename, a PK type change (it re-buckets keys)
+    *    and every other type change, a change to FLOAT included.
+    * Rename never arrives from the pipeline — the routed-schema diff
+    * normalizes it to add+drop ([[graft.operators.SchemaDerivator.diff]],
+    * reference SchemaDerivator.java:154-296) — but is handled for direct
+    * SPI callers. Each change is idempotent (a no-op when the table already
+    * has the new shape), so a crash-replayed batch re-applying its in-band
+    * DDL converges. Truncate publishes an empty manifest that keeps the
+    * schema; drop deletes the table dir.
     */
   override def applySchemaChange(e: SchemaChangeEvent): Unit = {
     import graft.model._
     e match {
       case CreateTableEvent(_, _) => () // state materializes on first write
-      case AddColumnEvent(id, n, dt, _) =>
-        rewriteState(id)(df => if (df.columns.contains(n)) df
-                               else df.withColumn(n, lit(null).cast(dt)))
-      case DropColumnEvent(id, n) => rewriteState(id)(_.drop(n))
-      case RenameColumnEvent(id, f, t) => rewriteState(id, f -> t)(_.withColumnRenamed(f, t))
-      case AlterColumnTypeEvent(id, n, dt) =>
-        rewriteState(id)(df => if (df.columns.contains(n)) df.withColumn(n, col(n).cast(dt))
-                               else df)
+      case AddColumnEvent(id, n, dt, _) => onTable(id) { (_, vd, cur) =>
+        if (cur.schema.fieldNames.contains(n)) vd.sweep(cur.version, cur.live.values)
+        else reschema(vd, cur, cur.schema.add(n, dt, nullable = true))
+      }
+      case DropColumnEvent(id, n) => onTable(id)((spark, vd, cur) => rewrite(spark, vd, cur)(_.drop(n)))
+      case RenameColumnEvent(id, f, t) =>
+        onTable(id)((spark, vd, cur) => rewrite(spark, vd, cur, f -> t)(_.withColumnRenamed(f, t)))
+      case AlterColumnTypeEvent(id, n, dt) => onTable(id) { (spark, vd, cur) =>
+        // a dir holding `n` in an older type is read with one cast to `dt`.
+        // That equals the eager chain of casts unless the chain rounds in
+        // FLOAT and widens on (INT → FLOAT → DOUBLE), so a change to FLOAT
+        // rewrites: no dir ever holds a FLOAT column in another type
+        cur.schema.find(_.name == n).map(_.dataType) match {
+          case Some(from) if from != dt && !cur.primaryKeys.contains(n) && dt != StringType &&
+                             dt != FloatType && CdcTypes.widerType(from, dt) == dt =>
+            reschema(vd, cur, StructType(cur.schema.map(f => if (f.name == n) f.copy(dataType = dt) else f)))
+          case Some(from) if from != dt => rewrite(spark, vd, cur)(_.withColumn(n, col(n).cast(dt)))
+          case _ => vd.sweep(cur.version, cur.live.values)
+        }
+      }
       case TruncateTableEvent(id) => onTable(id) { (_, vd, cur) =>
         if (cur.live.nonEmpty) commit(vd, cur.copy(version = cur.version + 1, live = Map.empty), None)
         else vd.sweep(cur.version, cur.live.values)
@@ -254,23 +287,30 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     vd.locked(current(vd).foreach(change(spark, vd, _)))
   }
 
+  /** The metadata-only change: [[commit]] `schema` as the table schema,
+    * each live dir keeping the file schema it was read with.
+    */
+  private def reschema(vd: VersionedDir, cur: Manifest, schema: StructType): Unit =
+    commit(vd, cur.copy(version = cur.version + 1, schema = schema,
+      fileSchemas = cur.live.keys.map(cur.dirOf).map(d => d -> cur.fileSchemaOf(d)).toMap), None)
+
   /** Rewrite every bucket through `fn` and [[commit]] the result with its
     * schema. The bucket is re-derived from the rewritten PKs: a PK type
     * change moves keys between buckets. An empty table rewrites no data,
     * only its schema.
     */
-  private def rewriteState(id: TableId, renamed: (String, String)*)(fn: DataFrame => DataFrame): Unit =
-    onTable(id) { (spark, vd, cur) =>
-      val state = scan(spark, vd.path, cur, cur.live.keys)
-      val next = fn(state)
-      // same shape: a replayed batch's DDL, or a drop of a never-present column
-      if (next.schema != state.schema) {
-        val pks = cur.primaryKeys.map(p => renamed.toMap.getOrElse(p, p))
-        commit(vd, cur.copy(version = cur.version + 1, schema = fileSchema(next),
-          primaryKeys = pks, live = Map.empty),
-          Option.when(cur.live.nonEmpty)(withBucket(next, pks, cur.buckets)))
-      } else vd.sweep(cur.version, cur.live.values)
-    }
+  private def rewrite(spark: SparkSession, vd: VersionedDir, cur: Manifest, renamed: (String, String)*)(
+      fn: DataFrame => DataFrame): Unit = {
+    val state = scan(spark, vd.path, cur, cur.live.keys)
+    val next = fn(state)
+    // same shape: a replayed batch's DDL, or a drop of a never-present column
+    if (next.schema != state.schema) {
+      val pks = cur.primaryKeys.map(p => renamed.toMap.getOrElse(p, p))
+      commit(vd, cur.copy(version = cur.version + 1, schema = fileSchema(next),
+        primaryKeys = pks, live = Map.empty),
+        Option.when(cur.live.nonEmpty)(withBucket(next, pks, cur.buckets)))
+    } else vd.sweep(cur.version, cur.live.values)
+  }
 
   /** All state moves go through Hadoop [[org.apache.hadoop.fs.FileSystem]] so
     * the sink works on any Hadoop-compatible store (local, HDFS, object
@@ -283,8 +323,8 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
   /** The write path: merge the batch into the buckets it touches and
     * [[commit]] them. A batch that adds columns, or changes types or keys
     * (its writer skipped the DDL), rewrites every bucket, so a table keeps
-    * one file schema and one PK hash; a batch that lacks a column of the
-    * table is refused.
+    * one PK hash and no file schema but those its manifest records; a batch
+    * that lacks a column of the table is refused.
     */
   private def doWrite(vd: VersionedDir, id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
     require(schema.primaryKeys.nonEmpty, s"upsert sink requires primary keys on $id")
@@ -305,9 +345,11 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
     try {
       val m = if (live.nonEmpty) cur.get.buckets else bucketsFor(spark, inc)
       val bucketed = withBucket(inc, pks, m)
-      val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+      // a table without a live bucket has no state to select and nothing to
+      // retire: its first write needs no probe of the buckets it touches
+      val touched = if (live.isEmpty) Set.empty[Int]
+                    else bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
       val fresh = Changelog.materialize(bucketed, pks :+ BucketCol)
-      def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
       val reshaped = cur.exists(c => c.primaryKeys != pks || columns(c.schema) != columns(fileSchema(fresh)))
       val rewritten = if (reshaped) touched ++ live.keySet else touched
       val stateBuckets = rewritten.filter(live.contains)
@@ -316,10 +358,13 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = ParquetUpsertSink.AutoBu
           .unionByName(bucketed),
         pks :+ BucketCol) // bucket is pk-functional: same groups
 
-      // one write task per rewritten bucket: buckets are sized to the target
-      // file size, so task == output file == bucket
-      commit(vd, Manifest(cur.fold(0L)(_.version + 1), fileSchema(merged), pks, m, live -- rewritten),
-        Some(merged.repartition(math.max(rewritten.size, 1), col(BucketCol))))
+      // each rewritten bucket lands in one write task, so one output file per
+      // bucket; the exchange hashes bucket ids (Murmur3) into that many
+      // partitions, so a task can hold several buckets and another none (on
+      // 4 buckets, ids 0, 1 and 3 share one task)
+      commit(vd, Manifest(cur.fold(0L)(_.version + 1), fileSchema(merged), pks, m, live -- rewritten,
+        cur.fold(Map.empty[String, StructType])(_.fileSchemas)),
+        Some(merged.repartition(if (live.isEmpty) m else math.max(rewritten.size, 1), col(BucketCol))))
     } finally { inc.unpersist(); () }
   }
 
@@ -378,25 +423,44 @@ object ParquetUpsertSink {
   val MaxDerivedBuckets = 4096
 
   /** One published version of an upsert table, stored as the JSON body of
-    * its [[graft.VersionedDir]] manifest: the schema its data files are read with (in the
-    * column order [[ParquetUpsertSink.read]] returns), the PK names the
-    * bucket hash is taken over, the bucket count, and the data dir of each
-    * non-empty bucket, relative to the table dir.
+    * its [[graft.VersionedDir]] manifest: the table schema (in the column
+    * order [[ParquetUpsertSink.read]] returns), the PK names the bucket hash
+    * is taken over, the bucket count, the data dir of each non-empty bucket
+    * (`v<N>/__bucket=B`, relative to the table dir), and the file schema of
+    * each data dir `v<N>` whose files have other columns than the table
+    * schema: a dir it does not name has the table schema.
     */
   private[graft] final case class Manifest(version: Long, schema: StructType, primaryKeys: Seq[String],
-                                          buckets: Int, live: Map[Int, String])
+                                          buckets: Int, live: Map[Int, String],
+                                          fileSchemas: Map[String, StructType] = Map.empty) {
+    /** The data dir bucket `b`'s files are in. */
+    def dirOf(b: Int): String = live(b).takeWhile(_ != '/')
+    def fileSchemaOf(dir: String): StructType = fileSchemas.getOrElse(dir, schema)
+  }
 
   private val mapper = new ObjectMapper()
 
-  private def encode(m: Manifest): Array[Byte] = mapper.writeValueAsBytes(Map[String, Any](
-    "schema" -> mapper.readTree(m.schema.json), "primaryKeys" -> m.primaryKeys.asJava,
-    "buckets" -> m.buckets, "live" -> m.live.map { case (b, d) => b.toString -> d }.asJava).asJava)
+  private def columns(s: StructType): Set[(String, DataType)] = s.fields.map(f => f.name -> f.dataType).toSet
+
+  /** Names only the live dirs whose file schema is not the table schema. */
+  private def encode(m: Manifest): Array[Byte] = {
+    val dirs = m.live.keys.map(m.dirOf).toSet
+    val recorded = m.fileSchemas.filter { case (d, s) => dirs(d) && columns(s) != columns(m.schema) }
+    mapper.writeValueAsBytes((Map[String, Any](
+      "schema" -> mapper.readTree(m.schema.json), "primaryKeys" -> m.primaryKeys.asJava,
+      "buckets" -> m.buckets, "live" -> m.live.map { case (b, d) => b.toString -> d }.asJava) ++
+      Option.when(recorded.nonEmpty)(
+        "fileSchemas" -> recorded.map { case (d, s) => d -> mapper.readTree(s.json) }.asJava)).asJava)
+  }
 
   private def decode(version: Long, bytes: Array[Byte]): Manifest = {
     val root = mapper.readTree(bytes)
-    Manifest(version, DataType.fromJson(root.get("schema").toString).asInstanceOf[StructType],
+    def struct(n: com.fasterxml.jackson.databind.JsonNode) = DataType.fromJson(n.toString).asInstanceOf[StructType]
+    Manifest(version, struct(root.get("schema")),
       root.get("primaryKeys").elements.asScala.map(_.asText).toSeq, root.get("buckets").asInt,
-      root.get("live").properties.asScala.map(e => e.getKey.toInt -> e.getValue.asText).toMap)
+      root.get("live").properties.asScala.map(e => e.getKey.toInt -> e.getValue.asText).toMap,
+      Option(root.get("fileSchemas")).fold(Map.empty[String, StructType])(
+        _.properties.asScala.map(e => e.getKey -> struct(e.getValue)).toMap))
   }
 }
 

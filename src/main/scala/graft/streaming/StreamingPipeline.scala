@@ -29,10 +29,11 @@ final class StreamingPipeline(
     transforms: Seq[TransformRule] = Nil,
     routes: Seq[RouteRule] = Nil,
     sink: CdcSink,
-    /** Concurrent per-table writes within a batch (reference: independent
-      * per-table sink buffers flush concurrently). Spark's scheduler
-      * interleaves the jobs; the sink must accept concurrent `write` calls
-      * for different tables. 1 = sequential.
+    /** Concurrent sink-table writes within a batch (reference: independent
+      * per-table sink buffers flush concurrently). Each sink table gets one
+      * write per batch, however many sources route into it; Spark's
+      * scheduler interleaves the jobs, and the sink must accept concurrent
+      * `write` calls for different tables. 1 = sequential.
       */
     tableParallelism: Int = 4,
     /** Dead-letter handler: receives the batch's unroutable raw records
@@ -109,7 +110,7 @@ final class StreamingPipeline(
 
   // post-transform struct per source, memoized on the evolved source struct
   // (invalidated naturally when schema evolution changes it). Concurrent:
-  // writeSlice → sinkSchema → transformedStruct runs on the per-table pool
+  // coerced → sinkSchema → transformedStruct runs on the per-table pool
   // when tableParallelism > 1, and a plain mutable.Map can corrupt under a
   // racing resize.
   private val outStructCache = scala.collection.concurrent.TrieMap.empty[
@@ -156,59 +157,62 @@ final class StreamingPipeline(
     * `seq > snapshotSeq` then supersede snapshot rows per key — the
     * last-write-wins dedup folds in-flight changes exactly like the
     * reference's low/high-watermark chunk normalization (SURVEY.md §2.1).
+    * Its writes carry no batch provenance: a restarted snapshot re-writes
+    * idempotently per key.
     */
   def snapshotLoad(src: TableId, snapshot: DataFrame, snapshotSeq: Long = 0L): Unit = {
     require(registry.evolvedSchema(src).isDefined, s"no schema for $src — apply CreateTableEvent first")
-    writeSlice(src, snapshot
+    val changelog = transformed(src, snapshot
       .withColumn(Changelog.OpCol, lit("INSERT"))
       .withColumn(Changelog.SeqCol, lit(snapshotSeq)))
+    for (out <- router.route(src)) sink.writeBatch(out, coerced(src, out, changelog), sinkSchema(out), None)
   }
 
-  /** Transform → soft-delete converter → route → coerce → sink, for one
-    * source table's changelog slice (shared by snapshot and stream phases).
-    * The stream phase passes its `foreachBatch` id so replay-aware sink
-    * decorators see each write's provenance; the snapshot phase has none
-    * (a restarted snapshot re-writes idempotently per key).
+  /** Transform → soft-delete converter, for one source table's changelog
+    * slice (shared by snapshot and stream phases).
     */
-  private def writeSlice(src: TableId, changelog: DataFrame,
-                         batchId: Option[Long] = None): Unit = {
-    val transformed0 = Transform.applyRules(changelog, src, transforms,
+  private def transformed(src: TableId, changelog: DataFrame): DataFrame = {
+    val rows = Transform.applyRules(changelog, src, transforms,
       opColumn = Some(Changelog.OpCol),
       passthrough = Seq(Changelog.OpCol, Changelog.SeqCol))
-    val transformed =
-      if (softDeleteApplies(src)) Changelog.softDelete(transformed0) else transformed0
-    for (out <- router.route(src)) {
-      val target = sinkSchema(out)
-      // coerce payload to the merged sink shape (cast matching columns,
-      // null-pad missing ones) while keeping the envelope — pure projection
-      val coerced0 = transformed.select(
-        target.struct.fieldNames.map(f =>
-          (if (transformed.columns.contains(f)) col(f) else lit(null))
-            .cast(target.struct(f).dataType).as(f)).toSeq
-          ++ Seq(col(Changelog.OpCol), col(Changelog.SeqCol)): _*)
-      // corrupt envelopes (malformed JSON, unparseable payloads) surface as
-      // null PKs after PERMISSIVE parsing — they can never address sink
-      // state, so drop them instead of poisoning the upsert. Guard ONLY on
-      // PK columns this source actually produces: in an N→1 route whose
-      // sources key under different names, the merged PK is null-PADDED for
-      // the other sources (coercion above) and must not silence their rows.
-      val guardPks = target.primaryKeys.filter(transformed.columns.contains)
-      if (guardPks.size < target.primaryKeys.size)
-        // scalastyle:off println
-        System.err.println(s"[graft] WARN: $src lacks sink PK column(s) " +
-          s"${target.primaryKeys.diff(guardPks).mkString(",")} for $out — " +
-          "its rows upsert under null key components")
-        // scalastyle:on
-      val coerced = guardPks.foldLeft(coerced0)((d, pk) => d.where(col(pk).isNotNull))
-      sink.writeBatch(out, coerced, target, batchId.map(b =>
-        graft.sinks.BatchCtx(b, s"${src.identifier}->${out.identifier}")))
-    }
+    if (softDeleteApplies(src)) Changelog.softDelete(rows) else rows
+  }
+
+  /** One route leg: `src`'s transformed changelog in the shape of sink
+    * table `out`.
+    */
+  private def coerced(src: TableId, out: TableId, transformed: DataFrame): DataFrame = {
+    val target = sinkSchema(out)
+    // coerce payload to the merged sink shape (cast matching columns,
+    // null-pad missing ones) while keeping the envelope — pure projection
+    val coerced0 = transformed.select(
+      target.struct.fieldNames.map(f =>
+        (if (transformed.columns.contains(f)) col(f) else lit(null))
+          .cast(target.struct(f).dataType).as(f)).toSeq
+        ++ Seq(col(Changelog.OpCol), col(Changelog.SeqCol)): _*)
+    // corrupt envelopes (malformed JSON, unparseable payloads) surface as
+    // null PKs after PERMISSIVE parsing — they can never address sink
+    // state, so drop them instead of poisoning the upsert. Guard ONLY on
+    // PK columns this source actually produces: in an N→1 route whose
+    // sources key under different names, the merged PK is null-PADDED for
+    // the other sources (coercion above) and must not silence their rows.
+    val guardPks = target.primaryKeys.filter(transformed.columns.contains)
+    if (guardPks.size < target.primaryKeys.size)
+      // scalastyle:off println
+      System.err.println(s"[graft] WARN: $src lacks sink PK column(s) " +
+        s"${target.primaryKeys.diff(guardPks).mkString(",")} for $out — " +
+        "its rows upsert under null key components")
+      // scalastyle:on
+    guardPks.foldLeft(coerced0)((d, pk) => d.where(col(pk).isNotNull))
   }
 
   /** Process one micro-batch of raw debezium-json records (`value: STRING`).
     *
     * Scale shape: ONE pass tags records with their table id (narrow), then
-    * each known table gets a filtered parse → transform → coerce → write.
+    * each known source table gets a filtered parse → transform → coerce per
+    * route leg, and each sink table ONE write of the union of its legs: an
+    * N→1 route reads and rewrites its table's state once per batch, and
+    * keys that several sources write resolve by `__seq` like any other.
     * Filters and `from_json` are narrow projections; the only shuffles are
     * inside the sink's per-PK materialization — exactly the reference's
     * PrePartition-then-buffer layout.
@@ -270,31 +274,40 @@ final class StreamingPipeline(
       }
 
       val known = present.toSeq.flatMap(src => registry.evolvedSchema(src).map(src -> _))
+      // sink table → the sources routed into it, sorted by name
+      val bySink = known.flatMap { case leg @ (src, _) => router.route(src).map(_ -> leg) }
+        .groupMap(_._1)(_._2).toSeq.sortBy(_._1.identifier)
+        .map { case (out, legs) => out -> legs.sortBy(_._1.identifier) }
       val t0 = System.nanoTime()
-      def process(src: TableId, schema: CdcSchema): Unit = {
-        val slice = tagged.where(col("__db") === src.schemaName && col("__table") === src.tableName)
-        writeSlice(src, DebeziumJson.parse(slice, schema.struct, seq = seq,
-          primaryKeys = schema.primaryKeys, emitUpdateBefore = emitUpdateBefore)
-          .drop("__db", "__table"), batchId = Some(batchId))
+      def process(out: TableId, sources: Seq[(TableId, CdcSchema)]): Unit = {
+        val legs = sources.map { case (src, schema) =>
+          val slice = tagged.where(col("__db") === src.schemaName && col("__table") === src.tableName)
+          coerced(src, out, transformed(src, DebeziumJson.parse(slice, schema.struct, seq = seq,
+            primaryKeys = schema.primaryKeys, emitUpdateBefore = emitUpdateBefore)
+            .drop("__db", "__table")))
+        }
+        val origin = s"${sources.map(_._1.identifier).mkString(",")}->${out.identifier}"
+        sink.writeBatch(out, legs.reduce(_ unionByName _), sinkSchema(out),
+          Some(graft.sinks.BatchCtx(batchId, origin)))
       }
-      if (tableParallelism > 1 && known.size > 1) {
-        // concurrent Spark jobs, one per table — scheduler interleaves stages
+      if (tableParallelism > 1 && bySink.size > 1) {
+        // concurrent Spark jobs, one per sink table — scheduler interleaves stages
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(tableParallelism, known.size))
+          math.min(tableParallelism, bySink.size))
         try {
-          val futures = known.map { case (src, schema) =>
-            pool.submit(new Runnable { def run(): Unit = process(src, schema) })
+          val futures = bySink.map { case (out, sources) =>
+            pool.submit(new Runnable { def run(): Unit = process(out, sources) })
           }
           futures.foreach(_.get())
         } finally { pool.shutdown(); () }
-      } else known.foreach { case (src, schema) => process(src, schema) }
+      } else bySink.foreach { case (out, sources) => process(out, sources) }
 
       // batch metric, like the reference's per-table RPS logs
       // (DsqlBatchSinkFunction.java:979-1014)
       val secs = (System.nanoTime() - t0) / 1e9
-      if (known.nonEmpty && secs > 1.0)
+      if (bySink.nonEmpty && secs > 1.0)
         // scalastyle:off println
-        System.err.println(f"[graft] batch $batchId: ${known.size} tables in $secs%.2fs")
+        System.err.println(f"[graft] batch $batchId: ${bySink.size} tables in $secs%.2fs")
         // scalastyle:on
     } finally { allTagged.unpersist(); () }
   }

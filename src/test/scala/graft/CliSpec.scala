@@ -1570,6 +1570,86 @@ class CliSpec extends SparkSpec {
       Seq((1L, "ann2"), (2L, "bob")))
   }
 
+  test("an N→1 batch writes its sink table once; additive in-band DDL runs no Spark job in the sink") {
+    import graft.pipeline.PipelineDef
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    val in = tempDir("graft-n1-in")
+    val out = tempDir("graft-n1-out")
+    def dbz(table: String, payload: String, ts: Long) =
+      s"""{"before":null,"after":$payload,"op":"c","ts_ms":$ts,"source":{"db":"db","table":"$table"}}"""
+    val p = PipelineDef.fromYaml(
+      s"""source:
+         |  type: debezium-json
+         |  path: $in
+         |  schema.db.orders_0: "order_id BIGINT, amount INT"
+         |  schema.db.orders_1: "order_id BIGINT, amount INT"
+         |route:
+         |  - source-table: db.orders_\\.*
+         |    sink-table: ods.orders
+         |sink:
+         |  type: parquet-upsert
+         |  path: $out
+         |  buckets: 4
+         |""".stripMargin)
+    val DdlProp = "graft.test.sinkDdl"
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(Long, TableId)]()
+    val ddl = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    final class Counting(inner: graft.sinks.CdcSink) extends graft.sinks.CdcSink {
+      override def applySchemaChange(e: SchemaChangeEvent): Unit = {
+        ddl.add(e.getClass.getSimpleName)
+        spark.sparkContext.setLocalProperty(DdlProp, "1")
+        try inner.applySchemaChange(e) finally spark.sparkContext.setLocalProperty(DdlProp, null)
+      }
+      override def write(id: TableId, df: org.apache.spark.sql.DataFrame, schema: CdcSchema): Unit =
+        inner.write(id, df, schema)
+      override def writeBatch(id: TableId, df: org.apache.spark.sql.DataFrame, schema: CdcSchema,
+                              ctx: Option[graft.sinks.BatchCtx]): Unit = {
+        writes.add((ctx.get.batchId, id))
+        inner.writeBatch(id, df, schema, ctx)
+      }
+    }
+    val ddlJobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = Option(j.properties).foreach { props =>
+        if (props.getProperty(DdlProp) != null) ddlJobs.incrementAndGet()
+        if (props.getProperty("graft.test.marker") != null) marker.countDown()
+      }
+    }
+    def run(file: String, lines: String*): Unit = {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/$file"), lines.mkString("", "\n", "\n"))
+      val (_, _, q) = Cli.buildStreaming(spark, p, Trigger.AvailableNow(), sinkDecorator = Some(new Counting(_)))
+      q.awaitTermination(60000)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run("b1.json", dbz("orders_0", """{"order_id":1,"amount":5}""", 1),
+        dbz("orders_1", """{"order_id":2,"amount":6}""", 2), dbz("orders_1", """{"order_id":3,"amount":7}""", 3))
+      run("b2.json",
+        SchemaChangeJson.toJson(AddColumnEvent(TableId.of("db", "orders_0"), "note",
+          org.apache.spark.sql.types.StringType)),
+        SchemaChangeJson.toJson(AlterColumnTypeEvent(TableId.of("db", "orders_1"), "amount",
+          org.apache.spark.sql.types.LongType)),
+        dbz("orders_0", """{"order_id":1,"amount":8,"note":"n1"}""", 4),
+        dbz("orders_1", """{"order_id":2,"amount":3000000000}""", 5))
+      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the marker job")
+
+      val ods = TableId.of("ods", "orders")
+      // one write per (micro-batch, sink table), and both batches wrote
+      val perBatch = writes.asScala.toSeq
+      assert(perBatch.sortBy(_._1) === Seq((0L, ods), (1L, ods)), perBatch.toString)
+      assert(Seq("AddColumnEvent", "AlterColumnTypeEvent").forall(ddl.contains), ddl.toString)
+      assert(ddlJobs.get === 0, "the sink's additive DDL ran Spark jobs")
+      val rows = new graft.sinks.ParquetUpsertSink(out, 4).read(spark, ods).orderBy("order_id").collect()
+        .map(r => (r.getAs[Long]("order_id"), r.getAs[Long]("amount"), r.getAs[String]("note"))).toSeq
+      assert(rows === Seq((1L, 8L, "n1"), (2L, 3000000000L, null), (3L, 7L, null)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("in-band TruncateTable empties sink state before the batch's own data applies") {
     import graft.pipeline.PipelineDef
     import org.apache.spark.sql.streaming.Trigger

@@ -43,19 +43,22 @@ class ParquetSinkCommitSpec extends SparkSpec {
       .as[Int].collect().toSet
   }
 
+  private def columns(s: org.apache.spark.sql.types.StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+
   /** Table state as its read schema and rows, None without a manifest. Every
-    * live bucket's files must carry the manifest's schema: a table whose
-    * buckets disagree on their columns cannot pass for either side of a
-    * schema change.
+    * live bucket's files must carry the file schema the manifest records for
+    * their dir, and `read` must return the table schema: a manifest that
+    * misstates a dir's columns cannot pass for either side of a schema
+    * change.
     */
   private def stateOf(sink: ParquetUpsertSink): Option[(String, Set[Seq[Any]])] =
     sink.manifest(spark, id).map { m =>
-      def columns(s: org.apache.spark.sql.types.StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-      m.live.values.foreach { dir =>
-        assert(columns(spark.read.parquet(s"${sink.tablePath(id)}/$dir").schema) === columns(m.schema),
-          s"bucket dir $dir")
+      m.live.keys.foreach { b =>
+        assert(columns(spark.read.parquet(s"${sink.tablePath(id)}/${m.live(b)}").schema).toSet ===
+          columns(m.fileSchemaOf(m.dirOf(b))).toSet, s"bucket dir ${m.live(b)}")
       }
       val df = sink.read(spark, id)
+      assert(columns(df.schema) === columns(m.schema), "read returns the table schema")
       (df.schema.toDDL, df.collect().map(_.toSeq.toSeq).toSet)
     }
 
@@ -274,6 +277,100 @@ class ParquetSinkCommitSpec extends SparkSpec {
       DropColumnEvent(id, "v")).foreach { e =>
       crashAtEveryCall(4, _.write(id, rows, wide), _.applySchemaChange(e))
     }
+  }
+
+  test("a crash anywhere in the first merge after additive DDL reads dirs of every file schema") {
+    import graft.model.{AddColumnEvent, AlterColumnTypeEvent}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val narrow = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "INT").copy(primaryKeys = Seq("id"))
+    val added = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "INT", "w" -> "STRING")
+      .copy(primaryKeys = Seq("id"))
+    val widened = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "BIGINT", "w" -> "STRING")
+      .copy(primaryKeys = Seq("id"))
+    val other = (2L to 8L).find(k => bucketsOf(Seq(k), 4) != bucketsOf(Seq(1L), 4)).get
+    def setup(sink: ParquetUpsertSink): Unit = {
+      sink.write(id, (1L to 8L).map(k => (k, s"v$k", k.toInt, "INSERT", k))
+        .toDF("id", "v", "n", Changelog.OpCol, Changelog.SeqCol), narrow)
+      sink.applySchemaChange(AddColumnEvent(id, "w", StringType))
+      sink.write(id, Seq((1L, "u1", 10, "w1", "UPDATE", 20L))
+        .toDF("id", "v", "n", "w", Changelog.OpCol, Changelog.SeqCol), added)
+      sink.applySchemaChange(AlterColumnTypeEvent(id, "n", LongType))
+      val m = sink.manifest(spark, id).get
+      assert(m.live.keys.map(b => columns(m.fileSchemaOf(m.dirOf(b)))).toSet.size === 2,
+        "the merge below reads dirs of two file schemas, neither the table's")
+    }
+    crashAtEveryCall(4, setup, _.write(id, Seq((1L, "x1", 3000000000L, "x", "UPDATE", 30L),
+        (other, s"x$other", 7L, null, "UPDATE", 31L))
+      .toDF("id", "v", "n", "w", Changelog.OpCol, Changelog.SeqCol), widened))
+  }
+
+  test("a column dropped after a metadata-only AddColumn reads null on every old row once re-added") {
+    import graft.model.{AddColumnEvent, DropColumnEvent}
+    import org.apache.spark.sql.types.StringType
+    val root = tempDir("graft-resurrect")
+    val sink = new ParquetUpsertSink(root, buckets = 4)
+    val keys = 1L to 8L
+    sink.write(id, batch(keys.map(k => (k, s"v$k", "INSERT", k)): _*), schema)
+    val before = sink.manifest(spark, id).get
+    sink.applySchemaChange(AddColumnEvent(id, "w", StringType))
+    assert(sink.manifest(spark, id).get.live === before.live, "AddColumn rewrites no bucket")
+    val withW = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "w" -> "STRING").copy(primaryKeys = Seq("id"))
+    sink.write(id, keys.map(k => (k, s"v$k", s"w$k", "UPDATE", 10L + k))
+      .toDF("id", "v", "w", Changelog.OpCol, Changelog.SeqCol), withW)
+    sink.applySchemaChange(DropColumnEvent(id, "w"))
+    sink.applySchemaChange(AddColumnEvent(id, "w", StringType))
+    val rows = sink.read(spark, id).select("id", "v", "w").as[(Long, String, String)].collect().toSeq
+    assert(rows.sorted === keys.map(k => (k, s"v$k", null: String)))
+    val _ = localFs.delete(new Path(root), true)
+  }
+
+  test("live dirs of three file schemas read as the same history rewritten at every change") {
+    import graft.model.{AddColumnEvent, AlterColumnTypeEvent}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val narrow = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "INT").copy(primaryKeys = Seq("id"))
+    val added = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "INT", "w" -> "STRING")
+      .copy(primaryKeys = Seq("id"))
+    val widened = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "BIGINT", "w" -> "STRING")
+      .copy(primaryKeys = Seq("id"))
+    val k2 = (2L to 8L).find(k => bucketsOf(Seq(k), 4) != bucketsOf(Seq(1L), 4)).get
+    val first = (1L to 8L).map(k => (k, s"v$k", k.toInt, "INSERT", k))
+      .toDF("id", "v", "n", Changelog.OpCol, Changelog.SeqCol)
+    val second = Seq((1L, "u1", 11, "w1", "UPDATE", 20L)).toDF("id", "v", "n", "w", Changelog.OpCol, Changelog.SeqCol)
+    val third = Seq((k2, s"u$k2", 3000000000L, s"w$k2", "UPDATE", 30L))
+      .toDF("id", "v", "n", "w", Changelog.OpCol, Changelog.SeqCol)
+    def read(sink: ParquetUpsertSink) = {
+      val df = sink.read(spark, id)
+      (columns(df.schema), df.collect().map(_.toSeq).toSet)
+    }
+    // metadata-only DDL between the writes: each write rewrites one bucket
+    val lazySink = new ParquetUpsertSink(tempDir("graft-three-schemas"), buckets = 4)
+    lazySink.write(id, first, narrow)
+    lazySink.applySchemaChange(AddColumnEvent(id, "w", StringType))
+    lazySink.write(id, second, added)
+    lazySink.applySchemaChange(AlterColumnTypeEvent(id, "n", LongType))
+    lazySink.write(id, third, widened)
+    val m = lazySink.manifest(spark, id).get
+    assert(m.live.keys.map(b => columns(m.fileSchemaOf(m.dirOf(b)))).toSet ===
+      Set(narrow, added, widened).map(s => columns(s.struct)))
+    // the same history with every bucket rewritten at each change: a batch
+    // of the new shape without its DDL rewrites the whole table
+    val eager = new ParquetUpsertSink(tempDir("graft-three-schemas-eager"), buckets = 4)
+    eager.write(id, first, narrow)
+    eager.write(id, second, added)
+    eager.write(id, third, widened)
+    assert(eager.manifest(spark, id).get.fileSchemas.isEmpty)
+    assert(read(lazySink) === read(eager))
+  }
+
+  test("widening INT to FLOAT to DOUBLE reads the float-rounded values an eager rewrite keeps") {
+    import graft.model.AlterColumnTypeEvent
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val sink = new ParquetUpsertSink(tempDir("graft-float-chain"), buckets = 4)
+    sink.write(id, Seq((1L, "a", 16777217, "INSERT", 1L)).toDF("id", "v", "n", Changelog.OpCol, Changelog.SeqCol),
+      CdcSchema.of("id" -> "BIGINT", "v" -> "STRING", "n" -> "INT").copy(primaryKeys = Seq("id")))
+    sink.applySchemaChange(AlterColumnTypeEvent(id, "n", FloatType))
+    sink.applySchemaChange(AlterColumnTypeEvent(id, "n", DoubleType))
+    assert(sink.read(spark, id).select("n").as[Double].collect().toSeq === Seq(16777216.0))
   }
 
   test("a crash anywhere in a PK type change recovers to the old or the re-bucketed table") {

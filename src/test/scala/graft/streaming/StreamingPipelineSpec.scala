@@ -233,6 +233,23 @@ class StreamingPipelineSpec extends SparkSpec {
       Seq(List(1L, "a", null), List(2L, "b", "b@x")))
   }
 
+  // two sources of one N→1 route write key 1 in one batch: the later
+  // ts_ms wins, whichever leg is parsed or scheduled first
+  for (par <- Seq(1, 4); (ts1, ts2) <- Seq((200L, 100L), (100L, 200L)))
+    test(s"N→1 legs writing one key in one batch resolve by ts (table-parallelism $par, ts $ts1/$ts2)") {
+      val registry = new SchemaRegistry(SchemaChangeBehavior.Evolve)
+      val sink = new ParquetUpsertSink(tempDir("graft-collide"), buckets = 4)
+      val pipe = new StreamingPipeline(registry, routes = Seq(RouteRule("db.u_\\.*", "ods.u")),
+        sink = sink, tableParallelism = par)
+      val s = CdcSchema.of("id" -> "BIGINT", "v" -> "STRING").copy(primaryKeys = Seq("id"))
+      Seq("u_1", "u_2").foreach(t => pipe.applySchemaChange(CreateTableEvent(TableId.of("db", t), s)))
+      pipe.processBatch(Seq(
+        dbz("c", ts1, """{"id":1,"v":"from u_1"}""", table = "u_1"),
+        dbz("c", ts2, """{"id":1,"v":"from u_2"}""", table = "u_2")).toDF("value"), 0L)
+      val want = if (ts1 > ts2) "from u_1" else "from u_2"
+      assert(sink.read(spark, TableId.of("ods", "u")).as[(Long, String)].collect().toSeq === Seq((1L, want)))
+    }
+
   test("schema evolution mid-stream: AddColumn applies between batches") {
     val registry = new SchemaRegistry(SchemaChangeBehavior.Evolve)
     val db = new ValuesDatabase
